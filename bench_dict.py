@@ -1,11 +1,13 @@
-"""Large-dictionary Aho-Corasick throughput evidence (north_rule dictionary
+"""Large-dictionary matching throughput evidence (north_rule dictionary
 scale; mehari ships ~250k transcripts in its dictionary, txs.proto:220-229).
 
 Builds a 100k-alias multi-token ambiguous dictionary over the corpus
-vocabulary, runs the fused AC triple kernel over the sf0.1 transcripts
+vocabulary, runs the fused triple kernel over the sf0.1 transcripts
 (replicated DICT_REPLICATE x for a steady-state measurement) and prints one
-JSON line with turns/s for the 100k-alias AC path and, for comparison, the
-25-pattern vectorized demo path on the same input.
+JSON line with turns/s for the 100k-alias dictionary and, for comparison,
+the 25-pattern demo dictionary on the same input. Both run the same
+Arrow-batch kernel; the result labels ``ac_100k`` and ``vectorized_25`` are
+kept so readings stay comparable with earlier ones.
 
 Usage: DICT_ALIASES=100000 DICT_REPLICATE=16 python bench_dict.py
 """

@@ -7,7 +7,7 @@ graph:
 
 - mention detection  = mehari's transcript interval-join
   (reference: mehari/src/annotate/seqvars/provider.rs:795-843), done here as
-  an Aho-Corasick dictionary scan inside Arrow-batched ``mapInPandas``
+  one dictionary-matching kernel over whole Arrow batches in ``mapInArrow``
   (the executor-side shape of mehari-python/src/lib.rs:297-380).
 - predicate canonicalization = mehari's Sequence-Ontology/HGVS normalization
   (mehari/src/annotate/seqvars/consequence/terms.rs:78-397).

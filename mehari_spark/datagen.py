@@ -104,7 +104,7 @@ def synth_transcripts(
 
 def _scan_tokens(tokens: list[str], patterns: list[DictPattern]):
     """Naive O(n*m) dictionary scan — deliberately independent of the
-    Aho-Corasick kernel under test."""
+    matching kernel under test."""
     hits = []
     for p in patterns:
         L = len(p.tokens)
@@ -166,12 +166,12 @@ def big_dictionary(
     seed: int = 13,
     predicates: list[tuple[str, int, int, int]] | None = None,
 ) -> list[DictPattern]:
-    """Deterministic large dictionary for the Aho-Corasick path at scale
+    """Deterministic large multi-token dictionary at scale
     (mehari's dictionary is ~250k transcripts, txs.proto:220-229).
 
     Aliases are 2/3/4-token sequences over ``vocab`` — heavily ambiguous
-    (every 2-combo is a prefix of many 3-combos, so AC failure links and
-    multi-output states are exercised constantly) and guaranteed to HIT in
+    (every 2-combo is a prefix of many 3-combos, so shared trie prefixes
+    and multi-output states are exercised constantly) and guaranteed to HIT in
     text drawn from the same vocabulary. 4-token combos are hash-thinned
     to land exactly at n_aliases. Entity ids are the enumeration index; a
     small single-token predicate set rides along so triples still form.

@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 
 @dataclass(frozen=True)
 class DictPattern:
-    """One Aho-Corasick pattern: a token sequence with its payload."""
+    """One dictionary pattern: a token sequence with its payload."""
 
     tokens: tuple[str, ...]
     kind: str  # 'E' entity | 'P' predicate
@@ -98,9 +98,9 @@ DEMO_MULTITOK_ENTITIES: list[tuple[tuple[str, ...], int, str]] = [
 
 
 def multitok_patterns() -> list[DictPattern]:
-    """demo_patterns + the 2-token aliases — NOT single-token-unique, so the
-    engine takes the Aho-Corasick path (mentions._automaton), never the
-    vectorized shortcut."""
+    """demo_patterns + the 2-token aliases that overlap single-token ones —
+    exercises multi-token matching, entity overlap resolution and the
+    co-location rule in the same kernel as the demo dictionary."""
     return demo_patterns() + [
         DictPattern(tokens, "E", eid, eid, 0)
         for tokens, eid, _t in DEMO_MULTITOK_ENTITIES
@@ -155,10 +155,4 @@ def entity_df(spark: SparkSession):
     return spark.createDataFrame(
         [(a, i, t) for a, i, t in DEMO_ENTITIES],
         "alias string, entity_id long, type string",
-    )
-
-
-def predicate_df(spark: SparkSession):
-    return spark.createDataFrame(
-        DEMO_PREDICATES, "surface string, pred_id long, rank int, canon_id long"
     )

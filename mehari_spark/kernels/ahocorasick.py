@@ -1,14 +1,16 @@
-"""Token-sequence Aho-Corasick automaton.
+"""Token-sequence Aho-Corasick automaton: the reference matcher for tests.
 
 Mehari answers "which transcripts overlap this variant" with a per-contig
 interval tree queried per record (provider.rs:101-141, 795-843). Our analog
 question is "which dictionary surface forms occur in this turn's text"; the
-classic machinery is Aho-Corasick over the token stream. Built once from the
-broadcast dictionary and cached per executor (module-level singleton), the
-scan is O(tokens + matches) per turn.
+classic machinery is Aho-Corasick over the token stream, O(tokens + matches)
+per turn. The engine itself matches with ``kernels.dictmatch`` over whole
+Arrow batches; this per-turn automaton is the independent reference that
+tests compare it against (the benchmark's kernel micro-benchmark also
+still times it).
 
 Patterns are tuples of lowercase tokens; matches report token position and
-length so char spans can be recovered from token offsets.
+length.
 """
 
 from __future__ import annotations
@@ -73,13 +75,3 @@ class TokenAhoCorasick:
                 for length, payload in out[state]:
                     matches.append((i - length + 1, length, payload))
         return matches
-
-
-def token_char_offsets(text: str, tokens: Sequence[str]) -> list[int]:
-    """Start offset of each token in ``text`` assuming single-space joins."""
-    offsets: list[int] = []
-    pos = 0
-    for tok in tokens:
-        offsets.append(pos)
-        pos += len(tok) + 1
-    return offsets

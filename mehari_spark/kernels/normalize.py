@@ -2,24 +2,15 @@
 
 Mehari normalizes variants by trimming the common prefix/suffix of ref/alt
 and shifting positions (logic.rs:1957-1986, 1995-2014). The text analog:
-lowercase, strip punctuation at token edges, collapse whitespace — applied
-vectorized on pandas Series inside UDFs, never per-row Python on the Spark
-side.
+lowercase, strip punctuation at token edges, collapse whitespace.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 _WS = re.compile(r"\s+")
 _EDGE_PUNCT = re.compile(r"(?:^[^\w]+)|(?:[^\w]+$)")
-
-
-def normalize_text_series(s: pd.Series) -> pd.Series:
-    """Vectorized text normalization: lower, collapse whitespace."""
-    return s.fillna("").str.lower().str.replace(_WS, " ", regex=True).str.strip()
 
 
 def normalize_token(tok: str) -> str:

@@ -2,7 +2,7 @@
 
 Each module maps one mehari operator family onto Spark primitives:
 
-- mentions.py      — J1 interval join  -> Aho-Corasick scan in mapInPandas
+- mentions.py      — J1 interval join  -> Arrow-batch dictionary match in mapInArrow
 - triples.py       — consequence build -> window-based nearest-mention assembly
 - canonicalize.py  — SO-term rewrite   -> broadcast rule-table join
 - coref.py         — SV clustering/J8  -> edge list + connected components

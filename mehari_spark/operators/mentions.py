@@ -1,13 +1,14 @@
-"""Mention detection: Aho-Corasick dictionary scan inside ``mapInPandas``.
+"""Mention detection: the dictionary-matching kernel inside ``mapInArrow``.
 
 This is the engine's hot path and the direct analog of mehari's
 variant-x-transcript interval join (provider.rs:795-843) as executed through
 the Arrow batch API (mehari-python/src/lib.rs:297-380): the dictionary is a
-broadcast variable, compiled into an automaton once per executor (module
-cache keyed by broadcast id — the thread-local-reader idiom of
-db/mod.rs:357-375), and each Arrow batch of turns is scanned in one Python
-call. No per-row Python UDFs; no shuffle — mention detection is a narrow
-transformation over the transcripts scan.
+broadcast variable, compiled into a ``kernels.dictmatch.MatchTable`` once
+per executor (module cache keyed by the dictionary's content — the
+thread-local-reader idiom of db/mod.rs:357-375), and each Arrow batch of
+turns is matched in one call with no per-row Python. ``text`` stays Arrow
+end to end; no shuffle — mention detection is a narrow transformation over
+the transcripts scan. ``extract_triples_fused`` runs the same kernel.
 
 Scale notes (100 TB): the only data movement is the parquet scan itself;
 column pruning keeps the scan to (conv_id, turn_idx, text); the output is
@@ -17,33 +18,33 @@ any wide stage.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dictionary import DictPattern
-from ..kernels.ahocorasick import TokenAhoCorasick, token_char_offsets
+from ..kernels.dictmatch import MatchTable, compile_table, mention_batch
 from ..schemas import MENTIONS_DDL
 
-# per-executor automaton cache (built once per dictionary version, reused
+# per-executor match-table cache (built once per dictionary version, reused
 # across tasks AND across queries — the thread-local-reader idiom of
 # db/mod.rs:357-375). Keyed by a CONTENT fingerprint of the pattern list, so
-# re-running a query with the same dictionary reuses the compiled automaton
+# re-running a query with the same dictionary reuses the compiled table
 # instead of recompiling per invocation; bounded so abandoned dictionary
-# versions don't accumulate (~100 MB each at 100k patterns).
-_AC_CACHE: dict[str, TokenAhoCorasick] = {}
-_AC_CACHE_MAX = 4
-_AC_BUILDS = 0  # diagnostic: automaton compilations in this process
-_AC_HITS = 0  # diagnostic: cache hits (reuses) in this process
+# versions don't accumulate.
+_TABLE_CACHE: dict[str, MatchTable] = {}
+_TABLE_CACHE_MAX = 4
+_TABLE_BUILDS = 0  # diagnostic: table compilations in this process
+_TABLE_HITS = 0  # diagnostic: cache hits (reuses) in this process
 
 
 def dict_fingerprint(patterns: list[DictPattern]) -> str:
     """Stable content hash of a pattern list — the dictionary VERSION key.
 
     Two calls with equal dictionaries (same patterns, same order) share one
-    compiled automaton per executor; any edit produces a new key."""
+    compiled table per executor; any edit produces a new key."""
     import hashlib
 
     h = hashlib.sha1()
@@ -54,114 +55,70 @@ def dict_fingerprint(patterns: list[DictPattern]) -> str:
     return h.hexdigest()
 
 
-def _automaton(bc_id: str, patterns: list[DictPattern]) -> TokenAhoCorasick:
-    global _AC_BUILDS, _AC_HITS
-    ac = _AC_CACHE.pop(bc_id, None)
-    if ac is None:
-        ac = TokenAhoCorasick([(p.tokens, p) for p in patterns])
-        _AC_BUILDS += 1
-        while len(_AC_CACHE) >= _AC_CACHE_MAX:  # evict LEAST-RECENTLY-USED
-            _AC_CACHE.pop(next(iter(_AC_CACHE)))
+def _match_table(key: str, patterns: list[DictPattern]) -> MatchTable:
+    global _TABLE_BUILDS, _TABLE_HITS
+    table = _TABLE_CACHE.pop(key, None)
+    if table is None:
+        table = compile_table(patterns)
+        _TABLE_BUILDS += 1
+        while len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:  # evict LEAST-RECENTLY-USED
+            _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
     else:
-        _AC_HITS += 1
+        _TABLE_HITS += 1
     # pop + reinsert on every access keeps dict order = recency order, so
     # the eviction above is true LRU (insertion-order eviction could evict
-    # the HOTTEST automaton with >MAX live dictionary versions)
-    _AC_CACHE[bc_id] = ac
-    return ac
+    # the HOTTEST table with >MAX live dictionary versions)
+    _TABLE_CACHE[key] = table
+    return table
 
 
-def detect_mentions(
+def match_turns(
     transcripts: DataFrame,
     patterns: list[DictPattern],
-    text_col: str = "text",
+    kernel: Callable[[pa.RecordBatch, MatchTable], pa.RecordBatch],
+    schema: str,
 ) -> DataFrame:
-    """transcripts -> mentions (MENTIONS_SCHEMA rows), one per dictionary hit.
-
-    Unique single-token dictionaries take a numpy-vectorized match path
-    (one dict-map over the flattened token stream per Arrow batch); other
-    dictionaries use the Aho-Corasick automaton. Identical outputs —
-    cross-checked in tests.
-    """
-    spark = transcripts.sparkSession
+    """Run a ``kernels.dictmatch`` batch kernel over (conv_id, turn_idx,
+    text) in ``mapInArrow``, with the dictionary broadcast once and compiled
+    once per executor."""
     pattern_list = list(patterns)
-    surfaces = [p.tokens[0] for p in pattern_list if len(p.tokens) == 1]
-    if len(surfaces) == len(pattern_list) and len(set(surfaces)) == len(surfaces):
-        return _detect_mentions_vectorized(transcripts, pattern_list, text_col)
-    bc = spark.sparkContext.broadcast(pattern_list)
-    bc_id = dict_fingerprint(pattern_list)  # dictionary-version cache key
+    bc = transcripts.sparkSession.sparkContext.broadcast(pattern_list)
+    key = dict_fingerprint(pattern_list)  # dictionary-version cache key
 
-    def scan_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = _automaton(bc_id, bc.value)
-        for pdf in batches:
-            conv_ids: list[str] = []
-            turn_idxs: list[int] = []
-            kinds: list[str] = []
-            ref_ids: list[int] = []
-            canon_ids: list[int] = []
-            ranks: list[int] = []
-            poss: list[int] = []
-            tok_lens: list[int] = []
-            char_starts: list[int] = []
-            char_ends: list[int] = []
-            texts = pdf[text_col].tolist()
-            convs = pdf["conv_id"].tolist()
-            turns = pdf["turn_idx"].tolist()
-            for conv, turn, txt in zip(convs, turns, texts):
-                if not txt:
-                    continue
-                toks = txt.split(" ")
-                matches = ac.scan(toks)
-                if not matches:
-                    continue
-                offsets = token_char_offsets(txt, toks)
-                for start, length, pat in matches:
-                    conv_ids.append(conv)
-                    turn_idxs.append(turn)
-                    kinds.append(pat.kind)
-                    ref_ids.append(pat.ref_id)
-                    canon_ids.append(pat.canon_id)
-                    ranks.append(pat.rank)
-                    poss.append(start)
-                    tok_lens.append(length)
-                    char_starts.append(offsets[start])
-                    end_tok = start + length - 1
-                    char_ends.append(offsets[end_tok] + len(toks[end_tok]))
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(conv_ids, dtype="object"),
-                    "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                    "kind": pd.Series(kinds, dtype="object"),
-                    "ref_id": pd.Series(ref_ids, dtype="int64"),
-                    "canon_id": pd.Series(canon_ids, dtype="int64"),
-                    "rank": pd.Series(ranks, dtype="int32"),
-                    "pos": pd.Series(poss, dtype="int32"),
-                    "tok_len": pd.Series(tok_lens, dtype="int32"),
-                    "char_start": pd.Series(char_starts, dtype="int32"),
-                    "char_end": pd.Series(char_ends, dtype="int32"),
-                }
-            )
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        table = _match_table(key, bc.value)
+        for batch in batches:
+            yield kernel(batch, table)
 
     # prune to the three needed columns BEFORE the UDF so the parquet scan
     # never materializes unused columns (ReadSchema stays narrow)
-    narrow = transcripts.select("conv_id", "turn_idx", text_col)
-    return narrow.mapInPandas(scan_batches, schema=MENTIONS_DDL)
+    narrow = transcripts.select("conv_id", "turn_idx", "text")
+    return narrow.mapInArrow(run, schema=schema)
+
+
+def detect_mentions(transcripts: DataFrame, patterns: list[DictPattern]) -> DataFrame:
+    """transcripts -> mentions (MENTIONS_SCHEMA rows), one per dictionary
+    hit, unresolved: overlapping and co-located matches are all kept."""
+    return match_turns(transcripts, patterns, mention_batch, MENTIONS_DDL)
 
 
 def resolve_overlaps(mentions: DataFrame) -> DataFrame:
-    """Keep the longest-then-leftmost mention among overlapping spans of the
-    same kind (mehari's worst-consequence/longest-transcript picking analog,
-    logic.rs:452-513). Single-token dictionaries are unaffected."""
+    """Resolve overlapping ENTITY mentions (mehari's longest-transcript
+    picking analog, logic.rs:452-513): at each start keep the longest match
+    (lowest ref_id on ties), then drop mentions inside an earlier kept span.
+    Predicate mentions all pass — each is a triple candidate, and the
+    best-per-group dedup of assemble_triples picks the lowest rank among
+    them (the worst-consequence rule). Single-token dictionaries with
+    unique surfaces are unaffected."""
     from pyspark.sql import Window as W
 
+    is_pred = F.col("kind") != "E"
     w = W.partitionBy("conv_id", "turn_idx", "kind", "pos").orderBy(
         F.desc("tok_len"), F.asc("ref_id")
     )
-    # mentions starting at the same token: keep longest; then drop mentions
-    # fully contained in an earlier, longer mention
     m = (
         mentions.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        .filter(is_pred | (F.col("rn") == 1))
         .drop("rn")
     )
     w2 = W.partitionBy("conv_id", "turn_idx", "kind").orderBy("pos")
@@ -171,99 +128,9 @@ def resolve_overlaps(mentions: DataFrame) -> DataFrame:
     return (
         m.withColumn("prev_end", prev_end)
         .filter(
-            F.col("prev_end").isNull()
+            is_pred
+            | F.col("prev_end").isNull()
             | (F.col("pos") + F.col("tok_len") > F.col("prev_end"))
         )
         .drop("prev_end")
     )
-
-
-def _detect_mentions_vectorized(
-    transcripts: DataFrame, patterns: list[DictPattern], text_col: str
-) -> DataFrame:
-    """Single-token fast path: flatten the batch's token stream, one
-    vectorized dict-map, recover token + char positions with cumsums."""
-    import numpy as np
-
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(patterns)
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pats = bc.value
-        tok2idx = {p.tokens[0]: i for i, p in enumerate(pats)}
-        kinds = np.array([p.kind for p in pats], dtype=object)
-        refs = np.array([p.ref_id for p in pats], dtype=np.int64)
-        canons = np.array([p.canon_id for p in pats], dtype=np.int64)
-        ranks = np.array([p.rank for p in pats], dtype=np.int64)
-
-        def empty() -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "conv_id": pd.Series([], dtype="object"),
-                    "turn_idx": pd.Series([], dtype="int32"),
-                    "kind": pd.Series([], dtype="object"),
-                    "ref_id": pd.Series([], dtype="int64"),
-                    "canon_id": pd.Series([], dtype="int64"),
-                    "rank": pd.Series([], dtype="int32"),
-                    "pos": pd.Series([], dtype="int32"),
-                    "tok_len": pd.Series([], dtype="int32"),
-                    "char_start": pd.Series([], dtype="int32"),
-                    "char_end": pd.Series([], dtype="int32"),
-                }
-            )
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield empty()
-                continue
-            tok_lists = [(t.split(" ") if t else []) for t in pdf[text_col].tolist()]
-            lens = np.fromiter((len(x) for x in tok_lists), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            if total == 0:
-                yield empty()
-                continue
-            flat = [tok for toks in tok_lists for tok in toks]
-            pat_idx = np.fromiter(
-                (tok2idx.get(t, -1) for t in flat), dtype=np.int64, count=total
-            )
-            hit = pat_idx >= 0
-            if not hit.any():
-                yield empty()
-                continue
-            row_of = np.repeat(np.arange(n, dtype=np.int64), lens)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            pos_of = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-            tok_lens_flat = np.fromiter(
-                (len(t) for t in flat), dtype=np.int64, count=total
-            )
-            cum_end = np.cumsum(tok_lens_flat + 1)
-            char_start_flat = cum_end - tok_lens_flat - 1
-            # rows with zero tokens have starts == next row's start (may be
-            # == total for trailing empties); clamp — their repeat count is 0
-            safe_starts = np.minimum(starts, total - 1)
-            row_base = np.repeat(char_start_flat[safe_starts], lens)
-            char_start = char_start_flat - row_base
-            h = np.nonzero(hit)[0]
-            hp = pat_idx[h]
-            conv_vals = pdf["conv_id"].to_numpy()
-            turn_vals = pdf["turn_idx"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(conv_vals[row_of[h]], dtype="object"),
-                    "turn_idx": pd.Series(turn_vals[row_of[h]], dtype="int32"),
-                    "kind": pd.Series(kinds[hp], dtype="object"),
-                    "ref_id": pd.Series(refs[hp], dtype="int64"),
-                    "canon_id": pd.Series(canons[hp], dtype="int64"),
-                    "rank": pd.Series(ranks[hp], dtype="int32"),
-                    "pos": pd.Series(pos_of[h], dtype="int32"),
-                    "tok_len": pd.Series(np.ones(h.size), dtype="int32"),
-                    "char_start": pd.Series(char_start[h], dtype="int32"),
-                    "char_end": pd.Series(
-                        char_start[h] + tok_lens_flat[h], dtype="int32"
-                    ),
-                }
-            )
-
-    narrow = transcripts.select("conv_id", "turn_idx", text_col)
-    return narrow.mapInPandas(run, schema=MENTIONS_DDL)

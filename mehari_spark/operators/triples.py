@@ -1,24 +1,38 @@
 """Triple assembly: (subject, predicate, object) from mention positions.
 
 Rule (the reference semantics our goldens encode, mirroring mehari's
-per-transcript consequence build, logic.rs:818-1052): for every predicate
-mention p in a turn, subj = nearest entity mention strictly before p, obj =
-nearest entity mention strictly after p (token positions); the triple is
-emitted iff both exist. Then best-per-group dedup keeps the lowest-ranked
-(most severe) predicate per (conv_id, turn_idx, subj, obj) — mehari's
-worst-consequence picking (logic.rs:452-513).
+per-transcript consequence build, logic.rs:818-1052): entity mentions are
+overlap-resolved (longest at each start, contained spans dropped); every
+predicate mention p in a turn is a candidate, with subj = nearest entity
+mention strictly before p and obj = nearest entity mention strictly after p
+(token positions); the triple is emitted iff both exist. Then best-per-group
+dedup keeps the lowest-ranked (most severe) predicate per (conv_id,
+turn_idx, subj, obj) — mehari's worst-consequence picking
+(logic.rs:452-513).
 
-Implementation is pure window functions over the mention stream: one shuffle
-on (conv_id, turn_idx), reused by both windows (same partitioning), with
-`last/first ignorenulls` providing the nearest-neighbor lookup — no UDF, no
-self-join. At 100 TB the shuffle key is hash(conv_id, turn_idx); skew is
-bounded because a turn has <= TURN_TOKENS mentions.
+Two implementations, cross-asserted in tests:
+
+- ``extract_triples_fused`` (production): the whole rule inside the
+  Arrow-batch matching kernel, ``kernels.dictmatch.triple_batch``.
+- ``assemble_triples`` (declarative reference, used after
+  ``mentions.resolve_overlaps`` by the windowed plan): pure window
+  functions over the mention stream — one shuffle on (conv_id, turn_idx),
+  reused by both windows, with `last/first ignorenulls` providing the
+  nearest-neighbor lookup. At 100 TB the shuffle key is hash(conv_id,
+  turn_idx); skew is bounded because a turn has <= TURN_TOKENS mentions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from ..kernels.dictmatch import triple_batch
+from .mentions import match_turns
+
+TRIPLES_DDL = (
+    "conv_id string, turn_idx int, subj_id long, pred_id long, obj_id long, pred_pos int"
+)
 
 
 def assemble_triples(mentions: DataFrame) -> DataFrame:
@@ -70,28 +84,10 @@ def assemble_triples(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _empty_triples_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "conv_id": pd.Series([], dtype="object"),
-            "turn_idx": pd.Series([], dtype="int32"),
-            "subj_id": pd.Series([], dtype="int64"),
-            "pred_id": pd.Series([], dtype="int64"),
-            "obj_id": pd.Series([], dtype="int64"),
-            "pred_pos": pd.Series([], dtype="int32"),
-        }
-    )
-
-
-def extract_triples_fused(
-    transcripts: DataFrame,
-    patterns,
-    text_col: str = "text",
-) -> DataFrame:
-    """Fused per-turn kernel: AC scan -> overlap resolution -> nearest-rule
-    assembly -> best-per-group dedup, all inside one mapInPandas pass.
+def extract_triples_fused(transcripts: DataFrame, patterns) -> DataFrame:
+    """Fused per-batch kernel: match -> entity overlap resolution ->
+    nearest-rule assembly -> best-per-group dedup, all inside one
+    ``mapInArrow`` pass (``kernels.dictmatch.triple_batch``).
 
     This is mehari's actual execution shape — the whole per-record kernel
     runs in-process (ConsequencePredictor::predict, logic.rs:164-278) — and
@@ -101,215 +97,6 @@ def extract_triples_fused(
     map, zero shuffles); the windowed implementation (assemble_triples)
     remains as the declarative reference used by the oracle-checked queries.
 
-    Results are identical to resolve_overlaps + assemble_triples (asserted
-    in tests/test_golden_pipeline.py).
-
-    Fast path: when every pattern is a single unique token (the common case
-    for large entity dictionaries), tokenize + match + nearest-rule assembly
-    run fully vectorized in numpy (searchsorted over row-keyed positions) —
-    ~5-10x the per-token Python walk. Multi-token or ambiguous-surface
-    dictionaries take the Aho-Corasick path."""
-    import pandas as pd
-
-    from ..operators.mentions import _automaton, dict_fingerprint
-
-    spark = transcripts.sparkSession
-    pattern_list = list(patterns)
-    surfaces = [p.tokens[0] for p in pattern_list if len(p.tokens) == 1]
-    single_token_ok = len(surfaces) == len(pattern_list) and len(set(surfaces)) == len(
-        surfaces
-    )
-    bc = spark.sparkContext.broadcast(pattern_list)
-    bc_id = dict_fingerprint(pattern_list)
-
-    if single_token_ok:
-
-        def run(batches):
-            import numpy as np
-
-            pats = bc.value
-            # dense pattern table: surface -> (is_entity, ref, canon, rank)
-            tok2idx = {p.tokens[0]: i for i, p in enumerate(pats)}
-            is_ent = np.array([p.kind == "E" for p in pats])
-            refs = np.array([p.ref_id for p in pats], dtype=np.int64)
-            canons = np.array([p.canon_id for p in pats], dtype=np.int64)
-            ranks = np.array([p.rank for p in pats], dtype=np.int64)
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield _empty_triples_pdf()
-                    continue
-                tok_lists = [
-                    (t.split(" ") if t else []) for t in pdf["text"].tolist()
-                ]
-                lens = np.fromiter(
-                    (len(x) for x in tok_lists), dtype=np.int64, count=n
-                )
-                if lens.sum() == 0:
-                    yield _empty_triples_pdf()
-                    continue
-                flat = [tok for toks in tok_lists for tok in toks]
-                pat_idx = np.fromiter(
-                    (tok2idx.get(t, -1) for t in flat),
-                    dtype=np.int64,
-                    count=len(flat),
-                )
-                hit = pat_idx >= 0
-                if not hit.any():
-                    yield _empty_triples_pdf()
-                    continue
-                row_of = np.repeat(np.arange(n, dtype=np.int64), lens)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                pos_of = np.arange(lens.sum(), dtype=np.int64) - np.repeat(
-                    starts, lens
-                )
-                h_row = row_of[hit]
-                h_pos = pos_of[hit]
-                h_pat = pat_idx[hit]
-                ent_mask = is_ent[h_pat]
-                # row-scoped keys: row * 2^32 + pos (pos << 32 never needed;
-                # turn length bounded far below 2^32)
-                key = h_row * np.int64(1 << 32) + h_pos
-                e_key = key[ent_mask]
-                e_row = h_row[ent_mask]
-                e_ref = refs[h_pat[ent_mask]]
-                p_key = key[~ent_mask]
-                p_row = h_row[~ent_mask]
-                p_pos = h_pos[~ent_mask]
-                p_canon = canons[h_pat[~ent_mask]]
-                p_rank = ranks[h_pat[~ent_mask]]
-                if e_key.size == 0 or p_key.size == 0:
-                    yield _empty_triples_pdf()
-                    continue
-                # hits are emitted in (row, pos) order already (flat scan)
-                i = np.searchsorted(e_key, p_key)
-                has_before = (i > 0) & (
-                    e_row[np.maximum(i - 1, 0)] == p_row
-                )
-                has_after = (i < e_key.size) & (
-                    e_row[np.minimum(i, e_key.size - 1)] == p_row
-                )
-                ok = has_before & has_after
-                if not ok.any():
-                    yield _empty_triples_pdf()
-                    continue
-                subj = e_ref[i[ok] - 1]
-                obj = e_ref[np.minimum(i[ok], e_key.size - 1)]
-                c_row = p_row[ok]
-                c_pos = p_pos[ok]
-                c_canon = p_canon[ok]
-                c_rank = p_rank[ok]
-                # best-per-(row, subj, obj): sort by (row, subj, obj, rank,
-                # canon, pos) and keep first of each group
-                order = np.lexsort((c_pos, c_canon, c_rank, obj, subj, c_row))
-                sr, ss, so = c_row[order], subj[order], obj[order]
-                first = np.ones(order.size, dtype=bool)
-                first[1:] = (
-                    (sr[1:] != sr[:-1]) | (ss[1:] != ss[:-1]) | (so[1:] != so[:-1])
-                )
-                sel = order[first]
-                conv_vals = pdf["conv_id"].to_numpy()
-                turn_vals = pdf["turn_idx"].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "conv_id": pd.Series(conv_vals[c_row[sel]], dtype="object"),
-                        "turn_idx": pd.Series(turn_vals[c_row[sel]], dtype="int32"),
-                        "subj_id": pd.Series(subj[sel], dtype="int64"),
-                        "pred_id": pd.Series(c_canon[sel], dtype="int64"),
-                        "obj_id": pd.Series(obj[sel], dtype="int64"),
-                        "pred_pos": pd.Series(c_pos[sel], dtype="int32"),
-                    }
-                )
-
-        narrow = transcripts.select("conv_id", "turn_idx", text_col)
-        return narrow.mapInPandas(
-            run,
-            schema=(
-                "conv_id string, turn_idx int, subj_id long, pred_id long, "
-                "obj_id long, pred_pos int"
-            ),
-        )
-
-    def run(batches):
-        ac = _automaton(bc_id, bc.value)
-        for pdf in batches:
-            convs, turns_, subjs, preds, objs, ppos = [], [], [], [], [], []
-            for conv, turn, txt in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf[text_col].tolist(),
-            ):
-                if not txt:
-                    continue
-                toks = txt.split(" ")
-                matches = ac.scan(toks)
-                if not matches:
-                    continue
-                # overlap resolution per kind: longest-at-pos, drop contained
-                ents: list[tuple[int, int, object]] = []
-                prds: list[tuple[int, object]] = []
-                best_at: dict[tuple[str, int], tuple[int, int, object]] = {}
-                for start, length, pat in matches:
-                    key = (pat.kind, start)
-                    cur = best_at.get(key)
-                    if cur is None or (-length, pat.ref_id) < (-cur[1], cur[2].ref_id):
-                        best_at[key] = (start, length, pat)
-                prev_end = {"E": -1, "P": -1}
-                for kind, start in sorted(best_at):
-                    s, L, pat = best_at[(kind, start)]
-                    if s + L > prev_end[kind]:
-                        if kind == "E":
-                            ents.append((s, L, pat))
-                        else:
-                            prds.append((s, pat))
-                        prev_end[kind] = max(prev_end[kind], s + L)
-                if not ents or not prds:
-                    continue
-                # nearest entity before/after each predicate
-                epos = [e[0] for e in ents]
-                import bisect
-
-                cand = []
-                for pi, pat in prds:
-                    # strictly-before / strictly-after: an entity co-located
-                    # with the predicate (same pos, ambiguous surface) is
-                    # neither subj nor obj — matches the golden rule and the
-                    # RANGE-framed windowed plan
-                    i_before = bisect.bisect_left(epos, pi)
-                    i_after = bisect.bisect_right(epos, pi)
-                    if i_before == 0 or i_after == len(epos):
-                        continue
-                    subj = ents[i_before - 1][2].ref_id
-                    obj = ents[i_after][2].ref_id
-                    cand.append((subj, obj, pat.rank, pat.canon_id, pi))
-                best: dict[tuple[int, int], tuple[int, int, int]] = {}
-                for subj, obj, rank, canon, pi in cand:
-                    cur = best.get((subj, obj))
-                    if cur is None or (rank, canon, pi) < cur:
-                        best[(subj, obj)] = (rank, canon, pi)
-                for (subj, obj), (_r, canon, pi) in best.items():
-                    convs.append(conv)
-                    turns_.append(turn)
-                    subjs.append(subj)
-                    preds.append(canon)
-                    objs.append(obj)
-                    ppos.append(pi)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(convs, dtype="object"),
-                    "turn_idx": pd.Series(turns_, dtype="int32"),
-                    "subj_id": pd.Series(subjs, dtype="int64"),
-                    "pred_id": pd.Series(preds, dtype="int64"),
-                    "obj_id": pd.Series(objs, dtype="int64"),
-                    "pred_pos": pd.Series(ppos, dtype="int32"),
-                }
-            )
-
-    narrow = transcripts.select("conv_id", "turn_idx", text_col)
-    return narrow.mapInPandas(
-        run,
-        schema=(
-            "conv_id string, turn_idx int, subj_id long, pred_id long, "
-            "obj_id long, pred_pos int"
-        ),
-    )
+    Results are identical to resolve_overlaps + assemble_triples and to
+    datagen.reference_triples (asserted in tests)."""
+    return match_turns(transcripts, patterns, triple_batch, TRIPLES_DDL)

@@ -8,7 +8,7 @@ the conv_id repartition, the triple-assembly window, and the coref groupBy):
  2. repartition by hash(conv_id) with optional hot-key salting, then
     sortWithinPartitions(conv_id, turn_idx) — the coordinate-sorted
     contract (compound.rs:54-60 analog; per-turn text-equality invariant)
- 3. mapInPandas Aho-Corasick mention scan (broadcast dictionary)
+ 3. mapInArrow dictionary mention scan (broadcast dictionary)
  4. windowed triple assembly + best-per-group dedup
  5. per-conversation coreference connected components
  6. bucketed, checkpointed write of triples + entities + metrics

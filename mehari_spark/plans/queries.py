@@ -136,7 +136,7 @@ SELECT conv_id, turn_idx, entity_id::BIGINT AS entity_id, COUNT(*)::BIGINT AS n_
 FROM em GROUP BY conv_id, turn_idx, entity_id""",
 )
 def kg_entity_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 analog: Aho-Corasick entity mention detection (mapInPandas)."""
+    """J1 analog: dictionary entity mention detection (mapInArrow)."""
     m = detect_mentions(transcripts(spark, sf_dir, spread="auto"), demo_patterns())
     return (
         m.filter(F.col("kind") == "E")
@@ -2089,7 +2089,7 @@ def kg_cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# multi-token dictionary path (AC automaton + overlap resolution under the
+# multi-token dictionary (trie match + overlap resolution under the
 # driver's oracle for the first time — provider.rs:35-99 interval-tree scale
 # surface). The DuckDB oracle reproduces 2-token matches with an
 # adjacent-token self-join and overlap resolution with NOT EXISTS:
@@ -2150,10 +2150,9 @@ SELECT conv_id, turn_idx, subj_id, pred_id, obj_id FROM triples""",
 )
 def kg_triples_multitok(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triples under the MULTI-TOKEN dictionary via the production fused
-    kernel's Aho-Corasick branch (the dictionary has 2-token + ambiguous
-    surfaces, so the vectorized shortcut is ineligible): AC scan + per-kind
-    longest-then-leftmost overlap resolution + assembly, scan-local with
-    zero shuffles — 3x the windowed plan at sf0.1 (0.65s vs 2.0s). The
+    kernel (the dictionary has 2-token + ambiguous surfaces): trie match +
+    entity longest-then-leftmost overlap resolution + assembly, scan-local
+    with zero shuffles. The
     windowed twin (detect_mentions -> resolve_overlaps -> assemble_triples)
     is cross-asserted identical in pytest."""
     from ..dictionary import multitok_patterns

@@ -44,7 +44,7 @@ PREDICATE_ONTOLOGY_SCHEMA = T.StructType(
     ]
 )
 
-# mention rows emitted by the Aho-Corasick mapInPandas scan
+# mention rows emitted by the dictionary-matching mapInArrow scan
 MENTIONS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),

@@ -2,7 +2,7 @@
 
 The fused per-turn kernel is stateless, so it lifts directly onto a
 streaming DataFrame: ``readStream`` over the transcripts location →
-``extract_triples_fused`` (mapInPandas is supported on streams) →
+``extract_triples_fused`` (mapInArrow is supported on streams) →
 ``foreachBatch`` with epoch-keyed idempotent writes for exactly-once.
 
 Cross-turn coreference is windowed-stateful and stays in the batch pipeline

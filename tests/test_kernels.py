@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from mehari_spark.kernels.ahocorasick import TokenAhoCorasick, token_char_offsets
+from mehari_spark.kernels.ahocorasick import TokenAhoCorasick
 from mehari_spark.kernels.fingerprint import fingerprint, rolling_hashes, winnow
 from mehari_spark.kernels.minhash import (
     band_keys,
@@ -40,13 +40,6 @@ class TestAhoCorasick:
         ac = TokenAhoCorasick([(("a", "b", "c"), 1), (("b", "c", "d"), 2)])
         got = sorted(ac.scan("a b c d".split()))
         assert got == [(0, 3, 1), (1, 3, 2)]
-
-    def test_char_offsets(self):
-        text = "ab c def"
-        toks = text.split(" ")
-        offs = token_char_offsets(text, toks)
-        assert offs == [0, 3, 5]
-        assert text[offs[2] : offs[2] + len(toks[2])] == "def"
 
     def test_empty(self):
         ac = TokenAhoCorasick([(("x",), 1)])

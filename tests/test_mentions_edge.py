@@ -1,19 +1,24 @@
-"""Edge cases for the vectorized mention path (regression: trailing
-empty-text rows in an Arrow batch)."""
+"""Edge cases for the Arrow-batch matching kernel (regression: trailing
+empty-text rows in an Arrow batch; code-point char offsets)."""
 
 from __future__ import annotations
 
 from mehari_spark.dictionary import DictPattern
 from mehari_spark.operators.mentions import detect_mentions
+from mehari_spark.operators.triples import extract_triples_fused
 
 
-def test_trailing_empty_rows_and_unicode(spark):
-    pats = [DictPattern(("é",), "E", 1, 1, 0), DictPattern(("x",), "P", 2, 2, 1)]
-    df = spark.createDataFrame(
+def _edge_turns(spark):
+    return spark.createDataFrame(
         [("c", 0, "é x é é"), ("c", 1, None), ("c", 2, ""), ("c", 3, "zz"),
          ("c", 4, "x"), ("c", 5, None)],
         "conv_id string, turn_idx int, text string",
     )
+
+
+def test_trailing_empty_rows_and_unicode(spark):
+    pats = [DictPattern(("é",), "E", 1, 1, 0), DictPattern(("x",), "P", 2, 2, 1)]
+    df = _edge_turns(spark)
     rows = sorted(
         (r.turn_idx, r.kind, r.pos, r.char_start, r.char_end)
         for r in detect_mentions(df, pats).collect()
@@ -24,6 +29,32 @@ def test_trailing_empty_rows_and_unicode(spark):
     ]
     txt = "é x é é"
     assert all(txt[cs:ce] in ("é", "x") for t, _k, _p, cs, ce in rows if t == 0)
+
+    # the same rows through a multi-token dictionary and the fused operator:
+    # "é é" spans two tokens (char 4..7) and, as the longest entity at pos 2,
+    # shadows both single "é" mentions after the predicate
+    multi = pats + [DictPattern(("é", "é"), "E", 3, 3, 0)]
+    rows_multi = sorted(
+        (r.turn_idx, r.kind, r.pos, r.char_start, r.char_end)
+        for r in detect_mentions(df, multi).collect()
+    )
+    assert rows_multi == sorted(rows + [(0, "E", 2, 4, 7)])
+    assert txt[4:7] == "é é"
+
+    def fused(p):
+        return {
+            (r.turn_idx, r.subj_id, r.pred_id, r.obj_id, r.pred_pos)
+            for r in extract_triples_fused(df, p).collect()
+        }
+
+    assert fused(pats) == {(0, 1, 2, 1, 1)}
+    assert fused(multi) == {(0, 1, 2, 3, 1)}
+
+
+def test_empty_dictionary(spark):
+    df = _edge_turns(spark)
+    assert detect_mentions(df, []).count() == 0
+    assert extract_triples_fused(df, []).count() == 0
 
 
 def test_vectorized_equals_ac_path(spark):

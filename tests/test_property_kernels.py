@@ -1,13 +1,18 @@
-"""Property-based kernel tests (hypothesis): the AC automaton against a
-naive scanner, union-find against brute-force reachability, minhash
+"""Property-based kernel tests (hypothesis): the AC automaton and the
+Arrow-batch matching kernel against a naive scanner and the golden triple
+extractor, union-find against brute-force reachability, minhash
 determinism — randomized analogs of mehari's key round-trip properties
 (keys.rs:207-280)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
+from mehari_spark.datagen import Turn, reference_triples
+from mehari_spark.dictionary import DictPattern
 from mehari_spark.kernels.ahocorasick import TokenAhoCorasick
+from mehari_spark.kernels.dictmatch import compile_table, match, tokenize, triple_batch
 from mehari_spark.kernels.minhash import hash_tokens, minhash_signature, perm_params
 from mehari_spark.kernels.unionfind import connected_components
 
@@ -38,6 +43,49 @@ def test_ac_equals_naive(text, pats):
     ac = TokenAhoCorasick([(p, i) for i, p in enumerate(pats)])
     got = sorted((s, l, pid) for s, l, pid in ac.scan(text))
     assert got == naive_scan(text, pats)
+    table = compile_table([DictPattern(p, "E", i, i, 0) for i, p in enumerate(pats)])
+    raw = match(table, tokenize(pa.array([" ".join(text)]), table))
+    assert sorted(zip(*(a.tolist() for a in raw))) == naive_scan(text, pats)
+
+
+# a 3-token alphabet makes shared surfaces, suffix-contained aliases and
+# dense hits likely
+ABC = st.sampled_from(["a", "b", "c"])
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    turns=st.lists(st.lists(ABC, max_size=12), max_size=6),
+    pats=st.lists(
+        st.tuples(
+            st.lists(ABC, min_size=1, max_size=3).map(tuple),
+            st.sampled_from("EP"),
+            st.integers(0, 5),
+            st.integers(0, 3),
+        ),
+        min_size=1,
+        max_size=10,
+    ),
+)
+def test_triple_batch_equals_golden(turns, pats):
+    # shared surfaces across and within kinds, duplicate ids, contained and
+    # co-located spans: the batch kernel must give the golden triples
+    dictionary = [DictPattern(t, k, i, i + 10 * (k == "P"), r) for t, k, i, r in pats]
+    texts = [" ".join(toks) for toks in turns]
+    batch = pa.RecordBatch.from_pydict(
+        {"conv_id": ["c"] * len(texts), "turn_idx": list(range(len(texts))), "text": texts},
+        schema=pa.schema(
+            [("conv_id", pa.string()), ("turn_idx", pa.int32()), ("text", pa.string())]
+        ),
+    )
+    got = {
+        (r["conv_id"], r["turn_idx"], r["subj_id"], r["pred_id"], r["obj_id"])
+        for r in triple_batch(batch, compile_table(dictionary)).to_pylist()
+    }
+    golden = reference_triples(
+        [Turn("c", i, "user", t, None, None) for i, t in enumerate(texts)], dictionary
+    )
+    assert got == golden
 
 
 @settings(max_examples=100, deadline=None)

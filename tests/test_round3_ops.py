@@ -231,6 +231,7 @@ class TestMultiTokenFuzz:
             DictPattern(("p",), "P", 101, 101, 1),
             DictPattern(("q",), "P", 102, 102, 2),
             DictPattern(("d",), "P", 103, 103, 3),  # dual-kind surface
+            DictPattern(("p",), "P", 104, 104, 0),  # ambiguous predicate surface
         ]
         rng = random.Random(99)
         vocab = ["a", "b", "c", "d", "p", "q", "z"]
@@ -266,7 +267,7 @@ class TestMultiTokenFuzz:
 
 
 # --------------------------------------------------------------------------
-# AC automaton cache: content-keyed, reused, bounded
+# match-table cache: content-keyed, reused, bounded
 # --------------------------------------------------------------------------
 
 
@@ -286,22 +287,22 @@ class TestAutomatonCache:
 
         pats = multitok_patterns()
         key = M.dict_fingerprint(pats)
-        M._AC_CACHE.clear()
-        before = M._AC_BUILDS
-        a1 = M._automaton(key, pats)
-        a2 = M._automaton(key, pats)
+        M._TABLE_CACHE.clear()
+        before = M._TABLE_BUILDS
+        a1 = M._match_table(key, pats)
+        a2 = M._match_table(key, pats)
         assert a1 is a2  # compiled once, reused
-        assert M._AC_BUILDS == before + 1
+        assert M._TABLE_BUILDS == before + 1
 
     def test_cache_bounded(self):
         import mehari_spark.operators.mentions as M
         from mehari_spark.dictionary import DictPattern
 
-        M._AC_CACHE.clear()
+        M._TABLE_CACHE.clear()
         for i in range(10):
             pats = [DictPattern((f"tok{i}", f"b{i}"), "E", i, i, 0)]
-            M._automaton(M.dict_fingerprint(pats), pats)
-        assert len(M._AC_CACHE) <= M._AC_CACHE_MAX
+            M._match_table(M.dict_fingerprint(pats), pats)
+        assert len(M._TABLE_CACHE) <= M._TABLE_CACHE_MAX
 
 
 # --------------------------------------------------------------------------

@@ -165,22 +165,22 @@ class TestCcCheckpointIdentity:
 
 class TestAcCacheLru:
     def test_hot_entry_survives_eviction(self):
-        from mehari_spark.kernels.ahocorasick import TokenAhoCorasick
+        from mehari_spark.kernels.dictmatch import compile_table
         from mehari_spark.operators import mentions as m
 
-        saved = dict(m._AC_CACHE)
-        m._AC_CACHE.clear()
+        saved = dict(m._TABLE_CACHE)
+        m._TABLE_CACHE.clear()
         try:
             for key in ("a", "b", "c", "d"):
-                m._AC_CACHE[key] = TokenAhoCorasick([((key,), key)])
+                m._TABLE_CACHE[key] = compile_table([])
             # touch 'a' (the insertion-order victim) -> now most recent
-            assert m._automaton("a", []) is m._AC_CACHE["a"]
-            m._automaton("e", [])  # triggers eviction at MAX=4
-            assert "a" in m._AC_CACHE  # LRU keeps the hot entry
-            assert "b" not in m._AC_CACHE  # true least-recently-used evicted
+            assert m._match_table("a", []) is m._TABLE_CACHE["a"]
+            m._match_table("e", [])  # triggers eviction at MAX=4
+            assert "a" in m._TABLE_CACHE  # LRU keeps the hot entry
+            assert "b" not in m._TABLE_CACHE  # true least-recently-used evicted
         finally:
-            m._AC_CACHE.clear()
-            m._AC_CACHE.update(saved)
+            m._TABLE_CACHE.clear()
+            m._TABLE_CACHE.update(saved)
 
 
 class TestScaleGuards:
