@@ -13,6 +13,9 @@ from __future__ import annotations
 import numpy as np
 
 _MERSENNE = np.uint64((1 << 61) - 1)
+# token budget of one signatures_batch hash segment: a (num_perm, tokens)
+# uint64 matrix, 1 GiB at 128 permutations
+_SEGMENT_TOKENS = 1 << 20
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -74,29 +77,41 @@ def signatures_batch(
 ) -> np.ndarray:
     """MinHash signatures for a whole batch of token SETS at once.
 
-    One (num_perm, total_tokens) universal-hash pass over the batch's
-    concatenated token hashes + ``np.minimum.reduceat`` per document
-    segment — bit-identical to calling :func:`minhash_signature` per
-    document (same permutation values, min over the same set; min is
-    order-independent), but the modulo pass and the min run as two
-    vectorized ops instead of one small numpy call per document. Empty
-    documents get the uint64-max sentinel signature, as before."""
+    A (num_perm, tokens) universal-hash pass over the concatenated token
+    hashes of a run of documents + ``np.minimum.reduceat`` per document —
+    bit-identical to calling :func:`minhash_signature` per document (same
+    permutation values, min over the same set; min is order-independent),
+    but the modulo pass and the min run as two vectorized ops instead of
+    one small numpy call per document. The runs are document-aligned
+    segments of at most ``_SEGMENT_TOKENS`` tokens (a longer document is a
+    segment of its own), so the hash matrix stays bounded however large
+    the batch. Empty documents get the uint64-max sentinel signature."""
     num_perm = a.shape[0]
     n = len(tok_sets)
     lens = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
-    total = int(lens.sum())
+    ends = np.cumsum(lens)
+    starts = ends - lens
     sigs = np.full((n, num_perm), np.iinfo(np.uint64).max, dtype=np.uint64)
-    if total == 0:
-        return sigs
     th = np.fromiter(
-        (memo[t] for s in tok_sets for t in s), dtype=np.uint64, count=total
+        (memo[t] for s in tok_sets for t in s),
+        dtype=np.uint64,
+        count=int(ends[-1]) if n else 0,
     )
-    with np.errstate(over="ignore"):
-        h = (a[:, None] * (th[None, :] & _MERSENNE) + b[:, None]) % _MERSENNE
-    nonempty = lens > 0
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))[nonempty]
-    # reduceat segments must start in-bounds; empty docs keep the sentinel
-    sigs[nonempty] = np.minimum.reduceat(h, starts, axis=1).T
+    lo = 0
+    while lo < n:
+        # docs lo..hi-1 end within the budget; at least one doc per segment
+        hi = max(lo + 1, int(np.searchsorted(ends, starts[lo] + _SEGMENT_TOKENS, "right")))
+        seg = th[starts[lo] : ends[hi - 1]]
+        nonempty = lens[lo:hi] > 0
+        if seg.size:
+            with np.errstate(over="ignore"):
+                h = a[:, None] * (seg[None, :] & _MERSENNE)
+                h += b[:, None]
+                h %= _MERSENNE
+            # reduceat segments must start in-bounds; empty docs keep the sentinel
+            offsets = (starts[lo:hi] - starts[lo])[nonempty]
+            sigs[lo:hi][nonempty] = np.minimum.reduceat(h, offsets, axis=1).T
+        lo = hi
     return sigs
 
 

@@ -2,13 +2,14 @@
 
 This is the engine's hot path and the direct analog of mehari's
 variant-x-transcript interval join (provider.rs:795-843) as executed through
-the Arrow batch API (mehari-python/src/lib.rs:297-380): the dictionary is a
-broadcast variable, compiled into a ``kernels.dictmatch.MatchTable`` once
-per executor (module cache keyed by the dictionary's content — the
-thread-local-reader idiom of db/mod.rs:357-375), and each Arrow batch of
-turns is matched in one call with no per-row Python. ``text`` stays Arrow
-end to end; no shuffle — mention detection is a narrow transformation over
-the transcripts scan. ``extract_triples_fused`` runs the same kernel.
+the Arrow batch API (mehari-python/src/lib.rs:297-380): the dictionary is
+compiled once on the driver into a ``kernels.dictmatch.MatchTable`` and
+broadcast once per dictionary version (a driver cache keyed by the
+dictionary's content — mehari loads its database once and shares it,
+db/mod.rs:357-375), and each Arrow batch of turns is matched in one call
+with no per-row Python. ``text`` stays Arrow end to end; no shuffle —
+mention detection is a narrow transformation over the transcripts scan.
+``extract_triples_fused`` runs the same kernel.
 
 Scale notes (100 TB): the only data movement is the parquet scan itself;
 column pruning keeps the scan to (conv_id, turn_idx, text); the output is
@@ -21,6 +22,7 @@ from __future__ import annotations
 from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,23 +30,24 @@ from ..dictionary import DictPattern
 from ..kernels.dictmatch import MatchTable, compile_table, mention_batch
 from ..schemas import MENTIONS_DDL
 
-# per-executor match-table cache (built once per dictionary version, reused
-# across tasks AND across queries — the thread-local-reader idiom of
-# db/mod.rs:357-375). Keyed by a CONTENT fingerprint of the pattern list, so
-# re-running a query with the same dictionary reuses the compiled table
-# instead of recompiling per invocation; bounded so abandoned dictionary
-# versions don't accumulate.
-_TABLE_CACHE: dict[str, MatchTable] = {}
+# driver-side cache of match-table broadcasts: one broadcast of the table,
+# compiled once on the driver, per dictionary version. Keyed by
+# (applicationId, CONTENT fingerprint of the pattern list), so re-running a
+# query or a stream epoch with the same dictionary reuses the broadcast —
+# and a Python worker unpickles a broadcast id once in its lifetime —
+# instead of shipping the pattern list and recompiling per invocation;
+# bounded so abandoned dictionary versions don't accumulate.
+_TABLE_CACHE: dict[tuple[str, str], Broadcast] = {}
 _TABLE_CACHE_MAX = 4
-_TABLE_BUILDS = 0  # diagnostic: table compilations in this process
-_TABLE_HITS = 0  # diagnostic: cache hits (reuses) in this process
+_TABLE_BUILDS = 0  # diagnostic: table compilations + broadcasts
+_TABLE_HITS = 0  # diagnostic: cache hits (reused broadcasts)
 
 
 def dict_fingerprint(patterns: list[DictPattern]) -> str:
     """Stable content hash of a pattern list — the dictionary VERSION key.
 
     Two calls with equal dictionaries (same patterns, same order) share one
-    compiled table per executor; any edit produces a new key."""
+    compiled, broadcast table; any edit produces a new key."""
     import hashlib
 
     h = hashlib.sha1()
@@ -55,21 +58,36 @@ def dict_fingerprint(patterns: list[DictPattern]) -> str:
     return h.hexdigest()
 
 
-def _match_table(key: str, patterns: list[DictPattern]) -> MatchTable:
+def _match_table(
+    sc: SparkContext, key: str, patterns: list[DictPattern]
+) -> Broadcast:
+    """The broadcast compiled table for dictionary version ``key``."""
     global _TABLE_BUILDS, _TABLE_HITS
-    table = _TABLE_CACHE.pop(key, None)
-    if table is None:
-        table = compile_table(patterns)
+    app_id = sc.applicationId
+    bc = _TABLE_CACHE.pop((app_id, key), None)
+    if bc is None:
+        # a broadcast of a stopped context died with it: forget those first
+        # (unpersisting would address the NEW context's broadcast ids)
+        for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
+            del _TABLE_CACHE[k]
+        bc = sc.broadcast(compile_table(patterns))
         _TABLE_BUILDS += 1
         while len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:  # evict LEAST-RECENTLY-USED
-            _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
+            # unpersist, never destroy: a DataFrame built earlier may still
+            # reference the evicted broadcast and re-fetch it from the driver
+            _TABLE_CACHE.pop(next(iter(_TABLE_CACHE))).unpersist()
     else:
         _TABLE_HITS += 1
     # pop + reinsert on every access keeps dict order = recency order, so
     # the eviction above is true LRU (insertion-order eviction could evict
     # the HOTTEST table with >MAX live dictionary versions)
-    _TABLE_CACHE[key] = table
-    return table
+    _TABLE_CACHE[(app_id, key)] = bc
+    return bc
+
+
+def match_table_counters() -> dict[str, int]:
+    """Driver-side table cache counters since process start."""
+    return {"match_table_builds": _TABLE_BUILDS, "match_table_hits": _TABLE_HITS}
 
 
 def match_turns(
@@ -79,14 +97,17 @@ def match_turns(
     schema: str,
 ) -> DataFrame:
     """Run a ``kernels.dictmatch`` batch kernel over (conv_id, turn_idx,
-    text) in ``mapInArrow``, with the dictionary broadcast once and compiled
-    once per executor."""
+    text) in ``mapInArrow`` against the dictionary's compiled table,
+    broadcast once per dictionary version."""
     pattern_list = list(patterns)
-    bc = transcripts.sparkSession.sparkContext.broadcast(pattern_list)
-    key = dict_fingerprint(pattern_list)  # dictionary-version cache key
+    bc = _match_table(
+        transcripts.sparkSession.sparkContext,
+        dict_fingerprint(pattern_list),  # dictionary-version cache key
+        pattern_list,
+    )
 
     def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        table = _match_table(key, bc.value)
+        table = bc.value
         for batch in batches:
             yield kernel(batch, table)
 

@@ -20,6 +20,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -208,7 +209,6 @@ def write_bucketed(
     recomputes only the remainder. ``fail_after`` kills the run after K
     commits (the kill/restart test from BASELINE.md).
     """
-    spark = df.sparkSession
     committed = load_committed(out_dir, n_buckets=n_buckets, key_col=key_col)
     remaining = [b for b in range(n_buckets) if b not in committed]
     results: list[BucketResult] = [BucketResult(b, 0, True, 0.0) for b in committed]
@@ -232,26 +232,19 @@ def write_bucketed(
     staged.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
     stage_elapsed = time.time() - t0
 
-    # one footer-level job for all bucket row counts (not one per bucket).
-    # A fully-filtered input writes NO _bucket=* dirs — parquet can't infer
-    # a schema from an empty dir, so guard and commit zero-row checkpoints.
-    counts: dict[int, int] = {}
-    if _glob.glob(os.path.join(staging, "_bucket=*")):
-        counts = {
-            int(r["_bucket"]): r["cnt"]
-            for r in spark.read.parquet(staging)
-            .groupBy("_bucket")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-
     n_done = 0
     try:
         for b in remaining:
             t1 = time.time()
             src = os.path.join(staging, f"_bucket={b}")
             final = os.path.join(out_dir, f"bucket={b}")
-            rows = counts.get(b, 0)
+            # row count from the staged files' parquet footers — no Spark
+            # job, the same local-filesystem contract as the os.replace
+            # below; a bucket the input never reached has no dir: 0 rows
+            rows = sum(
+                pq.read_metadata(f).num_rows
+                for f in _glob.glob(os.path.join(src, "*.parquet"))
+            )
             if os.path.exists(src):
                 if os.path.exists(final):
                     shutil.rmtree(final)

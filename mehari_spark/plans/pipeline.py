@@ -8,7 +8,7 @@ the conv_id repartition, the triple-assembly window, and the coref groupBy):
  2. repartition by hash(conv_id) with optional hot-key salting, then
     sortWithinPartitions(conv_id, turn_idx) — the coordinate-sorted
     contract (compound.rs:54-60 analog; per-turn text-equality invariant)
- 3. mapInArrow dictionary mention scan (broadcast dictionary)
+ 3. mapInArrow dictionary mention scan (broadcast compiled match table)
  4. windowed triple assembly + best-per-group dedup
  5. per-conversation coreference connected components
  6. bucketed, checkpointed write of triples + entities + metrics
@@ -27,7 +27,11 @@ from pyspark.sql import functions as F
 from ..dictionary import DictPattern
 from ..operators.coref import coref_clusters
 from ..operators.enrich import enrich_triples
-from ..operators.mentions import detect_mentions, resolve_overlaps
+from ..operators.mentions import (
+    detect_mentions,
+    match_table_counters,
+    resolve_overlaps,
+)
 from ..operators.triples import assemble_triples, extract_triples_fused
 from .lineage import write_bucketed, write_metrics
 
@@ -103,6 +107,7 @@ def run_pipeline(
     carries KB annotations exactly like mehari's annotated VCF output."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
+    tables_before = match_table_counters()
 
     if mode == "fused":
         # the fused kernel is turn-local: no cross-row ordering needed, so
@@ -169,5 +174,8 @@ def run_pipeline(
         "n_partitions": n_partitions,
         "n_buckets": n_buckets,
     }
+    # this call's match-table cache traffic (a build compiles + broadcasts)
+    for name, n in match_table_counters().items():
+        metrics[name] = n - tables_before[name]
     write_metrics(out_dir, run_id, "pipeline", metrics)
     return metrics

@@ -292,7 +292,8 @@ def repair_span_compaction(store_dir: str) -> None:
     for dest, rec in staged.items():
         if os.path.isdir(dest):
             for cov in rec.get("covers", []):
-                shutil.rmtree(cov, ignore_errors=True)
+                if cov != dest:
+                    shutil.rmtree(cov, ignore_errors=True)
             append_checkpoint(
                 store_dir,
                 {
@@ -349,6 +350,15 @@ def compact_span_store(
             out[sub] = 0
             continue
         base = os.path.join(store_dir, sub)
+        lo, hi = min(epochs_covered), max(epochs_covered)
+        dest = os.path.join(base, f"epoch=c{lo}-{hi}")
+        if dest in eligible:
+            # e.g. c0-5 was compacted around a then-unapplied epoch 3: the
+            # merge would overwrite a source with its own output
+            raise RuntimeError(
+                f"span-store compaction of {sub}: destination {dest} is one of "
+                "its own sources — aborted before staging"
+            )
         schema = (
             _POSTING_SCHEMA
             if sub == "index"
@@ -372,8 +382,6 @@ def compact_span_store(
             raise RuntimeError(
                 f"span-store compaction of {sub} would change content — aborted"
             )
-        lo, hi = min(epochs_covered), max(epochs_covered)
-        dest = os.path.join(base, f"epoch=c{lo}-{hi}")
         append_checkpoint(
             store_dir,
             {
@@ -383,13 +391,10 @@ def compact_span_store(
                 "covers": eligible,
             },
         )
-        # the destination may exist from an earlier compaction round that
-        # covered a smaller range ending at the same hi — dest names are
-        # range-keyed so that cannot collide; remove defensively anyway
-        shutil.rmtree(dest, ignore_errors=True)
-        os.replace(staged, dest)
+        os.replace(staged, dest)  # dest is no source, so it cannot exist
         for d in eligible:
-            shutil.rmtree(d, ignore_errors=True)
+            if d != dest:
+                shutil.rmtree(d, ignore_errors=True)
         append_checkpoint(
             store_dir,
             {"stage": "span_compact", "status": "compact_done", "dest": dest},

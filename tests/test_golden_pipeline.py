@@ -166,6 +166,34 @@ class TestResume:
         assert len(buckets) == len(set(buckets)) == 4
 
 
+class TestPipelineMetrics:
+    def test_match_table_cache_metrics_written(self, spark, turns, tmp_path):
+        """run_pipeline reports its match-table cache traffic in
+        _metrics.jsonl: a rerun with the same dictionary is a pure hit.
+        Committed row counts (read from parquet footers) match the data."""
+        import json
+
+        df = turns_df(spark, turns)
+        per_run = []
+        for name in ("a", "b"):
+            out = str(tmp_path / name)
+            metrics = run_pipeline(spark, df, fixture_patterns(), out, n_buckets=4)
+            with open(os.path.join(out, "_metrics.jsonl")) as f:
+                rows = [json.loads(line) for line in f]
+            written = {
+                r["metric"]: r["value"] for r in rows if r["stage"] == "pipeline"
+            }
+            assert written["match_table_builds"] == metrics["match_table_builds"]
+            assert written["match_table_hits"] == metrics["match_table_hits"]
+            assert metrics["triples_written"] == (
+                spark.read.parquet(f"{out}/triples/bucket=*").count()
+            )
+            per_run.append(metrics)
+        first, second = per_run
+        assert first["match_table_builds"] + first["match_table_hits"] == 1
+        assert (second["match_table_builds"], second["match_table_hits"]) == (0, 1)
+
+
 class TestFusedEquivalence:
     def test_fused_equals_windowed_and_golden(self, spark, turns, golden):
         from mehari_spark.operators.triples import extract_triples_fused

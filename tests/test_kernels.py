@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from mehari_spark.kernels import minhash
 from mehari_spark.kernels.ahocorasick import TokenAhoCorasick
 from mehari_spark.kernels.fingerprint import fingerprint, rolling_hashes, winnow
 from mehari_spark.kernels.minhash import (
@@ -13,6 +14,7 @@ from mehari_spark.kernels.minhash import (
     minhash_signature,
     perm_params,
     shingles,
+    signatures_batch,
 )
 from mehari_spark.kernels.normalize import normalize_surface, normalize_token
 from mehari_spark.kernels.simhash import hamming64, simhash64, simhash_chunks
@@ -100,6 +102,39 @@ class TestMinHash:
         k1, k2 = band_keys(s1, 16), band_keys(s2, 16)
         assert any(x == y for x, y in zip(k1, k2))  # near-dup collides
         assert band_keys(s1, 16) == band_keys(s1, 16)
+
+    def test_signatures_batch_segments_bit_identical(self, monkeypatch):
+        """Document-aligned segmenting never changes a signature: the
+        batch crosses the default ~1M-token budget (and much smaller
+        ones, a document longer than the budget included), with empty
+        documents at the start, the middle, a segment edge and the end."""
+        a, b = perm_params(4, seed=7)
+        rng = np.random.default_rng(3)
+        vocab = [f"w{i}" for i in range(5000)]
+        memo = dict(zip(vocab, hash_tokens(vocab).tolist()))
+        lens = rng.integers(0, 1000, 2400)
+        lens[[0, 7, 1200, 2399]] = 0
+        tok_sets = [set(rng.choice(vocab, n, replace=True)) for n in lens]
+        total = sum(len(t) for t in tok_sets)
+        assert total > 1 << 20
+
+        def unchunked(sets):  # the one-pass formula over the whole batch
+            n_tok = np.array([len(t) for t in sets])
+            th = np.array([memo[t] for s in sets for t in s], dtype=np.uint64)
+            m = np.uint64((1 << 61) - 1)
+            with np.errstate(over="ignore"):
+                h = (a[:, None] * (th[None, :] & m) + b[:, None]) % m
+            out = np.full((len(sets), len(a)), np.iinfo(np.uint64).max, np.uint64)
+            starts = np.concatenate(([0], np.cumsum(n_tok)[:-1]))[n_tok > 0]
+            out[n_tok > 0] = np.minimum.reduceat(h, starts, axis=1).T
+            return out
+
+        assert np.array_equal(signatures_batch(tok_sets, memo, a, b), unchunked(tok_sets))
+        small = tok_sets[:60]
+        want = unchunked(small)
+        for budget in (1, 100, 999, 5000):
+            monkeypatch.setattr(minhash, "_SEGMENT_TOKENS", budget)
+            assert np.array_equal(signatures_batch(small, memo, a, b), want), budget
 
     def test_shingles(self):
         assert shingles("abcd", 3) == ["abc", "bcd"]

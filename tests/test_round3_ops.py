@@ -281,28 +281,61 @@ class TestAutomatonCache:
             multitok_patterns()
         )
 
-    def test_cache_hit_on_second_invocation(self):
+    def test_cache_hit_on_second_invocation(self, spark):
         import mehari_spark.operators.mentions as M
         from mehari_spark.dictionary import multitok_patterns
 
+        sc = spark.sparkContext
         pats = multitok_patterns()
         key = M.dict_fingerprint(pats)
         M._TABLE_CACHE.clear()
         before = M._TABLE_BUILDS
-        a1 = M._match_table(key, pats)
-        a2 = M._match_table(key, pats)
-        assert a1 is a2  # compiled once, reused
+        a1 = M._match_table(sc, key, pats)
+        a2 = M._match_table(sc, key, pats)
+        assert a1 is a2  # compiled and broadcast once, reused
         assert M._TABLE_BUILDS == before + 1
 
-    def test_cache_bounded(self):
+    def test_cache_bounded(self, spark):
         import mehari_spark.operators.mentions as M
         from mehari_spark.dictionary import DictPattern
 
         M._TABLE_CACHE.clear()
         for i in range(10):
             pats = [DictPattern((f"tok{i}", f"b{i}"), "E", i, i, 0)]
-            M._match_table(M.dict_fingerprint(pats), pats)
+            M._match_table(spark.sparkContext, M.dict_fingerprint(pats), pats)
         assert len(M._TABLE_CACHE) <= M._TABLE_CACHE_MAX
+
+    def test_repeated_calls_reuse_one_broadcast(self, spark):
+        """Five fused extractions with one dictionary leave at most one new
+        broadcast file on the driver: one per dictionary version, not per
+        call. A different dictionary gets its own entry with identical
+        results."""
+        import os
+
+        import mehari_spark.operators.mentions as M
+        from mehari_spark.dictionary import DictPattern, multitok_patterns
+        from mehari_spark.operators.triples import extract_triples_fused
+        from mehari_spark.sources.transcripts import transcripts
+
+        df = transcripts(spark, SF_UNIT)
+        sc = spark.sparkContext
+        before = set(os.listdir(sc._temp_dir))
+        counts = [extract_triples_fused(df, multitok_patterns()).count() for _ in range(5)]
+        assert len(set(os.listdir(sc._temp_dir)) - before) <= 1
+        assert len(set(counts)) == 1 and counts[0] > 0
+
+        # an equal dictionary with one more, never-matching pattern is a
+        # new version: a new entry, the same triples
+        pats = multitok_patterns()
+        edited = pats + [DictPattern(("zz-no-such-token",), "E", 10**9, 10**9, 0)]
+        n_before = len(M._TABLE_CACHE)
+        builds = M._TABLE_BUILDS
+        got = extract_triples_fused(df, edited)
+        assert M._TABLE_BUILDS == builds + 1
+        assert len(M._TABLE_CACHE) == min(n_before + 1, M._TABLE_CACHE_MAX)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, extract_triples_fused(df, pats).collect())
+        )
 
 
 # --------------------------------------------------------------------------

@@ -164,20 +164,22 @@ class TestCcCheckpointIdentity:
 
 
 class TestAcCacheLru:
-    def test_hot_entry_survives_eviction(self):
+    def test_hot_entry_survives_eviction(self, spark):
         from mehari_spark.kernels.dictmatch import compile_table
         from mehari_spark.operators import mentions as m
 
+        sc = spark.sparkContext
+        app = sc.applicationId
         saved = dict(m._TABLE_CACHE)
         m._TABLE_CACHE.clear()
         try:
             for key in ("a", "b", "c", "d"):
-                m._TABLE_CACHE[key] = compile_table([])
+                m._TABLE_CACHE[(app, key)] = sc.broadcast(compile_table([]))
             # touch 'a' (the insertion-order victim) -> now most recent
-            assert m._match_table("a", []) is m._TABLE_CACHE["a"]
-            m._match_table("e", [])  # triggers eviction at MAX=4
-            assert "a" in m._TABLE_CACHE  # LRU keeps the hot entry
-            assert "b" not in m._TABLE_CACHE  # true least-recently-used evicted
+            assert m._match_table(sc, "a", []) is m._TABLE_CACHE[(app, "a")]
+            m._match_table(sc, "e", [])  # triggers eviction at MAX=4
+            assert (app, "a") in m._TABLE_CACHE  # LRU keeps the hot entry
+            assert (app, "b") not in m._TABLE_CACHE  # true least-recently-used evicted
         finally:
             m._TABLE_CACHE.clear()
             m._TABLE_CACHE.update(saved)

@@ -230,6 +230,56 @@ class TestStreamSpanDedup:
         want = _sorted_rows(span_matches_winnowed(docs, k=K, w=W))
         assert got == want
 
+    def test_compaction_refuses_to_overwrite_its_own_source(self, spark, tmp_path):
+        """An epoch applied late (epoch 1 here) sits inside the range of
+        an earlier compaction (c0-2): merging the two would name the
+        output after one of its sources. Compaction must refuse before
+        staging and leave the store's content whole."""
+        import os
+
+        import pytest
+
+        from mehari_spark.plans.lineage import append_checkpoint
+        from mehari_spark.streaming.spandedup_stream import (
+            compact_span_store,
+        )
+
+        docs = _docs(spark)
+        in_dir = str(tmp_path / "in")
+        store = str(tmp_path / "store")
+        for lo, hi in [(0, 120), (120, 260), (260, 10_000)]:
+            write_arrival_chunk(
+                docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+                in_dir,
+            )
+        _run(spark, in_dir, store, str(tmp_path / "ck"))
+        texts = _sorted_rows(read_corpus_texts(spark, store))
+        spans = _sorted_rows(read_span_matches(spark, store))
+
+        def mark_applied(scope, epoch):
+            append_checkpoint(
+                store,
+                {
+                    "status": "epoch_done",
+                    "stage": "span_stream",
+                    "scope": scope,
+                    "epoch": epoch,
+                },
+            )
+
+        # a lineage that has applied epochs 0 and 2 but not yet 1
+        mark_applied("late", 0)
+        mark_applied("late", 2)
+        assert compact_span_store(spark, store, "late")["texts"] == 2
+        texts_dir = os.path.join(store, "texts")
+        assert sorted(os.listdir(texts_dir)) == ["epoch=1", "epoch=c0-2"]
+        mark_applied("late", 1)
+        with pytest.raises(RuntimeError, match="one of its own sources"):
+            compact_span_store(spark, store, "late")
+        assert sorted(os.listdir(texts_dir)) == ["epoch=1", "epoch=c0-2"]
+        assert _sorted_rows(read_corpus_texts(spark, store)) == texts
+        assert _sorted_rows(read_span_matches(spark, store)) == spans
+
     def test_inline_compaction_during_stream(self, spark, tmp_path):
         """compact_every_epochs triggers the merge inside the stream and
         the multi-wave == batch guarantee still holds."""
