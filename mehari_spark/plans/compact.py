@@ -5,11 +5,11 @@ Long-running ingest produces many small parquet files per bucket (every
 staging task that held rows of the bucket wrote one); at 100 TB the
 per-file open/footer overhead throttles every downstream scan. Compaction
 rewrites each oversized bucket into ``target_files`` internally-sorted
-files with the SAME crash-atomic rename-aside swap as the MERGE path
-(plans/merge.py): stage -> verify row count + content fingerprint ->
-rename live aside -> move staged in -> drop the aside — a crash at any
-point is repaired forward/back by ``repair_interrupted_merge`` and the
-checkpoint log only records buckets whose swap completed.
+files with the SAME crash-atomic staged swap as every other writer
+(plans/commit.py): stage -> verify row count + content fingerprint ->
+``commit.swap`` — a crash at any point is repaired forward/back by
+``commit.repair`` and the checkpoint log only records buckets whose swap
+completed.
 
 Content safety is checked, not assumed: the staged rewrite must match the
 live bucket on row count AND two independent order-insensitive content
@@ -30,8 +30,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import append_checkpoint, write_metrics
-from .merge import repair_interrupted_merge
+from . import commit
+from .lineage import write_metrics
 
 
 def _bucket_files(bucket_dir: str) -> list[str]:
@@ -96,7 +96,6 @@ def compact_buckets(
     min_files: int = 2,
     small_file_bytes: int | None = None,
     sort_cols: list[str] | None = None,
-    fail_mid_swap_bucket: int | None = None,
 ) -> dict:
     """Compact every committed bucket that ``needs_compaction`` — the scan
     is self-targeting (file-count, optionally file-size, thresholds), so
@@ -105,20 +104,13 @@ def compact_buckets(
     Returns {"compacted": {bucket: {files_before, files_after, rows}},
     "skipped": [buckets]}. ``sort_cols`` re-sorts rows within each output
     file (restoring the sorted-file invariant merged away by many small
-    appends). ``fail_mid_swap_bucket`` injects a crash between the two
-    swap renames (crash-recovery tests)."""
-    repair_interrupted_merge(out_dir)
-    for stale in glob.glob(os.path.join(out_dir, "_compactstage_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-
+    appends). A compaction first repairs any swap a crash interrupted."""
+    commit.repair(out_dir)
     compacted: dict[int, dict] = {}
     skipped: list[int] = []
-    staging_root = os.path.join(out_dir, f"_compactstage_{run_id}")
+    staging_root = commit.open_staging(out_dir, "compact")
     for bdir in sorted(glob.glob(os.path.join(out_dir, "bucket=*"))):
-        name = os.path.basename(bdir)
-        if name.endswith(".old"):
-            continue
-        b = int(name[len("bucket=") :])
+        b = int(os.path.basename(bdir)[len("bucket=") :])
         files = _bucket_files(bdir)
         if not needs_compaction(files, min_files, small_file_bytes):
             skipped.append(b)
@@ -140,15 +132,9 @@ def compact_buckets(
                 f"compaction of bucket {b} would change content "
                 f"(rows {n_live}->{n_staged}, fingerprint mismatch) — aborted"
             )
-        # crash-atomic swap (merge.py protocol: aside, move in, drop aside)
-        aside = bdir + ".old"
-        os.replace(bdir, aside)
-        if fail_mid_swap_bucket == b:
-            raise RuntimeError(f"injected crash mid-swap of bucket {b}")
-        os.replace(staged_dir, bdir)
-        shutil.rmtree(aside, ignore_errors=True)
+        commit.swap(staged_dir, bdir)
         files_after = len(_bucket_files(bdir))
-        append_checkpoint(
+        commit.append(
             out_dir,
             {
                 "run_id": run_id,

@@ -37,7 +37,9 @@ turned on mid-life), so the invariant after any refresh is: every data
 bucket has a partial consistent with its content.
 
 Layout: ``<table_dir>/_analytics/<view>/part=<bucket>/*.parquet``,
-written via staging + rename-aside swap (the lineage.py commit shape).
+written through plans/commit.py: staging under the view dir (a killed
+refresh's stale staging is swept by the next one), then ``commit.swap``
+per bucket, and ``commit.repair`` of the view dir before each refresh.
 Visibility note (ADVICE r6): the swap is rename-aside, NOT a manifest
 pointer — between moving the old partial aside and the new one in, the
 ``part=<b>`` dir is briefly absent and a concurrent ``read_view`` FAILS
@@ -51,12 +53,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 _AGG_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -228,25 +231,19 @@ def refresh_partials(
     partials = inc.groupBy("_part", *spec.group_cols).agg(*spec.agg_exprs())
 
     adir = _view_dir(table_dir, spec)
-    os.makedirs(adir, exist_ok=True)
-    staging = os.path.join(adir, f"_staging_{uuid.uuid4().hex[:8]}")
+    commit.repair(adir)
+    staging = commit.open_staging(adir, "view")
     try:
         partials.write.mode("overwrite").partitionBy("_part").parquet(staging)
         for b in todo:
             src = os.path.join(staging, f"_part={b}")
-            dst = os.path.join(adir, f"part={b}")
-            trash = os.path.join(adir, f"_old_part_{b}")
             if not os.path.isdir(src):
                 # a data bucket whose rows produce no view rows (row_fn
                 # filtered everything): an absent partial would read as
                 # "missing — refresh first", so write an empty one
                 empty = partials.drop("_part").limit(0)
                 empty.write.mode("overwrite").parquet(src)
-            shutil.rmtree(trash, ignore_errors=True)
-            if os.path.isdir(dst):
-                os.rename(dst, trash)
-            os.rename(src, dst)
-            shutil.rmtree(trash, ignore_errors=True)
+            commit.swap(src, os.path.join(adir, f"part={b}"))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return todo
@@ -275,7 +272,7 @@ def read_view(
             f"{table_dir!r} — refresh before reading"
         )
     partials = spark.read.parquet(
-        os.path.join(_view_dir(table_dir, spec), "part=*")
+        *[os.path.join(_view_dir(table_dir, spec), f"part={b}") for b in have]
     )
     return partials.groupBy(*spec.group_cols).agg(*spec.agg_exprs())
 

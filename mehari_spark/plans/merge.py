@@ -13,8 +13,9 @@ so the merge
      rewritten),
   3. applies the upsert (left-anti on the MATCH key within touched
      buckets: update wins on match, both sides survive otherwise),
-  4. rewrites the touched buckets atomically (stage + rename, same
-     two-phase commit as write_bucketed) and appends checkpoint rows.
+  4. rewrites the touched buckets through the staged swap of
+     plans/commit.py (a ``staged`` row, the swap, then a ``committed``
+     row with the row count from the staged footers).
 
 Two distinct keys: ``bucket_col`` is the TABLE's layout key (must equal the
 key_col the table was written with — validated against the checkpoint log);
@@ -32,39 +33,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import append_checkpoint, load_committed
-
-
-def repair_interrupted_merge(out_dir: str) -> list[int]:
-    """Roll an interrupted bucket swap forward/back; returns repaired buckets.
-
-    The swap protocol renames the live bucket aside (``bucket=<b>.old``)
-    before moving staging in, so a crash leaves one of two states per bucket:
-
-    - ``.old`` present AND ``bucket=<b>`` present: the new data landed; the
-      crash hit before cleanup -> finish by removing ``.old`` (roll forward).
-    - ``.old`` present, ``bucket=<b>`` missing: crashed between the two
-      renames -> restore ``.old`` (roll back; the merge run re-applies it).
-
-    Either way the checkpoint log never marks a bucket committed whose data
-    is gone — the committed row is appended only after the swap completes.
-    """
-    import glob as _glob
-
-    # sweep staging left by a crashed merge (its buckets either committed —
-    # data already swapped in — or will be re-staged by the retry)
-    for stale in _glob.glob(os.path.join(out_dir, "_mergestage_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    repaired: list[int] = []
-    for old in _glob.glob(os.path.join(out_dir, "bucket=*.old")):
-        b = int(os.path.basename(old)[len("bucket=") : -len(".old")])
-        final = os.path.join(out_dir, f"bucket={b}")
-        if os.path.exists(final):
-            shutil.rmtree(old)
-        else:
-            os.replace(old, final)
-        repaired.append(b)
-    return repaired
+from . import commit
+from .lineage import load_committed
 
 
 def merge_into_bucketed(
@@ -75,7 +45,6 @@ def merge_into_bucketed(
     bucket_col: str,
     n_buckets: int,
     run_id: str = "merge",
-    fail_mid_swap_bucket: int | None = None,
     precedence_cols: list[str] | None = None,
 ) -> dict:
     """Upsert ``updates`` into the bucketed table at ``out_dir``.
@@ -88,8 +57,7 @@ def merge_into_bucketed(
     is not one of ``match_cols`` (bucket pruning would be unsound: matching
     target rows in untouched buckets would survive as duplicates), or if
     ``updates`` carries duplicate match keys (MERGE INTO multiple-match
-    error semantics). ``fail_mid_swap_bucket`` injects a crash between the
-    two swap renames of that bucket (crash-recovery tests).
+    error semantics). A merge first repairs any swap a crash interrupted.
 
     ``precedence_cols`` switches the on-match rule from "update wins" to
     "HIGHEST PRECEDENCE wins" (descending over the listed columns, which
@@ -109,7 +77,7 @@ def merge_into_bucketed(
         )
     # validate the layout against the table's commit history
     load_committed(out_dir, n_buckets=n_buckets, key_col=bucket_col)
-    repair_interrupted_merge(out_dir)
+    commit.repair(out_dir)
 
     prec_window = None
     if precedence_cols:
@@ -178,28 +146,14 @@ def merge_into_bucketed(
             "_bucket", bcol
         )
 
-    # distinct prefix from write_bucketed's "_staging_*": its stale-staging
-    # sweep must never delete a merge's in-flight staging directory
-    staging = os.path.join(out_dir, f"_mergestage_{run_id}_{int(time.time()*1000)}")
+    staging = commit.open_staging(out_dir, "merge")
     merged.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
-    counts = {
-        int(r["_bucket"]): r["cnt"]
-        for r in spark.read.parquet(staging)
-        .groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    counts: dict[int, int] = {}
     for b in touched:
         src = os.path.join(staging, f"_bucket={b}")
-        final = os.path.join(out_dir, f"bucket={b}")
-        old = final + ".old"
+        counts[b] = commit.staged_rows(src)
         if os.path.exists(src):
-            # crash-atomic swap: rename the live bucket ASIDE (never delete
-            # before the new data is in place), move staging in, then drop
-            # the old copy. A crash at any point leaves a state
-            # repair_interrupted_merge can roll forward or back — the
-            # checkpoint log never points at deleted data.
-            append_checkpoint(
+            commit.append(
                 out_dir,
                 {
                     "run_id": run_id,
@@ -210,20 +164,14 @@ def merge_into_bucketed(
                     "key_col": bucket_col,
                 },
             )
-            if os.path.exists(final):
-                os.replace(final, old)
-            if fail_mid_swap_bucket == b:
-                raise RuntimeError(f"injected crash mid-swap of bucket {b}")
-            os.replace(src, final)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        append_checkpoint(
+            commit.swap(src, os.path.join(out_dir, f"bucket={b}"))
+        commit.append(
             out_dir,
             {
                 "run_id": run_id,
                 "bucket": b,
                 "status": "committed",
-                "rows_out": counts.get(b, 0),
+                "rows_out": counts[b],
                 "stage": "merge",
                 "n_buckets": n_buckets,
                 "key_col": bucket_col,

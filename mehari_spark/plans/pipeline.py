@@ -87,7 +87,6 @@ def run_pipeline(
     run_id: str | None = None,
     n_partitions: int = 32,
     n_buckets: int = 8,
-    fail_after: int | None = None,
     mode: str = "fused",
     entity_kb: DataFrame | None = None,
     predicate_kb: DataFrame | None = None,
@@ -140,7 +139,6 @@ def run_pipeline(
         key_col="conv_id",
         n_buckets=n_buckets,
         stage="triples",
-        fail_after=fail_after,
     )
 
     written = spark.read.parquet(f"{out_dir}/triples/bucket=*")

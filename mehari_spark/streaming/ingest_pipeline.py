@@ -42,10 +42,7 @@ files instead.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.textstats import quality_reasons
+from ..plans.commit import publish_file
 from .neardup_stream import read_verdicts as read_neardup_verdicts
 from .neardup_stream import stream_neardup_dedup
 
@@ -116,28 +114,6 @@ def _stage1_update(key, pdf_iter, state: GroupState):
     )
 
 
-def _write_boundary_epoch(
-    survivors: DataFrame, boundary_dir: str, epoch_id: int
-) -> None:
-    """One deterministic, atomically-replaced file per epoch: retried
-    epochs rewrite the SAME path (os.replace) with the same deterministic
-    content, so the stage-2 file source (which tracks paths) never
-    ingests an epoch twice — the cross-checkpoint exactly-once seam."""
-    os.makedirs(boundary_dir, exist_ok=True)
-    stage = tempfile.mkdtemp(prefix="_boundstage_", dir=boundary_dir)
-    try:
-        survivors.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))
-        if len(part) != 1:
-            raise RuntimeError(f"expected one part file, got {len(part)}")
-        os.replace(
-            part[0],
-            os.path.join(boundary_dir, f"epoch-{epoch_id:08d}.parquet"),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
 def stream_ingest_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -192,10 +168,13 @@ def stream_ingest_pipeline(
             ).write.mode("overwrite").parquet(
                 os.path.join(audit_dir, f"epoch={epoch_id}")
             )
-            _write_boundary_epoch(
+            # a retried epoch rewrites the SAME file with the same
+            # deterministic content, so the stage-2 file source (which
+            # tracks paths) never ingests an epoch twice — the
+            # cross-checkpoint exactly-once seam
+            publish_file(
                 batch_df.filter("is_new").select("doc_id", "lang", "text"),
-                boundary_dir,
-                epoch_id,
+                os.path.join(boundary_dir, f"epoch-{epoch_id:08d}.parquet"),
             )
         finally:
             batch_df.unpersist()

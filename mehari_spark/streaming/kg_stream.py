@@ -19,8 +19,8 @@ Exactly-once, by TWO independent mechanisms (either alone suffices):
   row set unchanged, so a foreachBatch retry after a crash between the
   merge and Spark's offset commit cannot corrupt the table;
 - each completed epoch appends an ``epoch_done`` row to the table's
-  checkpoint log, and a replayed epoch id returns early — the audit
-  trail shows exactly one application per epoch.
+  checkpoint log (``commit.mark_epoch``), and a replayed epoch id returns
+  early — the audit trail shows exactly one application per epoch.
 
 Scale notes (100 TB): extraction is the zero-shuffle fused kernel per
 micro-batch (narrow map over arriving files); the within-batch reduction
@@ -33,7 +33,6 @@ stateless (no applyInPandasWithState store to size or TTL).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,12 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.triples import extract_triples_fused
-from ..plans.lineage import (
-    _ckpt_path,
-    append_checkpoint,
-    compact_checkpoint_log,
-    read_bucketed,
-)
+from ..plans import commit
+from ..plans.lineage import read_bucketed
 from ..plans.merge import merge_into_bucketed
 
 TURNS_DDL = (
@@ -58,97 +53,14 @@ TURNS_DDL = (
 MATCH_COLS = ["subj_id", "pred_id"]
 PRECEDENCE_COLS = ["ts_epoch", "conv_id", "turn_idx", "obj_id"]
 DATA_COLS = ["subj_id", "pred_id", "obj_id", "ts_epoch", "conv_id", "turn_idx"]
-
-
-class EpochTracker:
-    """Applied-epoch membership in O(gaps) driver memory.
-
-    A watermark integer (every epoch <= watermark is applied) plus a
-    sparse set of post-gap epochs; ``add`` advances the watermark through
-    any extras it makes contiguous. The round-7 ADVICE finding: expanding
-    a compacted ``epoch_watermark`` row back into ``range(max+1)`` made
-    the in-closure applied set grow O(stream age) — exactly the growth
-    the log compaction was added to eliminate. ``len`` is the number of
-    applied epochs (the compaction cadence counter)."""
-
-    def __init__(self, watermark: int = -1, extras=()):
-        self.watermark = int(watermark)
-        self.extras = {int(e) for e in extras if int(e) > int(watermark)}
-        self._advance()
-
-    def _advance(self) -> None:
-        while self.watermark + 1 in self.extras:
-            self.watermark += 1
-            self.extras.discard(self.watermark)
-
-    def add(self, epoch: int) -> None:
-        e = int(epoch)
-        if e <= self.watermark:
-            return
-        self.extras.add(e)
-        self._advance()
-
-    def __contains__(self, epoch: int) -> bool:
-        e = int(epoch)
-        return e <= self.watermark or e in self.extras
-
-    def __len__(self) -> int:
-        return self.watermark + 1 + len(self.extras)
-
-
-def applied_epoch_tracker(table_dir: str, scope: str) -> EpochTracker:
-    """``applied_epochs`` as a bounded-memory :class:`EpochTracker` — a
-    compacted ``epoch_watermark`` row becomes the watermark INTEGER, never
-    a materialized prefix set (always-on stream discipline)."""
-    path = _ckpt_path(table_dir)
-    tracker = EpochTracker()
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("stage") != "kg_stream" or rec.get("scope") != scope:
-                    continue
-                if rec.get("status") == "epoch_done":
-                    tracker.add(int(rec["epoch"]))
-                elif rec.get("status") == "epoch_watermark":
-                    wm = int(rec["max_epoch"])
-                    if wm > tracker.watermark:
-                        tracker.extras = {
-                            e for e in tracker.extras if e > wm
-                        }
-                        tracker.watermark = wm
-                        tracker._advance()
-    return tracker
+STAGE = "kg_stream"
 
 
 def applied_epochs(table_dir: str, scope: str) -> set[int]:
-    """Epoch ids whose merge fully completed (``epoch_done`` audit rows).
-
-    ``scope`` is the streaming checkpoint identity: epoch ids are only
-    unique WITHIN one checkpoint lineage, so a maintenance stream restarted
-    against the same table with a fresh checkpoint (epoch numbering resets
-    to 0) must not skip its new epochs just because an old stream once
-    applied the same numbers.
-
-    Materializes the full id set (a compacted ``epoch_watermark`` row is
-    expanded back to ``range(max+1)``) — fine for tests/tools over finite
-    streams; the always-on maintenance query itself uses
-    :func:`applied_epoch_tracker`, which keeps the watermark as an
-    integer so driver memory stays O(gaps), not O(stream age)."""
-    path = _ckpt_path(table_dir)
-    done: set[int] = set()
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("stage") != "kg_stream" or rec.get("scope") != scope:
-                    continue
-                if rec.get("status") == "epoch_done":
-                    done.add(int(rec["epoch"]))
-                elif rec.get("status") == "epoch_watermark":
-                    # contiguous prefix 0..max_epoch, compacted to one row
-                    done.update(range(int(rec["max_epoch"]) + 1))
-    return done
+    """Epoch ids whose merge fully completed under the streaming
+    checkpoint ``scope`` (epoch ids are unique only within one
+    checkpoint lineage)."""
+    return commit.applied_epochs(table_dir, STAGE, scope)
 
 
 def extract_batch_updates(batch_df: DataFrame, patterns) -> DataFrame:
@@ -187,7 +99,6 @@ def stream_kg_maintain(
     max_files_per_trigger: int = 1,
     maintain_degree: bool = False,
     available_now: bool = True,
-    compact_log_every: int = 64,
     maintain_views=None,
 ) -> StreamingQuery:
     """Start the maintenance stream; returns the StreamingQuery.
@@ -208,10 +119,10 @@ def stream_kg_maintain(
     the commit log ONCE here (query start) and maintained in memory — a
     replayed epoch after a crash restarts the query, re-reading the log
     anyway, so per-epoch cost never re-parses the log. Every
-    ``compact_log_every`` completed epochs the table's commit log is
-    rotated (lineage.compact_checkpoint_log): the contiguous epoch_done
-    prefix collapses to one watermark row and superseded bucket-commit
-    rows drop, so the log stays O(buckets + scopes), not O(stream age)."""
+    ``commit.ROTATE_EVERY`` applied epochs the table's commit log is
+    rotated (``commit.compact_log``): the epoch_done rows collapse to one
+    watermark row and superseded bucket-commit rows drop, so the log
+    stays O(buckets + scopes), not O(stream age)."""
     turns = (
         spark.readStream.schema(TURNS_DDL)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -222,7 +133,7 @@ def stream_kg_maintain(
     # ONE log read per query lifetime (What's-wrong #1, round 6); the
     # tracker (watermark + sparse post-gap set) keeps the closure's
     # memory O(gaps), not O(stream age) — round-7 ADVICE finding.
-    applied = applied_epoch_tracker(table_dir, scope)
+    applied = commit.epoch_tracker(table_dir, STAGE, scope)
 
     views = list(maintain_views or [])
     if maintain_degree:
@@ -250,19 +161,10 @@ def stream_kg_maintain(
 
             for v in views:
                 refresh_partials(spark, table_dir, res["touched_buckets"], v)
-        append_checkpoint(
-            table_dir,
-            {
-                "status": "epoch_done",
-                "stage": "kg_stream",
-                "scope": scope,
-                "epoch": int(epoch_id),
-                "touched_buckets": res["touched_buckets"],
-            },
+        commit.mark_epoch(
+            table_dir, STAGE, scope, epoch_id, applied,
+            touched_buckets=res["touched_buckets"],
         )
-        applied.add(int(epoch_id))
-        if compact_log_every and len(applied) % compact_log_every == 0:
-            compact_checkpoint_log(table_dir)
 
     writer = turns.writeStream.foreachBatch(apply_epoch).option(
         "checkpointLocation", checkpoint_dir

@@ -18,34 +18,19 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
+
+from ..plans.commit import publish_file
 
 
 def write_arrival_chunk(df: DataFrame, input_dir: str) -> str:
     """Append ``df`` as the next sequentially-named single-file chunk of
     ``input_dir``; returns the file path. Chunk index continues from the
     highest existing chunk."""
-    os.makedirs(input_dir, exist_ok=True)
     existing = sorted(glob.glob(os.path.join(input_dir, "chunk-*.parquet")))
     nxt = 0
     if existing:
         last = os.path.basename(existing[-1])
         nxt = int(last[len("chunk-") : -len(".parquet")]) + 1
-    # write via a staging dir (Spark writes directories), then move the
-    # single part-file into place under the sequential name
-    stage = tempfile.mkdtemp(prefix="_chunkstage_", dir=input_dir)
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))
-        if len(part) != 1:
-            raise RuntimeError(
-                f"expected exactly one part file in {stage}, got {len(part)}"
-            )
-        dest = os.path.join(input_dir, f"chunk-{nxt:08d}.parquet")
-        shutil.move(part[0], dest)
-        return dest
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return publish_file(df, os.path.join(input_dir, f"chunk-{nxt:08d}.parquet"))

@@ -51,10 +51,10 @@ round-7 full-scan weakness is closed by three mechanisms:
    that hold a candidate doc, never the whole corpus store.
 3. ``compact_span_store`` periodically merges fully-applied epoch
    deltas into ONE consolidated hive-bucketed dir per store (the
-   plans/compact.py discipline: stage -> fingerprint-verify -> atomic
-   swap -> log), bounding both the unpruned-delta fraction and the
-   file/dir counts as epochs accumulate; the stream runs it inline
-   every ``compact_every_epochs`` applied epochs. Deltas are
+   plans/compact.py discipline: stage -> fingerprint-verify -> a logged
+   many-to-one ``commit.swap``), bounding both the unpruned-delta
+   fraction and the file/dir counts as epochs accumulate; the stream
+   runs it inline every ``compact_every_epochs`` applied epochs. Deltas are
    deliberately FLAT — hive-partitioning each small batch into hundreds
    of bucket dirs measured ~6x slower per epoch than the unpruned scan
    it replaced (metadata beats bytes at delta size; bench_stream_span
@@ -75,25 +75,30 @@ operator run with the same ``max_df`` (a fingerprint seen once per
 epoch is never capped); the union-equals-batch guarantee above holds
 exactly for ``max_df=None``. Reference: seen-keys dedup across parallel
 windows (/root/reference/mehari/src/db/mod.rs:208-309).
+
+LAYOUT: pruning by path is sound only while every epoch used the same
+``n_fp_buckets``/``n_doc_buckets``. The first epoch logs them in a
+``layout`` row and a restart with other values raises
+(``commit.check_layout``). A store with epoch dirs but no layout row
+predates that row; it is always read unpruned.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.spandedup import _verify_extend_rows, winnowed_postings
-from ..plans.lineage import _ckpt_path, append_checkpoint
+from ..plans import commit
 
 DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 _POSTING_SCHEMA = "doc_id long, pos int, fp long, fp_bucket int"
 _SPAN_SCHEMA = "doc_a long, doc_b long, start_a long, start_b long, span_len long"
 _TEXT_SCHEMA = "doc_id long, text string"
+STAGE = "span_stream"
 
 
 def _store_bytes(store_dir: str, sub: str) -> int:
@@ -241,21 +246,8 @@ def _pruned_texts(
 
 
 def applied_epochs(store_dir: str, scope: str) -> set[int]:
-    """Completed epoch ids for this checkpoint lineage (read ONCE per
-    query lifetime; the closure appends in memory)."""
-    path = _ckpt_path(store_dir)
-    done: set[int] = set()
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if (
-                    rec.get("stage") == "span_stream"
-                    and rec.get("scope") == scope
-                    and rec.get("status") == "epoch_done"
-                ):
-                    done.add(int(rec["epoch"]))
-    return done
+    """Completed epoch ids for this checkpoint lineage."""
+    return commit.applied_epochs(store_dir, STAGE, scope)
 
 
 def _compacted_dir_epochs(name: str) -> tuple[int, int] | None:
@@ -265,47 +257,6 @@ def _compacted_dir_epochs(name: str) -> tuple[int, int] | None:
         return None
     lo, _, hi = val[1:].partition("-")
     return int(lo), int(hi)
-
-
-def repair_span_compaction(store_dir: str) -> None:
-    """Finish an interrupted compaction swap: if a staged-but-not-done
-    log record's destination dir exists, the covered source dirs are
-    removed (their content is already inside the destination — a crash
-    between the rename and the source cleanup leaves duplicates, which
-    are correctness-safe through the span distinct() but must not
-    persist). A record whose destination never appeared needs nothing:
-    the staging dir is underscore-prefixed and invisible to reads."""
-    path = _ckpt_path(store_dir)
-    if not os.path.exists(path):
-        return
-    staged: dict[str, dict] = {}
-    with open(path) as f:
-        for line in f:
-            rec = json.loads(line)
-            if rec.get("stage") != "span_compact":
-                continue
-            key = rec.get("dest", "")
-            if rec.get("status") == "staged":
-                staged[key] = rec
-            elif rec.get("status") == "compact_done":
-                staged.pop(key, None)
-    for dest, rec in staged.items():
-        if os.path.isdir(dest):
-            for cov in rec.get("covers", []):
-                if cov != dest:
-                    shutil.rmtree(cov, ignore_errors=True)
-            append_checkpoint(
-                store_dir,
-                {
-                    "stage": "span_compact",
-                    "status": "compact_done",
-                    "dest": dest,
-                    "repaired": True,
-                },
-            )
-    for sub in ("index", "texts"):
-        stale = os.path.join(store_dir, sub, "_compactstage")
-        shutil.rmtree(stale, ignore_errors=True)
 
 
 def compact_span_store(
@@ -320,15 +271,16 @@ def compact_span_store(
     plans/compact.py discipline: stage the rewrite under an
     underscore-prefixed dir (invisible to partition discovery), verify
     row count + two order-insensitive content fingerprints, atomically
-    rename into place as ``epoch=c<lo>-<hi>``, then drop the source
-    dirs; a staged/compact_done log pair makes an interrupted swap
-    repairable (``repair_span_compaction``). Only epochs recorded
+    publish it as ``epoch=c<lo>-<hi>`` covering the source dirs
+    (``commit.swap``: its staged/compact_done log pair makes an
+    interrupted publish repairable by ``commit.repair``; a destination
+    that is one of its own sources is refused). Only epochs recorded
     ``epoch_done`` for ``scope`` are merged — an in-flight epoch may
     still be rewritten by replay and keeps its own dir. Returns
     {"index": n_dirs_merged, "texts": n_dirs_merged}."""
     from ..plans.compact import _fingerprint
 
-    repair_span_compaction(store_dir)
+    commit.repair(store_dir)
     done = applied_epochs(store_dir, scope)
     out = {}
     for sub, part_col in (("index", "fp_bucket"), ("texts", "doc_bucket")):
@@ -352,13 +304,6 @@ def compact_span_store(
         base = os.path.join(store_dir, sub)
         lo, hi = min(epochs_covered), max(epochs_covered)
         dest = os.path.join(base, f"epoch=c{lo}-{hi}")
-        if dest in eligible:
-            # e.g. c0-5 was compacted around a then-unapplied epoch 3: the
-            # merge would overwrite a source with its own output
-            raise RuntimeError(
-                f"span-store compaction of {sub}: destination {dest} is one of "
-                "its own sources — aborted before staging"
-            )
         schema = (
             _POSTING_SCHEMA
             if sub == "index"
@@ -368,8 +313,7 @@ def compact_span_store(
         # mixed-layout read (flat deltas + previously-compacted dirs)
         live = _read_dirs(spark, store_dir, sub, eligible, schema, None)
         n_live, fp_live, fps_live = _fingerprint(live)
-        staged = os.path.join(base, "_compactstage")
-        shutil.rmtree(staged, ignore_errors=True)
+        staged = commit.open_staging(base, "span")
         live.repartition(part_col).write.mode("overwrite").partitionBy(
             part_col
         ).parquet(staged)
@@ -378,26 +322,11 @@ def compact_span_store(
             fp_live,
             fps_live,
         ):
-            shutil.rmtree(staged, ignore_errors=True)
             raise RuntimeError(
                 f"span-store compaction of {sub} would change content — aborted"
             )
-        append_checkpoint(
-            store_dir,
-            {
-                "stage": "span_compact",
-                "status": "staged",
-                "dest": dest,
-                "covers": eligible,
-            },
-        )
-        os.replace(staged, dest)  # dest is no source, so it cannot exist
-        for d in eligible:
-            if d != dest:
-                shutil.rmtree(d, ignore_errors=True)
-        append_checkpoint(
-            store_dir,
-            {"stage": "span_compact", "status": "compact_done", "dest": dest},
+        commit.swap(
+            staged, dest, covers=eligible, log_root=store_dir, stage="span_compact"
         )
         out[sub] = len(eligible)
     return out
@@ -444,10 +373,19 @@ def stream_span_dedup(
         .parquet(input_dir)
     )
     scope = os.path.abspath(checkpoint_dir)
-    repair_span_compaction(store_dir)
-    applied = applied_epochs(store_dir, scope)
+    commit.repair(store_dir)
+    applied = commit.epoch_tracker(store_dir, STAGE, scope)
+    layout = {"n_fp_buckets": n_fp_buckets, "n_doc_buckets": n_doc_buckets}
+    recorded = commit.check_layout(store_dir, **layout)
+    # bucket columns of a store written before layout rows may use any
+    # moduli, so path pruning could miss candidates: read it in full
+    legacy = not recorded and any(
+        _epoch_dirs(store_dir, sub) for sub in ("index", "texts")
+    )
+    record_layout = not recorded and not legacy
 
     def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal record_layout
         if int(epoch_id) in applied:
             return  # replayed epoch: already fully applied
         batch_texts = batch_df.select("doc_id", "text")
@@ -470,7 +408,9 @@ def stream_span_dedup(
         # (<= n_fp_buckets ints) that prunes the index read to matching
         # bucket dirs — past the prune_min_bytes crossover, per-epoch
         # index IO is O(deltas + matched buckets), not O(corpus)
-        prune_index = _store_bytes(store_dir, "index") >= prune_min_bytes
+        prune_index = (
+            not legacy and _store_bytes(store_dir, "index") >= prune_min_bytes
+        )
         if prune_index:
             batch_buckets = [
                 r[0]
@@ -509,7 +449,7 @@ def stream_span_dedup(
             F.col("a.pos").alias("pos_a"),
             F.col("b.pos").alias("pos_b"),
         )
-        if _store_bytes(store_dir, "texts") >= prune_min_bytes:
+        if not legacy and _store_bytes(store_dir, "texts") >= prune_min_bytes:
             # materialize the seeds once: they feed the doc-bucket
             # collection AND the verify join; verification then reads
             # ONLY the candidate docs' buckets of the corpus store
@@ -552,6 +492,11 @@ def stream_span_dedup(
             )
             .distinct()
         )
+        if record_layout:
+            # before the first epoch's data: a store holding data but no
+            # layout row is then always one written before layout rows
+            commit.append(store_dir, {"status": "layout", "stage": STAGE, **layout})
+            record_layout = False
         # per-epoch dirs: mode=overwrite makes a replayed epoch rewrite the
         # same content — idempotent without a merge
         # LSM delta layout: each epoch writes ONE flat dir carrying its
@@ -575,16 +520,7 @@ def stream_span_dedup(
         postings_new.write.mode("overwrite").parquet(
             os.path.join(store_dir, "index", ep)
         )
-        append_checkpoint(
-            store_dir,
-            {
-                "status": "epoch_done",
-                "stage": "span_stream",
-                "scope": scope,
-                "epoch": int(epoch_id),
-            },
-        )
-        applied.add(int(epoch_id))
+        commit.mark_epoch(store_dir, STAGE, scope, epoch_id, applied)
         for df in (postings_new, cand):
             try:  # release the epoch's checkpoint blocks (house pattern)
                 df.rdd.unpersist()

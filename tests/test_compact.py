@@ -10,9 +10,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mehari_spark.plans import commit
 from mehari_spark.plans.compact import compact_buckets
 from mehari_spark.plans.lineage import read_bucketed, write_bucketed
-from mehari_spark.plans.merge import repair_interrupted_merge
 
 
 def _table(spark, tmp_path, n=4000, n_buckets=4):
@@ -103,14 +103,22 @@ class TestCompaction:
         assert (na, xa) == (nb, xb)  # the blind spot is real
         assert sa != sb  # and the sum closes it
 
-    def test_crash_mid_swap_repairs(self, spark, tmp_path):
+    def test_crash_mid_swap_repairs(self, spark, tmp_path, monkeypatch):
         out = _table(spark, tmp_path)
         before = sorted(map(tuple, read_bucketed(spark, out).collect()))
-        with pytest.raises(RuntimeError, match="injected crash"):
-            compact_buckets(spark, out, fail_mid_swap_bucket=2)
+
+        def crash_between_renames(point, target):
+            if point == "aside" and target.endswith("bucket=2"):
+                raise RuntimeError("injected crash mid-swap of bucket 2")
+
+        with monkeypatch.context() as m, pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
+            m.setattr(commit, "step", crash_between_renames)
+            compact_buckets(spark, out)
         # bucket=2 is renamed aside; the repair protocol restores it
         assert os.path.exists(os.path.join(out, "bucket=2.old"))
-        repair_interrupted_merge(out)
+        commit.repair(out)
         assert not os.path.exists(os.path.join(out, "bucket=2.old"))
         assert sorted(map(tuple, read_bucketed(spark, out).collect())) == before
         # and a fresh compaction completes the job

@@ -138,16 +138,27 @@ class TestGlobalCC:
 
 
 class TestResume:
-    def test_kill_restart_identical(self, spark, turns, tmp_path):
+    def test_kill_restart_identical(self, spark, turns, tmp_path, monkeypatch):
+        from mehari_spark.plans import commit
+
         df = turns_df(spark, turns)
         full_dir = str(tmp_path / "full")
         resume_dir = str(tmp_path / "resumed")
         run_pipeline(spark, df, fixture_patterns(), full_dir, n_buckets=4)
+        appended = []
+
+        def kill_after_two_commits(point, target):
+            if point == "appended":
+                appended.append(target)
+                if len(appended) == 2:
+                    raise RuntimeError("injected failure after 2 bucket commits")
+
         # killed run: fails after 2 of 4 bucket commits
-        with pytest.raises(RuntimeError, match="injected failure"):
-            run_pipeline(
-                spark, df, fixture_patterns(), resume_dir, n_buckets=4, fail_after=2
-            )
+        with monkeypatch.context() as m, pytest.raises(
+            RuntimeError, match="injected failure"
+        ):
+            m.setattr(commit, "step", kill_after_two_commits)
+            run_pipeline(spark, df, fixture_patterns(), resume_dir, n_buckets=4)
         ckpts = open(os.path.join(resume_dir, "triples", "_checkpoints.jsonl")).read()
         assert ckpts.count('"committed"') == 2
         # restart: must skip the 2 committed buckets and finish

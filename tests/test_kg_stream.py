@@ -306,6 +306,33 @@ class TestKgStream:
         refresh_partials(spark, table, done, PREDICATE_VIEW)
         assert _sorted_pdf(read_view(spark, table, PREDICATE_VIEW)).equals(first)
 
+    def test_killed_refresh_staging_is_swept(self, spark, tmp_path):
+        """A refresh killed mid-write leaves its staging dir under the view
+        dir; the next refresh sweeps it and the view is unchanged."""
+        import os
+
+        from mehari_spark.plans.incremental import (
+            DEGREE_VIEW,
+            read_view,
+            refresh_partials,
+        )
+        from mehari_spark.plans.lineage import write_bucketed
+
+        table = str(tmp_path / "kg")
+        rows = spark.createDataFrame(
+            [(s, 7, s + 1, 0, "c", 0) for s in range(20)],
+            "subj_id long, pred_id long, obj_id long, ts_epoch long, "
+            "conv_id string, turn_idx int",
+        )
+        write_bucketed(rows, table, "r1", key_col="subj_id", n_buckets=4)
+        done = refresh_partials(spark, table, [], DEGREE_VIEW)
+        before = _sorted_pdf(read_view(spark, table, DEGREE_VIEW))
+        stale = os.path.join(table, "_analytics", "degree", "_staging_view_0123abcd")
+        os.makedirs(os.path.join(stale, "_part=0"))
+        refresh_partials(spark, table, done[:1], DEGREE_VIEW)
+        assert not os.path.exists(stale)
+        assert _sorted_pdf(read_view(spark, table, DEGREE_VIEW)).equals(before)
+
     def test_view_empty_bucket_partial(self, spark, tmp_path):
         """A spec whose row_fn filters a bucket to zero rows still gets an
         (empty) partial — read_view must not mistake it for 'missing' and
@@ -427,16 +454,17 @@ class TestKgStream:
         per epoch — a multi-epoch run must invoke applied_epochs exactly
         once and still produce the batch-identical table."""
         import mehari_spark.streaming.kg_stream as kgs
+        from mehari_spark.plans import commit
 
         calls = {"n": 0}
         real = kgs.applied_epochs
-        real_tracker = kgs.applied_epoch_tracker
+        real_tracker = commit.epoch_tracker
 
-        def counting(table_dir, scope):
+        def counting(table_dir, stage, scope):
             calls["n"] += 1
-            return real_tracker(table_dir, scope)
+            return real_tracker(table_dir, stage, scope)
 
-        monkeypatch.setattr(kgs, "applied_epoch_tracker", counting)
+        monkeypatch.setattr(commit, "epoch_tracker", counting)
         turns = _turns(spark)
         in_dir = str(tmp_path / "in")
         table = str(tmp_path / "kg")
@@ -460,7 +488,7 @@ class TestKgStream:
         """Compacting the commit log between restarts (epoch_done prefix ->
         watermark row) must not change replay semantics: the restarted
         stream skips nothing it should apply and the table equals batch."""
-        from mehari_spark.plans.lineage import compact_checkpoint_log
+        from mehari_spark.plans.commit import compact_log as compact_checkpoint_log
 
         turns = _turns(spark)
         in_dir = str(tmp_path / "in")

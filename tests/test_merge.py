@@ -51,6 +51,11 @@ class TestMergeInto:
             bucket_col="conv_id", n_buckets=4,
         )
         assert res["touched_buckets"]
+        # rows_after (from the staged footers) is each touched bucket's count
+        assert sorted(res["rows_after"]) == res["touched_buckets"]
+        for b in res["touched_buckets"]:
+            bdir = os.path.join(table, f"bucket={b}")
+            assert res["rows_after"][b] == spark.read.parquet(bdir).count()
         after = spark.read.parquet(os.path.join(table, "bucket=*"))
         assert after.count() == 8 * 3 + 2  # 1 update + 2 inserts
         got = {

@@ -523,7 +523,10 @@ class TestMergeCrashSafety:
                 bucket_col="conv_id", n_buckets=4,
             )
 
-    def test_crash_mid_swap_recovers_without_data_loss(self, spark, tmp_path):
+    def test_crash_mid_swap_recovers_without_data_loss(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from mehari_spark.plans import commit
         from mehari_spark.plans.lineage import read_bucketed
         from mehari_spark.plans.merge import merge_into_bucketed
 
@@ -544,11 +547,18 @@ class TestMergeCrashSafety:
             .collect()
         )
         crash_bucket = sorted(r.b for r in bcol)[0]
-        with pytest.raises(RuntimeError, match="injected crash mid-swap"):
+
+        def crash_between_renames(point, target):
+            if point == "aside" and target.endswith(f"bucket={crash_bucket}"):
+                raise RuntimeError(f"injected crash mid-swap of bucket {crash_bucket}")
+
+        with monkeypatch.context() as m, pytest.raises(
+            RuntimeError, match="injected crash mid-swap"
+        ):
+            m.setattr(commit, "step", crash_between_renames)
             merge_into_bucketed(
                 spark, out, upd, match_cols=["conv_id", "turn_idx"],
                 bucket_col="conv_id", n_buckets=4,
-                fail_mid_swap_bucket=crash_bucket,
             )
         # mid-swap state: bucket=<b> is renamed aside — the table is
         # readable only after repair; rerunning the merge repairs + applies
@@ -566,15 +576,15 @@ class TestMergeCrashSafety:
         # no stray .old dirs or merge staging left behind
         leftovers = [
             d for d in os.listdir(out)
-            if d.endswith(".old") or d.startswith("_mergestage_")
+            if d.endswith(".old") or d.startswith("_staging_merge_")
         ]
         assert leftovers == []
 
     def test_rollback_when_new_data_never_landed(self, spark, tmp_path):
         import shutil
 
+        from mehari_spark.plans.commit import repair
         from mehari_spark.plans.lineage import read_bucketed
-        from mehari_spark.plans.merge import repair_interrupted_merge
 
         out = str(tmp_path / "t")
         self._seed_table(spark, out)
@@ -582,7 +592,7 @@ class TestMergeCrashSafety:
         # simulate a crash BETWEEN the two renames: bucket aside, no new data
         src = os.path.join(out, "bucket=0")
         shutil.move(src, src + ".old")
-        assert repair_interrupted_merge(out) == [0]
+        assert repair(out) == [src]
         assert sorted(map(tuple, read_bucketed(spark, out).collect())) == before
 
 

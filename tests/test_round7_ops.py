@@ -8,12 +8,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from mehari_spark.plans.lineage import (
-    _ckpt_path,
-    append_checkpoint,
-    compact_checkpoint_log,
-    load_committed,
-)
+from mehari_spark.plans.commit import append as append_checkpoint
+from mehari_spark.plans.commit import compact_log as compact_checkpoint_log
+from mehari_spark.plans.lineage import _ckpt_path, load_committed
 from mehari_spark.streaming.kg_stream import applied_epochs
 
 

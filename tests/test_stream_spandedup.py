@@ -3,9 +3,14 @@ operator, restart resume, empty epochs, df-cap."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from mehari_spark.operators.spandedup import span_matches_winnowed
+from mehari_spark.plans import commit
 from mehari_spark.streaming.replay import write_arrival_chunk
 from mehari_spark.streaming.spandedup_stream import (
     applied_epochs,
@@ -88,6 +93,78 @@ class TestStreamSpanDedup:
         want = _sorted_rows(span_matches_winnowed(docs, k=K, w=W))
         assert got == want
         assert len(applied_epochs(store, scope)) > n_first
+
+    def test_restart_with_other_bucket_moduli_raises(self, spark, tmp_path):
+        """The store logs its bucket moduli with the first epoch: a restart
+        with another n_fp_buckets must raise (its path-pruned reads would
+        miss candidates). A store without a layout row predates the row
+        and is read unpruned, so any moduli still give batch equality."""
+        docs = _docs(spark)
+        in_dir = str(tmp_path / "in")
+        store = str(tmp_path / "store")
+        ck = str(tmp_path / "ck")
+        write_arrival_chunk(docs.where(F.col("doc_id") < 250), in_dir)
+        _run(spark, in_dir, store, ck)
+        write_arrival_chunk(docs.where(F.col("doc_id") >= 250), in_dir)
+        with pytest.raises(ValueError, match="n_fp_buckets=32.*n_fp_buckets=64"):
+            _run(spark, in_dir, store, ck, n_fp_buckets=64)
+        # drop the layout row: the store now looks written before it
+        rows = [r for r in commit.records(store) if r["status"] != "layout"]
+        with open(commit.log_path(store), "w") as f:
+            f.writelines(json.dumps(r, sort_keys=True) + "\n" for r in rows)
+        _run(spark, in_dir, store, ck, n_fp_buckets=64)
+        got = _sorted_rows(read_span_matches(spark, store))
+        want = _sorted_rows(span_matches_winnowed(docs, k=K, w=W))
+        assert got == want
+
+    def test_log_rotation_bounded_and_exactly_once(self, spark, tmp_path, monkeypatch):
+        """With rotation every 2 applied epochs the log stays bounded over
+        3 rotations; a restart that replays an epoch already folded into
+        the watermark skips it; the output equals the batch operator."""
+        monkeypatch.setattr(commit, "ROTATE_EVERY", 2)
+        rotations, done_rows = [], []
+        real_compact, real_append = commit.compact_log, commit.append
+
+        def counting_compact(root):
+            rotations.append(real_compact(root))
+            return rotations[-1]
+
+        def recording_append(root, record):
+            if record.get("status") == "epoch_done":
+                done_rows.append(record["epoch"])
+            real_append(root, record)
+
+        monkeypatch.setattr(commit, "compact_log", counting_compact)
+        monkeypatch.setattr(commit, "append", recording_append)
+        docs = _docs(spark)
+        in_dir = str(tmp_path / "in")
+        store = str(tmp_path / "store")
+        ck = str(tmp_path / "ck")
+        bounds = [0, 70, 140, 210, 280, 350, 420, 10_000]
+        for lo, hi in zip(bounds[:4], bounds[1:5]):
+            write_arrival_chunk(
+                docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), in_dir
+            )
+        _run(spark, in_dir, store, ck)
+        assert done_rows == [0, 1, 2, 3] and len(rotations) == 2
+        # forget Spark's commit of epoch 3: the restart replays it, and
+        # only the rotated log (a watermark row) says it was applied
+        for name in ("3", ".3.crc"):
+            os.remove(os.path.join(ck, "commits", name))
+        for lo, hi in zip(bounds[4:], bounds[5:]):
+            write_arrival_chunk(
+                docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), in_dir
+            )
+        _run(spark, in_dir, store, ck)
+        assert done_rows == list(range(7))
+        assert len(rotations) == 3
+        # layout row + watermark after each rotation; + one epoch past it
+        assert [r["rows_after"] for r in rotations] == [2, 2, 2]
+        with open(commit.log_path(store)) as f:
+            assert len(f.readlines()) == 3
+        got = _sorted_rows(read_span_matches(spark, store))
+        want = _sorted_rows(span_matches_winnowed(docs, k=K, w=W))
+        assert got == want
 
     def test_single_wave_equals_batch(self, spark, tmp_path):
         """Everything in one epoch: the within-batch join alone must
@@ -239,7 +316,7 @@ class TestStreamSpanDedup:
 
         import pytest
 
-        from mehari_spark.plans.lineage import append_checkpoint
+        from mehari_spark.plans.commit import append as append_checkpoint
         from mehari_spark.streaming.spandedup_stream import (
             compact_span_store,
         )
