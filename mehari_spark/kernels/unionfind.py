@@ -1,9 +1,11 @@
-"""Union-find for per-group connected components.
+"""Union-find for connected components: the reference twin.
 
-Used by the coreference resolver: edge lists never cross a conversation
-(SURVEY.md §7.4 — never global CC; partition by conv_id), so per-group CC
-runs as a bounded union-find inside ``applyInPandas``. The mehari analog is
-SV cluster building (strucvars/mod.rs:3189-3290).
+A dict-based union-find that walks the edges one at a time, so it is the
+easy-to-read cross-check for the vectorized kernel in ``components.py``,
+which production coref (``operators/coref.py``) runs instead. Both label a
+node with the smallest member of its component; the property tests compare
+them per group. The mehari analog is SV cluster building
+(strucvars/mod.rs:3189-3290).
 """
 
 from __future__ import annotations

@@ -7,78 +7,55 @@ co-occur as (subj, obj) of a triple anywhere in a conversation are linked;
 clusters are the connected components of that per-conversation graph, with
 the min entity_id as the stable cluster label.
 
-Two implementations:
+Two implementations, both ending in the numpy kernel
+``kernels/components.py`` (no per-edge Python):
 
 - ``coref_clusters``: edges never cross conversations, so CC runs per
-  conversation inside ``applyInPandas`` with a bounded union-find
-  (SURVEY.md §7.4: "never global CC — partition by conv_id"). One shuffle on
-  conv_id; each group is tiny (<= distinct entities of one conversation).
+  conversation (SURVEY.md §7.4: "never global CC — partition by conv_id").
+  One shuffle on conv_id collects each conversation's edge list; a
+  ``mapInArrow`` batch of thousands of conversations is one kernel call.
 - ``connected_components_global``: the GraphFrames-style alternating
   large-star/small-star iteration built from joins + aggregations, for
   graphs whose edges DO cross the partition key (used by the dedup
   clustering path). Converges in O(log n) rounds; each round is one shuffle
-  on node id, AQE-coalesced.
+  on node id, AQE-coalesced. Small graphs skip the rounds and run the
+  kernel once, in one task.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.unionfind import UnionFind
+from ..kernels.components import cluster_batch, components
+
+CLUSTER_DDL = "conv_id string, entity_id long, cluster_id long"
+COMPONENT_SCHEMA = pa.schema([("node", pa.int64()), ("component", pa.int64())])
 
 
-def coref_edges(triples: DataFrame) -> DataFrame:
-    """(conv_id, src, dst) distinct entity-entity edges, src < dst."""
-    return (
+def coref_clusters(triples: DataFrame) -> DataFrame:
+    """-> (conv_id, entity_id, cluster_id) for every entity in a triple.
+
+    One shuffle: groupBy conv_id with two aligned collect_lists of the
+    (least, greatest) entity pair of every non-self-loop triple. Duplicate
+    edges are kept — they do not change the components, and dropping them
+    would cost a second exchange. Each Arrow batch of thousands of
+    conversations then goes through the numpy components kernel in one
+    call."""
+    agg = (
         triples.select(
             "conv_id",
             F.least("subj_id", "obj_id").alias("src"),
             F.greatest("subj_id", "obj_id").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
+        .groupBy("conv_id")
+        .agg(F.collect_list("src").alias("src"), F.collect_list("dst").alias("dst"))
     )
-
-
-def coref_clusters(triples: DataFrame) -> DataFrame:
-    """-> (conv_id, entity_id, cluster_id) for every entity in a triple.
-
-    One shuffle (groupBy conv_id + collect_list of the tiny per-conv edge
-    list), then union-find over THOUSANDS of conversations per Arrow batch
-    via mapInPandas — per-group applyInPandas pays one Arrow round trip per
-    conversation, which at 10^8 conversations is pure overhead; batching
-    amortizes it to one per ~10k convs."""
-    edges = coref_edges(triples)
-    agg = edges.groupBy("conv_id").agg(
-        F.collect_list(F.struct("src", "dst")).alias("es")
-    )
-
-    def cc_batches(it):
-        for pdf in it:
-            convs: list[str] = []
-            ents: list[int] = []
-            clusters: list[int] = []
-            for conv, es in zip(pdf["conv_id"].tolist(), pdf["es"].tolist()):
-                uf = UnionFind()
-                for e in es:
-                    uf.union(int(e["src"]), int(e["dst"]))
-                comp = uf.components()
-                for k, v in comp.items():
-                    convs.append(conv)
-                    ents.append(k)
-                    clusters.append(v)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(convs, dtype="object"),
-                    "entity_id": pd.Series(ents, dtype="int64"),
-                    "cluster_id": pd.Series(clusters, dtype="int64"),
-                }
-            )
-
-    return agg.mapInPandas(
-        cc_batches, schema="conv_id string, entity_id long, cluster_id long"
+    return agg.mapInArrow(
+        lambda batches: map(cluster_batch, batches), schema=CLUSTER_DDL
     )
 
 
@@ -145,11 +122,12 @@ def connected_components_global(
     id, expressed as joins/aggs so Catalyst/AQE handle skew.
 
     Graphs at or below ``small_graph_threshold`` directed edges (and not
-    running durably) short-circuit to a single-task union-find — identical
-    labels, none of the per-round latency; pass 0 to force the distributed
-    path (tests asserting the round bound do). On this path the returned
-    rounds value is the SENTINEL 1 (one union-find pass), not a distributed
-    round count — don't compare it against the O(log n) bound.
+    running durably) short-circuit to one call of the numpy components
+    kernel in a single task — identical labels, none of the per-round
+    latency; pass 0 to force the distributed path (tests asserting the
+    round bound do). On this path the returned rounds value is the
+    SENTINEL 1 (one kernel call), not a distributed round count — don't
+    compare it against the O(log n) bound.
 
     Durability (mehari's spill-to-disk discipline, strucvars/mod.rs:3075-3144):
     by default iteration state is localCheckpoint'ed — executor-local blocks,
@@ -172,10 +150,10 @@ def connected_components_global(
         eager=True
     )
     # SMALL-GRAPH FAST PATH: below the threshold the edge list fits one
-    # task, and a single union-find pass (path compression, min-root) beats
+    # task, and one in-memory pass (the numpy components kernel) beats
     # O(log n) synchronous distributed rounds whose per-round driver/stage
     # latency dominates at this size — measured 13-28 s of rounds vs a few
-    # seconds of union-find at 3M edges (that crossover measurement set the
+    # seconds of a Python union-find at 3M edges (that crossover set the
     # 4M default: 4M edges is ~64 MB through one task, broadcast-threshold
     # territory, while the rounds' fixed cost still dominates). Labels are
     # identical by construction (min node id per component, the same
@@ -185,30 +163,24 @@ def connected_components_global(
         n_directed = ed.count()
         if n_directed <= small_graph_threshold:
 
-            def uf_all(it):
-                from ..kernels.unionfind import connected_components as _uf_cc
-
-                pairs: list[tuple[int, int]] = []
-                for pdf in it:
-                    pairs.extend(zip(pdf["u"].tolist(), pdf["v"].tolist()))
-                comp = _uf_cc(pairs)
-                nodes = list(comp)
-                yield pd.DataFrame(
-                    {
-                        "node": pd.Series(nodes, dtype="int64"),
-                        "component": pd.Series(
-                            [comp[x] for x in nodes], dtype="int64"
-                        ),
-                    }
+            def cc_all(batches):
+                us, vs = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+                for rb in batches:
+                    us.append(rb.column("u").to_numpy())
+                    vs.append(rb.column("v").to_numpy())
+                u, v = np.concatenate(us), np.concatenate(vs)
+                _, node, component = components(np.zeros(len(u), np.int64), u, v)
+                yield pa.RecordBatch.from_arrays(
+                    [node, component], schema=COMPONENT_SCHEMA
                 )
 
             # materialize once (same contract as the distributed path's
             # eager checkpoints): without this every downstream action
             # would re-collect the edges into one task and re-run
-            # union-find per action
+            # the kernel per action
             out = (
                 ed.coalesce(1)
-                .mapInPandas(uf_all, schema="node long, component long")
+                .mapInArrow(cc_all, schema="node long, component long")
                 .localCheckpoint(eager=True)
             )
             return (out, 1) if with_rounds else out

@@ -484,8 +484,8 @@ def entity_components(triples: DataFrame) -> DataFrame:
     applied to the whole graph). The distinct (subj, obj) projection is
     materialized ONCE and feeds both the edge set and the node set (self-
     loop-only entities still label themselves); clustering is the shared
-    pointer-jumping CC (O(log n) rounds, union-find fast path below the
-    measured crossover)."""
+    pointer-jumping CC (O(log n) rounds, single-task numpy kernel below
+    the measured crossover)."""
     from ..plans.stagecache import materialize_once
     from .coref import connected_components_global
 

@@ -153,21 +153,23 @@ def run_pipeline(
             .parquet(f"{out_dir}/freq_kb")
         )
 
-    clusters = coref_clusters(written)
-    write_bucketed(
-        clusters,
+    t_entities = time.time()
+    entities = write_bucketed(
+        coref_clusters(written),
         f"{out_dir}/entities",
         run_id,
         key_col="conv_id",
         n_buckets=max(1, n_buckets // 2),
         stage="entities",
     )
+    entities_s = time.time() - t_entities
 
     elapsed = time.time() - t0
-    rows_out = sum(r.rows_out for r in results)
     metrics = {
         "elapsed_s": round(elapsed, 3),
-        "triples_written": rows_out,
+        "triples_written": sum(r.rows_out for r in results),
+        "entities_written": sum(r.rows_out for r in entities),
+        "entities_s": round(entities_s, 3),
         "buckets_skipped": sum(1 for r in results if r.skipped),
         "n_partitions": n_partitions,
         "n_buckets": n_buckets,

@@ -181,7 +181,8 @@ class TestPipelineMetrics:
     def test_match_table_cache_metrics_written(self, spark, turns, tmp_path):
         """run_pipeline reports its match-table cache traffic in
         _metrics.jsonl: a rerun with the same dictionary is a pure hit.
-        Committed row counts (read from parquet footers) match the data."""
+        Committed row counts (read from parquet footers) match the data,
+        for the triples and for the coref entities table."""
         import json
 
         df = turns_df(spark, turns)
@@ -194,11 +195,21 @@ class TestPipelineMetrics:
             written = {
                 r["metric"]: r["value"] for r in rows if r["stage"] == "pipeline"
             }
-            assert written["match_table_builds"] == metrics["match_table_builds"]
-            assert written["match_table_hits"] == metrics["match_table_hits"]
+            for name in (
+                "match_table_builds",
+                "match_table_hits",
+                "entities_written",
+                "entities_s",
+            ):
+                assert written[name] == metrics[name], name
             assert metrics["triples_written"] == (
                 spark.read.parquet(f"{out}/triples/bucket=*").count()
             )
+            assert metrics["entities_written"] == (
+                spark.read.parquet(f"{out}/entities/bucket=*").count()
+            )
+            assert metrics["entities_written"] > 0
+            assert 0 < metrics["entities_s"] <= metrics["elapsed_s"]
             per_run.append(metrics)
         first, second = per_run
         assert first["match_table_builds"] + first["match_table_hits"] == 1

@@ -1,17 +1,26 @@
 """Property-based kernel tests (hypothesis): the AC automaton and the
 Arrow-batch matching kernel against a naive scanner and the golden triple
-extractor, union-find against brute-force reachability, minhash
-determinism — randomized analogs of mehari's key round-trip properties
+extractor, union-find against brute-force reachability, the numpy
+components kernel against union-find, minhash determinism — randomized analogs of mehari's key round-trip properties
 (keys.rs:207-280)."""
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from mehari_spark.datagen import Turn, reference_triples
 from mehari_spark.dictionary import DictPattern
 from mehari_spark.kernels.ahocorasick import TokenAhoCorasick
+from mehari_spark.kernels.components import (
+    cluster_batch,
+    components,
+    min_label,
+    number_nodes,
+)
 from mehari_spark.kernels.dictmatch import compile_table, match, tokenize, triple_batch
 from mehari_spark.kernels.minhash import hash_tokens, minhash_signature, perm_params
 from mehari_spark.kernels.unionfind import connected_components
@@ -115,6 +124,61 @@ def test_unionfind_equals_reachability(edges):
             grp.append(n)
             stack.extend(adj[n] - seen.keys())
     assert comp == seen
+
+
+# few distinct ids, so duplicate edges and shared components are likely;
+# the int64 extremes and negative ids sort at the ends of a group
+IDS = st.sampled_from([-(2**63), 2**63 - 1, -(2**40), -3, -1, 0, 1, 2, 5, 2**40])
+
+
+def _union_find_per_group(groups: list[list[tuple[int, int]]]) -> dict:
+    return {
+        (g, node): label
+        for g, edges in enumerate(groups)
+        for node, label in connected_components(edges).items()
+    }
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    groups=st.lists(st.lists(st.tuples(IDS, IDS), max_size=12), max_size=6),
+    lo=st.integers(0, 3),
+    hi=st.integers(0, 3),
+)
+def test_components_equal_union_find_per_group(groups, lo, hi):
+    """Duplicate edges, empty groups and self-loops, by both the flat kernel
+    and the list-column batch function on a batch sliced out of a larger
+    one (list offsets that do not start at zero)."""
+    g = np.array([i for i, es in enumerate(groups) for _ in es], dtype=np.int64)
+    u = np.array([a for es in groups for a, _ in es], dtype=np.int64)
+    v = np.array([b for es in groups for _, b in es], dtype=np.int64)
+    want = _union_find_per_group(groups)
+    node_group, node, label = components(g, u, v)
+    assert dict(zip(zip(node_group.tolist(), node.tolist()), label.tolist())) == want
+
+    # pad with lo leading and hi trailing conversations, then slice them off
+    pad = [[(7, 8), (8, 9)]]
+    lists = pad * lo + groups + pad * hi
+    src = pa.array([[a for a, _ in es] for es in lists], pa.list_(pa.int64()))
+    dst = pa.array([[b for _, b in es] for es in lists], pa.list_(pa.int64()))
+    conv = pa.array([f"c{i - lo}" for i in range(len(lists))])
+    batch = pa.RecordBatch.from_arrays([conv, src, dst], ["conv_id", "src", "dst"])
+    out = cluster_batch(batch.slice(lo, len(groups)))
+    got = {
+        (int(r["conv_id"][1:]), r["entity_id"]): r["cluster_id"]
+        for r in out.to_pylist()
+    }
+    assert len(got) == out.num_rows
+    assert got == want
+
+
+def test_min_label_rounds_logarithmic_on_shuffled_path():
+    n = 100_000
+    path = np.random.default_rng(0).permutation(n).astype(np.int64)
+    _, node, a, b = number_nodes(np.zeros(n - 1, np.int64), path[:-1], path[1:])
+    label, rounds = min_label(len(node), a, b)
+    assert (label == 0).all()
+    assert rounds <= 2 * math.ceil(math.log2(n)), rounds
 
 
 @settings(max_examples=50, deadline=None)
