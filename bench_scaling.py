@@ -41,11 +41,10 @@ n_turns = t.count()
 # warmup: spin up python workers / JIT / shuffle services once (steady-state
 # throughput is what the N-vs-4N comparison measures)
 run_pipeline(spark, t, demo_patterns(), os.path.join(out, f"warm_{cores}"),
-             n_partitions=max(cores * 2, 8), n_buckets=8)
+             n_buckets=8)
 work = os.path.join(out, f"run_{cores}")
 t0 = time.time()
-metrics = run_pipeline(spark, t, demo_patterns(), work,
-                       n_partitions=max(cores * 2, 8), n_buckets=8)
+metrics = run_pipeline(spark, t, demo_patterns(), work, n_buckets=8)
 dt = time.time() - t0
 # compute-only variant: same plan, noop sink — isolates the scalable
 # compute+shuffle path from single-local-disk write I/O (which on a real

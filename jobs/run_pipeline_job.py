@@ -5,7 +5,7 @@ Cluster usage (north_rule packaging contract):
     zip -r mehari_spark.zip mehari_spark
     spark-submit --py-files mehari_spark.zip jobs/run_pipeline_job.py \
         --input <transcripts parquet/Iceberg path> \
-        --output <output dir> [--buckets 64] [--partitions 256]
+        --output <output dir> [--buckets 64]
 
 Sandbox smoke:
 
@@ -25,8 +25,6 @@ def main() -> int:
     ap.add_argument("--sf-dir", help="testdata sf dir (derive transcripts from documents)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument("--partitions", type=int, default=32)
-    ap.add_argument("--mode", choices=["fused", "windowed"], default="fused")
     args = ap.parse_args()
     if not args.input and not args.sf_dir:
         ap.error("one of --input / --sf-dir is required")
@@ -53,9 +51,7 @@ def main() -> int:
         transcripts_df,
         demo_patterns(),
         args.output,
-        n_partitions=args.partitions,
         n_buckets=args.buckets,
-        mode=args.mode,
     )
     print(json.dumps(metrics))
     spark.stop()

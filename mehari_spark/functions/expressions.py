@@ -3,13 +3,9 @@
 Analogs of mehari's scalar kernels (SURVEY.md §2.8), kept as Catalyst
 expressions so they stay inside whole-stage codegen:
 
-- ``hier_bin``       — UCSC-style hierarchical range binning
+- ``hier_bin`` — UCSC-style hierarchical range binning
   (annotate/seqvars/binning.rs:13-26): the smallest bin fully containing
   [start, end), used to co-locate range queries without an interval index.
-- ``surrogate_key``  — stable 64-bit key from composite columns
-  (db/keys.rs:144-163 byte-ordered key analog).
-- ``overlaps`` / ``reciprocal_overlap`` — half-open interval predicates
-  (logic.rs:2702-2704; strucvars/mod.rs:1063-1079).
 """
 
 from __future__ import annotations
@@ -26,8 +22,6 @@ _BIN_NEXT_SHIFT = 3
 def hier_bin(start: Column, end: Column) -> Column:
     """Smallest hierarchical bin containing [start, end) (UCSC scheme)."""
     result = F.lit(None).cast("long")
-    s_shift = F.shiftright(start.cast("long"), _BIN_FIRST_SHIFT)
-    e_shift = F.shiftright((end.cast("long") - 1), _BIN_FIRST_SHIFT)
     for level, offset in enumerate(_BIN_OFFSETS):
         shift = _BIN_FIRST_SHIFT + level * _BIN_NEXT_SHIFT
         s = F.shiftright(start.cast("long"), shift)
@@ -37,22 +31,3 @@ def hier_bin(start: Column, end: Column) -> Column:
         ).otherwise(result)
     return F.coalesce(result, F.lit(0).cast("long"))
 
-
-def surrogate_key(*cols: Column | str) -> Column:
-    """Stable 64-bit surrogate key over composite columns."""
-    return F.xxhash64(*cols)
-
-
-def overlaps(a_start: Column, a_end: Column, b_start: Column, b_end: Column) -> Column:
-    """Half-open interval overlap predicate: [a_start,a_end) x [b_start,b_end)."""
-    return (a_start < b_end) & (b_start < a_end)
-
-
-def reciprocal_overlap(
-    a_start: Column, a_end: Column, b_start: Column, b_end: Column
-) -> Column:
-    """Reciprocal-overlap fraction (SV-cluster merge criterion):
-    overlap_len / max(len_a, len_b); 0.0 when disjoint."""
-    ov = F.least(a_end, b_end) - F.greatest(a_start, b_start)
-    longest = F.greatest(a_end - a_start, b_end - b_start)
-    return F.when(ov > 0, ov / longest).otherwise(F.lit(0.0))

@@ -27,13 +27,3 @@ def simhash64(tokens: list[str]) -> int:
             fp |= np.uint64(1) << np.uint64(b)
     return int(fp)
 
-
-def simhash_chunks(fp: int, n_chunks: int = 4) -> list[tuple[int, int]]:
-    """[(chunk_idx, chunk_value)] for banded Hamming blocking."""
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
-    return [(i, (fp >> (i * width)) & mask) for i in range(n_chunks)]
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")

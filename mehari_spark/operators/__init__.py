@@ -8,7 +8,7 @@ Each module maps one mehari operator family onto Spark primitives:
 - coref.py         — SV clustering/J8  -> edge list + connected components
 - linking.py       — tx picking F6/F7  -> MinHash/LSH blocking + best-link window
 - dedup.py         — A7 seen-keys      -> exact/minhash/simhash/jaccard near-dup
-- similarity.py    — (training-data op) ANN over embeddings
+- similarity.py    — (training-data op) exact + IVF top-k over embeddings, persistent IVF index
 - textstats.py     — (training-data op) lang-id/quality/token/fingerprint
 - multimodal.py    — (training-data op) binary-column decode plumbing (stub)
 """

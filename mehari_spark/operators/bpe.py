@@ -12,9 +12,9 @@ mapInPandas in Arrow batches; no per-row Python UDFs.
 100 TB notes: the scan is embarrassingly parallel (no shuffle), the
 broadcast is O(vocab) not O(data), and the word cache bounds per-task
 CPU by the number of DISTINCT words per batch rather than total tokens.
-Golden gate: tests assert the Spark kernel's output equals the pure-
-python encoder (kernels/bpe.py) document-for-document, and the trained
-assets regenerate bit-identically from the corpus.
+Golden gate: tests assert the Spark kernel's token counts equal the
+pure-python encoder's (kernels/bpe.py) document-for-document, and the
+trained assets regenerate bit-identically from the corpus.
 """
 
 from __future__ import annotations
@@ -78,42 +78,20 @@ def _compiled(fp: str, merges: list) -> tuple[dict, dict]:
     return got
 
 
-def _encode_batches(
-    it: Iterable[pd.DataFrame], fp: str, merges: list, counts_only: bool
+def _count_batches(
+    it: Iterable[pd.DataFrame], fp: str, merges: list
 ) -> Iterator[pd.DataFrame]:
     ranks, cache = _compiled(fp, merges)
     for pdf in it:
-        ids = pdf["doc_id"].tolist()
-        texts = pdf["text"].tolist()
-        if counts_only:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_tokens": pd.Series(
-                        [len(encode(t, ranks, cache)) for t in texts],
-                        dtype="int64",
-                    ),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "tokens": [list(encode(t, ranks, cache)) for t in texts],
-                }
-            )
-
-
-def bpe_encode(docs: DataFrame, merges: list | None = None) -> DataFrame:
-    """(doc_id, tokens): full BPE token sequence per document."""
-    merges = merges if merges is not None else load_bpe_assets()["merges"]
-    sc = docs.sparkSession.sparkContext
-    bc = sc.broadcast(merges)
-    fp = _merges_fingerprint(merges)
-    return docs.select("doc_id", "text").mapInPandas(
-        lambda it: _encode_batches(it, fp, bc.value, counts_only=False),
-        schema="doc_id long, tokens array<string>",
-    )
+        yield pd.DataFrame(
+            {
+                "doc_id": pd.Series(pdf["doc_id"].tolist(), dtype="int64"),
+                "n_tokens": pd.Series(
+                    [len(encode(t, ranks, cache)) for t in pdf["text"].tolist()],
+                    dtype="int64",
+                ),
+            }
+        )
 
 
 def bpe_token_counts(docs: DataFrame, merges: list | None = None) -> DataFrame:
@@ -124,7 +102,7 @@ def bpe_token_counts(docs: DataFrame, merges: list | None = None) -> DataFrame:
     bc = sc.broadcast(merges)
     fp = _merges_fingerprint(merges)
     return docs.select("doc_id", "text").mapInPandas(
-        lambda it: _encode_batches(it, fp, bc.value, counts_only=True),
+        lambda it: _count_batches(it, fp, bc.value),
         schema="doc_id long, n_tokens long",
     )
 

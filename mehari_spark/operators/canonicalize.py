@@ -112,46 +112,6 @@ CONTEXT_RULES: list[ContextRule] = [
 ]
 
 
-def close_rules(rules: dict[int, int | None]) -> dict[int, int | None]:
-    """Transitively close a {pred_id: rewrite_to|None} rule table (driver-side)."""
-    closed: dict[int, int | None] = {}
-    for k in rules:
-        seen = {k}
-        cur: int | None = k
-        while cur is not None and cur in rules and rules[cur] != cur:
-            cur = rules[cur]
-            if cur in seen:  # cycle -> keep original (defensive)
-                cur = k
-                break
-            seen.add(cur)
-        closed[k] = cur
-    return closed
-
-
-def canonicalize_predicates(
-    triples: DataFrame, rules: dict[int, int | None], pred_col: str = "pred_id"
-) -> DataFrame:
-    """Apply the closed rule table to ``pred_col`` via a broadcast join.
-
-    Unmatched predicates pass through unchanged; suppressed (NULL target)
-    rows are dropped.
-    """
-    spark = triples.sparkSession
-    closed = close_rules(rules)
-    rule_df = spark.createDataFrame(
-        [(int(k), None if v is None else int(v)) for k, v in closed.items()],
-        "match_id long, target_id long",
-    )
-    joined = triples.join(
-        F.broadcast(rule_df), triples[pred_col] == rule_df.match_id, "left"
-    )
-    return (
-        joined.filter(F.col("match_id").isNull() | F.col("target_id").isNotNull())
-        .withColumn(pred_col, F.coalesce(F.col("target_id"), F.col(pred_col)))
-        .drop("match_id", "target_id")
-    )
-
-
 def close_rule_table(
     rules: list[CanonRule],
 ) -> dict[int, tuple[int | None, int | None]]:
@@ -161,7 +121,7 @@ def close_rule_table(
     Semantics: chains follow target links until a fixpoint / suppression;
     the last rank_override seen along the chain wins; a chain that reaches a
     suppression suppresses; a CYCLE keeps the original id with no override
-    (defensive — mirrors close_rules)."""
+    (defensive)."""
     base = {r.match_id: r for r in rules}
     closed: dict[int, tuple[int | None, int | None]] = {}
     for k in base:

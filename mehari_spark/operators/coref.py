@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.components import cluster_batch, components
+from ..plans import commit
 
 CLUSTER_DDL = "conv_id string, entity_id long, cluster_id long"
 COMPONENT_SCHEMA = pa.schema([("node", pa.int64()), ("component", pa.int64())])
@@ -251,10 +252,10 @@ def connected_components_global(
             # the read-back df's lineage starts at the durable files
             rd = _cc_round_dir(checkpoint_dir, rounds)
             jumped.write.mode("overwrite").parquet(rd)
-            tmp = os.path.join(checkpoint_dir, "_cc_manifest.tmp")
-            with open(tmp, "w") as f:
-                json.dump({"round": rounds, "path": rd, **(graph_id or {})}, f)
-            os.replace(tmp, os.path.join(checkpoint_dir, "_cc_manifest.json"))
+            commit.replace_file(
+                os.path.join(checkpoint_dir, "_cc_manifest.json"),
+                json.dumps({"round": rounds, "path": rd, **(graph_id or {})}),
+            )
             # superseded round dirs are dead weight once the manifest moved
             # on — retain the newest TWO (a just-resumed ``labels`` df may
             # still have lineage into the previous round's files)

@@ -227,7 +227,7 @@ def contamination_screen(
     ``n_shared`` = distinct benchmark word-``n``-grams the doc contains,
     ``contaminated`` = any overlap. Benchmark grams broadcast; the corpus
     side never shuffles its text. Both sides run the same surface
-    normalization by default (kernels/normalize.py discipline, expressed
+    normalization by default (lowercase, punctuation stripped, expressed
     in Catalyst so the oracle mirrors it) — a benchmark quote that was
     re-cased or re-punctuated still screens."""
     bench_ids = benchmark.select("doc_id")

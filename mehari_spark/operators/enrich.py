@@ -27,7 +27,6 @@ def enrich_triples(
     entity_kb: DataFrame,
     predicate_kb: DataFrame,
     with_freq: bool = True,
-    freq_kb: DataFrame | None = None,
 ) -> DataFrame:
     """Annotator chain: triples × entity KB (subj, obj) × predicate KB
     (+ subject-frequency KB).
@@ -35,14 +34,12 @@ def enrich_triples(
     ``entity_kb``:   (entity_id, type) — one row per entity.
     ``predicate_kb``: (pred_id, surface, rank) — one row per CANONICAL
                       predicate (post-rewrite ids, matching triples.pred_id).
-    ``freq_kb``:     optional precomputed (subj_id, subj_freq). Mehari's
-                      frequency KB is a PREBUILT artifact (frequency.rs) —
-                      at scale pass it in (computed from the materialized
-                      table's pruned id column). When ``with_freq`` is set
-                      and no ``freq_kb`` is given, the frequency rollup is
-                      derived from ``triples`` itself, which RE-EXECUTES the
-                      input lineage — only do that on a cached/checkpointed
-                      input.
+    ``with_freq``:   join the subject-frequency rollup derived from
+                      ``triples`` itself, which RE-EXECUTES the input
+                      lineage — only set it on a cached/checkpointed input.
+                      Mehari's frequency KB is a PREBUILT artifact
+                      (frequency.rs); ``run_pipeline`` builds it from the
+                      materialized table's pruned id column instead.
     Left joins preserve every triple even when a KB row is missing (mehari
     annotates absent-frequency variants with nulls, frequency.rs:105-123).
     """
@@ -63,9 +60,7 @@ def enrich_triples(
         .join(F.broadcast(obj_kb), "obj_id", "left")
         .join(F.broadcast(pred_kb), "pred_id", "left")
     )
-    if freq_kb is not None:
-        out = out.join(F.broadcast(freq_kb.select("subj_id", "subj_freq")), "subj_id", "left")
-    elif with_freq:
+    if with_freq:
         freq = triples.groupBy("subj_id").agg(F.count("*").alias("subj_freq"))
         out = out.join(F.broadcast(freq), "subj_id", "left")
     return out

@@ -30,7 +30,7 @@ Scale notes (100 TB triple table):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
@@ -173,6 +173,71 @@ def _pagerank_local(
     return nodes, ranks
 
 
+def _rank_rounds(
+    ranks: DataFrame,
+    esrc: DataFrame,
+    nodes: DataFrame,
+    restart: Column,
+    iters: int,
+    damping_pct: int,
+    checkpoint_every: int | None = None,
+) -> DataFrame:
+    """``iters`` rounds of the integer rank recurrence shared by PageRank
+    and personalized PageRank:
+
+        rank_{i+1}(n) = restart(n)
+            + (d * SUM_{(m,n) in E} (rank_i(m) DIV outdeg(m))) DIV 100
+
+    ``esrc`` is the (src, dst, outdeg) relation, ``nodes`` the node set
+    (aliased ``n`` inside the round, so ``restart`` may read its columns)
+    and ``restart`` the per-node teleport term. ``checkpoint_every``
+    truncates lineage via EAGER localCheckpoint and releases the previous
+    checkpoint's blocks."""
+    prev_ckpt: DataFrame | None = None
+    for i in range(iters):
+        # ranks' lineage contains esrc/nodes after the first iteration:
+        # explicit aliases keep every join reference unambiguous
+        incoming = (
+            ranks.alias("r")
+            .join(esrc.alias("e"), F.col("r.entity_id") == F.col("e.src"))
+            .select(
+                F.col("e.dst").alias("dst"),
+                F.expr("r.rank_micro DIV e.outdeg").alias("contrib"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("contrib").alias("incoming"))
+        )
+        ranks = (
+            nodes.alias("n")
+            .join(
+                incoming.alias("i"),
+                F.col("n.entity_id") == F.col("i.dst"),
+                "left",
+            )
+            .select(
+                F.col("n.entity_id").alias("entity_id"),
+                (
+                    restart
+                    + F.expr(
+                        f"(coalesce(i.incoming, 0L) * {damping_pct}) DIV 100"
+                    )
+                )
+                .cast("long")
+                .alias("rank_micro"),
+            )
+        )
+        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+            ckpt = ranks.localCheckpoint(eager=True)
+            if prev_ckpt is not None:
+                try:  # previous blocks no longer referenced: release
+                    prev_ckpt.rdd.unpersist()
+                except Exception:
+                    pass
+            prev_ckpt = ckpt
+            ranks = ckpt
+    return ranks
+
+
 def pagerank_int(
     triples: DataFrame,
     iters: int = 5,
@@ -264,49 +329,9 @@ def pagerank_int(
     ranks = nodes.select(
         "entity_id", F.lit(RANK_UNIT).cast("long").alias("rank_micro")
     )
-    prev_ckpt: DataFrame | None = None
-    for i in range(iters):
-        # ranks' lineage contains esrc/nodes after the first iteration:
-        # explicit aliases keep every join reference unambiguous
-        incoming = (
-            ranks.alias("r")
-            .join(esrc.alias("e"), F.col("r.entity_id") == F.col("e.src"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                F.expr("r.rank_micro DIV e.outdeg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("incoming"))
-        )
-        ranks = (
-            nodes.alias("n")
-            .join(
-                incoming.alias("i"),
-                F.col("n.entity_id") == F.col("i.dst"),
-                "left",
-            )
-            .select(
-                F.col("n.entity_id").alias("entity_id"),
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"(coalesce(i.incoming, 0L) * {damping_pct}) DIV 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank_micro"),
-            )
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ckpt = ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                try:  # previous blocks no longer referenced: release
-                    prev_ckpt.rdd.unpersist()
-                except Exception:
-                    pass
-            prev_ckpt = ckpt
-            ranks = ckpt
-    return ranks
+    return _rank_rounds(
+        ranks, esrc, nodes, F.lit(base), iters, damping_pct, checkpoint_every
+    )
 
 
 def pagerank_int_oracle(
@@ -400,37 +425,8 @@ def personalized_pagerank_int(
         "entity_id",
         (F.col("is_seed").cast("long") * F.lit(RANK_UNIT)).alias("rank_micro"),
     )
-    for _ in range(iters):
-        incoming = (
-            ranks.alias("r")
-            .join(esrc.alias("e"), F.col("r.entity_id") == F.col("e.src"))
-            .select(
-                F.col("e.dst").alias("dst"),
-                F.expr("r.rank_micro DIV e.outdeg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("incoming"))
-        )
-        ranks = (
-            nodes.alias("n")
-            .join(
-                incoming.alias("i"),
-                F.col("n.entity_id") == F.col("i.dst"),
-                "left",
-            )
-            .select(
-                F.col("n.entity_id").alias("entity_id"),
-                (
-                    F.col("n.is_seed").cast("long") * F.lit(base)
-                    + F.expr(
-                        f"(coalesce(i.incoming, 0L) * {damping_pct}) DIV 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank_micro"),
-            )
-        )
-    return ranks
+    restart = F.col("n.is_seed").cast("long") * F.lit(base)
+    return _rank_rounds(ranks, esrc, nodes, restart, iters, damping_pct)
 
 
 def personalized_pagerank_int_oracle(

@@ -474,20 +474,3 @@ def decode_media(media: DataFrame) -> DataFrame:
         ),
     )
 
-
-def resize_meta(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning: pure-Catalyst recompute of target dimensions
-    (aspect-preserving clamp to max_side) — the metadata half of a resize
-    stays JVM-side; only the pixel work would enter the (stubbed) kernel."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(
-        F.lit(1.0), F.lit(max_side) / F.greatest(w, h).cast("double")
-    )
-    return media.withColumn(
-        "resized",
-        F.struct(
-            F.ceil(w * scale).cast("int").alias("width"),
-            F.ceil(h * scale).cast("int").alias("height"),
-            scale.alias("scale"),
-        ),
-    )

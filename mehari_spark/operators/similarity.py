@@ -8,6 +8,10 @@
   assign every vector to its nearest centroid (vectorized numpy pandas UDF),
   probe only the nprobe closest centroids per query. The candidate set per
   query shrinks by ~K/nprobe; the final re-rank is exact.
+- ``build_ivf_index`` / ``ivf_query_topk``: the persistent IVF index — the
+  corpus written partitioned by cell once, each query batch probing its
+  nprobe cells through partition pruning and re-ranking them with one
+  routed matmul per cell.
 - ``hyperplane_lsh_buckets``: random-hyperplane signatures for cosine LSH
   blocking (embedding near-dup detection).
 """
@@ -222,12 +226,9 @@ def assign_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
-    with_sim: bool = False,
 ) -> DataFrame:
-    """(vec_id, centroid[, cq_sim]) via vectorized argmax of dot products
-    (one matmul per Arrow batch). Centroids ride as a broadcast variable.
-    ``with_sim`` adds the winning cosine — the per-vector quantization
-    quality the index build/append paths aggregate into drift stats."""
+    """(vec_id, centroid) via vectorized argmax of dot products (one matmul
+    per Arrow batch). Centroids ride as a broadcast variable."""
     bc = (
         embeddings.sparkSession.sparkContext.broadcast(centroids)
         if centroids is not None
@@ -245,18 +246,16 @@ def assign_centroids(
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             sims = (mat / norms) @ cents.T
-            cols = {
-                "vec_id": pdf[id_col].astype("int64"),
-                "centroid": pd.Series(sims.argmax(axis=1), dtype="int32"),
-            }
-            if with_sim:
-                cols["cq_sim"] = pd.Series(sims.max(axis=1), dtype="float64")
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf[id_col].astype("int64"),
+                    "centroid": pd.Series(sims.argmax(axis=1), dtype="int32"),
+                }
+            )
 
-    schema = "vec_id long, centroid int" + (
-        ", cq_sim double" if with_sim else ""
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        assign, schema="vec_id long, centroid int"
     )
-    return embeddings.select(id_col, vec_col).mapInPandas(assign, schema=schema)
 
 
 def ivf_topk(
@@ -359,20 +358,14 @@ def build_ivf_index(
     paid ONCE at index build; every query afterwards reads only its nprobe
     probed cells — Spark partition pruning turns the cell probe into a
     physical skip of the other partitions' files (the FAISS inverted-list
-    seek, expressed as parquet layout). Each cell row carries its
-    ``cq_sim`` (cosine to its centroid); the build writes
-    ``stats.json`` with the corpus mean — the baseline ``append_ivf_index``
-    measures drift against. Returns the trained centroids."""
-    import json
+    seek, expressed as parquet layout). Returns the trained centroids."""
     import os
 
-    spark = embeddings.sparkSession
     trained = train_centroids(
         embeddings, n_centroids=n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
     )
     assigned = assign_centroids(
-        embeddings, n_centroids, seed, id_col, vec_col,
-        centroids=trained, with_sim=True,
+        embeddings, n_centroids, seed, id_col, vec_col, centroids=trained
     )
     (
         embeddings.select(id_col, vec_col)
@@ -387,112 +380,7 @@ def build_ivf_index(
         .parquet(os.path.join(index_path, "cells"))
     )
     np.save(os.path.join(index_path, "centroids.npy"), trained)
-    # quantization-quality baseline from the WRITTEN cells (columnar read
-    # of one double column — no recompute of the assignment scan)
-    row = (
-        spark.read.parquet(os.path.join(index_path, "cells"))
-        .agg(F.count("*").alias("n"), F.avg("cq_sim").alias("m"))
-        .first()
-    )
-    with open(os.path.join(index_path, "stats.json"), "w") as f:
-        json.dump(
-            {
-                "n_vectors": int(row["n"]),
-                "mean_cq_sim": float(row["m"]),
-                "n_centroids": int(n_centroids),
-                "seed": int(seed),
-            },
-            f,
-        )
     return trained
-
-
-def append_ivf_index(
-    spark,
-    index_path: str,
-    new_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    retrain_drift_threshold: float | None = None,
-) -> dict:
-    """Incrementally append vectors to a ``build_ivf_index`` index.
-
-    New vectors are assigned with the SAME stored centroids and appended
-    into the existing ``centroid=N`` parquet partitions (one new file per
-    touched cell per append — ``plans/compact.py`` is the maintenance job
-    when appends accumulate), so an append costs O(new vectors), never a
-    corpus rescan: the FAISS ``add``-to-inverted-lists discipline.
-
-    Drift gate: the appended batch's mean cosine-to-assigned-centroid is
-    compared to the build-time corpus mean (``stats.json``). If
-    ``retrain_drift_threshold`` is set and the mean dropped by more than
-    it — the new data no longer fits the trained cells, so probes would
-    lose recall — the whole index is REBUILT (retrain + reassign) from
-    the union corpus instead. Returns
-    ``{"action": "append" | "rebuild", "drift": ..., "n_appended": ...}``;
-    after either action the index answers queries identically to a
-    from-scratch build over the union (recall gate in
-    tests/test_ivf_index.py)."""
-    import json
-    import os
-
-    cells_path = os.path.join(index_path, "cells")
-    stats_path = os.path.join(index_path, "stats.json")
-    with open(stats_path) as f:
-        stats = json.load(f)
-    cents = np.load(os.path.join(index_path, "centroids.npy"))
-    assigned = assign_centroids(
-        new_embeddings,
-        centroids=cents,
-        id_col=id_col,
-        vec_col=vec_col,
-        with_sim=True,
-    )
-    batch = new_embeddings.select(id_col, vec_col).join(assigned, id_col)
-    row = batch.agg(
-        F.count("*").alias("n"), F.avg("cq_sim").alias("m")
-    ).first()
-    n_new, mean_new = int(row["n"]), float(row["m"] or 0.0)
-    drift = stats["mean_cq_sim"] - mean_new
-    if (
-        retrain_drift_threshold is not None
-        and drift > retrain_drift_threshold
-    ):
-        # the stored quantizer no longer fits: rebuild from the union.
-        # materialize the existing corpus first — the rebuild overwrites
-        # the very files its input lineage would otherwise re-read mid-job
-        existing = (
-            spark.read.parquet(cells_path)
-            .select(id_col, vec_col)
-            .localCheckpoint(eager=True)
-        )
-        union = existing.unionByName(new_embeddings.select(id_col, vec_col))
-        build_ivf_index(
-            union,
-            index_path,
-            n_centroids=stats["n_centroids"],
-            seed=stats["seed"],
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        existing.unpersist()
-        return {"action": "rebuild", "drift": drift, "n_appended": n_new}
-    (
-        batch.repartition(stats["n_centroids"], "centroid")
-        .write.mode("append")
-        .partitionBy("centroid")
-        .parquet(cells_path)
-    )
-    n_total = stats["n_vectors"] + n_new
-    stats["mean_cq_sim"] = (
-        stats["mean_cq_sim"] * stats["n_vectors"] + mean_new * n_new
-    ) / max(n_total, 1)
-    stats["n_vectors"] = n_total
-    tmp = stats_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, stats_path)
-    return {"action": "append", "drift": drift, "n_appended": n_new}
 
 
 def ivf_query_topk(
@@ -585,135 +473,6 @@ def ivf_query_topk(
 
     local_topk = cells.select(id_col, vec_col, "centroid").mapInPandas(
         score, schema="query_id long, neighbor_id long, cos double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def ivf_probe_assignments(
-    queries: DataFrame,
-    centroids: np.ndarray,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, centroid, qvec): each query exploded to its nprobe
-    nearest cells, vector pre-normalized — the DISTRIBUTED probe relation
-    (no driver collect). Centroids ride a broadcast variable; the probe
-    argsort runs per Arrow batch with the same float ops as the driver
-    path, so both paths probe identical cells."""
-    bc = queries.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64)
-    )
-
-    def run(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            qmat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            qn = qmat / norms
-            sims = qn @ cents.T
-            probes = np.argsort(-sims, axis=1)[:, :nprobe]
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out_id: list[int] = []
-            out_c: list[int] = []
-            out_v: list[list[float]] = []
-            for i in range(len(ids)):
-                vec = qn[i].tolist()
-                for c in probes[i]:
-                    out_id.append(int(ids[i]))
-                    out_c.append(int(c))
-                    out_v.append(vec)
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_id, dtype="int64"),
-                    "centroid": pd.Series(out_c, dtype="int32"),
-                    "qvec": pd.Series(out_v, dtype="object"),
-                }
-            )
-
-    return queries.select(id_col, vec_col).mapInPandas(
-        run, schema="query_id long, centroid int, qvec array<double>"
-    )
-
-
-def ivf_query_topk_distributed(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cells_df: DataFrame | None = None,
-) -> DataFrame:
-    """``ivf_query_topk`` without the driver-side query collect — the path
-    for query batches too large to broadcast from the driver (round-6
-    review flag: similarity.py's driver path documents a bounded batch).
-
-    Shape: queries explode to a (query_id, centroid, qvec) probe relation
-    on executors (``ivf_probe_assignments``); the cells table is pruned
-    to probed cells with a broadcast semi-join on the PARTITION column
-    (Catalyst turns it into a dynamic partition-pruning filter at the
-    scan); then a centroid-cogrouped Arrow kernel runs one
-    (cell_rows x d) @ (d x queries_probing_this_cell) matmul per cell —
-    the same routed-matmul compute as the driver path, with the probe
-    routing carried by the cogroup instead of a driver-built mask. The
-    only per-query driver state is the final k-row window merge.
-
-    Results are IDENTICAL to ``ivf_query_topk`` (same float ops, same
-    tie order — test-gated); the driver path stays the low-latency choice
-    for small/interactive batches (no probe shuffle, no query-side job).
-    """
-    import os
-
-    cents = np.load(os.path.join(index_path, "centroids.npy"))
-    probes = ivf_probe_assignments(
-        queries, cents, nprobe, id_col=id_col, vec_col=vec_col
-    )
-    base_cells = (
-        cells_df
-        if cells_df is not None
-        else spark.read.parquet(os.path.join(index_path, "cells"))
-    )
-    probed = probes.select("centroid").distinct()
-    pruned = base_cells.join(F.broadcast(probed), "centroid", "left_semi")
-
-    def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: this cell's corpus rows; right: the queries probing it
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cos": pd.Series([], dtype="float64"),
-                }
-            )
-        mat = np.asarray(left[vec_col].tolist(), dtype=np.float64)
-        vnorm = np.linalg.norm(mat, axis=1, keepdims=True)
-        vnorm[vnorm == 0] = 1.0
-        mat = mat / vnorm
-        ids = left[id_col].to_numpy(dtype=np.int64)
-        qids = right["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.asarray(right["qvec"].tolist(), dtype=np.float64)
-        sims = mat @ qmat.T
-        sims = np.where(ids[:, None] != qids[None, :], sims, -np.inf)
-        return _local_topk_rows(sims, ids, qids, k)
-
-    local_topk = (
-        pruned.select(id_col, vec_col, "centroid")
-        .groupby("centroid")
-        .cogroup(probes.groupby("centroid"))
-        .applyInPandas(
-            score, schema="query_id long, neighbor_id long, cos double"
-        )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (

@@ -22,7 +22,9 @@ streams) commits through this module, so the rules below hold everywhere:
   rolls it forward (the new dir landed: drop the aside) or back (restore
   it). A many-to-one publish (``swap`` with ``covers``) is logged before
   its rename, and ``repair`` finishes one whose destination landed by
-  dropping the covered sources.
+  dropping the covered sources. Single files are published by
+  ``replace_file`` (a small text file) and ``publish_file`` (one parquet
+  file).
 
 Row counts of staged data come from the parquet footers (``staged_rows``),
 never from a Spark read-back. ``step`` is a no-op hook called between swap
@@ -202,8 +204,8 @@ def compact_log(root: str) -> dict:
       ``epoch_watermark`` row plus the epochs past the first gap;
     - rows of any other status are kept verbatim.
 
-    Written to a temp file and ``os.replace``d, so a crash leaves the old
-    or the new log. Idempotent. Returns ``{"rows_before", "rows_after"}``."""
+    Written through ``replace_file``, so a crash leaves the old or the new
+    log. Idempotent. Returns ``{"rows_before", "rows_after"}``."""
     recs = records(root)
     if not recs:
         return {"rows_before": 0, "rows_after": 0}
@@ -234,11 +236,9 @@ def compact_log(root: str) -> dict:
     for (stage, scope), tracker in sorted(epochs.items(), key=str):
         kept += tracker.rows(stage, scope)
 
-    tmp = log_path(root) + ".compact.tmp"
-    with open(tmp, "w") as f:
-        for rec in kept:
-            f.write(json.dumps(rec, sort_keys=True) + "\n")
-    os.replace(tmp, log_path(root))
+    replace_file(
+        log_path(root), "".join(json.dumps(rec, sort_keys=True) + "\n" for rec in kept)
+    )
     return {"rows_before": len(recs), "rows_after": len(kept)}
 
 
@@ -347,6 +347,16 @@ def repair(root: str) -> list[str]:
             os.replace(old, final)
         repaired.append(final)
     return repaired
+
+
+def replace_file(dest: str, text: str) -> None:
+    """Replace the file ``dest`` with ``text``: the text goes to a temp
+    file beside it that is renamed over it, so a reader (or a restart)
+    sees the old content or the new, never a torn file."""
+    tmp = dest + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, dest)
 
 
 def publish_file(df, dest: str) -> str:

@@ -282,11 +282,5 @@ def read_view(
 # ---------------------------------------------------------------------------
 
 
-def refresh_degree_partials(
-    spark: SparkSession, table_dir: str, touched_buckets: list[int]
-) -> list[int]:
-    return refresh_partials(spark, table_dir, touched_buckets, DEGREE_VIEW)
-
-
 def read_kg_degree(spark: SparkSession, table_dir: str) -> DataFrame:
     return read_view(spark, table_dir, DEGREE_VIEW)

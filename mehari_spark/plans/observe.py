@@ -117,20 +117,3 @@ def summarize_exchange(
             out["broadcast_bytes"] += n.metrics.get("data size", 0)
     return out
 
-
-def rows_output(
-    df: DataFrame,
-    node_substr: str,
-    nodes: list[NodeMetrics] | None = None,
-) -> list[tuple[str, int]]:
-    """(node name, number of output rows) for every operator whose name
-    contains ``node_substr`` — e.g. the candidate count coming out of an
-    LSH band join, measured by the engine itself. Pass ``nodes`` from a
-    prior collect_plan_metrics to avoid re-executing."""
-    if nodes is None:
-        nodes = collect_plan_metrics(df)
-    return [
-        (n.name, n.metrics.get("number of output rows", 0))
-        for n in nodes
-        if node_substr in n.name and "number of output rows" in n.metrics
-    ]

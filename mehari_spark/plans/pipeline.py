@@ -1,19 +1,24 @@
 """End-to-end KG-construction pipeline (the `mehari annotate seqvars` analog,
 mod.rs:829-1047 -> SURVEY.md §3.1 Spark translation).
 
-Stages (each one a narrow/wide DataFrame stage; the only wide shuffles are
-the conv_id repartition, the triple-assembly window, and the coref groupBy):
+Stages (the only wide shuffles are the bucketed writes and the coref
+groupBy):
 
  1. scan transcripts (Iceberg/parquet), prune to (conv_id, turn_idx, text)
- 2. repartition by hash(conv_id) with optional hot-key salting, then
-    sortWithinPartitions(conv_id, turn_idx) — the coordinate-sorted
-    contract (compound.rs:54-60 analog; per-turn text-equality invariant)
- 3. mapInArrow dictionary mention scan (broadcast compiled match table)
- 4. windowed triple assembly + best-per-group dedup
+ 2. fused per-turn kernel inside the scan: mapInArrow dictionary match
+    (broadcast compiled match table) + triple assembly + best-per-group
+    dedup, with no mention shuffle
+ 3. optional KB annotator chain (broadcast joins)
+ 4. bucketed, checkpointed write of triples
  5. per-conversation coreference connected components
- 6. bucketed, checkpointed write of triples + entities + metrics
+ 6. bucketed, checkpointed write of entities + metrics
 
 Resumable: write_bucketed skips committed buckets on restart.
+
+``partition_for_scan`` is the input side of the windowed reference plan
+(``detect_mentions`` -> ``resolve_overlaps`` -> ``assemble_triples``): the
+hash(conv_id) repartition with hot-key salting and the (conv_id, turn_idx)
+order within partitions that the window-based assembly relies on.
 """
 
 from __future__ import annotations
@@ -27,12 +32,8 @@ from pyspark.sql import functions as F
 from ..dictionary import DictPattern
 from ..operators.coref import coref_clusters
 from ..operators.enrich import enrich_triples
-from ..operators.mentions import (
-    detect_mentions,
-    match_table_counters,
-    resolve_overlaps,
-)
-from ..operators.triples import assemble_triples, extract_triples_fused
+from ..operators.mentions import match_table_counters
+from ..operators.triples import extract_triples_fused
 from .lineage import write_bucketed, write_metrics
 
 
@@ -85,19 +86,16 @@ def run_pipeline(
     patterns: list[DictPattern],
     out_dir: str,
     run_id: str | None = None,
-    n_partitions: int = 32,
     n_buckets: int = 8,
-    mode: str = "fused",
     entity_kb: DataFrame | None = None,
     predicate_kb: DataFrame | None = None,
 ) -> dict:
     """Full pipeline; returns a metrics dict. Re-running with the same
     out_dir resumes from per-bucket checkpoints.
 
-    ``mode='fused'`` runs the whole per-turn kernel inside the scan (zero
-    mention shuffles — the mehari execution shape); ``mode='windowed'`` is
-    the declarative window-based plan (same results, used by the
-    oracle-checked queries).
+    The whole per-turn kernel runs inside the scan (zero mention shuffles —
+    the mehari execution shape); it is result-identical to the declarative
+    window-based plan the oracle-checked queries use.
 
     When ``entity_kb`` (entity_id, type) and ``predicate_kb`` (pred_id,
     surface, rank) are given, the annotator chain (enrich_triples — the
@@ -108,17 +106,12 @@ def run_pipeline(
     t0 = time.time()
     tables_before = match_table_counters()
 
-    if mode == "fused":
-        # the fused kernel is turn-local: no cross-row ordering needed, so
-        # the raw-text repartition shuffle is skipped entirely — the scan
-        # stays a narrow map and the only wide stages are the bucketed
-        # write and coref's groupBy(conv_id) (which shuffles the narrow
-        # triple rows, ~10x smaller than the text)
-        triples = extract_triples_fused(transcripts, patterns)
-    else:
-        ordered = partition_for_scan(transcripts, n_partitions=n_partitions)
-        mentions = resolve_overlaps(detect_mentions(ordered, patterns))
-        triples = assemble_triples(mentions)
+    # the fused kernel is turn-local: no cross-row ordering needed, so the
+    # raw-text repartition shuffle is skipped entirely — the scan stays a
+    # narrow map and the only wide stages are the bucketed write and
+    # coref's groupBy(conv_id) (which shuffles the narrow triple rows,
+    # ~10x smaller than the text)
+    triples = extract_triples_fused(transcripts, patterns)
     if entity_kb is not None and predicate_kb is not None:
         # in-flight annotators: prebuilt KBs only (pure broadcast joins, the
         # fact stream is scanned ONCE); the frequency KB is derived from the
@@ -171,7 +164,6 @@ def run_pipeline(
         "entities_written": sum(r.rows_out for r in entities),
         "entities_s": round(entities_s, 3),
         "buckets_skipped": sum(1 for r in results if r.skipped),
-        "n_partitions": n_partitions,
         "n_buckets": n_buckets,
     }
     # this call's match-table cache traffic (a build compiles + broadcasts)

@@ -1,7 +1,16 @@
-"""Streaming ingest variant of the KG pipeline.
+"""Streaming twins of the batch pipeline.
 
 The reference is a batch engine (SURVEY.md §2.9) and so is our primary
-pipeline; this module exists for continuous ingest deployments: new
-transcript partitions land in the input table and triples append to the
-output with exactly-once semantics via foreachBatch + checkpointLocation.
+pipeline; these modules serve continuous ingest deployments, each with
+exactly-once semantics via foreachBatch + checkpointLocation:
+
+- kg_stream.py          — transcripts -> fused triple extraction -> MERGE
+                          into the bucketed triple table + incremental views
+- dedup_stream.py       — keep-first exact dedup (content-hash state)
+- neardup_stream.py     — keep-first MinHash-LSH near-dup dedup
+- ingest_pipeline.py    — quality gate -> exact -> near-dup, chained
+                          through storage
+- spandedup_stream.py   — shared-span dedup against an accumulated index
+- sessions.py           — watermarked session windows over events
+- replay.py             — deterministic arrival-order input writer
 """

@@ -1,52 +1,10 @@
-"""Source adapters: vendor-shape sniffing + normalization (S13 analog),
-commented-TSV reader (S10), verify-join classification (J11)."""
+"""Verify-join classification (J11)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from mehari_spark.operators.verify_join import classify_triples, verify_summary
-from mehari_spark.sources.adapters import (
-    normalize_transcripts,
-    read_commented_tsv,
-    sniff_source,
-)
-
-
-class TestAdapters:
-    def test_vendor_shapes_normalize(self, spark):
-        a = spark.createDataFrame(
-            [("s1", 0, "HUMAN", "hi there", "2024-01-01 00:00:00")],
-            "session_id string, message_idx int, speaker string, content string, created_at string",
-        ).withColumn("created_at", F.col("created_at").cast("timestamp"))
-        b = spark.createDataFrame(
-            [("t9", 3, "bot", "hello", "search")],
-            "thread_id string, seq int, author_role string, body string, function_name string",
-        )
-        na, nb = normalize_transcripts(a), normalize_transcripts(b)
-        assert na.columns == nb.columns == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        ra = na.first()
-        assert (ra.conv_id, ra.turn_idx, ra.role, ra.text) == ("s1", 0, "user", "hi there")
-        rb = nb.first()
-        assert (rb.role, rb.tool, rb.ts) == ("assistant", "search", None)
-
-    def test_unrecognized_source_fails_fast(self, spark):
-        df = spark.createDataFrame([(1,)], "foo int")
-        with pytest.raises(ValueError, match="missing"):
-            normalize_transcripts(df)
-
-    def test_sniff_priority(self, spark):
-        df = spark.createDataFrame(
-            [("c", "x", 0, "t")], "conv_id string, session_id string, turn_idx int, text string"
-        )
-        assert sniff_source(df)["conv_id"] == "conv_id"  # first candidate wins
-
-    def test_commented_tsv(self, spark, tmp_path):
-        p = tmp_path / "x.tsv"
-        p.write_text("# generated by vendor\nconv_id\tturn_idx\n# midfile comment\nc1\t0\nc1\t1\n")
-        df = read_commented_tsv(spark, str(p), "conv_id string, turn_idx int")
-        assert sorted(map(tuple, df.collect())) == [("c1", 0), ("c1", 1)]
 
 
 class TestVerifyJoin:

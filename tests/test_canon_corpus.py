@@ -133,9 +133,10 @@ class TestCorpusDisagreements:
                 ("c", 1, 2, 106, 9),  # ctx suppression (obj > subj)
                 ("c", 1, 9, 110, 2),  # phase-2 unconditional suppression
                 ("c", 1, 9, 106, 2),  # survives: identity + rank 66
+                ("c", 1, 9, 555, 2),  # no rule, not in the KB: passes through
             ],
         )
-        assert got == {(1, 106, 66)}
+        assert got == {(1, 106, 66), (1, 555, None)}
 
     def test_zero_fact_shuffles(self, spark):
         """The two-phase plan stays shuffle-free on the fact stream: a CASE

@@ -226,9 +226,7 @@ def test_mark_epoch_rotates_every_rotate_every(tmp_path, monkeypatch):
     assert commit.applied_epochs(root, "kg_stream", "/s") == set(range(10))
 
 
-# directory and file publishes outside the commit module: the two
-# single-file manifest publishes, each one tmp file + os.replace
-ALLOWED_RENAMES = {"operators/coref.py", "operators/similarity.py"}
+# every directory and file publish goes through the commit module
 RENAMES = {("os", "replace"), ("os", "rename"), ("shutil", "move")}
 
 
@@ -240,7 +238,7 @@ def test_no_hand_rolled_swaps():
                 continue
             path = os.path.join(dirpath, name)
             rel = os.path.relpath(path, PKG)
-            if rel == os.path.join("plans", "commit.py") or rel in ALLOWED_RENAMES:
+            if rel == os.path.join("plans", "commit.py"):
                 continue
             with open(path) as f:
                 tree = ast.parse(f.read(), path)

@@ -1,22 +1,10 @@
-"""Expression helpers (binning, keys, overlap) + sinks roundtrips +
-dictionary merge."""
+"""Expression helpers: hierarchical range binning."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mehari_spark.functions.expressions import (
-    hier_bin,
-    overlaps,
-    reciprocal_overlap,
-    surrogate_key,
-)
-from mehari_spark.sources.sinks import (
-    merge_dictionaries,
-    read_triples_tsv,
-    write_triples_jsonl,
-    write_triples_tsv,
-)
+from mehari_spark.functions.expressions import hier_bin
 
 
 class TestExpressions:
@@ -34,66 +22,3 @@ class TestExpressions:
         # containment property: bin of [s,e) equals bin of [s,s+1) when e
         # stays inside the same 128k window
         assert out[0] == out[2]
-
-    def test_surrogate_key_stable(self, spark):
-        df = spark.createDataFrame([("a", 1), ("a", 1), ("b", 2)], "k string, v int")
-        keys = [r.sk for r in df.select(surrogate_key("k", "v").alias("sk")).collect()]
-        assert keys[0] == keys[1] != keys[2]
-
-    def test_overlap_predicates(self, spark):
-        df = spark.createDataFrame(
-            [(0, 10, 5, 15), (0, 10, 10, 20), (0, 10, 2, 8)],
-            "as long, ae long, bs long, be long",
-        )
-        out = df.select(
-            overlaps(F.col("as"), F.col("ae"), F.col("bs"), F.col("be")).alias("ov"),
-            F.round(
-                reciprocal_overlap(
-                    F.col("as"), F.col("ae"), F.col("bs"), F.col("be")
-                ),
-                2,
-            ).alias("ro"),
-        ).collect()
-        assert [r.ov for r in out] == [True, False, True]  # half-open: [0,10)x[10,20) disjoint
-        assert [r.ro for r in out] == [0.5, 0.0, 0.6]
-
-
-class TestSinks:
-    def test_tsv_roundtrip(self, spark, tmp_path):
-        t = spark.createDataFrame(
-            [("c", 0, 1, 101, 2), ("c", 1, 2, 103, 3)],
-            "conv_id string, turn_idx int, subj_id long, pred_id long, obj_id long",
-        )
-        out = str(tmp_path / "tsv")
-        write_triples_tsv(t, out)
-        back = read_triples_tsv(spark, out)
-        assert sorted(map(tuple, back.collect())) == sorted(map(tuple, t.collect()))
-
-    def test_jsonl_sink(self, spark, tmp_path):
-        t = spark.createDataFrame(
-            [("c", 0, 1, 101, 2)],
-            "conv_id string, turn_idx int, subj_id long, pred_id long, obj_id long",
-        )
-        out = str(tmp_path / "jsonl")
-        write_triples_jsonl(t, out, run_id="r42")
-        import json, glob
-
-        lines = []
-        for p in glob.glob(f"{out}/part-*"):
-            lines += open(p).read().strip().splitlines()
-        doc = json.loads(lines[0])
-        assert doc["subj_id"] == 1 and doc["lineage"]["run_id"] == "r42"
-
-    def test_merge_dictionaries(self, spark):
-        a = spark.createDataFrame(
-            [("spark", 1, 0), ("kafka", 5, 2)],
-            "alias string, entity_id long, filter_reason int",
-        )
-        b = spark.createDataFrame(
-            [("spark", 9, 4), ("flink", 6, 0)],
-            "alias string, entity_id long, filter_reason int",
-        )
-        out = {r.alias: (r.entity_id, r.filter_reason) for r in merge_dictionaries(a, b).collect()}
-        assert out["spark"] == (1, 4)  # min id, OR'd reasons (0|4)
-        assert out["kafka"] == (5, 2)
-        assert out["flink"] == (6, 0)

@@ -15,7 +15,12 @@ from mehari_spark.datagen import (
     fixture_patterns,
     turns_df,
 )
-from mehari_spark.operators.canonicalize import canonicalize_predicates, close_rules
+from mehari_spark.dictionary import predicate_kb_df
+from mehari_spark.operators.canonicalize import (
+    CanonRule,
+    canonicalize_full,
+    close_rule_table,
+)
 from mehari_spark.operators.coref import connected_components_global
 from mehari_spark.operators.mentions import detect_mentions, resolve_overlaps
 from mehari_spark.operators.triples import assemble_triples
@@ -84,21 +89,23 @@ class TestOrderingInvariant:
 
 class TestCanonicalizer:
     def test_close_rules_transitive(self):
-        assert close_rules({1: 2, 2: 3, 3: 3}) == {1: 3, 2: 3, 3: 3}
+        rules = [CanonRule(1, 2), CanonRule(2, 3), CanonRule(3, 3)]
+        assert close_rule_table(rules) == {1: (3, None), 2: (3, None), 3: (3, None)}
 
     def test_close_rules_cycle_safe(self):
-        closed = close_rules({1: 2, 2: 1})
-        assert closed[1] in (1, 2)
+        closed = close_rule_table([CanonRule(1, 2), CanonRule(2, 1)])
+        assert closed[1][0] in (1, 2)
 
     def test_suppression_drops_rows(self, spark):
         df = spark.createDataFrame([(1, 101), (2, 999)], "id long, pred_id long")
-        out = canonicalize_predicates(df, {101: 7, 999: None})
+        rules = [CanonRule(101, 7), CanonRule(999, None)]
+        out = canonicalize_full(df, rules, predicate_kb_df(spark))
         rows = {(r.id, r.pred_id) for r in out.collect()}
         assert rows == {(1, 7)}
 
     def test_passthrough_unknown(self, spark):
         df = spark.createDataFrame([(1, 555)], "id long, pred_id long")
-        out = canonicalize_predicates(df, {101: 7})
+        out = canonicalize_full(df, [CanonRule(101, 7)], predicate_kb_df(spark))
         assert [(r.id, r.pred_id) for r in out.collect()] == [(1, 555)]
 
 

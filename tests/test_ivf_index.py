@@ -9,7 +9,6 @@ import os
 from pyspark.sql import functions as F
 
 from mehari_spark.operators.similarity import (
-    append_ivf_index,
     build_ivf_index,
     cosine_topk,
     cosine_topk_arrow,
@@ -71,82 +70,6 @@ class TestIvfIndex:
                 ]
                 assert len(files) == 1
 
-    def test_append_matches_rebuild_from_scratch(self, spark, tmp_path):
-        """Incremental append: build on half the planted corpus, append
-        the other half with the STORED centroids — queries over the
-        appended index return exactly what a from-scratch build over the
-        full corpus returns (and both equal exact brute force)."""
-        corpus = _clustered(spark)
-        # CONTIGUOUS id split: synth_clustered plants cluster =
-        # vec_id % 16, so any residue-based split would put DISJOINT
-        # cluster sets in the halves — a genuine drift regime, tested
-        # separately in test_drift_triggers_rebuild
-        n_half = corpus.count() // 2
-        half_a = corpus.filter(F.col("vec_id") < n_half)
-        half_b = corpus.filter(F.col("vec_id") >= n_half)
-        inc_idx = str(tmp_path / "inc")
-        full_idx = str(tmp_path / "full")
-        build_ivf_index(half_a, inc_idx, n_centroids=16)
-        res = append_ivf_index(spark, inc_idx, half_b)
-        assert res["action"] == "append"
-        assert res["n_appended"] == half_b.count()
-        # same planted distribution -> negligible quantization drift
-        assert abs(res["drift"]) < 0.05, res
-        build_ivf_index(corpus, full_idx, n_centroids=16)
-        q_ids = [0, 1, 2, 3]
-        queries = corpus.filter(F.col("vec_id").isin(q_ids))
-
-        def topk(idx):
-            return sorted(
-                (r.query_id, r.neighbor_id, r.rank)
-                for r in ivf_query_topk(spark, idx, queries, k=5, nprobe=4).collect()
-            )
-
-        exact = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in cosine_topk(corpus, q_ids, k=5).collect()
-        )
-        assert topk(inc_idx) == topk(full_idx) == exact
-
-    def test_drift_triggers_rebuild(self, spark, tmp_path):
-        """Appending vectors from a DIFFERENT cluster structure drops the
-        mean cosine-to-assigned-centroid past the threshold: the index
-        retrains on the union instead of appending, and the rebuilt index
-        still answers new-regime queries exactly."""
-        import numpy as np
-
-        emb = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet")
-        old = synth_clustered(emb, n_clusters=16, seed=5).localCheckpoint(
-            eager=True
-        )
-        shifted = synth_clustered(
-            emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"),
-            n_clusters=16,
-            seed=99,  # different planted directions -> quantizer mismatch
-        ).localCheckpoint(eager=True)
-        idx = str(tmp_path / "idx")
-        build_ivf_index(old, idx, n_centroids=16)
-        before = np.load(os.path.join(idx, "centroids.npy"))
-        res = append_ivf_index(
-            spark, idx, shifted, retrain_drift_threshold=0.05
-        )
-        assert res["action"] == "rebuild"
-        assert res["drift"] > 0.05
-        after = np.load(os.path.join(idx, "centroids.npy"))
-        assert not np.array_equal(before, after)
-        union = old.unionByName(shifted).localCheckpoint(eager=True)
-        q_ids = [1_000_000, 1_000_001]
-        queries = union.filter(F.col("vec_id").isin(q_ids))
-        got = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in ivf_query_topk(spark, idx, queries, k=3, nprobe=6).collect()
-        )
-        want = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in cosine_topk(union, q_ids, k=3).collect()
-        )
-        assert got == want
-
     def test_arrow_brute_equals_hof_brute(self, spark):
         corpus = _clustered(spark)
         q_ids = [5, 6, 7]
@@ -157,52 +80,3 @@ class TestIvfIndex:
         want = sorted(map(tuple, cosine_topk(corpus, q_ids, k=7).collect()))
         assert got == want
 
-
-class TestIvfDistributedProbe:
-    def test_distributed_equals_driver_path(self, spark, tmp_path):
-        """Round-7 ask #6: the no-driver-collect probe path (probe relation
-        on executors + DPP-pruned cogrouped matmul) returns EXACTLY the
-        driver path's (query_id, neighbor_id, rank) rows — for a wide
-        query batch touching most cells AND a single-query batch."""
-        from mehari_spark.operators.similarity import ivf_query_topk_distributed
-
-        corpus = _clustered(spark)
-        idx = str(tmp_path / "idx")
-        build_ivf_index(corpus, idx, n_centroids=16)
-        for q_ids in ([0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11], [5]):
-            queries = corpus.filter(F.col("vec_id").isin(q_ids))
-            want = sorted(
-                (r.query_id, r.neighbor_id, r.rank)
-                for r in ivf_query_topk(
-                    spark, idx, queries, k=5, nprobe=4
-                ).collect()
-            )
-            got = sorted(
-                (r.query_id, r.neighbor_id, r.rank)
-                for r in ivf_query_topk_distributed(
-                    spark, idx, queries, k=5, nprobe=4
-                ).collect()
-            )
-            assert got == want
-
-    def test_distributed_matches_exact_on_planted(self, spark, tmp_path):
-        """And therefore also matches the exact full-scan top-k on the
-        planted clustered corpus (same guarantee the driver path carries)."""
-        from mehari_spark.operators.similarity import ivf_query_topk_distributed
-
-        corpus = _clustered(spark)
-        idx = str(tmp_path / "idx")
-        build_ivf_index(corpus, idx, n_centroids=16)
-        q_ids = [0, 1, 2, 3]
-        queries = corpus.filter(F.col("vec_id").isin(q_ids))
-        got = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in ivf_query_topk_distributed(
-                spark, idx, queries, k=5, nprobe=4
-            ).collect()
-        )
-        want = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in cosine_topk(corpus, q_ids, k=5).collect()
-        )
-        assert got == want

@@ -427,8 +427,9 @@ class TestKgStream:
         catches up every data bucket; a second refresh is a no-op in
         content (idempotent — partials are derived data)."""
         from mehari_spark.plans.incremental import (
+            DEGREE_VIEW,
             read_kg_degree,
-            refresh_degree_partials,
+            refresh_partials,
         )
 
         turns = _turns(spark)
@@ -441,11 +442,11 @@ class TestKgStream:
 
         with _pytest.raises(FileNotFoundError):
             read_kg_degree(spark, table)
-        done = refresh_degree_partials(spark, table, [])
+        done = refresh_partials(spark, table, [], DEGREE_VIEW)
         assert done  # caught up every data bucket
         first = _sorted_pdf(read_kg_degree(spark, table))
         assert first.equals(_sorted_pdf(_degree_scan_twin(spark, table)))
-        refresh_degree_partials(spark, table, done)
+        refresh_partials(spark, table, done, DEGREE_VIEW)
         assert _sorted_pdf(read_kg_degree(spark, table)).equals(first)
 
     def test_commit_log_read_once_per_query(self, spark, tmp_path, monkeypatch):

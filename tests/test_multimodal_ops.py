@@ -1,16 +1,11 @@
-"""Multimodal plumbing beyond decode: frame sampling (long-format explode)
-and resize planning (pure Catalyst)."""
+"""Multimodal plumbing beyond decode: frame sampling (long-format explode)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from mehari_spark.operators.multimodal import (
-    frame_sample,
-    resize_meta,
-    synth_media,
-)
+from mehari_spark.operators.multimodal import frame_sample, synth_media
 
 
 def _media(spark):
@@ -47,20 +42,3 @@ class TestFrameSample:
         with pytest.raises(Exception, match="codecs not available"):
             frame_sample(_media(spark), fake=False).collect()
 
-
-class TestResizeMeta:
-    def test_aspect_preserving_clamp(self, spark):
-        media = _media(spark)
-        out = resize_meta(media, max_side=100).collect()
-        for r in out:
-            w, h = r.meta.width, r.meta.height
-            rw, rh = r.resized.width, r.resized.height
-            assert max(rw, rh) <= 100 or max(w, h) <= 100
-            if max(w, h) <= 100:
-                assert (rw, rh) == (w, h)  # never upscale
-            # aspect ratio preserved within ceil rounding
-            assert abs(rw * h - rh * w) <= max(w, h)
-
-    def test_stays_in_codegen(self, spark):
-        plan = resize_meta(_media(spark))._jdf.queryExecution().executedPlan().toString()
-        assert "mapInPandas" not in plan.lower()

@@ -9,11 +9,7 @@ from pyspark.sql import functions as F
 from mehari_spark.dictionary import demo_patterns
 from mehari_spark.operators.mentions import detect_mentions
 from mehari_spark.operators.triples import assemble_triples, extract_triples_fused
-from mehari_spark.plans.observe import (
-    collect_plan_metrics,
-    rows_output,
-    summarize_exchange,
-)
+from mehari_spark.plans.observe import collect_plan_metrics, summarize_exchange
 from mehari_spark.sources.transcripts import transcripts
 
 from .conftest import SF_UNIT
@@ -36,10 +32,13 @@ class TestPlanObservability:
         assert s["shuffle_bytes_written"] > 0
         assert s["shuffle_records_written"] > 0
         # and an operator's measured row count agrees with the action
-        rows = rows_output(df, "Filter", nodes=nodes) + rows_output(
-            df, "Window", nodes=nodes
-        )
-        assert any(v >= n for _, v in rows)
+        rows = [
+            nd.metrics["number of output rows"]
+            for nd in nodes
+            if ("Filter" in nd.name or "Window" in nd.name)
+            and "number of output rows" in nd.metrics
+        ]
+        assert any(v >= n for v in rows)
 
     def test_broadcast_join_measured_not_shuffled_on_fact(self, spark):
         # q5-style star join: dims broadcast; the measured broadcast count
@@ -60,9 +59,13 @@ class TestPlanObservability:
             spark.read.parquet(f"{SF_UNIT}/embeddings.parquet")
         ).count()
         df = QUERIES["emb_near_dup_lsh"][0](spark, SF_UNIT)
-        joins = rows_output(df, "Join")
+        joins = [
+            nd.metrics["number of output rows"]
+            for nd in collect_plan_metrics(df)
+            if "Join" in nd.name and "number of output rows" in nd.metrics
+        ]
         assert joins, "no join nodes found in executed plan"
-        band_join_out = max(v for _, v in joins)
+        band_join_out = max(joins)
         all_pairs = corpus_n * (corpus_n - 1) // 2
         # band-join emissions (pre-distinct, with band multiplicity) stay
         # under 5% of all pairs; measured ~1.3% distinct
@@ -82,7 +85,14 @@ class TestPlanObservability:
         assert any("Exchange" in x for x in names)
         s = summarize_exchange(df, nodes=nodes)
         assert s["n_exchanges"] >= 1
-        assert sum(v for _, v in rows_output(df, "HashAggregate", nodes=nodes)) >= 7
+        assert (
+            sum(
+                nd.metrics["number of output rows"]
+                for nd in nodes
+                if "HashAggregate" in nd.name and "number of output rows" in nd.metrics
+            )
+            >= 7
+        )
 
 
 class TestColdMetricsCapture:

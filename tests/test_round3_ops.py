@@ -387,19 +387,6 @@ class TestCanonRuleCorpus:
         # 106 keeps id with rank 66, 110 suppressed
         assert out == {(101, 1), (151, 42), (108, 8), (106, 66)}
 
-    def test_legacy_dict_api_unchanged(self, spark):
-        from mehari_spark.operators.canonicalize import canonicalize_predicates
-
-        t = spark.createDataFrame(
-            [("c", 0, 1, p, 2) for p in (101, 103, 110)],
-            "conv_id string, turn_idx int, subj_id long, pred_id long, obj_id long",
-        )
-        got = sorted(
-            r.pred_id
-            for r in canonicalize_predicates(t, {103: 101, 110: None}).collect()
-        )
-        assert got == [101, 101]
-
 
 # --------------------------------------------------------------------------
 # durable CC checkpointing + resume
