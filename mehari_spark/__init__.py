@@ -24,3 +24,7 @@ Python appears only inside Arrow-vectorized pandas UDFs.
 """
 
 __version__ = "0.1.0"
+
+# imported for its effect: Python workers stop re-reading unchanged zip
+# directories before every task once they have unpickled an engine kernel
+from . import pyworker  # noqa: E402,F401

@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from .session import local_frame
+
 
 @dataclass(frozen=True)
 class DictPattern:
@@ -137,14 +139,15 @@ def predicate_kb_sql() -> str:
 
 def entity_kb_df(spark: SparkSession):
     """(entity_id, type) KB side table as a broadcastable DataFrame."""
-    return spark.createDataFrame(
-        [(i, t) for _a, i, t in DEMO_ENTITIES], "entity_id long, type string"
+    return local_frame(
+        spark, [(i, t) for _a, i, t in DEMO_ENTITIES], "entity_id long, type string"
     )
 
 
 def predicate_kb_df(spark: SparkSession):
     """Canonical-predicate KB: (pred_id, surface, rank)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, s, r) for s, p, r, c in DEMO_PREDICATES if p == c],
         "pred_id long, surface string, rank int",
     )
@@ -152,7 +155,8 @@ def predicate_kb_df(spark: SparkSession):
 
 def entity_df(spark: SparkSession):
     """Entity dictionary as a (broadcastable) DataFrame."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(a, i, t) for a, i, t in DEMO_ENTITIES],
         "alias string, entity_id long, type string",
     )

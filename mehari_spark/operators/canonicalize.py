@@ -18,6 +18,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class CanonRule:
@@ -213,7 +215,8 @@ def canonicalize_full(
     the annotator-chain shape."""
     spark = triples.sparkSession
     closed = close_rule_table(rules)
-    rule_df = spark.createDataFrame(
+    rule_df = local_frame(
+        spark,
         [
             (int(k), None if t is None else int(t), r)
             for k, (t, r) in closed.items()

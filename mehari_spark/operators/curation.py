@@ -37,6 +37,8 @@ import math
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def train_split(
     docs: DataFrame, train_hex: str = "e6", val_hex: str = "f3"
@@ -336,8 +338,8 @@ def mixture_sample(
         raise NotImplementedError(
             "default_weight > 0: enumerate sources explicitly in weights"
         )
-    plan = spark.createDataFrame(
-        plan_rows, f"{source_col} string, n_ep int, full_ep int, thr string"
+    plan = local_frame(
+        spark, plan_rows, f"{source_col} string, n_ep int, full_ep int, thr string"
     )
     exploded = (
         docs.select("doc_id", source_col)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.fingerprint import fingerprint
+from ..session import local_frame
 
 STOPWORDS = ("the", "a")
 
@@ -71,7 +72,8 @@ def lang_id(docs: DataFrame) -> DataFrame:
     (max_by) — no UDF. Deterministic tie-break by language code.
     """
     spark = docs.sparkSession
-    markers = spark.createDataFrame(
+    markers = local_frame(
+        spark,
         [(lang, m) for lang, ms in LANG_MARKERS.items() for m in ms],
         "cand_lang string, marker string",
     )

@@ -16,16 +16,22 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from . import commit
 # perfbench/tracing.py reads the log through this name
 from .commit import log_path as _ckpt_path  # noqa: F401
+
+
+_BUCKET_DIR = re.compile(r"bucket=\d+")
 
 
 @dataclass
@@ -125,8 +131,21 @@ def write_bucketed(
     return results
 
 
-def read_bucketed(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "bucket=*"))
+def read_bucketed(
+    spark: SparkSession, out_dir: str, schema: StructType | None = None
+) -> DataFrame:
+    """The ``bucket=<b>`` dirs of ``out_dir``, read by their explicit paths
+    in ``bucket=*`` glob order. With the known ``schema`` the read runs no
+    inference job, and no bucket dir at all gives an empty frame."""
+    names = os.listdir(out_dir) if os.path.isdir(out_dir) else []
+    paths = [
+        os.path.join(out_dir, n) for n in sorted(names) if _BUCKET_DIR.fullmatch(n)
+    ]
+    if schema is None:
+        return spark.read.parquet(*paths)
+    if not paths:
+        return local_frame(spark, [], schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def write_metrics(out_dir: str, run_id: str, stage: str, metrics: dict) -> None:

@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import commit
 from .lineage import load_committed
 
@@ -124,7 +125,7 @@ def merge_into_bucketed(
     if existing_dirs:
         target = spark.read.parquet(*existing_dirs).select(*data_cols)
     else:
-        target = spark.createDataFrame([], updates.schema)
+        target = local_frame(spark, [], updates.schema)
 
     if prec_window is not None:
         # highest-precedence-wins: union both sides, keep the winner per

@@ -34,7 +34,7 @@ from ..operators.coref import coref_clusters
 from ..operators.enrich import enrich_triples
 from ..operators.mentions import match_table_counters
 from ..operators.triples import extract_triples_fused
-from .lineage import write_bucketed, write_metrics
+from .lineage import read_bucketed, write_bucketed, write_metrics
 
 
 def partition_for_scan(
@@ -134,7 +134,9 @@ def run_pipeline(
         stage="triples",
     )
 
-    written = spark.read.parquet(f"{out_dir}/triples/bucket=*")
+    # explicit bucket paths with the written schema: no glob probe, no
+    # inference job, and a call that yields no triple reads an empty frame
+    written = read_bucketed(spark, f"{out_dir}/triples", triples.schema)
     if entity_kb is not None and predicate_kb is not None:
         # second-phase annotator artifact: subject-frequency KB from a
         # column-pruned scan of the materialized triples (parquet reads the

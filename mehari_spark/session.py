@@ -1,15 +1,27 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and constant tables.
 
 Local sandbox runs on local[N]; the same config block is what we would pass
 to spark-submit on a real cluster (AQE + skew-join on, shuffle partitions
 sized explicitly per stage, Arrow enabled for the pandas-UDF kernels).
+
+The fixed cost of the Python boundary is kept off every call:
+
+- constant tables (KBs, rule and marker tables, empty frames) are built by
+  ``local_frame`` from Arrow, so Spark plans them as a ``LocalRelation``:
+  collecting or broadcasting one runs no Python job, where a
+  ``createDataFrame(list)`` is a Python-RDD scan that runs one every time;
+- importing the engine (``mehari_spark/pyworker.py``) stops each Python
+  worker from re-reading every unchanged zip directory before each task.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -58,3 +70,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], ddl: str | StructType
+) -> DataFrame:
+    """A constant table as a ``LocalRelation`` with exactly ``ddl``'s schema
+    (names, types, nullability); ``ddl`` is a DDL string or a StructType."""
+    schema = ddl if isinstance(ddl, StructType) else DataType.fromDDL(ddl)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

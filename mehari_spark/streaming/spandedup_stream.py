@@ -93,6 +93,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.spandedup import _verify_extend_rows, winnowed_postings
 from ..plans import commit
+from ..session import local_frame
 
 DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 _POSTING_SCHEMA = "doc_id long, pos int, fp long, fp_bucket int"
@@ -203,7 +204,7 @@ def _read_dirs(
             df = df.where(F.col(part_col).isin([int(b) for b in buckets]))
         parts.append(df.select(*cols))
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -217,7 +218,7 @@ def _pruned_index(
     dirs pruned by path, recent deltas filtered on the data column
     (test-gated via the scan's files-read metric)."""
     if not buckets:
-        return spark.createDataFrame([], _POSTING_SCHEMA)
+        return local_frame(spark, [], _POSTING_SCHEMA)
     return _read_dirs(
         spark,
         store_dir,
@@ -234,7 +235,7 @@ def _pruned_texts(
     """The corpus store restricted to the candidate docs' ``doc_bucket``
     groups (same path-pruned base + filtered-delta read as the index)."""
     if not doc_buckets:
-        return spark.createDataFrame([], _TEXT_SCHEMA)
+        return local_frame(spark, [], _TEXT_SCHEMA)
     return _read_dirs(
         spark,
         store_dir,

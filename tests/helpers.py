@@ -1,8 +1,28 @@
-"""Test helpers: order-insensitive DataFrame comparison (the driver's check)."""
+"""Test helpers: order-insensitive DataFrame comparison (the driver's check)
+and a counter of the Spark jobs a block launches."""
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pandas as pd
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Yields a list that holds, once the block is done, the ids of the
+    Spark jobs it launched (a job group of its own, then cleared)."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def normalize_pdf(pdf: pd.DataFrame) -> pd.DataFrame:

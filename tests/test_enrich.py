@@ -6,10 +6,14 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from mehari_spark.dictionary import entity_kb_df, predicate_kb_df
+from mehari_spark.dictionary import entity_df, entity_kb_df, predicate_kb_df
 from mehari_spark.operators.enrich import enrich_triples
+
+from .helpers import spark_jobs
 
 
 def _triples(spark):
@@ -98,3 +102,29 @@ class TestPipelineEnrichment:
         freq = spark.read.parquet(os.path.join(out_dir, "freq_kb"))
         assert set(freq.columns) == {"subj_id", "subj_freq"}
         assert freq.agg(F.sum("subj_freq")).first()[0] == written.count()
+
+
+KB_BUILDERS = [
+    (entity_kb_df, "entity_id long, type string"),
+    (predicate_kb_df, "pred_id long, surface string, rank int"),
+    (entity_df, "alias string, entity_id long, type string"),
+]
+
+
+class TestLocalKB:
+    """The constant KB tables are LocalRelations: reading or broadcasting
+    one runs no Python job."""
+
+    @pytest.mark.parametrize("build,ddl", KB_BUILDERS)
+    def test_plans_to_local_relation_with_ddl_schema(self, spark, build, ddl):
+        df = build(spark)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert df.schema == DataType.fromDDL(ddl)
+
+    @pytest.mark.parametrize("build,ddl", KB_BUILDERS)
+    def test_collect_launches_no_job(self, spark, build, ddl):
+        df = build(spark)
+        with spark_jobs(spark) as jobs:
+            rows = df.collect()
+        assert rows and jobs == []

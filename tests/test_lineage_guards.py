@@ -1,10 +1,15 @@
-"""Checkpointed-write edge cases: empty staged input, bucketing mismatch."""
+"""Checkpointed-write edge cases: empty staged input, bucketing mismatch,
+and the read-back of committed buckets."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from mehari_spark.plans.lineage import load_committed, read_bucketed, write_bucketed
+
+from .helpers import spark_jobs
 
 
 def _df(spark, rows):
@@ -60,3 +65,43 @@ class TestWriteBucketedGuards:
         )
         assert all(r.skipped for r in results)
         assert read_bucketed(spark, out).count() == 3
+
+
+class TestReadBucketed:
+    def test_known_schema_reads_without_a_job(self, spark, tmp_path):
+        out = str(tmp_path / "known")
+        df = _df(spark, [("a", 1), ("b", 2), ("c", 3), ("d", 4)])
+        write_bucketed(df, out, "r1", key_col="conv_id", n_buckets=4)
+        os.makedirs(os.path.join(out, "bucket=9.old"))  # not a bucket dir
+        with spark_jobs(spark) as jobs:
+            got = read_bucketed(spark, out, df.schema)
+        assert jobs == []
+        # same columns and types as the read that infers them
+        assert got.schema == read_bucketed(spark, out).schema
+        assert sorted(got.collect()) == sorted(df.collect())
+
+    def test_no_bucket_dir_gives_empty_frame(self, spark, tmp_path):
+        out = str(tmp_path / "none")
+        schema = _df(spark, []).schema
+        write_bucketed(_df(spark, []), out, "r1", key_col="conv_id", n_buckets=2)
+        got = read_bucketed(spark, out, schema)
+        assert got.columns == ["conv_id", "v"] and got.count() == 0
+
+
+class TestPipelineReadBack:
+    def test_no_hit_input_writes_empty_tables(self, spark, tmp_path):
+        from mehari_spark.datagen import synth_transcripts, turns_df
+        from mehari_spark.dictionary import DictPattern, entity_kb_df, predicate_kb_df
+        from mehari_spark.plans.pipeline import run_pipeline
+
+        out = str(tmp_path / "nohit")
+        turns = turns_df(spark, synth_transcripts(seed=7, n_convs=6, turns_per_conv=5))
+        metrics = run_pipeline(
+            spark, turns, [DictPattern(("zz-never-a-token",), "E", 1, 1, 0)], out,
+            n_buckets=2,
+            entity_kb=entity_kb_df(spark), predicate_kb=predicate_kb_df(spark),
+        )
+        assert metrics["triples_written"] == 0
+        assert metrics["entities_written"] == 0
+        assert spark.read.parquet(os.path.join(out, "freq_kb")).count() == 0
+        assert load_committed(os.path.join(out, "entities")) == {0}
