@@ -1,5 +1,5 @@
-"""Test helpers: order-insensitive DataFrame comparison (the driver's check)
-and a counter of the Spark jobs a block launches."""
+"""Test helpers: order-insensitive DataFrame comparison against the pandas
+oracle, and a counter of the Spark jobs a block launches."""
 
 from __future__ import annotations
 
