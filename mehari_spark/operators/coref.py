@@ -18,8 +18,9 @@ Two implementations, both ending in the numpy kernel
   large-star/small-star iteration built from joins + aggregations, for
   graphs whose edges DO cross the partition key (used by the dedup
   clustering path). Converges in O(log n) rounds; each round is one shuffle
-  on node id, AQE-coalesced. Small graphs skip the rounds and run the
-  kernel once, in one task.
+  on node id, AQE-coalesced. A graph within the graph tier's
+  ``SMALL_GRAPH_EDGES`` skips the rounds and runs the kernel once through
+  the tier's single-task runner (``graph._one_task``).
 """
 
 from __future__ import annotations
@@ -110,7 +111,6 @@ def connected_components_global(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 2,
     check_every: int = 1,
-    small_graph_threshold: int = 4_000_000,
 ):
     """Generic CC over (src, dst) long ids -> (node, component).
     With ``with_rounds=True`` returns (labels, n_rounds) so callers/tests can
@@ -122,13 +122,13 @@ def connected_components_global(
     (SoCC'14) large-star/small-star bound — each round two shuffles on node
     id, expressed as joins/aggs so Catalyst/AQE handle skew.
 
-    Graphs at or below ``small_graph_threshold`` directed edges (and not
+    Graphs of at most ``graph.SMALL_GRAPH_EDGES`` directed edges (and not
     running durably) short-circuit to one call of the numpy components
     kernel in a single task — identical labels, none of the per-round
-    latency; pass 0 to force the distributed path (tests asserting the
-    round bound do). On this path the returned rounds value is the
-    SENTINEL 1 (one kernel call), not a distributed round count — don't
-    compare it against the O(log n) bound.
+    latency; tests asserting the round bound set that constant to 0. On
+    this path the returned rounds value is the SENTINEL 1 (one kernel
+    call), not a distributed round count — don't compare it against the
+    O(log n) bound.
 
     Durability (mehari's spill-to-disk discipline, strucvars/mod.rs:3075-3144):
     by default iteration state is localCheckpoint'ed — executor-local blocks,
@@ -150,41 +150,24 @@ def connected_components_global(
     ed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=True
     )
-    # SMALL-GRAPH FAST PATH: below the threshold the edge list fits one
-    # task, and one in-memory pass (the numpy components kernel) beats
-    # O(log n) synchronous distributed rounds whose per-round driver/stage
-    # latency dominates at this size — measured 13-28 s of rounds vs a few
-    # seconds of a Python union-find at 3M edges (that crossover set the
-    # 4M default: 4M edges is ~64 MB through one task, broadcast-threshold
-    # territory, while the rounds' fixed cost still dominates). Labels are
-    # identical by construction (min node id per component, the same
-    # contract as the iterative path). Durable runs (checkpoint_dir) always
-    # take the distributed path: their value IS the resumable iteration.
-    if checkpoint_dir is None and small_graph_threshold > 0:
-        n_directed = ed.count()
-        if n_directed <= small_graph_threshold:
+    # SMALL-GRAPH FAST PATH: one in-memory pass of the numpy components
+    # kernel beats O(log n) synchronous distributed rounds whose per-round
+    # driver/stage latency dominates at this size. Labels are identical by
+    # construction (min node id per component, the same contract as the
+    # iterative path). Durable runs (checkpoint_dir) always take the
+    # distributed path: their value IS the resumable iteration.
+    from .graph import _fits_one_task, _one_task
 
-            def cc_all(batches):
-                us, vs = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
-                for rb in batches:
-                    us.append(rb.column("u").to_numpy())
-                    vs.append(rb.column("v").to_numpy())
-                u, v = np.concatenate(us), np.concatenate(vs)
-                _, node, component = components(np.zeros(len(u), np.int64), u, v)
-                yield pa.RecordBatch.from_arrays(
-                    [node, component], schema=COMPONENT_SCHEMA
-                )
-
-            # materialize once (same contract as the distributed path's
-            # eager checkpoints): without this every downstream action
-            # would re-collect the edges into one task and re-run
-            # the kernel per action
-            out = (
-                ed.coalesce(1)
-                .mapInArrow(cc_all, schema="node long, component long")
-                .localCheckpoint(eager=True)
-            )
-            return (out, 1) if with_rounds else out
+    if checkpoint_dir is None and _fits_one_task(ed):
+        # materialized once (same contract as the distributed path's eager
+        # checkpoints): otherwise every downstream action would re-collect
+        # the edges into one task and re-run the kernel
+        out = _one_task(
+            ed.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+            lambda u, v: components(np.zeros(len(u), np.int64), u, v)[1:],
+            COMPONENT_SCHEMA,
+        ).localCheckpoint(eager=True)
+        return (out, 1) if with_rounds else out
     sym = (
         ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()

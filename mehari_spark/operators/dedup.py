@@ -169,10 +169,9 @@ def minhash_lsh_pairs(
     # localCheckpoint blocks leaked for the session's lifetime).
     from ..plans.stagecache import materialize_once
 
-    src_key = src_df.semanticHash()
     bands_df = materialize_once(
         spark,
-        ("minhash_bands", src_key, num_perm, bands, seed),
+        ("minhash_bands", src_df, num_perm, bands, seed),
         lambda: src_df.mapInPandas(
             lambda it: _minhash_rows(it, num_perm, bands, seed),
             schema="doc_id long, band_idx int, band_key long",
@@ -199,7 +198,7 @@ def minhash_lsh_pairs(
     # all-pairs exact path (ngram_jaccard_pairs).
     toks = materialize_once(
         spark,
-        ("minhash_toks", src_key),
+        ("minhash_toks", src_df),
         lambda: _doc_tokens(docs).select("doc_id", "toks"),
     )  # consumed by both re-rank join sides
     inter = (
@@ -262,7 +261,7 @@ def simhash_candidate_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
     fp = materialize_once(
         docs.sparkSession,
-        ("simhash_fp", docs.semanticHash()),
+        ("simhash_fp", docs),
         lambda: simhash_fingerprints(docs),
     )
     chunks = fp.select(

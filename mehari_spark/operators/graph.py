@@ -9,6 +9,22 @@ downstream analytics is the Spark-native extension of that output table —
 same discipline as the rest of the repo: pure Catalyst plans, integer-only
 outputs, and a DuckDB oracle per operator.
 
+Shared skeleton of the iterative operators:
+- Two edge stages, each materialized once per triples frame through the
+  bounded stage cache: ``_directed`` (distinct non-self-loop (src, dst,
+  outdeg), partitioned on src) feeds PageRank, personalized PageRank and
+  hub BFS; ``_symmetric`` (both directions of every undirected edge,
+  partitioned on src) feeds k-core, label propagation and the triangle
+  count. ``_hub`` is the one hub rule (max out-degree, smallest id).
+- ``_fits_one_task`` probes at most ``SMALL_GRAPH_EDGES + 1`` edges; a
+  graph that fits runs its kernel once through ``_one_task`` (one
+  ``mapInArrow`` task over the int64 src/dst columns) instead of the
+  distributed rounds. The kernels mirror the rounds exactly, so the size
+  gate changes the plan, never the answer. Global connected components
+  (``coref.connected_components_global``) uses the same gate and runner.
+- ``_checkpoint`` is the round loops' lineage cut: eager localCheckpoint,
+  previous round's blocks released.
+
 Scale notes (100 TB triple table):
 - ``entity_degree`` is ONE shuffle on entity_id over a union-all incidence
   list (map-side combine applies; no join).
@@ -19,19 +35,148 @@ Scale notes (100 TB triple table):
 - ``pagerank_int`` is the standard iterative join/agg loop; ranks and the
   (src, dst, outdeg) edge relation shuffle-partition on the SAME key
   (src = entity_id) so every iteration's join co-locates, and
-  ``checkpoint_every`` truncates lineage for deep iteration counts
-  (eager localCheckpoint, previous blocks released — no block-manager
-  leak). All arithmetic is 64-bit integer (micro-units, floor division),
-  so Spark and DuckDB agree bit-for-bit: no float-summation-order hazard
-  in the value hash.
+  ``checkpoint_every`` truncates lineage for deep iteration counts. All
+  arithmetic is 64-bit integer (micro-units, floor division), so Spark and
+  DuckDB agree bit-for-bit: no float-summation-order hazard in the value
+  hash.
 - ``triples_asof`` is one window over (subj_id, pred_id) — the latest
   assertion wins, with a total deterministic tiebreak.
 """
 
 from __future__ import annotations
 
+import contextlib
+from typing import Callable, Iterable
+
+import numpy as np
+import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from ..plans.stagecache import materialize_once
+
+# Graphs with at most this many edges run an iterative operator's kernel
+# in ONE task instead of its distributed rounds, whose per-round driver
+# and stage latency dominates below it: measured 13-28 s of CC rounds vs a
+# few seconds in one task at 3M edges, and 4M int64 edge pairs are ~64 MB
+# through one task. Read at call time, so setting it to 0 forces the
+# rounds.
+SMALL_GRAPH_EDGES = 4_000_000
+
+
+# --------------------------------------------------------------------------
+# shared edge stages and the iterative-operator skeleton
+# --------------------------------------------------------------------------
+
+
+def _directed(triples: DataFrame) -> DataFrame:
+    """(src, dst, outdeg): the distinct non-self-loop directed edges with
+    their source's out-degree, partitioned on src — the stationary edge
+    side of every PageRank round and BFS hop (the GraphX/Pregel
+    edge-caching discipline: only the small rank/frontier side shuffles)."""
+
+    def build() -> DataFrame:
+        edges = (
+            triples.select(
+                F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
+            )
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+        return edges.join(outdeg, "src").repartition("src")
+
+    return materialize_once(triples.sparkSession, ("directed_edges", triples), build)
+
+
+def _symmetric(triples: DataFrame) -> DataFrame:
+    """(src, dst): both directions of every distinct undirected
+    non-self-loop edge, partitioned on src."""
+    return materialize_once(
+        triples.sparkSession,
+        ("symmetric_edges", triples),
+        lambda: (
+            triples.select(
+                F.least("subj_id", "obj_id").alias("a"),
+                F.greatest("subj_id", "obj_id").alias("b"),
+            )
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+                    )
+                ).alias("e")
+            )
+            .select("e.src", "e.dst")
+            .repartition("src")
+        ),
+    )
+
+
+def _hub(directed: DataFrame) -> DataFrame:
+    """1-row (entity_id): the hub entity — max out-degree over the distinct
+    edge set, smallest id on ties (deterministic on both engines)."""
+    return (
+        directed.groupBy("src")
+        .agg(F.first("outdeg").alias("outdeg"))
+        .orderBy(F.desc("outdeg"), F.asc("src"))
+        .limit(1)
+        .select(F.col("src").alias("entity_id"))
+    )
+
+
+def _fits_one_task(edges: DataFrame) -> bool:
+    """True when ``edges`` has at most ``SMALL_GRAPH_EDGES`` rows; the probe
+    reads no more than one row past the bound."""
+    return edges.limit(SMALL_GRAPH_EDGES + 1).count() <= SMALL_GRAPH_EDGES
+
+
+def _one_task(
+    edges: DataFrame, fn: Callable[[np.ndarray, np.ndarray], tuple], schema: pa.Schema
+) -> DataFrame:
+    """Run ``fn(src, dst)`` once over the whole edge list in a single task.
+
+    ``fn`` gets the int64 ``src``/``dst`` columns of ``edges`` as two numpy
+    arrays and returns one column per ``schema`` field (every field is
+    int64); the result is emitted as one Arrow batch."""
+
+    def run(batches):
+        src, dst = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for rb in batches:
+            src.append(rb.column("src").to_numpy())
+            dst.append(rb.column("dst").to_numpy())
+        cols = fn(np.concatenate(src), np.concatenate(dst))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, pa.int64()) for c in cols], schema=schema
+        )
+
+    ddl = ", ".join(f"{f.name} long" for f in schema)
+    return edges.select("src", "dst").coalesce(1).mapInArrow(run, schema=ddl)
+
+
+def _checkpoint(df: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """Eager localCheckpoint of ``df`` — cuts a round loop's lineage so plan
+    size stays O(1) in the round count — releasing the blocks of the
+    previous round's checkpoint ``prev``, which nothing references any
+    more.
+
+    The blocks belong to the checkpointed RDD under ``prev``'s LogicalRDD
+    plan; ``prev.rdd`` would be a fresh Python-side RDD over them whose
+    ``unpersist`` releases nothing."""
+    ckpt = df.localCheckpoint(eager=True)
+    if prev is not None:
+        with contextlib.suppress(Py4JError):  # session already stopped
+            prev._jdf.queryExecution().logical().rdd().unpersist(False)
+    return ckpt
+
+
+def _dict_columns(values: dict[int, int]) -> tuple[list[int], list[int]]:
+    """{node: value} -> (nodes, values) columns for ``_one_task``."""
+    return list(values), list(values.values())
 
 
 # --------------------------------------------------------------------------
@@ -109,11 +254,9 @@ def two_hop_paths(triples: DataFrame) -> DataFrame:
     materialized once through the bounded stage cache (the 100 TB analog:
     the KG's edge table is a materialized parquet table, not recomputed
     per consumer) instead of running the upstream extractor twice."""
-    from ..plans.stagecache import materialize_once
-
     edges = materialize_once(
         triples.sparkSession,
-        ("twohop_edges", triples.semanticHash()),
+        ("twohop_edges", triples),
         lambda: triples.select("subj_id", "pred_id", "obj_id").distinct(),
     )
     a = edges.alias("a")
@@ -146,18 +289,15 @@ GROUP BY a.pred_id, b.pred_id
 # --------------------------------------------------------------------------
 
 RANK_UNIT = 1_000_000  # micro-units: rank 1.0 == 1_000_000
+RANK_SCHEMA = pa.schema([("entity_id", pa.int64()), ("rank_micro", pa.int64())])
 
 
-def _pagerank_local(
-    src, dst, iters: int, damping_pct: int
-):
+def _pagerank_local(src, dst, iters: int, damping_pct: int):
     """Single-task mirror of the distributed integer recurrence.
 
     Pure int64 arithmetic (floor div, exact sums) — the SAME spec as the
     join/agg loop, so labels are bit-identical by construction (integer
     math has no summation-order hazard, unlike float PageRank)."""
-    import numpy as np
-
     base = (100 - damping_pct) * 10_000
     src = np.asarray(src, dtype=np.int64)
     dst = np.asarray(dst, dtype=np.int64)
@@ -191,9 +331,8 @@ def _rank_rounds(
     ``esrc`` is the (src, dst, outdeg) relation, ``nodes`` the node set
     (aliased ``n`` inside the round, so ``restart`` may read its columns)
     and ``restart`` the per-node teleport term. ``checkpoint_every``
-    truncates lineage via EAGER localCheckpoint and releases the previous
-    checkpoint's blocks."""
-    prev_ckpt: DataFrame | None = None
+    sets how many rounds run between two ``_checkpoint`` lineage cuts."""
+    prev: DataFrame | None = None
     for i in range(iters):
         # ranks' lineage contains esrc/nodes after the first iteration:
         # explicit aliases keep every join reference unambiguous
@@ -227,14 +366,7 @@ def _rank_rounds(
             )
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ckpt = ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                try:  # previous blocks no longer referenced: release
-                    prev_ckpt.rdd.unpersist()
-                except Exception:
-                    pass
-            prev_ckpt = ckpt
-            ranks = ckpt
+            ranks = prev = _checkpoint(ranks, prev)
     return ranks
 
 
@@ -243,7 +375,6 @@ def pagerank_int(
     iters: int = 5,
     damping_pct: int = 85,
     checkpoint_every: int | None = None,
-    small_graph_threshold: int = 4_000_000,
 ) -> DataFrame:
     """(entity_id, rank_micro): PageRank in 64-bit integer micro-units.
 
@@ -258,79 +389,31 @@ def pagerank_int(
 
     The join key every iteration is the source entity, so pre-partitioning
     ranks and the (src, dst, outdeg) relation on the same key co-locates
-    the loop. ``checkpoint_every`` truncates lineage via EAGER
-    localCheckpoint and releases the previous checkpoint's blocks — deep
-    iteration counts stay O(1) in plan size and block storage."""
-    from ..plans.stagecache import materialize_once
-
-    base = (100 - damping_pct) * 10_000
-    spark = triples.sparkSession
-    sig = triples.semanticHash()
-    edges = (
-        triples.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    # SMALL-GRAPH FAST PATH (the connected_components_global/kcore
-    # discipline): below the threshold the edge list fits one task and the
-    # whole ``iters``-round recurrence runs locally — identical output
-    # (same int64 spec; forced-distributed equality test-gated), none of
-    # the ~3 stages/round of driver+shuffle latency that dominates small
-    # graphs. Pass 0 to force the distributed rounds; the checkpointed
-    # mode always takes them — its value IS the resumable iteration.
-    if checkpoint_every is None and small_graph_threshold > 0:
-        edges_m = materialize_once(spark, ("pagerank_edges", sig), lambda: edges)
-        if edges_m.count() <= small_graph_threshold:
-            import numpy as np
-            import pandas as pd  # noqa: PLC0415
-
-            def pr_all(it):
-                srcs: list = []
-                dsts: list = []
-                for pdf in it:
-                    srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-                    dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-                src = (
-                    np.concatenate(srcs) if srcs else np.empty(0, dtype=np.int64)
-                )
-                dst = (
-                    np.concatenate(dsts) if dsts else np.empty(0, dtype=np.int64)
-                )
-                nodes, ranks = _pagerank_local(src, dst, iters, damping_pct)
-                yield pd.DataFrame(
-                    {
-                        "entity_id": pd.Series(nodes, dtype="int64"),
-                        "rank_micro": pd.Series(ranks, dtype="int64"),
-                    }
-                )
-
-            return edges_m.coalesce(1).mapInPandas(
-                pr_all, schema="entity_id long, rank_micro long"
-            )
-        edges = edges_m
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # The (src, dst, outdeg) relation and the node set are consumed EVERY
-    # iteration: materialize each once (bounded stage cache — the GraphX/
-    # Pregel edge-caching discipline), esrc pre-partitioned on the per-
-    # iteration join key so only the small ranks side shuffles per round.
-    esrc = materialize_once(
-        spark,
-        ("pagerank_esrc", sig),
-        lambda: edges.join(outdeg, "src").repartition("src"),
-    )
+    the loop. ``checkpoint_every`` truncates lineage every that many
+    rounds — deep iteration counts stay O(1) in plan size and block
+    storage. A graph that fits one task runs the whole recurrence there
+    (``_pagerank_local``); the checkpointed mode always takes the rounds,
+    whose value IS the bounded-lineage iteration."""
+    directed = _directed(triples)
+    if checkpoint_every is None and _fits_one_task(directed):
+        return _one_task(
+            directed,
+            lambda src, dst: _pagerank_local(src, dst, iters, damping_pct),
+            RANK_SCHEMA,
+        )
     nodes = materialize_once(
-        spark,
-        ("pagerank_nodes", sig),
-        lambda: esrc.select(
+        triples.sparkSession,
+        ("pagerank_nodes", triples),
+        lambda: directed.select(
             F.explode(F.array("src", "dst")).alias("entity_id")
         ).distinct(),
     )
-
     ranks = nodes.select(
         "entity_id", F.lit(RANK_UNIT).cast("long").alias("rank_micro")
     )
+    base = (100 - damping_pct) * 10_000
     return _rank_rounds(
-        ranks, esrc, nodes, F.lit(base), iters, damping_pct, checkpoint_every
+        ranks, directed, nodes, F.lit(base), iters, damping_pct, checkpoint_every
     )
 
 
@@ -387,33 +470,12 @@ def personalized_pagerank_int(
     relation, small ranks side shuffles per round); the seed flag is a
     broadcast 1-row join materialized into the node set once, never a
     driver-side scalar."""
-    from ..plans.stagecache import materialize_once
-
-    base = (100 - damping_pct) * 10_000
-    spark = triples.sparkSession
-    sig = triples.semanticHash()
-    edges = (
-        triples.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    esrc = materialize_once(
-        spark,
-        ("ppr_esrc", sig),
-        lambda: edges.join(outdeg, "src").repartition("src"),
-    )
-    hub = (
-        esrc.groupBy("src")
-        .agg(F.first("outdeg").alias("outdeg"))
-        .orderBy(F.desc("outdeg"), F.asc("src"))
-        .limit(1)
-        .select(F.col("src").alias("entity_id"), F.lit(1).alias("is_seed"))
-    )
+    directed = _directed(triples)
+    hub = _hub(directed).select("entity_id", F.lit(1).alias("is_seed"))
     nodes = materialize_once(
-        spark,
-        ("ppr_nodes", sig),
-        lambda: esrc.select(F.explode(F.array("src", "dst")).alias("entity_id"))
+        triples.sparkSession,
+        ("ppr_nodes", triples),
+        lambda: directed.select(F.explode(F.array("src", "dst")).alias("entity_id"))
         .distinct()
         .join(F.broadcast(hub), "entity_id", "left")
         .select(
@@ -425,8 +487,9 @@ def personalized_pagerank_int(
         "entity_id",
         (F.col("is_seed").cast("long") * F.lit(RANK_UNIT)).alias("rank_micro"),
     )
+    base = (100 - damping_pct) * 10_000
     restart = F.col("n.is_seed").cast("long") * F.lit(base)
-    return _rank_rounds(ranks, esrc, nodes, restart, iters, damping_pct)
+    return _rank_rounds(ranks, directed, nodes, restart, iters, damping_pct)
 
 
 def personalized_pagerank_int_oracle(
@@ -482,13 +545,11 @@ def entity_components(triples: DataFrame) -> DataFrame:
     loop-only entities still label themselves); clustering is the shared
     pointer-jumping CC (O(log n) rounds, single-task numpy kernel below
     the measured crossover)."""
-    from ..plans.stagecache import materialize_once
     from .coref import connected_components_global
 
-    spark = triples.sparkSession
     base = materialize_once(
-        spark,
-        ("comp_base", triples.semanticHash()),
+        triples.sparkSession,
+        ("comp_base", triples),
         lambda: triples.select("subj_id", "obj_id").distinct(),
     )
     edges = base.where(F.col("subj_id") != F.col("obj_id"))
@@ -545,20 +606,13 @@ def triangle_stats(triples: DataFrame) -> DataFrame:
 
     clustering_permille = (3 * triangles * 1000) DIV wedges — the global
     clustering coefficient in exact integer permille (no float hazard);
-    n_wedges = sum over nodes of deg*(deg-1)/2 (always even, exact)."""
-    from ..plans.stagecache import materialize_once
-
-    spark = triples.sparkSession
-    sig = triples.semanticHash()
-    und = materialize_once(
-        spark,
-        ("tri_und", sig),
-        lambda: triples.select(
-            F.least("subj_id", "obj_id").alias("u"),
-            F.greatest("subj_id", "obj_id").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct(),
+    n_wedges = sum over nodes of deg*(deg-1)/2 (always even, exact).
+    The undirected edges (u < v) are one direction of the shared symmetric
+    stage."""
+    und = (
+        _symmetric(triples)
+        .where(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
     deg = und.select(
         F.explode(F.array("u", "v")).alias("entity_id")
@@ -567,8 +621,8 @@ def triangle_stats(triples: DataFrame) -> DataFrame:
     # carry the destination's (deg, id) so wedge endpoints order without a
     # third join
     oriented = materialize_once(
-        spark,
-        ("tri_oriented", sig),
+        triples.sparkSession,
+        ("tri_oriented", triples),
         lambda: und.join(
             deg.select(F.col("entity_id").alias("u"), F.col("deg").alias("du")),
             "u",
@@ -686,26 +740,8 @@ def hub_reach(triples: DataFrame, max_hops: int = 3) -> DataFrame:
     are distinct-projected per hop and the final min-dist agg collapses
     re-reached nodes. Result size is bounded by the reachable set, never
     the path set."""
-    from ..plans.stagecache import materialize_once
-
-    spark = triples.sparkSession
-    edges = materialize_once(
-        spark,
-        ("reach_edges", triples.semanticHash()),
-        lambda: triples.select(
-            F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition("src"),
-    )
-    hub = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("outdeg"))
-        .orderBy(F.desc("outdeg"), F.asc("src"))
-        .limit(1)
-        .select(F.col("src").alias("entity_id"))
-    )
+    edges = _directed(triples)
+    hub = _hub(edges)
     levels = [hub.select("entity_id", F.lit(0).cast("int").alias("dist"))]
     frontier = hub
     for i in range(1, max_hops + 1):
@@ -755,8 +791,12 @@ SELECT entity_id, MIN(dist)::INTEGER AS dist FROM (
     )
 
 
+CORE_SCHEMA = pa.schema([("entity_id", pa.int64()), ("core_deg", pa.int64())])
+LPA_SCHEMA = pa.schema([("entity_id", pa.int64()), ("community", pa.int64())])
+
+
 def _peel_rounds(
-    pairs: list[tuple[int, int]], k: int, rounds: int
+    pairs: Iterable[tuple[int, int]], k: int, rounds: int
 ) -> dict[int, int]:
     """Single-task mirror of the distributed peel: the SAME ``rounds``
     synchronous filter rounds (not the fixpoint — identical contract),
@@ -786,12 +826,7 @@ def _peel_rounds(
     return out
 
 
-def kcore(
-    triples: DataFrame,
-    k: int = 3,
-    rounds: int = 6,
-    small_graph_threshold: int = 4_000_000,
-) -> DataFrame:
+def kcore(triples: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     """(entity_id, core_deg): the k-core of the undirected entity graph —
     the subgraph left after ``rounds`` synchronous peel rounds (each round
     drops every node whose degree within the current survivor set is
@@ -809,58 +844,18 @@ def kcore(
     relation is materialized once, pre-partitioned on src — each round
     shuffles only the (shrinking) survivor set to the stationary edges,
     aggregates degrees map-side, filters. Per-round cost is O(edges
-    incident to survivors); survivor sets only shrink. Graphs at or
-    below ``small_graph_threshold`` symmetric edges short-circuit to a
-    single-task peel running the SAME synchronous rounds (the
-    connected_components_global fast-path discipline: per-round stage
-    latency dominates tiny graphs — measured 8 s of rounds vs <1 s local
-    on a 210-edge graph); pass 0 to force the distributed path."""
-    from ..plans.stagecache import materialize_once
-
-    spark = triples.sparkSession
-    sig = triples.semanticHash()
-    sym = materialize_once(
-        spark,
-        ("kcore_sym", sig),
-        lambda: (
-            triples.select(
-                F.least("subj_id", "obj_id").alias("a"),
-                F.greatest("subj_id", "obj_id").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .repartition("src")
-        ),
-    )
-    if small_graph_threshold > 0 and sym.count() <= small_graph_threshold:
-        import pandas as pd  # noqa: PLC0415
-
-        def peel_all(it):
-            pairs: list[tuple[int, int]] = []
-            for pdf in it:
-                pairs.extend(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            core = _peel_rounds(pairs, k, rounds)
-            nodes = sorted(core)
-            yield pd.DataFrame(
-                {
-                    "entity_id": pd.Series(nodes, dtype="int64"),
-                    "core_deg": pd.Series(
-                        [core[n] for n in nodes], dtype="int64"
-                    ),
-                }
-            )
-
-        return sym.coalesce(1).mapInPandas(
-            peel_all, schema="entity_id long, core_deg long"
+    incident to survivors); survivor sets only shrink. A graph that fits
+    one task runs the SAME synchronous rounds there (``_peel_rounds``):
+    per-round stage latency dominates tiny graphs — measured 8 s of
+    rounds vs <1 s in one task on a 210-edge graph."""
+    sym = _symmetric(triples)
+    if _fits_one_task(sym):
+        return _one_task(
+            sym,
+            lambda src, dst: _dict_columns(
+                _peel_rounds(zip(src.tolist(), dst.tolist()), k, rounds)
+            ),
+            CORE_SCHEMA,
         )
     alive = sym.select(F.col("src").alias("id")).distinct()
 
@@ -875,26 +870,16 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
 
-    prev_ckpt: DataFrame | None = None
+    prev: DataFrame | None = None
     for _ in range(rounds):
-        alive = (
-            _deg_within(alive).where(F.col("deg") >= k).select("id")
-        )
         # each round references `alive` TWICE (both endpoints), so an
         # unmaterialized lineage doubles per round — 2^rounds plan blowup,
-        # measured 14.5 s at sf0.1. Eager localCheckpoint truncates it
-        # (the survivor set is tiny: node ids only); previous round's
-        # blocks are released once unreferenced — the PageRank
-        # checkpoint_every discipline, mandatory here because of the
-        # double reference.
-        ckpt = alive.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            try:
-                prev_ckpt.rdd.unpersist()
-            except Exception:
-                pass
-        prev_ckpt = ckpt
-        alive = ckpt
+        # measured 14.5 s at sf0.1. The checkpoint every round is
+        # mandatory here because of the double reference (the survivor
+        # set is tiny: node ids only).
+        alive = prev = _checkpoint(
+            _deg_within(alive).where(F.col("deg") >= k).select("id"), prev
+        )
     return _deg_within(alive).select(
         F.col("id").alias("entity_id"),
         F.col("deg").cast("long").alias("core_deg"),
@@ -945,7 +930,7 @@ GROUP BY e.src"""
 
 
 def _lpa_rounds(
-    pairs: list[tuple[int, int]], rounds: int
+    pairs: Iterable[tuple[int, int]], rounds: int
 ) -> dict[int, int]:
     """Single-task mirror of the distributed synchronous label propagation:
     same rounds, same (count DESC, label ASC) tie-break."""
@@ -965,11 +950,7 @@ def _lpa_rounds(
     return labels
 
 
-def label_propagation(
-    triples: DataFrame,
-    rounds: int = 4,
-    small_graph_threshold: int = 4_000_000,
-) -> DataFrame:
+def label_propagation(triples: DataFrame, rounds: int = 4) -> DataFrame:
     """(entity_id, community): synchronous label propagation over the
     undirected entity graph — ``rounds`` rounds of "adopt the most
     frequent neighbor label", ties broken by the smaller label, labels
@@ -978,64 +959,25 @@ def label_propagation(
     tie-break), so the DuckDB oracle is GENERATED for the same round
     count — the PageRank discipline.
 
-    Loop shape: stationary src-partitioned symmetric edges; per round one
-    join (labels -> edges), one (node, label) count agg, one top-1 window
-    — only the label relation shuffles. Per-round eager localCheckpoint
-    bounds plan depth. Graphs at or below ``small_graph_threshold``
-    symmetric edges run the same rounds in one task (the k-core /
-    connected-components fast-path discipline)."""
-    from ..plans.stagecache import materialize_once
-
-    spark = triples.sparkSession
-    sig = triples.semanticHash()
-    sym = materialize_once(
-        spark,
-        ("lpa_sym", sig),
-        lambda: (
-            triples.select(
-                F.least("subj_id", "obj_id").alias("a"),
-                F.greatest("subj_id", "obj_id").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .repartition("src")
-        ),
-    )
-    if small_graph_threshold > 0 and sym.count() <= small_graph_threshold:
-        import pandas as pd  # noqa: PLC0415
-
-        def lpa_all(it):
-            pairs: list[tuple[int, int]] = []
-            for pdf in it:
-                pairs.extend(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            labels = _lpa_rounds(pairs, rounds)
-            nodes = sorted(labels)
-            yield pd.DataFrame(
-                {
-                    "entity_id": pd.Series(nodes, dtype="int64"),
-                    "community": pd.Series(
-                        [labels[n] for n in nodes], dtype="int64"
-                    ),
-                }
-            )
-
-        return sym.coalesce(1).mapInPandas(
-            lpa_all, schema="entity_id long, community long"
+    Loop shape: stationary src-partitioned symmetric edges (the stage
+    k-core shares); per round one join (labels -> edges), one (node,
+    label) count agg, one top-1 window — only the label relation
+    shuffles, and a checkpoint every round bounds plan depth. A graph
+    that fits one task runs the same rounds there (``_lpa_rounds``)."""
+    sym = _symmetric(triples)
+    if _fits_one_task(sym):
+        return _one_task(
+            sym,
+            lambda src, dst: _dict_columns(
+                _lpa_rounds(zip(src.tolist(), dst.tolist()), rounds)
+            ),
+            LPA_SCHEMA,
         )
 
     labels = sym.select(
         F.col("src").alias("entity_id"), F.col("src").alias("community")
     ).distinct()
-    prev_ckpt: DataFrame | None = None
+    prev: DataFrame | None = None
     for _ in range(rounds):
         counts = (
             sym.alias("e")
@@ -1051,19 +993,12 @@ def label_propagation(
         w = W.partitionBy("entity_id").orderBy(
             F.desc("cnt"), F.asc("community")
         )
-        labels = (
+        labels = prev = _checkpoint(
             counts.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
-            .select("entity_id", "community")
+            .select("entity_id", "community"),
+            prev,
         )
-        ckpt = labels.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            try:
-                prev_ckpt.rdd.unpersist()
-            except Exception:
-                pass
-        prev_ckpt = ckpt
-        labels = ckpt
     return labels
 
 

@@ -192,7 +192,7 @@ def image_near_dup(
 
     hashes = materialize_once(
         media.sparkSession,
-        ("image_phash", media.semanticHash(), algo),
+        ("image_phash", media, algo),
         lambda: image_phash(media, algo=algo),
     )
     return phash_near_dup(hashes, max_hamming=max_hamming, bands=bands)

@@ -23,16 +23,17 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..kernels.minhash import (
-    band_keys,
+    band_keys_matrix,
     hash_tokens,
-    minhash_signature,
     perm_params,
     shingles,
+    signatures_batch,
 )
 
 NGRAM = 2
@@ -107,24 +108,29 @@ def _band_rows(
     n: int,
     seed: int,
 ) -> Iterator[pd.DataFrame]:
+    """(value, band_idx, band_key) for every value of every batch: one
+    vectorized MinHash pass per batch (``signatures_batch`` +
+    ``band_keys_matrix``, bit-identical to the per-value
+    ``minhash_signature`` + ``band_keys`` pair). Shingle hashes are
+    memoized across the task's batches."""
     a, b = perm_params(num_perm, seed=seed)
+    memo: dict[str, int] = {}
     for pdf in pdf_iter:
-        vals: list[str] = []
-        band_idx: list[int] = []
-        band_key: list[int] = []
-        for v in pdf[col].tolist():
-            sig = minhash_signature(
-                hash_tokens(shingles(f"^{v}$", n)), a, b
-            )
-            for bi, bk in enumerate(band_keys(sig, bands)):
-                vals.append(v)
-                band_idx.append(bi)
-                band_key.append(bk)
+        vals = pdf[col].tolist()
+        tok_sets = [set(shingles(f"^{v}$", n)) for v in vals]
+        new = list({t for toks in tok_sets for t in toks if t not in memo})
+        if new:
+            memo.update(zip(new, hash_tokens(new).tolist()))
+        keys = band_keys_matrix(signatures_batch(tok_sets, memo, a, b), bands)
         yield pd.DataFrame(
             {
-                "value": pd.Series(vals, dtype="object"),
-                "band_idx": pd.Series(band_idx, dtype="int32"),
-                "band_key": pd.Series(band_key, dtype="int64"),
+                "value": pd.Series(
+                    np.repeat(np.array(vals, dtype=object), bands), dtype="object"
+                ),
+                "band_idx": pd.Series(
+                    np.tile(np.arange(bands, dtype=np.int32), len(vals)), dtype="int32"
+                ),
+                "band_key": pd.Series(keys.ravel(), dtype="int64"),
             }
         )
 

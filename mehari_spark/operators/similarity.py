@@ -597,13 +597,7 @@ def lsh_near_dup_pairs(
 
     sigs = materialize_once(
         corpus.sparkSession,
-        (
-            "hyperplane_bands",
-            corpus.semanticHash(),
-            n_bands,
-            rows_per_band,
-            seed,
-        ),
+        ("hyperplane_bands", corpus, n_bands, rows_per_band, seed),
         lambda: banded_lsh_signatures(
             corpus, n_bands, rows_per_band, seed, id_col, vec_col
         ),

@@ -312,7 +312,7 @@ def span_matches_winnowed(
     p = _df_capped(
         materialize_once(
             docs.sparkSession,
-            ("winnowed_postings", docs.semanticHash(), k, w),
+            ("winnowed_postings", docs, k, w),
             lambda: winnowed_postings(docs, k, w),
         ),
         "fp",

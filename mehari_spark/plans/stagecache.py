@@ -16,6 +16,12 @@ same run would measure the cache, not the code — bench.py calls
 Keys include the SparkContext applicationId: a cached DataFrame from a
 stopped session is unusable, so entries from other app ids are evicted on
 first access from a new session.
+
+A key names its source frames themselves, e.g. ``("sym", triples)``: each
+DataFrame element is stored as its ``semanticHash()``, so equal plans built
+twice share one stage. That hash is 32 bits, so a hit is confirmed with
+``sameSemantics`` against the source frames kept for the entry, and a
+mismatch rebuilds the stage instead of returning another plan's rows.
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple, DataFrame] = {}
+# the DataFrames named in each _CACHE key, for the sameSemantics check
+_SOURCES: dict[tuple, list[DataFrame]] = {}
 _MAX_ENTRIES = 4
 _DISABLED = False
 
@@ -47,7 +55,9 @@ def cache_disabled() -> Iterator[None]:
         _DISABLED = prev
 
 
-def _unpersist_quiet(df: DataFrame) -> None:
+def _evict(key: tuple) -> None:
+    _SOURCES.pop(key, None)
+    df = _CACHE.pop(key)
     try:
         df.unpersist()
     except Exception:
@@ -59,21 +69,31 @@ def shared_stage(
 ) -> DataFrame:
     """Return the cached DataFrame for ``key`` or build + persist it.
 
-    ``key`` identifies the stage CONTENT (stage name, input path, params) —
-    the caller must include everything that changes the result."""
+    ``key`` identifies the stage CONTENT (stage name, input frames or
+    paths, params) — the caller must include everything that changes the
+    result."""
     if _DISABLED:
         return build()
     app_id = spark.sparkContext.applicationId
-    full_key = (app_id, *key)
+    sources = [k for k in key if isinstance(k, DataFrame)]
+    full_key = (app_id, *(
+        k.semanticHash() if isinstance(k, DataFrame) else k for k in key
+    ))
     df = _CACHE.get(full_key)
-    if df is None:
-        # drop stale entries from previous sessions first
-        for k in [k for k in _CACHE if k[0] != app_id]:
-            _unpersist_quiet(_CACHE.pop(k))
-        while len(_CACHE) >= _MAX_ENTRIES:  # bounded: evict oldest
-            _unpersist_quiet(_CACHE.pop(next(iter(_CACHE))))
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
-        _CACHE[full_key] = df
+    if df is not None and all(
+        a.sameSemantics(b) for a, b in zip(sources, _SOURCES[full_key])
+    ):
+        return df
+    if df is not None:  # a hash collision: another plan owns the slot
+        _evict(full_key)
+    # drop stale entries from previous sessions first
+    for k in [k for k in _CACHE if k[0] != app_id]:
+        _evict(k)
+    while len(_CACHE) >= _MAX_ENTRIES:  # bounded: evict oldest
+        _evict(next(iter(_CACHE)))
+    df = build().persist(StorageLevel.MEMORY_AND_DISK)
+    _CACHE[full_key] = df
+    _SOURCES[full_key] = sources
     return df
 
 
@@ -104,4 +124,4 @@ def clear_shared_stages() -> None:
     """Unpersist and forget every cached stage (bench calls this between
     repetitions so measurements stay cold)."""
     for k in list(_CACHE):
-        _unpersist_quiet(_CACHE.pop(k))
+        _evict(k)

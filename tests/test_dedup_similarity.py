@@ -119,6 +119,39 @@ class TestLinking:
         assert exact, "exact linker found nothing — fixture broken"
         assert lsh == exact, f"LSH blocking lost links: {exact - lsh}"
 
+    def test_band_table_equals_scalar_reference(self):
+        # the batch MinHash kernel gives link_lsh the same (value, band_idx,
+        # band_key) rows as one scalar signature + band_keys call per value
+        import pandas as pd
+
+        from mehari_spark.dictionary import DEMO_ENTITIES
+        from mehari_spark.kernels.minhash import (
+            band_keys,
+            hash_tokens,
+            minhash_signature,
+            perm_params,
+            shingles,
+        )
+        from mehari_spark.operators.linking import NGRAM, _band_rows
+
+        aliases = [a for a, _i, _t in DEMO_ENTITIES]
+        vals = aliases + [a + a[-1] for a in aliases] + ["", "x", None]
+        batches = [pd.DataFrame({"v": vals[:7]}), pd.DataFrame({"v": vals[7:]})]
+        got = [
+            row
+            for pdf in _band_rows(iter(batches), "v", 128, 64, NGRAM, 42)
+            for row in zip(pdf["value"], pdf["band_idx"], pdf["band_key"])
+        ]
+        a, b = perm_params(128, seed=42)
+        want = [
+            (v, i, k)
+            for v in vals
+            for i, k in enumerate(
+                band_keys(minhash_signature(hash_tokens(shingles(f"^{v}$", NGRAM)), a, b), 64)
+            )
+        ]
+        assert got == want
+
     def test_exact_link_self_alias(self, spark):
         # an exact alias must link to its own entity with score 1.0
         surfaces = spark.createDataFrame([("spark",), ("customer",)], "surface string")

@@ -21,6 +21,7 @@ from mehari_spark.operators.canonicalize import (
     canonicalize_full,
     close_rule_table,
 )
+from mehari_spark.operators import graph
 from mehari_spark.operators.coref import connected_components_global
 from mehari_spark.operators.mentions import detect_mentions, resolve_overlaps
 from mehari_spark.operators.triples import assemble_triples
@@ -128,7 +129,7 @@ class TestGlobalCC:
         out = connected_components_global(edges)
         assert out.select("component").distinct().count() == 1
 
-    def test_path_graph_logn_rounds(self, spark):
+    def test_path_graph_logn_rounds(self, spark, monkeypatch):
         # the O(log n) bound (Kiveris et al., SoCC'14): a 128-node path needs
         # 127 rounds under naive one-hop label propagation; pointer jumping
         # must converge in ~log2(128)+slack rounds
@@ -136,8 +137,9 @@ class TestGlobalCC:
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "src long, dst long"
         )
+        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
         labels, rounds = connected_components_global(
-            edges, max_iter=40, with_rounds=True, small_graph_threshold=0
+            edges, max_iter=40, with_rounds=True
         )
         comps = {r.component for r in labels.collect()}
         assert comps == {0}

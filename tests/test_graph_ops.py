@@ -8,12 +8,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from mehari_spark.operators import graph
 from mehari_spark.operators.graph import (
     RANK_UNIT,
     entity_components,
     entity_degree,
     hub_reach,
     pagerank_int,
+    personalized_pagerank_int,
     triangle_stats,
     triples_asof,
     two_hop_paths,
@@ -32,6 +34,12 @@ TRIPLES = [
     ("c3", 1, 5, 10, 1),  # exact duplicate triple
 ]
 COLS = ["conv_id", "turn_idx", "subj_id", "pred_id", "obj_id"]
+# (subj, obj) edges with self-loops (3, 4, 6), a duplicate and a reversed
+# edge (1-2), a node seen only in a self-loop (4) and danglers (6, 8)
+MESSY_EDGES = [
+    (1, 2), (1, 2), (2, 1), (2, 3), (3, 1), (3, 3), (4, 4),
+    (1, 5), (5, 6), (6, 6), (3, 7), (7, 8),
+]
 
 
 @pytest.fixture(scope="module")
@@ -109,21 +117,21 @@ def test_pagerank_checkpointed_loop_identical(spark, triples_df):
     assert plain == ckpt
 
 
-def test_pagerank_fast_path_equals_distributed(spark, triples_df):
+def test_pagerank_fast_path_equals_distributed(spark, triples_df, monkeypatch):
     """The single-task small-graph fast path must return EXACTLY the
     distributed rounds' labels (same int64 recurrence; forced via
-    small_graph_threshold=0), including on a graph with danglers and
-    multiple components."""
+    SMALL_GRAPH_EDGES=0), including on a graph with danglers and
+    multiple components, and on one with self-loops and duplicate edges."""
     fast = {
         r["entity_id"]: r["rank_micro"]
         for r in pagerank_int(triples_df, iters=5).collect()
     }
-    dist = {
-        r["entity_id"]: r["rank_micro"]
-        for r in pagerank_int(
-            triples_df, iters=5, small_graph_threshold=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+        dist = {
+            r["entity_id"]: r["rank_micro"]
+            for r in pagerank_int(triples_df, iters=5).collect()
+        }
     assert fast == dist
     # planted multi-component graph with dangling nodes
     edges = [(1, 2), (2, 3), (3, 1), (4, 5), (6, 7), (7, 6), (8, 9)]
@@ -133,11 +141,20 @@ def test_pagerank_fast_path_equals_distributed(spark, triples_df):
         r["entity_id"]: r["rank_micro"]
         for r in pagerank_int(df, iters=4).collect()
     }
-    dist2 = {
-        r["entity_id"]: r["rank_micro"]
-        for r in pagerank_int(df, iters=4, small_graph_threshold=0).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+        dist2 = {
+            r["entity_id"]: r["rank_micro"]
+            for r in pagerank_int(df, iters=4).collect()
+        }
     assert fast2 == dist2
+    df3 = spark.createDataFrame(
+        [("c", i, s, 1, d) for i, (s, d) in enumerate(MESSY_EDGES)], COLS
+    )
+    fast3 = {r.entity_id: r.rank_micro for r in pagerank_int(df3, iters=4).collect()}
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+    dist3 = {r.entity_id: r.rank_micro for r in pagerank_int(df3, iters=4).collect()}
+    assert fast3 == dist3 and len(fast3) == 7
 
 
 def test_pagerank_tracks_float_ordering(spark):
@@ -359,20 +376,28 @@ def test_kcore_large_k_empty(spark, triples_df):
     assert kcore(triples_df, k=10, rounds=4).count() == 0
 
 
-def test_kcore_distributed_path_equals_fast_path(spark):
-    """Forcing the distributed peel (small_graph_threshold=0) returns the
+def test_kcore_distributed_path_equals_fast_path(spark, monkeypatch):
+    """Forcing the distributed peel (SMALL_GRAPH_EDGES=0) returns the
     same rows as the single-task fast path — the size gate changes the
-    plan, never the answer."""
+    plan, never the answer — on the production triples and on a graph
+    with self-loops, duplicate edges and danglers."""
     from mehari_spark.operators.graph import kcore
     from mehari_spark.plans.queries import _production_triples
 
     tr = _production_triples(spark, "/root/testdata/sf0.001")
+    messy = spark.createDataFrame(
+        [("c", i, s, 1, d) for i, (s, d) in enumerate(MESSY_EDGES)], COLS
+    )
     fast = {(r.entity_id, r.core_deg) for r in kcore(tr, k=3, rounds=6).collect()}
+    fast2 = {(r.entity_id, r.core_deg) for r in kcore(messy, k=2, rounds=3).collect()}
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
     dist = {
         (r.entity_id, r.core_deg)
-        for r in kcore(tr, k=3, rounds=6, small_graph_threshold=0).collect()
+        for r in kcore(tr, k=3, rounds=6).collect()
     }
     assert fast == dist and fast
+    dist2 = {(r.entity_id, r.core_deg) for r in kcore(messy, k=2, rounds=3).collect()}
+    assert fast2 == dist2 and fast2
 
 
 # --------------------------------------------------------------------------
@@ -402,19 +427,28 @@ def test_lpa_planted_two_communities(spark):
     assert {got[i] for i in (12, 13, 14)} == {11}
 
 
-def test_lpa_distributed_equals_fast_path(spark):
+def test_lpa_distributed_equals_fast_path(spark, monkeypatch):
     """Forcing the distributed loop returns the same labels as the
-    single-task fast path on the production triples."""
+    single-task fast path on the production triples and on a graph with
+    self-loops, duplicate edges and danglers."""
     from mehari_spark.operators.graph import label_propagation
     from mehari_spark.plans.queries import _production_triples
 
     tr = _production_triples(spark, "/root/testdata/sf0.001")
+    messy = spark.createDataFrame(
+        [("c", i, s, 1, d) for i, (s, d) in enumerate(MESSY_EDGES)], COLS
+    )
     fast = {(r.entity_id, r.community)
             for r in label_propagation(tr, rounds=4).collect()}
+    fast2 = {(r.entity_id, r.community)
+             for r in label_propagation(messy, rounds=3).collect()}
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
     dist = {(r.entity_id, r.community)
-            for r in label_propagation(
-                tr, rounds=4, small_graph_threshold=0).collect()}
+            for r in label_propagation(tr, rounds=4).collect()}
     assert fast == dist and fast
+    dist2 = {(r.entity_id, r.community)
+             for r in label_propagation(messy, rounds=3).collect()}
+    assert fast2 == dist2 and fast2
 
 
 def test_lpa_python_mirror(spark, triples_df):
@@ -426,3 +460,54 @@ def test_lpa_python_mirror(spark, triples_df):
     got = {r.entity_id: r.community
            for r in label_propagation(triples_df, rounds=4).collect()}
     assert got == want
+
+
+# --------------------------------------------------------------------------
+# shared edge stages
+# --------------------------------------------------------------------------
+
+
+def test_kcore_and_lpa_share_one_symmetric_stage(spark):
+    """k-core then label propagation over one triples frame build the
+    symmetric edge stage once: it is the only stage either caches."""
+    from mehari_spark.operators.graph import kcore, label_propagation
+    from mehari_spark.plans.queries import _production_triples
+    from mehari_spark.plans.stagecache import _CACHE, clear_shared_stages
+
+    from .conftest import SF_UNIT
+
+    clear_shared_stages()
+    kcore(_production_triples(spark, SF_UNIT)).collect()
+    label_propagation(_production_triples(spark, SF_UNIT)).collect()
+    assert [k[1] for k in _CACHE] == ["symmetric_edges"]
+    clear_shared_stages()
+
+
+def test_pagerank_and_ppr_share_one_directed_stage(spark, triples_df, monkeypatch):
+    """On the distributed rounds, PageRank and personalized PageRank read
+    one (src, dst, outdeg) stage; each keeps its own node set."""
+    from mehari_spark.plans.stagecache import _CACHE, clear_shared_stages
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+    clear_shared_stages()
+    pagerank_int(triples_df, iters=3).collect()
+    personalized_pagerank_int(triples_df, iters=3).collect()
+    assert sorted(k[1] for k in _CACHE) == [
+        "directed_edges", "pagerank_nodes", "ppr_nodes"
+    ]
+    clear_shared_stages()
+
+
+def test_checkpoint_releases_previous_round(spark):
+    """A chain of round checkpoints keeps only the newest one's blocks."""
+    sc = spark.sparkContext
+
+    def cached():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    df, prev = spark.range(100), None
+    for _ in range(3):
+        df = prev = graph._checkpoint(df.selectExpr("id + 1 AS id"), prev)
+    assert len(cached() - before) == 1
+    assert sorted(r.id for r in df.collect()) == list(range(3, 103))

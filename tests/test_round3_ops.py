@@ -1,8 +1,7 @@
 """Round-3 operator tests: blocked embedding near-dup pairs, clustered IVF
 (sublinear probing), the multi-token dictionary path, the content-keyed AC
-automaton cache, the canonicalizer rule corpus (disagreement cases), durable
-CC checkpointing with resume, crash-atomic MERGE, and graceful end-of-stream
-session flush."""
+automaton cache, the canonicalizer rule corpus (disagreement cases),
+crash-atomic MERGE, and graceful end-of-stream session flush."""
 
 from __future__ import annotations
 
@@ -386,83 +385,6 @@ class TestCanonRuleCorpus:
         # 103->101(kb rank 1), 105->151(override 42), 109->108(kb 8),
         # 106 keeps id with rank 66, 110 suppressed
         assert out == {(101, 1), (151, 42), (108, 8), (106, 66)}
-
-
-# --------------------------------------------------------------------------
-# durable CC checkpointing + resume
-# --------------------------------------------------------------------------
-
-
-def _chain_edges(spark, n=64):
-    # one long path (worst case for label propagation) + isolated pairs
-    rows = [(i, i + 1) for i in range(n)] + [(1000 + 2 * i, 1001 + 2 * i) for i in range(8)]
-    return spark.createDataFrame(rows, "src long, dst long")
-
-
-class TestDurableCC:
-    def test_durable_equals_local(self, spark, tmp_path):
-        from mehari_spark.operators.coref import connected_components_global
-
-        edges = _chain_edges(spark)
-        local = sorted(
-            map(tuple, connected_components_global(edges).collect())
-        )
-        durable = sorted(
-            map(
-                tuple,
-                connected_components_global(
-                    edges, checkpoint_dir=str(tmp_path / "cc")
-                ).collect(),
-            )
-        )
-        assert local == durable
-
-    def test_check_every_cadence_same_result(self, spark):
-        from mehari_spark.operators.coref import connected_components_global
-
-        edges = _chain_edges(spark)
-        want = sorted(
-            map(
-                tuple,
-                connected_components_global(
-                    edges, small_graph_threshold=0
-                ).collect(),
-            )
-        )
-        got = sorted(
-            map(
-                tuple,
-                connected_components_global(
-                    edges, check_every=2, small_graph_threshold=0
-                ).collect(),
-            )
-        )
-        assert got == want
-
-    def test_resume_mid_iteration(self, spark, tmp_path):
-        from mehari_spark.operators.coref import (
-            connected_components_global,
-            load_cc_checkpoint,
-        )
-
-        edges = _chain_edges(spark)
-        ck = str(tmp_path / "cc")
-        want = sorted(map(tuple, connected_components_global(edges).collect()))
-        # "crash" after 2 rounds: max_iter caps the run mid-iteration
-        partial, r1 = connected_components_global(
-            edges, max_iter=2, with_rounds=True, checkpoint_dir=ck, checkpoint_every=1
-        )
-        partial.collect()
-        assert r1 == 2
-        labels, done = load_cc_checkpoint(spark, ck)
-        assert done == 2 and labels is not None
-        # resume from the durable round-2 state and finish
-        resumed, r2 = connected_components_global(
-            edges, with_rounds=True, checkpoint_dir=ck, checkpoint_every=1
-        )
-        got = sorted(map(tuple, resumed.collect()))
-        assert got == want
-        assert r2 > 2  # continued from the checkpoint, not from scratch
 
 
 # --------------------------------------------------------------------------

@@ -2,7 +2,6 @@
 
 - WAV parser soft-fail on odd data length / truncated fmt chunk
 - finalize_stream leaves the input dataset unmutated
-- durable CC checkpoint identity guard + round-dir pruning
 - AC cache true-LRU eviction
 - scale guards on the exact-baseline quadratic twins
 - decode_features n_bytes computed JVM-side (still correct)
@@ -107,62 +106,6 @@ class TestFinalizeLeavesSourceClean:
         assert got.agg(F.max("ts")).first()[0] == max_ts_before
 
 
-def _edges(spark, rows):
-    return spark.createDataFrame(rows, "src long, dst long")
-
-
-class TestCcCheckpointIdentity:
-    """ADVICE: a checkpoint written for a different edge set must be ignored,
-    and superseded round dirs pruned."""
-
-    def test_different_graph_same_dir_recomputes(self, spark, tmp_path):
-        from mehari_spark.operators.coref import connected_components_global
-
-        ck = str(tmp_path / "cc")
-        a = _edges(spark, [(i, i + 1) for i in range(16)])
-        b = _edges(spark, [(100 + 2 * i, 101 + 2 * i) for i in range(8)])
-        connected_components_global(a, checkpoint_dir=ck).collect()
-        got = sorted(
-            map(
-                tuple,
-                connected_components_global(b, checkpoint_dir=ck).collect(),
-            )
-        )
-        want = sorted(map(tuple, connected_components_global(b).collect()))
-        assert got == want  # graph A's stale labels were NOT resumed
-
-    def test_round_dirs_pruned(self, spark, tmp_path):
-        from mehari_spark.operators.coref import connected_components_global
-
-        ck = str(tmp_path / "cc")
-        edges = _edges(spark, [(i, i + 1) for i in range(64)])
-        connected_components_global(
-            edges, checkpoint_dir=ck, checkpoint_every=1
-        ).collect()
-        rounds = [d for d in os.listdir(ck) if d.startswith("round_")]
-        assert 1 <= len(rounds) <= 2  # newest two retained, older pruned
-
-    def test_same_graph_still_resumes(self, spark, tmp_path):
-        from mehari_spark.operators.coref import (
-            connected_components_global,
-            load_cc_checkpoint,
-        )
-
-        ck = str(tmp_path / "cc")
-        edges = _edges(spark, [(i, i + 1) for i in range(64)])
-        want = sorted(map(tuple, connected_components_global(edges).collect()))
-        _, r1 = connected_components_global(
-            edges, max_iter=2, with_rounds=True, checkpoint_dir=ck, checkpoint_every=1
-        )
-        labels, rnd = load_cc_checkpoint(spark, ck)
-        assert rnd == 2 and labels is not None  # identity matches -> resumable
-        resumed, r2 = connected_components_global(
-            edges, with_rounds=True, checkpoint_dir=ck, checkpoint_every=1
-        )
-        assert sorted(map(tuple, resumed.collect())) == want
-        assert r2 > r1  # continued past the checkpointed round, not from 0
-
-
 class TestAcCacheLru:
     def test_hot_entry_survives_eviction(self, spark):
         from mehari_spark.kernels.dictmatch import compile_table
@@ -216,6 +159,39 @@ class TestSharedStageCache:
         assert not _CACHE
         c = _minhash_pairs_stage(spark, sf)
         assert c is not a and c.count() == n  # cold rebuild, same result
+
+    def test_equal_plans_built_twice_share_one_build(self, spark):
+        from mehari_spark.plans.stagecache import (
+            _CACHE,
+            clear_shared_stages,
+            materialize_once,
+        )
+
+        clear_shared_stages()
+        builds = []
+
+        def stage(src):
+            return materialize_once(
+                spark, ("probe", src), lambda: builds.append(src) or src.select("id")
+            )
+
+        a = stage(spark.range(40).where("id % 3 = 0"))
+        b = stage(spark.range(40).where("id % 3 = 0"))
+        assert a is b and len(builds) == 1 and len(_CACHE) == 1
+        clear_shared_stages()
+
+    def test_colliding_hashes_give_distinct_stages(self, spark, monkeypatch):
+        from mehari_spark.plans.stagecache import clear_shared_stages, materialize_once
+
+        clear_shared_stages()
+        x = spark.range(10).where("id < 3")
+        y = spark.range(10).where("id >= 7")
+        monkeypatch.setattr(type(x), "semanticHash", lambda self: 7)
+        sx = materialize_once(spark, ("probe", x), lambda: x)
+        sy = materialize_once(spark, ("probe", y), lambda: y)
+        assert sx is not sy
+        assert sorted(r.id for r in sy.collect()) == [7, 8, 9]
+        clear_shared_stages()
 
 
 class TestDecodeFeaturesNBytes:
