@@ -26,7 +26,8 @@ The work is whole-array numpy, with no per-edge Python:
 ``cluster_batch`` applies it to one Arrow batch of conversations, each
 row a conversation's aligned ``src``/``dst`` edge lists. Nothing here
 touches Spark: ``operators/coref.py`` calls ``cluster_batch`` from
-``mapInArrow``, and ``components`` once for a whole small global graph.
+``mapInArrow``, and ``components`` once for a whole small global graph;
+``stage.py`` calls ``components`` once per pipeline partition.
 """
 
 from __future__ import annotations

@@ -143,35 +143,35 @@ def connected_components_global(
     import json
     import os
 
+    from .graph import _checkpoint, _fits_one_task, _one_task, _release
+
     spark = edges.sparkSession
     # materialize the (possibly expensive) upstream edge pipeline ONCE
     # before mirroring — a union of two selects over the same lineage would
     # execute the whole upstream plan twice in one job
-    ed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
+    ed = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), None)
     # SMALL-GRAPH FAST PATH: one in-memory pass of the numpy components
     # kernel beats O(log n) synchronous distributed rounds whose per-round
     # driver/stage latency dominates at this size. Labels are identical by
     # construction (min node id per component, the same contract as the
     # iterative path). Durable runs (checkpoint_dir) always take the
     # distributed path: their value IS the resumable iteration.
-    from .graph import _fits_one_task, _one_task
-
     if checkpoint_dir is None and _fits_one_task(ed):
         # materialized once (same contract as the distributed path's eager
         # checkpoints): otherwise every downstream action would re-collect
         # the edges into one task and re-run the kernel
-        out = _one_task(
-            ed.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            lambda u, v: components(np.zeros(len(u), np.int64), u, v)[1:],
-            COMPONENT_SCHEMA,
-        ).localCheckpoint(eager=True)
+        out = _checkpoint(
+            _one_task(
+                ed.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+                lambda u, v: components(np.zeros(len(u), np.int64), u, v)[1:],
+                COMPONENT_SCHEMA,
+            ),
+            ed,
+        )
         return (out, 1) if with_rounds else out
-    sym = (
-        ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    sym = _checkpoint(
+        ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
+        ed,
     )
     # right-size the per-round parallelism to the materialized edge count:
     # each round is a handful of joins over `sym`-sized data, and scheduling
@@ -182,7 +182,7 @@ def connected_components_global(
     cur_par = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
     parts = max(4, min(cur_par, n_edges // 100_000 + 1))
     if parts < sym.rdd.getNumPartitions():
-        sym = sym.repartition(parts, "u").localCheckpoint(eager=True)
+        sym = _checkpoint(sym.repartition(parts, "u"), sym)
 
     rounds = 0
     labels = None
@@ -196,11 +196,11 @@ def connected_components_global(
         graph_id = {"edge_fp": int(fp) if fp is not None else 0, "n_edges": n_edges}
         labels, rounds = load_cc_checkpoint(spark, checkpoint_dir, graph_id)
     if labels is None:
-        labels = (
+        labels = _checkpoint(
             sym.groupBy("u")
             .agg(F.min("v").alias("mn"))
-            .select(F.col("u").alias("node"), F.least("u", "mn").alias("label"))
-            .localCheckpoint(eager=True)
+            .select(F.col("u").alias("node"), F.least("u", "mn").alias("label")),
+            None,
         )
 
     prev_fp = None
@@ -227,6 +227,17 @@ def connected_components_global(
         jumped = stepped.join(lab2, "label", "left").select(
             "node", F.least(F.col("label"), F.coalesce("jumped", "label")).alias("label")
         )
+        # convergence check without a join: equality of an order-independent
+        # hash fingerprint — one cheap agg over the just-materialized data.
+        # ``check_every`` > 1 trades (up to check_every-1) extra cheap
+        # rounds for one fewer agg job per skipped round: labels only move
+        # downward (every update is a least()), so fingerprint equality
+        # across ANY gap of rounds implies the assignment was stable for
+        # the whole gap.
+        check = rounds % check_every == 0 or rounds >= max_iter
+        if check and prev_fp is None:
+            # the pre-round state, fingerprinted before its blocks go
+            prev_fp = _label_fingerprint(labels)
         durable = checkpoint_dir is not None and (
             rounds % checkpoint_every == 0 or rounds >= max_iter
         )
@@ -249,25 +260,17 @@ def connected_components_global(
             )
             for old in kept[:-2]:
                 shutil.rmtree(os.path.join(checkpoint_dir, old), ignore_errors=True)
-            new_labels = spark.read.parquet(rd)
+            durable_labels = spark.read.parquet(rd)
+            _release(labels)
+            labels = durable_labels
         else:
-            new_labels = jumped.localCheckpoint(eager=True)
-        # convergence check without a join: equality of an order-independent
-        # hash fingerprint — one cheap agg over the just-materialized data.
-        # ``check_every`` > 1 trades (up to check_every-1) extra cheap
-        # rounds for one fewer agg job per skipped round: labels only move
-        # downward (every update is a least()), so fingerprint equality
-        # across ANY gap of rounds implies the assignment was stable for
-        # the whole gap.
-        if rounds % check_every == 0 or rounds >= max_iter:
-            new_fp = _label_fingerprint(new_labels)
-            if prev_fp is None:  # lazily fingerprint the pre-round state
-                prev_fp = _label_fingerprint(labels)
+            labels = _checkpoint(jumped, labels)
+        if check:
+            new_fp = _label_fingerprint(labels)
             converged = new_fp == prev_fp
-            labels, prev_fp = new_labels, new_fp
+            prev_fp = new_fp
             if converged:
                 break
-        else:
-            labels = new_labels
+    _release(sym)
     out = labels.select(F.col("node"), F.col("label").alias("component"))
     return (out, rounds) if with_rounds else out

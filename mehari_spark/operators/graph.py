@@ -169,9 +169,15 @@ def _checkpoint(df: DataFrame, prev: DataFrame | None) -> DataFrame:
     ``unpersist`` releases nothing."""
     ckpt = df.localCheckpoint(eager=True)
     if prev is not None:
-        with contextlib.suppress(Py4JError):  # session already stopped
-            prev._jdf.queryExecution().logical().rdd().unpersist(False)
+        _release(prev)
     return ckpt
+
+
+def _release(ckpt: DataFrame) -> None:
+    """Drop the blocks of the localCheckpoint ``ckpt``; a frame that is not
+    one (a parquet read-back) or a stopped session is left alone."""
+    with contextlib.suppress(Py4JError):
+        ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _dict_columns(values: dict[int, int]) -> tuple[list[int], list[int]]:

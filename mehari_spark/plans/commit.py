@@ -24,7 +24,7 @@ streams) commits through this module, so the rules below hold everywhere:
   its rename, and ``repair`` finishes one whose destination landed by
   dropping the covered sources. Single files are published by
   ``replace_file`` (a small text file) and ``publish_file`` (one parquet
-  file).
+  file); ``gather`` stages the files a writer's tasks listed as theirs.
 
 Row counts of staged data come from the parquet footers (``staged_rows``),
 never from a Spark read-back. ``step`` is a no-op hook called between swap
@@ -263,6 +263,16 @@ def staged_rows(path: str) -> int:
         pq.read_metadata(f).num_rows
         for f in glob.glob(os.path.join(glob.escape(path), "*.parquet"))
     )
+
+
+def gather(files: list[str], staged: str) -> None:
+    """Move ``files`` into the new staging dir ``staged`` under their base
+    names, for ``swap`` to publish: a writer whose tasks left files in
+    staging stages exactly the files it lists, and no others. No files
+    make no dir (a bucket the input never reached)."""
+    for path in files:
+        os.makedirs(staged, exist_ok=True)
+        os.replace(path, os.path.join(staged, os.path.basename(path)))
 
 
 def swap(

@@ -21,7 +21,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -55,6 +55,11 @@ def load_committed(
     return {int(r["bucket"]) for r in commit.records(out_dir, status="committed")}
 
 
+def bucket_of(key_col: str, n_buckets: int) -> Column:
+    """The bucket of a row: ``pmod(xxhash64(key_col), n_buckets)``."""
+    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
 def write_bucketed(
     df: DataFrame,
     out_dir: str,
@@ -77,9 +82,7 @@ def write_bucketed(
          bucket column is pushed into the plan) and stages them via
          ``partitionBy("_bucket")`` — all buckets in parallel, the upstream
          plan executes exactly once per restart.
-      2. per-bucket commit = ``commit.swap`` + checkpoint row with the
-         row count from the staged footers (cheap, no Spark job) — the
-         Iceberg-append analog.
+      2. ``commit_buckets``: per-bucket ``commit.swap`` + checkpoint row.
 
     Restart skips committed buckets in BOTH phases, so a killed run
     recomputes only the remainder.
@@ -92,9 +95,8 @@ def write_bucketed(
 
     commit.repair(out_dir)
     staging = commit.open_staging(out_dir, "write")
-    bucket_col = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
     t0 = time.time()
-    staged = df.withColumn("_bucket", bucket_col).filter(
+    staged = df.withColumn("_bucket", bucket_of(key_col, n_buckets)).filter(
         F.col("_bucket").isin(remaining)
     )
     if sort_cols:
@@ -102,10 +104,34 @@ def write_bucketed(
     staged.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
     stage_elapsed = time.time() - t0
 
-    for b in remaining:
+    results += commit_buckets(
+        out_dir, run_id, staging, remaining, stage, n_buckets, key_col
+    )
+    shutil.rmtree(staging, ignore_errors=True)
+    write_metrics(
+        out_dir, run_id, stage, {"stage_write_s": round(stage_elapsed, 3)}
+    )
+    return results
+
+
+def commit_buckets(
+    out_dir: str,
+    run_id: str,
+    staging: str,
+    buckets: list[int],
+    stage: str,
+    n_buckets: int,
+    key_col: str = "conv_id",
+) -> list[BucketResult]:
+    """Publish each bucket ``b`` of ``buckets`` from ``<staging>/_bucket=<b>``:
+    ``commit.swap`` into ``bucket=<b>``, then its checkpoint row, with the
+    row count from the staged footers (no Spark job) — the Iceberg-append
+    analog. A bucket the input never reached has no staged dir: 0 rows,
+    still logged, so a restart skips it."""
+    results = []
+    for b in buckets:
         t1 = time.time()
         src = os.path.join(staging, f"_bucket={b}")
-        # a bucket the input never reached has no staged dir: 0 rows
         rows = commit.staged_rows(src)
         if os.path.exists(src):
             commit.swap(src, os.path.join(out_dir, f"bucket={b}"))
@@ -124,10 +150,6 @@ def write_bucketed(
             },
         )
         results.append(BucketResult(b, rows, False, time.time() - t1))
-    shutil.rmtree(staging, ignore_errors=True)
-    write_metrics(
-        out_dir, run_id, stage, {"stage_write_s": round(stage_elapsed, 3)}
-    )
     return results
 
 

@@ -1,5 +1,6 @@
 """Test helpers: order-insensitive DataFrame comparison against the pandas
-oracle, and a counter of the Spark jobs a block launches."""
+oracle, a counter of the Spark jobs a block launches, and the physical
+plan nodes those jobs ran."""
 
 from __future__ import annotations
 
@@ -23,6 +24,29 @@ def spark_jobs(spark):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def sql_plans(spark, job_ids: list[int]) -> dict[int, list[tuple[str, str]]]:
+    """Execution id -> (name, description) of every node of its final
+    physical plan, for each SQL execution that ran one of ``job_ids``, read
+    from the SQL status store (AQE's updates included)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = {}
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        jobs = e.jobs().keySet().iterator()
+        ran = set()
+        while jobs.hasNext():
+            ran.add(int(jobs.next()))
+        if not ran & set(job_ids):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes().iterator()
+        out[e.executionId()] = []
+        while nodes.hasNext():
+            n = nodes.next()
+            out[e.executionId()].append((n.name(), n.desc()))
+    return out
 
 
 def normalize_pdf(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -4,6 +4,7 @@ resume tests — the BASELINE.md acceptance criteria."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -26,6 +27,7 @@ from mehari_spark.operators.coref import connected_components_global
 from mehari_spark.operators.mentions import detect_mentions, resolve_overlaps
 from mehari_spark.operators.triples import assemble_triples
 from mehari_spark.plans.pipeline import partition_for_scan, run_pipeline
+from .helpers import spark_jobs, sql_plans
 
 
 @pytest.fixture(scope="module")
@@ -145,6 +147,28 @@ class TestGlobalCC:
         assert comps == {0}
         assert rounds <= 14, f"pointer jumping broken: {rounds} rounds for n={n}"
 
+    def test_superseded_checkpoints_released(self, spark, monkeypatch):
+        """Each round's localCheckpoint releases the one it supersedes, and
+        the edge relations go when the rounds are done: what a call leaves
+        in block storage does not grow with its round count."""
+        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+        storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+        grown, rounds_seen = [], []
+        for n in (4, 128):
+            edges = spark.createDataFrame(
+                [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+            )
+            before = len(storage())
+            labels, rounds = connected_components_global(
+                edges, max_iter=40, with_rounds=True
+            )
+            grown.append(len(storage()) - before)
+            rounds_seen.append(rounds)
+            assert {r.component for r in labels.collect()} == {0}
+        assert rounds_seen[1] > rounds_seen[0] + 2
+        # the returned labels are the one checkpoint a call keeps
+        assert max(grown) <= 1, grown
+
 
 class TestResume:
     def test_kill_restart_identical(self, spark, turns, tmp_path, monkeypatch):
@@ -186,6 +210,133 @@ class TestResume:
         assert len(buckets) == len(set(buckets)) == 4
 
 
+def _rows(spark, path: str) -> list[tuple]:
+    """Every row of the parquet table at ``path``, sorted (the lineage
+    struct as a tuple)."""
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _committed(table_dir: str) -> list[int]:
+    return sorted(
+        json.loads(line)["bucket"]
+        for line in open(os.path.join(table_dir, "_checkpoints.jsonl"))
+        if '"committed"' in line
+    )
+
+
+class TestOneExchange:
+    def test_fresh_call_is_one_query_with_one_exchange(self, spark, turns, tmp_path):
+        """A fresh call without a KB is one SQL query that shuffles the
+        triples once: no Spark parquet write and no parquet scan (the input
+        is an in-memory frame, so any scan would read back the call's own
+        output). Writing the triples, coref and writing the entities all
+        ride on that one exchange."""
+        df = turns_df(spark, turns)
+        with spark_jobs(spark) as jobs:
+            run_pipeline(spark, df, fixture_patterns(), str(tmp_path), n_buckets=4)
+        plans = sql_plans(spark, jobs)
+        assert len(plans) == 1, plans
+        (names,) = [[name for name, _ in nodes] for nodes in plans.values()]
+        assert names.count("Exchange") == 1, names
+        assert not [n for n in names if "Scan parquet" in n or "Insert" in n], names
+
+
+def _kill_points(n_buckets: int) -> list[tuple[str, str, int]]:
+    """(step point, target table, nth such step) after each triples
+    commit, after each entity commit, and before the freq_kb publish."""
+    n_entity = max(1, n_buckets // 2)
+    return (
+        [("appended", "triples", k) for k in range(1, n_buckets + 1)]
+        + [("appended", "entities", k) for k in range(1, n_entity + 1)]
+        + [("begin", "freq_kb", 1)]
+    )
+
+
+class TestCrashMatrix:
+    """A run killed after each commit step of the pipeline's order
+    (triples buckets, entity buckets, then freq_kb), then restarted, gives
+    the uninterrupted run's tables with one log row per bucket, and the
+    restart never re-extracts a committed bucket."""
+
+    @pytest.fixture(scope="class")
+    def reference(self, spark, turns, tmp_path_factory):
+        from mehari_spark.dictionary import entity_kb_df, predicate_kb_df
+
+        kbs = dict(entity_kb=entity_kb_df(spark), predicate_kb=predicate_kb_df(spark))
+        df = turns_df(spark, turns)
+        ref = {}
+        for n in (4, 5):
+            out = str(tmp_path_factory.mktemp(f"full{n}"))
+            run_pipeline(spark, df, fixture_patterns(), out, run_id="r", n_buckets=n, **kbs)
+            ref[n] = {t: _rows(spark, f"{out}/{t}") for t in ("triples", "entities", "freq_kb")}
+        return df, kbs, ref
+
+    @pytest.mark.parametrize(
+        "n_buckets,kill", [(n, k) for n in (4, 5) for k in _kill_points(n)]
+    )
+    def test_kill_restart(self, spark, reference, tmp_path, monkeypatch, n_buckets, kill):
+        from mehari_spark.plans import commit, pipeline
+        from mehari_spark.plans.lineage import bucket_of
+
+        df, kbs, ref = reference
+        out = str(tmp_path / "run")
+        point, table, nth = kill
+        seen = []
+
+        def crash(p, target):
+            if p == point and os.path.basename(target) == table:
+                seen.append(target)
+                if len(seen) == nth:
+                    raise RuntimeError("injected crash")
+
+        with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected"):
+            m.setattr(commit, "step", crash)
+            run_pipeline(spark, df, fixture_patterns(), out, run_id="r", n_buckets=n_buckets, **kbs)
+        done = set(_committed(f"{out}/triples"))
+
+        extracted = []
+        real = pipeline.extract_triples_fused
+
+        def spy(transcripts, patterns):
+            extracted.append(transcripts)
+            return real(transcripts, patterns)
+
+        monkeypatch.setattr(pipeline, "extract_triples_fused", spy)
+        with spark_jobs(spark) as jobs:
+            metrics = run_pipeline(
+                spark, df, fixture_patterns(), out, run_id="r", n_buckets=n_buckets, **kbs
+            )
+        assert metrics["buckets_skipped"] == len(done)
+        for t in ("triples", "entities", "freq_kb"):
+            assert _rows(spark, f"{out}/{t}") == ref[n_buckets][t], t
+        assert _committed(f"{out}/triples") == list(range(n_buckets))
+        assert _committed(f"{out}/entities") == list(range(max(1, n_buckets // 2)))
+        # the restart extracts only the uncommitted buckets' conversations ...
+        (scanned,) = extracted
+        again = scanned.filter(bucket_of("conv_id", n_buckets).isin(sorted(done)))
+        assert again.count() == 0
+        # ... and reads what the entities and freq_kb still need back in
+        # the same job as the rest
+        plans = sql_plans(spark, jobs)
+        assert len(plans) == 1, plans
+        names = [name for nodes in plans.values() for name, _ in nodes]
+        assert names.count("Exchange") == 1, names
+
+    def test_rerun_replaces_a_stale_freq_kb(self, spark, reference, tmp_path):
+        """A rerun over an out_dir whose freq_kb holds other part files
+        (a Spark writer's) leaves only the republished one."""
+        df, kbs, ref = reference
+        out = str(tmp_path / "stale")
+        spark.range(3).selectExpr("id AS subj_id", "id AS subj_freq").repartition(3).write.parquet(
+            f"{out}/freq_kb"
+        )
+        for _ in range(2):
+            run_pipeline(spark, df, fixture_patterns(), out, run_id="r", n_buckets=4, **kbs)
+            assert _rows(spark, f"{out}/freq_kb") == ref[4]["freq_kb"]
+            assert len(glob.glob(f"{out}/freq_kb/*.parquet")) == 1
+            assert [n for n in os.listdir(out) if n.startswith("_staging")] == []
+
+
 class TestPipelineMetrics:
     def test_match_table_cache_metrics_written(self, spark, turns, tmp_path):
         """run_pipeline reports its match-table cache traffic in
@@ -209,6 +360,10 @@ class TestPipelineMetrics:
                 "match_table_hits",
                 "entities_written",
                 "entities_s",
+                "triples_files_written",
+                "entities_files_written",
+                "kernel_write_s",
+                "kernel_coref_s",
             ):
                 assert written[name] == metrics[name], name
             assert metrics["triples_written"] == (

@@ -217,3 +217,102 @@ def test_ppm_codec_roundtrip_any_seed(seed):
     assert parsed is not None
     w, h, _r, _g, _b = parsed
     assert (w, h) == (8 + seed % 16, 6 + seed % 10)
+
+
+N_T, N_E = 3, 2  # an entity bucket is not the triples bucket mod 2
+
+
+def _stage_batches(convs, loops, rnd, n_batches) -> tuple[list[pa.RecordBatch], list]:
+    """Tagged triple rows of the conversations, shuffled and cut into
+    ``n_batches`` batches (some may be empty); conversation ``i`` has
+    triples bucket ``i % N_T`` (null when committed) and entity bucket
+    ``i % N_E`` (null when committed). ``loops`` adds a conversation of
+    self-loops only."""
+    rows = []
+    groups = list(convs) + ([([(x, x) for x in loops], False, False)] if loops else [])
+    for i, (edges, t_done, e_done) in enumerate(groups):
+        for s, o in edges:
+            tb = None if t_done else i % N_T
+            eb = None if e_done else i % N_E
+            rows.append((f"c{i}", len(rows), s, 7, o, tb, eb))
+    rnd.shuffle(rows)
+    cuts = sorted(rnd.randint(0, len(rows)) for _ in range(n_batches - 1))
+    names = ["conv_id", "turn_idx", "subj_id", "pred_id", "obj_id", "_tb", "_eb"]
+    types = [pa.string(), pa.int32(), pa.int64(), pa.int64(), pa.int64(), pa.int32(), pa.int32()]
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([r[k] for r in chunk], t) for k, t in enumerate(types)], names=names
+        )
+        for chunk in (rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)]))
+    ]
+    return batches, rows
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    convs=st.lists(
+        st.tuples(st.lists(st.tuples(IDS, IDS), max_size=8), st.booleans(), st.booleans()),
+        max_size=5,
+    ),
+    loops=st.lists(IDS, max_size=3),
+    rnd=st.randoms(use_true_random=False),
+    n_batches=st.integers(1, 4),
+)
+def test_stage_partition_publishes_each_row_once(convs, loops, rnd, n_batches):
+    """The staging kernel over one partition, whatever its batch cut and
+    row order: the published triples buckets hold exactly their input
+    rows, the entity buckets the union-find clusters, freq_kb the subject
+    counts of every row, and a second attempt's files are never
+    published."""
+    import glob
+    import os
+    import tempfile
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from mehari_spark.kernels.stage import Staging, stage_partition
+    from mehari_spark.plans.pipeline import FREQ_SPARK_SCHEMA, publish_freq, publish_manifest
+
+    batches, rows = _stage_batches(convs, loops, rnd, n_batches)
+    with tempfile.TemporaryDirectory() as root:
+        t_dir, e_dir = os.path.join(root, "triples"), os.path.join(root, "entities")
+        staging = Staging(
+            triples=os.path.join(t_dir, "_staging_write_t"),
+            entities=os.path.join(e_dir, "_staging_write_e"),
+            freq=os.path.join(root, "_staging_freq_f"),
+            columns=("conv_id", "turn_idx", "subj_id", "pred_id", "obj_id"),
+            spark_schemas={"triples": "{}", "entities": "{}", "freq_kb": FREQ_SPARK_SCHEMA.json()},
+        )
+        first = stage_partition(iter(batches), staging, "00000-1").to_pylist()
+        stage_partition(iter(batches), staging, "00000-2")  # a second attempt
+        publish_manifest(first, "triples", t_dir, staging.triples, "r", list(range(N_T)), N_T)
+        publish_manifest(first, "entities", e_dir, staging.entities, "r", list(range(N_E)), N_E)
+        publish_freq(first, staging.freq, os.path.join(root, "freq_kb"))
+
+        published = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        assert all("00000-1" in p or "freq_kb" in p for p in published)
+        assert not [p for p in published if "00000-2" in p or "_staging" in p]
+
+        def read(table_dir, b):
+            files = glob.glob(os.path.join(table_dir, f"bucket={b}", "*.parquet"))
+            return [tuple(r.values()) for f in files for r in pq.read_table(f).to_pylist()]
+
+        for b in range(N_T):
+            want = sorted(r[:5] for r in rows if r[5] == b)
+            assert sorted(read(t_dir, b)) == want
+        want_clusters = {
+            (f"c{i}", node): label
+            for i, (edges, _t, e_done) in enumerate(convs)
+            if not e_done
+            for node, label in connected_components([e for e in edges if e[0] != e[1]]).items()
+        }
+        got = {}
+        for b in range(N_E):
+            for conv, node, label in read(e_dir, b):
+                assert int(conv[1:]) % N_E == b
+                got[(conv, node)] = label
+        assert got == want_clusters
+        freq = pq.read_table(os.path.join(root, "freq_kb")).to_pylist()
+        assert {r["subj_id"]: r["subj_freq"] for r in freq} == Counter(r[2] for r in rows)
+        assert len(freq) == len({r[2] for r in rows})
