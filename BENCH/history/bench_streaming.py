@@ -17,7 +17,7 @@ paces micro-batches, so the measurement covers steady-state trigger
 processing (state lookups + sink commits), not file arrival. One JSON
 line on stdout.
 
-Usage: python bench_streaming.py
+Usage: python BENCH/history/bench_streaming.py
 Env:   SPARK_GRAFT_CPUS (32), STREAM_DOC_REPLICATE (8 -> 40k docs),
        MEHARI_SPARK_LOCAL_DIR
 """
@@ -31,7 +31,7 @@ import sys
 import tempfile
 import time
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, _REPO)
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 

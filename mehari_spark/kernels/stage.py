@@ -76,36 +76,65 @@ def task_file(root: str, task: str, bucket: int | None = None) -> str:
     return os.path.join(root, f"_task={task}", sub, f"part-{task}.parquet")
 
 
+# rows a bucket file buffers before it writes them as one row group; a
+# bucket file of fewer rows is one row group, as Spark's writer makes it
+ROW_GROUP_ROWS = 1 << 20
+
+
+class _BucketFile:
+    """One bucket's parquet file. Its rows are buffered and written at most
+    ``ROW_GROUP_ROWS`` to a row group."""
+
+    def __init__(self, path: str, schema: pa.Schema) -> None:
+        self.writer = pq.ParquetWriter(path, schema)
+        self.path, self.rows, self.seconds = path, 0, 0.0
+        self.pending: list[pa.Table] = []
+        self.pending_rows = 0
+
+    def write(self, rows: pa.Table) -> None:
+        if self.pending_rows + rows.num_rows > ROW_GROUP_ROWS:
+            self.flush()
+        self.pending.append(rows)
+        self.pending_rows += rows.num_rows
+        self.rows += rows.num_rows
+
+    def flush(self) -> None:
+        if self.pending:
+            self.writer.write_table(pa.concat_tables(self.pending), ROW_GROUP_ROWS)
+            self.pending, self.pending_rows = [], 0
+
+
 class _BucketWriters:
-    """One streaming parquet writer per bucket of one table, opened at the
-    bucket's first rows."""
+    """One ``_BucketFile`` per bucket of one table, opened at the bucket's
+    first rows."""
 
     def __init__(self, table: str, root: str, task: str, spark_schema: str) -> None:
         self.table, self.root, self.task = table, root, task
         self.meta = {SPARK_SCHEMA_KEY: spark_schema}
-        self.open: dict[int | None, list] = {}  # bucket -> [writer, path, rows, s]
+        self.open: dict[int | None, _BucketFile] = {}
 
     def write(self, bucket: int | None, rows: pa.RecordBatch | pa.Table) -> None:
         t0 = time.perf_counter()
-        entry = self.open.get(bucket)
-        if entry is None:
+        f = self.open.get(bucket)
+        if f is None:
             path = task_file(self.root, self.task, bucket)
             os.makedirs(os.path.dirname(path), exist_ok=True)
-            writer = pq.ParquetWriter(path, rows.schema.with_metadata(self.meta))
-            entry = self.open[bucket] = [writer, path, 0, 0.0]
-        entry[0].write(rows)
-        entry[2] += rows.num_rows
-        entry[3] += time.perf_counter() - t0
+            f = self.open[bucket] = _BucketFile(path, rows.schema.with_metadata(self.meta))
+        if isinstance(rows, pa.RecordBatch):
+            rows = pa.Table.from_batches([rows])
+        f.write(rows)
+        f.seconds += time.perf_counter() - t0
 
     def close(self) -> list[tuple]:
         """Close every open writer; -> one manifest row per file."""
         out = []
         while self.open:
-            bucket, (writer, path, rows, seconds) = self.open.popitem()
+            bucket, f = self.open.popitem()
             t0 = time.perf_counter()
-            writer.close()
-            seconds += time.perf_counter() - t0
-            out.append((self.task, self.table, bucket, path, rows, seconds))
+            f.flush()
+            f.writer.close()
+            f.seconds += time.perf_counter() - t0
+            out.append((self.task, self.table, bucket, f.path, f.rows, f.seconds))
         return out
 
 

@@ -143,13 +143,14 @@ def connected_components_global(
     import json
     import os
 
-    from .graph import _checkpoint, _fits_one_task, _one_task, _release
+    from ..plans.stagecache import checkpoint, release
+    from .graph import _fits_one_task, _one_task
 
     spark = edges.sparkSession
     # materialize the (possibly expensive) upstream edge pipeline ONCE
     # before mirroring — a union of two selects over the same lineage would
     # execute the whole upstream plan twice in one job
-    ed = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), None)
+    ed = checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     # SMALL-GRAPH FAST PATH: one in-memory pass of the numpy components
     # kernel beats O(log n) synchronous distributed rounds whose per-round
     # driver/stage latency dominates at this size. Labels are identical by
@@ -160,7 +161,7 @@ def connected_components_global(
         # materialized once (same contract as the distributed path's eager
         # checkpoints): otherwise every downstream action would re-collect
         # the edges into one task and re-run the kernel
-        out = _checkpoint(
+        out = checkpoint(
             _one_task(
                 ed.select(F.col("u").alias("src"), F.col("v").alias("dst")),
                 lambda u, v: components(np.zeros(len(u), np.int64), u, v)[1:],
@@ -169,7 +170,7 @@ def connected_components_global(
             ed,
         )
         return (out, 1) if with_rounds else out
-    sym = _checkpoint(
+    sym = checkpoint(
         ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
         ed,
     )
@@ -182,7 +183,7 @@ def connected_components_global(
     cur_par = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
     parts = max(4, min(cur_par, n_edges // 100_000 + 1))
     if parts < sym.rdd.getNumPartitions():
-        sym = _checkpoint(sym.repartition(parts, "u"), sym)
+        sym = checkpoint(sym.repartition(parts, "u"), sym)
 
     rounds = 0
     labels = None
@@ -196,7 +197,7 @@ def connected_components_global(
         graph_id = {"edge_fp": int(fp) if fp is not None else 0, "n_edges": n_edges}
         labels, rounds = load_cc_checkpoint(spark, checkpoint_dir, graph_id)
     if labels is None:
-        labels = _checkpoint(
+        labels = checkpoint(
             sym.groupBy("u")
             .agg(F.min("v").alias("mn"))
             .select(F.col("u").alias("node"), F.least("u", "mn").alias("label")),
@@ -261,16 +262,16 @@ def connected_components_global(
             for old in kept[:-2]:
                 shutil.rmtree(os.path.join(checkpoint_dir, old), ignore_errors=True)
             durable_labels = spark.read.parquet(rd)
-            _release(labels)
+            release(labels)
             labels = durable_labels
         else:
-            labels = _checkpoint(jumped, labels)
+            labels = checkpoint(jumped, labels)
         if check:
             new_fp = _label_fingerprint(labels)
             converged = new_fp == prev_fp
             prev_fp = new_fp
             if converged:
                 break
-    _release(sym)
+    release(sym)
     out = labels.select(F.col("node"), F.col("label").alias("component"))
     return (out, rounds) if with_rounds else out

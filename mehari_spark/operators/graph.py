@@ -22,8 +22,8 @@ Shared skeleton of the iterative operators:
   distributed rounds. The kernels mirror the rounds exactly, so the size
   gate changes the plan, never the answer. Global connected components
   (``coref.connected_components_global``) uses the same gate and runner.
-- ``_checkpoint`` is the round loops' lineage cut: eager localCheckpoint,
-  previous round's blocks released.
+- ``_checkpoint`` (``plans/stagecache.checkpoint``) is the round loops'
+  lineage cut: eager localCheckpoint, previous round's blocks released.
 
 Scale notes (100 TB triple table):
 - ``entity_degree`` is ONE shuffle on entity_id over a union-all incidence
@@ -45,15 +45,14 @@ Scale notes (100 TB triple table):
 
 from __future__ import annotations
 
-import contextlib
 from typing import Callable, Iterable
 
 import numpy as np
 import pyarrow as pa
-from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..plans.stagecache import checkpoint as _checkpoint
 from ..plans.stagecache import materialize_once
 
 # Graphs with at most this many edges run an iterative operator's kernel
@@ -156,28 +155,6 @@ def _one_task(
 
     ddl = ", ".join(f"{f.name} long" for f in schema)
     return edges.select("src", "dst").coalesce(1).mapInArrow(run, schema=ddl)
-
-
-def _checkpoint(df: DataFrame, prev: DataFrame | None) -> DataFrame:
-    """Eager localCheckpoint of ``df`` — cuts a round loop's lineage so plan
-    size stays O(1) in the round count — releasing the blocks of the
-    previous round's checkpoint ``prev``, which nothing references any
-    more.
-
-    The blocks belong to the checkpointed RDD under ``prev``'s LogicalRDD
-    plan; ``prev.rdd`` would be a fresh Python-side RDD over them whose
-    ``unpersist`` releases nothing."""
-    ckpt = df.localCheckpoint(eager=True)
-    if prev is not None:
-        _release(prev)
-    return ckpt
-
-
-def _release(ckpt: DataFrame) -> None:
-    """Drop the blocks of the localCheckpoint ``ckpt``; a frame that is not
-    one (a parquet read-back) or a stopped session is left alone."""
-    with contextlib.suppress(Py4JError):
-        ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _dict_columns(values: dict[int, int]) -> tuple[list[int], list[int]]:

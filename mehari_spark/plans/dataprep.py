@@ -171,6 +171,7 @@ def run_dataprep(
     content-independent, so surviving representatives sample
     independently)."""
     from .lineage import write_bucketed, write_metrics
+    from .stagecache import release
 
     verdict = curate_documents(
         docs, near_dup_threshold,
@@ -223,5 +224,6 @@ def run_dataprep(
         counters["n_mixture_rows"] = spark.read.parquet(
             os.path.join(out_dir, "mixture")
         ).count()
+    release(verdict)
     write_metrics(out_dir, run_id, "dataprep", counters)
     return counters

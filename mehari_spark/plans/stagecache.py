@@ -13,6 +13,10 @@ real stage sharing and is fair to measure; reuse ACROSS repetitions of the
 same run would measure the cache, not the code — bench.py calls
 ``clear_shared_stages()`` between repetitions so every rep is cold.
 
+``checkpoint``/``release`` are the one lineage cut of the round loops
+(graph, coref) and the per-epoch stream stages: an eager
+``localCheckpoint`` whose blocks are dropped once nothing reads them.
+
 Keys include the SparkContext applicationId: a cached DataFrame from a
 stopped session is unusable, so entries from other app ids are evicted on
 first access from a new session.
@@ -29,6 +33,7 @@ from __future__ import annotations
 import contextlib
 from typing import Callable, Iterator
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
@@ -125,3 +130,25 @@ def clear_shared_stages() -> None:
     repetitions so measurements stay cold)."""
     for k in list(_CACHE):
         _evict(k)
+
+
+def checkpoint(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
+    """Eager localCheckpoint of ``df`` — cuts a round loop's lineage so plan
+    size stays O(1) in the round count — releasing the blocks of the
+    previous round's checkpoint ``prev``, which nothing references any
+    more."""
+    ckpt = df.localCheckpoint(eager=True)
+    if prev is not None:
+        release(prev)
+    return ckpt
+
+
+def release(ckpt: DataFrame) -> None:
+    """Drop the blocks of the localCheckpoint ``ckpt``; a frame that is not
+    one (a parquet read-back) or a stopped session is left alone.
+
+    The blocks belong to the checkpointed RDD under ``ckpt``'s LogicalRDD
+    plan; ``ckpt.rdd`` would be a fresh Python-side RDD over them whose
+    ``unpersist`` releases nothing."""
+    with contextlib.suppress(Py4JError):
+        ckpt._jdf.queryExecution().logical().rdd().unpersist(False)

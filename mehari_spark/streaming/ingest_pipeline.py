@@ -11,7 +11,7 @@ same discipline as chaining through Kafka topics or Delta tables):
 - **Stage 1** (one streaming query): quality-gate every arriving document
   (stateless Catalyst bitmask, definitionally identical to the batch gate
   via ``textstats.quality_reasons``), then keep-first EXACT dedup with
-  ``applyInPandasWithState`` keyed by content hash (tiny
+  ``dedup_stream.keep_first`` keyed by content hash (tiny
   (first_doc_id, n_seen) state per distinct document — the cheap state
   that shrinks the corpus before similarity work). Quality-failed docs are
   audited but never claim their hash (batch semantics: dedup runs over the
@@ -44,74 +44,20 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.textstats import quality_reasons
 from ..plans.commit import publish_file
+from .dedup_stream import keep_first
+from .epochs import run_stream, write_epoch_dir
 from .neardup_stream import read_verdicts as read_neardup_verdicts
 from .neardup_stream import stream_neardup_dedup
 
 DOCS_DDL = "doc_id long, lang string, text string"
-_STAGE1_OUT_DDL = (
-    "doc_id long, lang string, text string, filter_reasons int,"
-    " dup_of long, is_new boolean"
-)
-_STAGE1_STATE_DDL = "first_doc_id long, n_seen long"
 AUDIT_DDL = "doc_id long, filter_reasons int, dup_of long, is_new boolean"
-
-
-def _stage1_update(key, pdf_iter, state: GroupState):
-    """One content-hash group per trigger: quality-failed rows pass
-    through audited (never claiming the hash); the first quality-passing
-    arrival of an unseen hash is kept, later ones are exact dups of the
-    stored first_doc_id."""
-    first, n = state.get if state.exists else (None, 0)
-    rows = []
-    for pdf in pdf_iter:
-        rows.extend(
-            zip(
-                pdf["doc_id"].tolist(),
-                pdf["lang"].tolist(),
-                pdf["text"].tolist(),
-                pdf["filter_reasons"].tolist(),
-            )
-        )
-    rows.sort(key=lambda r: r[0])  # keep-first needs in-trigger id order
-    out = {k: [] for k in ("doc_id", "lang", "text", "filter_reasons", "dup_of", "is_new")}
-    for doc_id, lang, text, reasons in rows:
-        dup_of = None
-        is_new = False
-        if reasons == 0:
-            if first is None:
-                first = doc_id
-                is_new = True
-            elif doc_id == first:
-                is_new = True  # replayed first copy stays the keeper
-            else:
-                dup_of = first
-            n += 1
-        out["doc_id"].append(doc_id)
-        out["lang"].append(lang)
-        out["text"].append(text)
-        out["filter_reasons"].append(reasons)
-        out["dup_of"].append(dup_of)
-        out["is_new"].append(is_new)
-    if first is not None:
-        state.update((int(first), int(n)))
-    yield pd.DataFrame(
-        {
-            "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-            "lang": pd.Series(out["lang"], dtype="object"),
-            "text": pd.Series(out["text"], dtype="object"),
-            "filter_reasons": pd.Series(out["filter_reasons"], dtype="int32"),
-            "dup_of": pd.Series(out["dup_of"], dtype="object"),
-            "is_new": pd.Series(out["is_new"], dtype="bool"),
-        }
-    )
+STAGE = "ingest_stage1"
 
 
 def stream_ingest_pipeline(
@@ -138,54 +84,41 @@ def stream_ingest_pipeline(
     # must exist before stage 1 has produced anything
     os.makedirs(boundary_dir, exist_ok=True)
 
-    stream = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-        .select(
-            "doc_id",
-            "lang",
-            "text",
-            quality_reasons(F.col("text")).alias("filter_reasons"),
-            F.md5("text").alias("text_hash"),
+    def plan(docs: DataFrame) -> DataFrame:
+        return keep_first(
+            docs.select(
+                "doc_id",
+                "lang",
+                "text",
+                quality_reasons(F.col("text")).alias("filter_reasons"),
+                F.md5("text").alias("text_hash"),
+            )
         )
-    )
-    stage1 = stream.groupBy("text_hash").applyInPandasWithState(
-        _stage1_update,
-        outputStructType=_STAGE1_OUT_DDL,
-        stateStructType=_STAGE1_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
-    def sink1(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write(batch_df: DataFrame, epoch_id: int) -> dict | None:
         batch_df.persist()
         try:
-            batch_df.select(
-                "doc_id", "filter_reasons", "dup_of", "is_new"
-            ).write.mode("overwrite").parquet(
-                os.path.join(audit_dir, f"epoch={epoch_id}")
+            counts = write_epoch_dir(
+                batch_df.select("doc_id", "filter_reasons", "dup_of", "is_new"),
+                audit_dir,
+                epoch_id,
             )
-            # a retried epoch rewrites the SAME file with the same
-            # deterministic content, so the stage-2 file source (which
-            # tracks paths) never ingests an epoch twice — the
-            # cross-checkpoint exactly-once seam
-            publish_file(
-                batch_df.filter("is_new").select("doc_id", "lang", "text"),
-                os.path.join(boundary_dir, f"epoch-{epoch_id:08d}.parquet"),
-            )
+            if counts is not None:
+                # a retried epoch rewrites the SAME file with the same
+                # deterministic content, so the stage-2 file source (which
+                # tracks paths) never ingests an epoch twice — the
+                # cross-checkpoint exactly-once seam
+                publish_file(
+                    batch_df.filter("is_new").select("doc_id", "lang", "text"),
+                    os.path.join(boundary_dir, f"epoch-{epoch_id:08d}.parquet"),
+                )
+            return counts
         finally:
             batch_df.unpersist()
 
-    q1 = (
-        stage1.writeStream.outputMode("update")
-        .foreachBatch(sink1)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "stage1")
-        )
-        .start()
+    q1 = run_stream(
+        spark, input_dir, DOCS_DDL, write, os.path.join(checkpoint_dir, "stage1"),
+        out_dir, STAGE, max_files_per_trigger, plan=plan, output_mode="update",
     )
     # stage 2 sources the boundary dir; its glob re-evaluates per trigger,
     # so files stage 1 writes later are picked up as they appear

@@ -18,9 +18,8 @@ Exactly-once, by TWO independent mechanisms (either alone suffices):
   order means re-applying an already-applied epoch leaves every bucket's
   row set unchanged, so a foreachBatch retry after a crash between the
   merge and Spark's offset commit cannot corrupt the table;
-- each completed epoch appends an ``epoch_done`` row to the table's
-  checkpoint log (``commit.mark_epoch``), and a replayed epoch id returns
-  early — the audit trail shows exactly one application per epoch.
+- the epoch runner (streaming/epochs.py) logs each completed epoch in
+  the table's checkpoint log and skips a replayed one.
 
 Scale notes (100 TB): extraction is the zero-shuffle fused kernel per
 micro-batch (narrow map over arriving files); the within-batch reduction
@@ -33,8 +32,6 @@ stateless (no applyInPandasWithState store to size or TTL).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -43,6 +40,7 @@ from ..operators.triples import extract_triples_fused
 from ..plans import commit
 from ..plans.lineage import read_bucketed
 from ..plans.merge import merge_into_bucketed
+from .epochs import run_stream
 
 TURNS_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -115,26 +113,10 @@ def stream_kg_maintain(
     merge -> refresh -> epoch_done so a crash replays the idempotent
     pair and the audit row always implies consistent partials.
 
-    Always-on scale discipline: the applied-epoch audit set is read from
-    the commit log ONCE here (query start) and maintained in memory — a
-    replayed epoch after a crash restarts the query, re-reading the log
-    anyway, so per-epoch cost never re-parses the log. Every
-    ``commit.ROTATE_EVERY`` applied epochs the table's commit log is
+    Every ``commit.ROTATE_EVERY`` applied epochs the table's commit log is
     rotated (``commit.compact_log``): the epoch_done rows collapse to one
     watermark row and superseded bucket-commit rows drop, so the log
     stays O(buckets + scopes), not O(stream age)."""
-    turns = (
-        spark.readStream.schema(TURNS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
-
-    scope = os.path.abspath(checkpoint_dir)
-    # ONE log read per query lifetime (What's-wrong #1, round 6); the
-    # tracker (watermark + sparse post-gap set) keeps the closure's
-    # memory O(gaps), not O(stream age) — round-7 ADVICE finding.
-    applied = commit.epoch_tracker(table_dir, STAGE, scope)
-
     views = list(maintain_views or [])
     if maintain_degree:
         from ..plans.incremental import DEGREE_VIEW
@@ -142,9 +124,7 @@ def stream_kg_maintain(
         if all(v.name != DEGREE_VIEW.name for v in views):
             views.append(DEGREE_VIEW)
 
-    def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if int(epoch_id) in applied:
-            return  # replayed epoch: already fully applied
+    def write(batch_df: DataFrame, epoch_id: int) -> dict:
         updates = extract_batch_updates(batch_df, patterns)
         res = merge_into_bucketed(
             spark,
@@ -161,20 +141,15 @@ def stream_kg_maintain(
 
             for v in views:
                 refresh_partials(spark, table_dir, res["touched_buckets"], v)
-        commit.mark_epoch(
-            table_dir, STAGE, scope, epoch_id, applied,
-            touched_buckets=res["touched_buckets"],
-        )
+        return {
+            "touched_buckets": len(res["touched_buckets"]),
+            "rows_after": sum(res["rows_after"].values()),
+        }
 
-    writer = turns.writeStream.foreachBatch(apply_epoch).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        spark, input_dir, TURNS_DDL, write, checkpoint_dir, table_dir, STAGE,
+        max_files_per_trigger, available_now=available_now,
     )
-    # availableNow drains the current backlog and terminates (catch-up /
-    # cron shape); otherwise the default ASAP micro-batch trigger follows
-    # arrivals until stopped (always-on ingest shape) — same epoch semantics
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_kg_current(spark: SparkSession, table_dir: str) -> DataFrame:

@@ -1,21 +1,17 @@
 """Streaming NEAR-DUP (MinHash-LSH) dedup: keep-first similarity dedup at
-ingest — the streaming twin of the batch ``minhash_lsh_pairs`` path.
-
-Batch near-dup dedup (operators/dedup.py:minhash_lsh_pairs) re-scans the
-whole corpus; a 100 TB ingest pipeline dedups continuously instead. This
-operator extends the exact-dedup keep-first discipline
-(streaming/dedup_stream.py, reference seen-keys analog db/mod.rs:208-309)
-from equality to similarity:
+ingest — the streaming twin of the batch ``minhash_lsh_pairs`` path,
+extending the exact keep-first discipline (dedup_stream.py; mehari's
+seen-keys analog db/mod.rs:208-309) from equality to similarity:
 
 - A stateless Arrow stage computes, per arriving document, the SAME MinHash
-  band keys as the batch path (identical kernels/minhash.py parameters:
-  num_perm, bands, seed) plus a per-document payload (see state modes).
+  band keys as the batch path (kernels/minhash.py: num_perm, bands, seed)
+  plus a per-document payload (see state modes).
 - ``applyInPandasWithState`` keyed by (band_idx, band_key): state is the
   set of documents ever seen in that band bucket. Each arriving document
-  is re-ranked against the bucket's seen set; every arrival is then ADDED
-  to state — dropped documents stay in the seen set, which is what makes
-  verdicts transitive-chain-correct (B dropped for A still catches C ~ B).
-- The foreachBatch sink folds a document's per-band verdicts (all emitted
+  is re-ranked against the bucket's seen set and then ADDED to it —
+  dropped documents stay in the seen set, which keeps verdicts
+  transitive-chain-correct (B dropped for A still catches C ~ B).
+- The per-epoch write folds a document's per-band verdicts (all emitted
   in its arrival trigger) into one keep/drop row: dup_of = min matching
   seen doc across bands, NULL = kept. Epoch-dir overwrite makes replays
   idempotent; state commits with the checkpoint, so keep-first holds across
@@ -24,51 +20,34 @@ from equality to similarity:
 STATE MODES (the 100 TB knob):
 
 - ``state_mode="tokens"`` — state stores each doc's hashed distinct-token
-  array; re-rank is EXACT token-set Jaccard (the batch path's re-rank,
-  incremental). Verdict-identical to batch, but state grows with corpus
-  TEXT volume: O(docs x bands x tokens).
+  array; re-rank is EXACT token-set Jaccard. Verdict-identical to batch,
+  but state grows with corpus TEXT volume: O(docs x bands x tokens).
 - ``state_mode="signature"`` — BOUNDED state: per doc/band at most
-  num_perm longs + a 2-long header (~1 KB at 128 perms). Adaptive
-  payload: a doc with <= num_perm distinct tokens stores its EXACT
-  token-hash set (no larger than the signature would be — short sets
-  are where estimation is least reliable AND where exact is free), a
-  longer doc stores the num_perm MinHash signature. Exact-vs-exact
-  re-ranks are exact Jaccard; any comparison involving a signature uses
-  the BAND-EXCLUDED agreement estimator: the fraction of agreeing
-  positions OUTSIDE this bucket's own band. Conditioning on a band
-  collision forces that band's rows equal, which inflates the naive
-  all-positions estimator by ~(1-J)/bands (measured +0.030 at J~0.8 on
-  the demo corpus, the previously-documented "tiny-set bias" — it was
-  SELECTION bias, not hash-family bias); excluding the colliding band
-  restores an unbiased estimate (measured residual +0.007, the
-  second-order multi-band-collision term) with std
-  sqrt(J(1-J)/(num_perm - num_perm/bands)) ~ 0.02 at J=0.95. A
-  stored-size header also lets every comparison run the same
-  min/max-size prefilter as the batch path. This is the reference
-  seen-KEYS discipline — constant-bounded state per key, never
-  unbounded payloads (db/mod.rs:208-309) — and the mode that holds at
-  100 TB. Verdicts agree with batch everywhere short docs are involved
-  (exact) and wherever |J - threshold| clears a few estimator sigma for
-  long ones; sig-vs-sig pairs within ~2 sigma of the threshold may
-  still flip (tests pin exact agreement on the sf0.001 demo corpus —
-  all-short, fully exact — and on a margin-clear long-doc corpus).
+  num_perm longs + a 2-long header (~1 KB at 128 perms). A doc with <=
+  num_perm distinct tokens stores its EXACT token-hash set, a longer doc
+  its MinHash signature. Exact-vs-exact re-ranks are exact Jaccard; any
+  comparison involving a signature uses the BAND-EXCLUDED agreement
+  estimator: the fraction of agreeing positions OUTSIDE this bucket's
+  band. A band collision forces that band's rows equal, which inflates
+  the all-positions estimator by ~(1-J)/bands (measured +0.030 at J~0.8);
+  excluding the band leaves a measured residual of +0.007 and std
+  sqrt(J(1-J)/(num_perm - num_perm/bands)) ~ 0.02 at J=0.95. The size
+  header runs the batch path's min/max-size prefilter. Verdicts agree
+  with batch wherever short docs are involved and wherever |J -
+  threshold| clears a few sigma; tests pin agreement on the all-short
+  sf0.001 corpus and on a margin-clear long-doc corpus.
 
 STATE TTL (``state_ttl_ms``): bounds the dedup horizon. Buckets idle
 longer than the TTL are purged (ProcessingTimeTimeout — purge fires on
 the first trigger after expiry), after which a new near-dup of a
-forgotten document is KEPT. Unset = unbounded horizon (exact keep-first
-forever, state O(distinct buckets)).
+forgotten document is KEPT. Unset = unbounded horizon.
 
-ARRIVAL-ORDER SEMANTICS: a document is dropped iff ANY already-seen
-document in one of its band buckets matches (dup_of = the smallest such
-id) — so the KEPT set is near-dup-free under any arrival order, and
-verdicts are keep-FIRST-ARRIVAL. Batch ``minhash_lsh_pairs`` equality
-(dropped set == {doc_b}) additionally requires the standard monotone
-ingest discipline: feed chunks in doc_id order (sequentially written
-files — FileStreamSource orders files by modification time with
-arbitrary ties, so a pre-written directory of unordered files has no
-order guarantee); within a trigger the operator itself processes rows in
-doc_id order.
+ARRIVAL ORDER: a document is dropped iff ANY already-seen document in one
+of its band buckets matches (dup_of = the smallest such id), so the KEPT
+set is near-dup-free under any arrival order (keep-FIRST-ARRIVAL). Batch
+equality (dropped set == {doc_b} of ``minhash_lsh_pairs``) also needs
+chunks fed in doc_id order (streaming/replay.py); within a trigger the
+operator processes rows in doc_id order.
 """
 
 from __future__ import annotations
@@ -84,12 +63,16 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..kernels.minhash import band_keys, hash_tokens, minhash_signature, perm_params
+from .epochs import run_stream, write_epoch_dir
+# the runner's per-epoch state metric; it measures this stream's state modes
+from .epochs import state_store_bytes  # noqa: F401
 
 DOCS_DDL = "doc_id long, lang string, text string"
 BAND_DDL = "doc_id long, band_idx int, band_key long, payload array<long>"
 VERDICT_DDL = "doc_id long, band_idx int, band_key long, dup_of long"
 STATE_DDL = "ids array<long>, payloads array<array<long>>"
 OUT_DDL = "doc_id long, dup_of long, is_new boolean"
+STAGE = "neardup_stream"
 
 
 # payload layout (state + wire): [tag, n_distinct, *data]
@@ -310,39 +293,31 @@ def stream_neardup_dedup(
             "always-on and stop() explicitly"
         )
     signature_state = state_mode == "signature"
-    stream = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-        .select("doc_id", "text")
-    )
-    band_stream = stream.mapInPandas(
-        lambda it: _band_rows(it, num_perm, bands, seed, signature_state),
-        schema=BAND_DDL,
-    )
-    verdicts = band_stream.groupBy("band_idx", "band_key").applyInPandasWithState(
-        _make_bucket_update(threshold, state_ttl_ms, num_perm, bands, seed),
-        outputStructType=VERDICT_DDL,
-        stateStructType=STATE_DDL,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
 
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        # TTL queries run ~continuous timer-evaluation batches that carry
-        # no verdicts; writing those would accrete unbounded empty
-        # epoch=N dirs that read_verdicts' glob must then enumerate —
-        # skip them before any write happens
-        if batch_df.isEmpty():
-            return
+    def plan(docs: DataFrame) -> DataFrame:
+        bands_df = docs.select("doc_id", "text").mapInPandas(
+            lambda it: _band_rows(it, num_perm, bands, seed, signature_state),
+            schema=BAND_DDL,
+        )
+        return bands_df.groupBy("band_idx", "band_key").applyInPandasWithState(
+            _make_bucket_update(threshold, state_ttl_ms, num_perm, bands, seed),
+            outputStructType=VERDICT_DDL,
+            stateStructType=STATE_DDL,
+            outputMode="update",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if state_ttl_ms is not None
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
+
+    def write(batch_df: DataFrame, epoch_id: int) -> dict | None:
         # all `bands` verdicts for a document arrive in its own trigger:
         # fold them here (min matching seen doc across bands); the
         # stateful operator never re-emits old documents, so each document
-        # lands in exactly one epoch dir and replays overwrite idempotently
+        # lands in exactly one epoch dir. TTL queries run ~continuous
+        # timer batches that carry no verdicts: they leave no dir and log
+        # nothing
         folded = (
             batch_df.groupBy("doc_id")
             .agg(F.min("dup_of").alias("dup_of"))
@@ -350,61 +325,14 @@ def stream_neardup_dedup(
                 "doc_id", "dup_of", F.col("dup_of").isNull().alias("is_new")
             )
         )
-        folded.write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"epoch={epoch_id}")
-        )
+        return write_epoch_dir(folded, output_dir, epoch_id)
 
-    writer = (
-        verdicts.writeStream.outputMode("update")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint_dir)
+    return run_stream(
+        spark, input_dir, DOCS_DDL, write, checkpoint_dir, output_dir, STAGE,
+        max_files_per_trigger, plan=plan, available_now=trigger_available_now,
+        output_mode="update",
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_verdicts(spark: SparkSession, output_dir: str) -> DataFrame:
     return spark.read.schema(OUT_DDL).parquet(os.path.join(output_dir, "epoch=*"))
-
-
-def state_store_bytes(checkpoint_dir: str, mode: str = "live") -> int:
-    """On-disk size of the query's committed state store — the measured
-    evidence for the tokens-vs-signature state-size comparison
-    (bench_streaming.py reports both modes on the same corpus).
-
-    ``mode="live"`` (default) approximates the CURRENT state: per state
-    partition directory, the newest ``.snapshot`` plus every ``.delta``
-    newer than it (a partition that has never snapshotted contributes all
-    its deltas — each key's latest value appears in some delta, so this
-    upper-bounds live state but never counts superseded snapshot
-    history). ``mode="cumulative"`` sums every retained version — the
-    full on-disk history, which grows with trigger count regardless of
-    live state size."""
-    root = os.path.join(checkpoint_dir, "state")
-    total = 0
-    for dirpath, _dirnames, filenames in os.walk(root):
-        versioned: list[tuple[int, str, str]] = []
-        for fn in filenames:
-            stem, dot, ext = fn.partition(".")
-            if dot and ext in ("delta", "snapshot") and stem.isdigit():
-                versioned.append((int(stem), ext, os.path.join(dirpath, fn)))
-        if not versioned:
-            continue
-        if mode == "cumulative":
-            keep = [p for _v, _e, p in versioned]
-        else:
-            snaps = [v for v, e, _p in versioned if e == "snapshot"]
-            floor_v = max(snaps) if snaps else -1
-            keep = [
-                p
-                for v, e, p in versioned
-                if (e == "snapshot" and v == floor_v)
-                or (e == "delta" and v > floor_v)
-            ]
-        for p in keep:
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                pass
-    return total

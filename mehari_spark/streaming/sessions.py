@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .epochs import run_stream, write_epoch_dir
+
 EVENTS_DDL = (
     "event_id long, user_id long, event_type string, value double, "
     "props string, ts timestamp"
@@ -28,6 +30,7 @@ EVENTS_DDL = (
 # (but still observed by the EventTimeWatermark operator, which is all a
 # sentinel is for)
 SENTINEL_USER = -1
+STAGE = "sessions"
 
 
 def session_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -70,30 +73,24 @@ def stream_sessions(
     a SENTINEL_USER tick, which this pipeline excludes from the aggregation
     below, so sentinels advance the watermark without polluting output).
     """
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", "16")
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-    )
-    sessions = session_agg(stream, gap)
 
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+    def plan(events: DataFrame) -> DataFrame:
+        return session_agg(events.withWatermark("ts", watermark), gap)
+
+    def write(batch_df: DataFrame, epoch_id: int) -> dict | None:
         # sentinels are excluded IN THE SINK, not in the streaming plan: any
         # deterministic user_id filter inside the plan gets pushed below the
         # aggregate (grouping column) and below the EventTimeWatermark node
         # all the way to the scan — dropping the sentinel before the
         # watermark ever observes it, which defeats its purpose. foreachBatch
         # runs on a plain batch DataFrame, outside the streaming plan.
-        batch_df.filter(F.col("user_id") != SENTINEL_USER).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(output_dir, f"epoch={epoch_id}"))
+        return write_epoch_dir(
+            batch_df.filter(F.col("user_id") != SENTINEL_USER), output_dir, epoch_id
+        )
 
-    return (
-        sessions.writeStream.outputMode("append")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return run_stream(
+        spark, input_dir, EVENTS_DDL, write, checkpoint_dir, output_dir, STAGE,
+        16, plan=plan,
     )
 
 

@@ -4,77 +4,53 @@ index -> verify + maximal extension against the text store -> confirmed
 cross-document shared spans, continuously.
 
 The batch operator (operators/spandedup.span_matches_winnowed) finds
-shared passages across a static corpus; production ingest needs the same
-answer INCREMENTALLY — each arriving document checked against everything
-seen so far without re-scanning the corpus. Same state discipline as the
-continuous KG maintenance (streaming/kg_stream.py): the streaming query
-itself is STATELESS — state lives in three on-disk tables under
-``store_dir`` plus the commit log —
+shared passages across a static corpus; ingest needs the same answer
+INCREMENTALLY, each arriving document checked against everything seen so
+far. As in kg_stream.py the query itself is STATELESS; state lives in
+three on-disk tables under ``store_dir`` plus the commit log:
 
 - ``index/``  fingerprint postings (doc_id, pos, fp, fp_bucket) of every
-  document seen (the inverted index; seen-KEYS, never text) in an
-  LSM-shaped layout: each epoch lands as ONE flat delta dir
-  ``epoch=N/`` with ``fp_bucket = pmod(fp, n_fp_buckets)`` stored as a
-  data column, and compaction periodically folds applied deltas into a
-  consolidated base dir ``epoch=c<lo>-<hi>/fp_bucket=B/``
-  hive-partitioned by bucket;
-- ``texts/``  the corpus itself (doc_id, text, doc_bucket) in the same
-  delta + bucketed-base layout (``doc_bucket = pmod(doc_id,
-  n_doc_buckets)``) — candidate verification needs real characters, and
-  the corpus store is a TABLE, not stream state (the
-  seen-keys-never-payloads rule constrains the state store, not the
-  sink);
+  document seen (seen-KEYS, never text), LSM-shaped: each epoch lands as
+  ONE flat delta dir ``epoch=N/`` with ``fp_bucket = pmod(fp,
+  n_fp_buckets)`` as a data column, and compaction folds applied deltas
+  into a base dir ``epoch=c<lo>-<hi>/fp_bucket=B/``;
+- ``texts/``  the corpus (doc_id, text, doc_bucket) in the same layout
+  (``doc_bucket = pmod(doc_id, n_doc_buckets)``): verification needs
+  real characters, and the corpus store is a table, not stream state;
 - ``spans/epoch=N/``  confirmed spans discovered at epoch N.
 
-Per epoch: new postings equi-join the accumulated index (cross-epoch
-candidates) and self-join within the batch (same-epoch candidates); the
-seeds verify + extend against the texts (the batch path's row-wise Arrow
-kernel, reused); results and the new postings/texts land in per-epoch
-directories whose overwrite makes replay idempotent, and an
-``epoch_done`` audit row marks completion (read once per query lifetime
-— the kg_stream always-on discipline).
+Per epoch: new postings join the accumulated index (cross-epoch
+candidates) and themselves (same-epoch candidates); the seeds verify +
+extend against the texts (the batch path's Arrow kernel); results and the
+new postings/texts land in per-epoch dirs whose overwrite makes replay
+idempotent, and the epoch runner (streaming/epochs.py) logs the epoch.
 
-PER-EPOCH COST IS O(batch + matched buckets), NOT O(corpus) — the
-round-7 full-scan weakness is closed by three mechanisms:
+PER-EPOCH COST IS O(batch + matched buckets), NOT O(corpus):
 
-1. The index read is PRUNED to the batch's fingerprint buckets: the
-   batch postings' distinct ``fp_bucket`` values (at most
-   ``n_fp_buckets`` ints — bounded driver metadata, the plans/merge.py
-   bucket-list discipline) select exactly the matching ``fp_bucket=B``
-   subdirs of the compacted base BY PATH (nothing else is listed or
-   opened) and filter the small recent deltas on the data column. With
-   the default 1024 buckets a small batch prunes most of the
-   accumulated index.
-2. The texts read is PRUNED the same way to the candidate documents'
-   ``doc_bucket`` groups (collected from the materialized candidate
-   seeds, again bounded metadata) — verification touches only buckets
-   that hold a candidate doc, never the whole corpus store.
-3. ``compact_span_store`` periodically merges fully-applied epoch
-   deltas into ONE consolidated hive-bucketed dir per store (the
-   plans/compact.py discipline: stage -> fingerprint-verify -> a logged
-   many-to-one ``commit.swap``), bounding both the unpruned-delta
-   fraction and the file/dir counts as epochs accumulate; the stream
-   runs it inline every ``compact_every_epochs`` applied epochs. Deltas are
-   deliberately FLAT — hive-partitioning each small batch into hundreds
-   of bucket dirs measured ~6x slower per epoch than the unpruned scan
-   it replaced (metadata beats bytes at delta size; bench_stream_span
-   records the measurement), which is why bucketing happens only at
-   compaction, LSM-style.
+1. Past ``prune_min_bytes``, the index read is PRUNED to the batch's
+   distinct ``fp_bucket`` values (bounded driver metadata, the
+   plans/merge.py bucket-list discipline): the matching bucket subdirs
+   of the base are read BY PATH and the small deltas are filtered on
+   the data column.
+2. The texts read is pruned the same way to the candidate documents'
+   ``doc_bucket`` groups, collected from the checkpointed seeds.
+3. ``compact_span_store`` merges applied epoch deltas into ONE
+   hive-bucketed dir per store (the plans/compact.py discipline: stage
+   -> fingerprint-verify -> a logged many-to-one ``commit.swap``); the
+   stream runs it at the start of an epoch every
+   ``compact_every_epochs`` applied epochs. Deltas stay FLAT:
+   hive-partitioning each small batch into hundreds of bucket dirs
+   measured ~6x slower per epoch than the unpruned scan it replaced
+   (``BENCH/history/bench_stream_span.py``).
 
-EXACTNESS: every document pair meets exactly once — at the later doc's
-arrival epoch (earlier doc's postings are already in the index), or in
-the within-batch join when they share an epoch — so the union of per-
-epoch spans over any arrival split EQUALS the batch operator over the
-final corpus (winnowing guarantee >= k + w - 1 included); test-gated
-across multi-wave arrivals and restart. Assumes doc_ids are unique
-across the stream (re-ingesting an id would double its postings).
-CAVEAT (round-7 ADVICE): ``max_df`` caps document frequency WITHIN each
-arrival batch only, never against the accumulated index, so with a
-finite ``max_df`` the stream's output can differ from the batch
-operator run with the same ``max_df`` (a fingerprint seen once per
-epoch is never capped); the union-equals-batch guarantee above holds
-exactly for ``max_df=None``. Reference: seen-keys dedup across parallel
-windows (/root/reference/mehari/src/db/mod.rs:208-309).
+EXACTNESS: every document pair meets exactly once, at the later doc's
+arrival epoch or in the within-batch join, so the union of per-epoch
+spans over any arrival split EQUALS the batch operator over the final
+corpus (test-gated across waves and restarts). Assumes doc_ids are
+unique across the stream. ``max_df`` caps document frequency WITHIN each
+arrival batch only, so the equality holds exactly for ``max_df=None``.
+Reference: mehari's seen-keys dedup across parallel windows
+(db/mod.rs:208-309).
 
 LAYOUT: pruning by path is sound only while every epoch used the same
 ``n_fp_buckets``/``n_doc_buckets``. The first epoch logs them in a
@@ -93,7 +69,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.spandedup import _verify_extend_rows, winnowed_postings
 from ..plans import commit
+from ..plans.stagecache import checkpoint, release
 from ..session import local_frame
+from .epochs import run_stream
 
 DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
 _POSTING_SCHEMA = "doc_id long, pos int, fp long, fp_bucket int"
@@ -127,21 +105,21 @@ def _epoch_dirs(store_dir: str, sub: str) -> list[str]:
 
 
 def _read_epochs(
-    spark: SparkSession, store_dir: str, sub: str, schema: str
+    spark: SparkSession,
+    store_dir: str,
+    sub: str,
+    schema: str,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
-    """Plain union read of a store subtree (spans; or index/texts with no
-    bucket pruning). Handles the MIXED layout: recent per-epoch delta
+    """Union read of a store subtree, restricted to ``buckets`` when given
+    (see ``_read_dirs``). Handles the MIXED layout: recent per-epoch delta
     dirs are flat parquet with the bucket column as DATA, compacted dirs
     are hive-partitioned by it — they must be read separately (one
     basePath read over both depths trips partition-discovery conflicts)
     and unioned."""
     return _read_dirs(
-        spark, store_dir, sub, _epoch_dirs(store_dir, sub), schema, None
+        spark, store_dir, sub, _epoch_dirs(store_dir, sub), schema, buckets
     )
-
-
-def _bucket_prefix(sub: str) -> str | None:
-    return {"index": "fp_bucket", "texts": "doc_bucket"}.get(sub)
 
 
 def _read_dirs(
@@ -163,9 +141,11 @@ def _read_dirs(
     subdirs are handed to the reader — nothing else is listed or opened)
     and the small deltas are filtered on the data column; per-epoch IO
     is O(deltas + matched buckets), not O(corpus)."""
+    if buckets is not None and not buckets:
+        return local_frame(spark, [], schema)
     cols = [c.strip().split(" ")[0] for c in schema.split(",")]
     base = os.path.join(store_dir, sub)
-    part_col = _bucket_prefix(sub)
+    part_col = {"index": "fp_bucket", "texts": "doc_bucket"}.get(sub)
     bucketed: list[tuple[str, list[str]]] = []
     plain: list[str] = []
     for d in dirs:
@@ -214,36 +194,9 @@ def _read_dirs(
 def _pruned_index(
     spark: SparkSession, store_dir: str, buckets: list[int]
 ) -> DataFrame:
-    """The accumulated index restricted to ``buckets``: compacted base
-    dirs pruned by path, recent deltas filtered on the data column
-    (test-gated via the scan's files-read metric)."""
-    if not buckets:
-        return local_frame(spark, [], _POSTING_SCHEMA)
-    return _read_dirs(
-        spark,
-        store_dir,
-        "index",
-        _epoch_dirs(store_dir, "index"),
-        _POSTING_SCHEMA,
-        buckets,
-    )
-
-
-def _pruned_texts(
-    spark: SparkSession, store_dir: str, doc_buckets: list[int]
-) -> DataFrame:
-    """The corpus store restricted to the candidate docs' ``doc_bucket``
-    groups (same path-pruned base + filtered-delta read as the index)."""
-    if not doc_buckets:
-        return local_frame(spark, [], _TEXT_SCHEMA)
-    return _read_dirs(
-        spark,
-        store_dir,
-        "texts",
-        _epoch_dirs(store_dir, "texts"),
-        _TEXT_SCHEMA,
-        doc_buckets,
-    )
+    """The accumulated index restricted to ``buckets`` (test-gated via the
+    scan's files-read metric)."""
+    return _read_epochs(spark, store_dir, "index", _POSTING_SCHEMA, buckets)
 
 
 def applied_epochs(store_dir: str, scope: str) -> set[int]:
@@ -352,30 +305,24 @@ def stream_span_dedup(
 
     ``input_dir`` is a file-source directory of document parquet chunks
     (streaming/replay.write_arrival_chunk shape). ``compact_every_epochs``
-    runs ``compact_span_store`` inline whenever the index holds at least
-    that many epoch dirs (None disables).
+    runs ``compact_span_store`` at the start of an epoch whenever the
+    index holds at least that many epoch dirs (None disables).
 
     ``prune_min_bytes``: bucket-pruned reads engage once a store exceeds
     this size; below it the epoch reads the store in full. Pruning never
     changes results — this is an IO-cost crossover, MEASURED locally
-    (bench_stream_span.py, same-window 4-doc waves): at a ~30 MB store
-    full page-cached scans beat the ~100 pruned per-file opens, at a
-    ~150 MB store forced pruning wins 5.8 -> 3.3 s/epoch (1.75x), and
-    past that the byte savings (matched buckets / n_fp_buckets of the
-    store, ~1/10th for tiny batches at 1024 buckets) grow with the
-    corpus while the pruned cost stays ~O(batch + matched buckets). The
-    64 MB default sits between the two measured points; same
-    scale-adaptive-knob discipline as spread="auto". 0 forces pruning
-    (exactness under forced pruning is test-gated end to end)."""
+    (``BENCH/history/bench_stream_span.py``, same-window 4-doc waves):
+    at a ~30 MB store full page-cached scans beat the ~100 pruned
+    per-file opens, at a ~150 MB store forced pruning wins 5.8 -> 3.3
+    s/epoch (1.75x), and past that the byte savings (matched buckets /
+    n_fp_buckets of the store, ~1/10th for tiny batches at 1024 buckets)
+    grow with the corpus while the pruned cost stays ~O(batch + matched
+    buckets). The 64 MB default sits between the two measured points. 0
+    forces pruning (exactness under forced pruning is test-gated end to
+    end)."""
     min_len = k + w - 1
-    docs = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
     scope = os.path.abspath(checkpoint_dir)
     commit.repair(store_dir)
-    applied = commit.epoch_tracker(store_dir, STAGE, scope)
     layout = {"n_fp_buckets": n_fp_buckets, "n_doc_buckets": n_doc_buckets}
     recorded = commit.check_layout(store_dir, **layout)
     # bucket columns of a store written before layout rows may use any
@@ -385,10 +332,17 @@ def stream_span_dedup(
     )
     record_layout = not recorded and not legacy
 
-    def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+    def write(batch_df: DataFrame, epoch_id: int) -> dict:
         nonlocal record_layout
-        if int(epoch_id) in applied:
-            return  # replayed epoch: already fully applied
+        # compaction folds only epochs the log already holds, so it runs
+        # before this epoch's data lands
+        if (
+            compact_every_epochs is not None
+            and len(_epoch_dirs(store_dir, "index")) >= compact_every_epochs
+        ):
+            compact_span_store(
+                spark, store_dir, scope, min_epoch_dirs=compact_every_epochs
+            )
         batch_texts = batch_df.select("doc_id", "text")
         postings_new = winnowed_postings(batch_texts, k, w).withColumn(
             "fp_bucket", F.pmod("fp", F.lit(n_fp_buckets)).cast("int")
@@ -403,8 +357,7 @@ def stream_span_dedup(
             postings_new = postings_new.join(F.broadcast(hot), "fp", "left_anti")
         # the batch postings feed three joins (index, self x2) and the
         # bucket collection — one materialization, not four winnowing scans
-        postings_new = postings_new.localCheckpoint(eager=True)
-
+        postings_new = checkpoint(postings_new)
         # distinct fp_buckets of THIS batch: bounded driver metadata
         # (<= n_fp_buckets ints) that prunes the index read to matching
         # bucket dirs — past the prune_min_bytes crossover, per-epoch
@@ -454,7 +407,7 @@ def stream_span_dedup(
             # materialize the seeds once: they feed the doc-bucket
             # collection AND the verify join; verification then reads
             # ONLY the candidate docs' buckets of the corpus store
-            cand = cross.unionByName(within).localCheckpoint(eager=True)
+            cand = checkpoint(cross.unionByName(within))
             cand_buckets = [
                 r[0]
                 for r in cand.select(
@@ -468,7 +421,9 @@ def stream_span_dedup(
                 .distinct()
                 .collect()
             ]
-            stored_texts = _pruned_texts(spark, store_dir, cand_buckets)
+            stored_texts = _read_epochs(
+                spark, store_dir, "texts", _TEXT_SCHEMA, cand_buckets
+            )
         else:
             cand = cross.unionByName(within)
             stored_texts = _read_epochs(
@@ -507,40 +462,28 @@ def stream_span_dedup(
         # the cost); compaction periodically folds deltas into the
         # hive-bucketed base dirs that path-pruned reads then exploit
         ep = f"epoch={int(epoch_id)}"
-        spans.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "spans", ep)
-        )
-        (
-            batch_texts.withColumn(
+        outputs = {
+            "spans": spans,
+            "texts": batch_texts.withColumn(
                 "doc_bucket",
                 F.pmod("doc_id", F.lit(n_doc_buckets)).cast("int"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, "texts", ep))
-        )
-        postings_new.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "index", ep)
-        )
-        commit.mark_epoch(store_dir, STAGE, scope, epoch_id, applied)
-        for df in (postings_new, cand):
-            try:  # release the epoch's checkpoint blocks (house pattern)
-                df.rdd.unpersist()
-            except Exception:
-                pass
-        if (
-            compact_every_epochs is not None
-            and len(_epoch_dirs(store_dir, "index")) >= compact_every_epochs
-        ):
-            compact_span_store(
-                spark, store_dir, scope, min_epoch_dirs=compact_every_epochs
-            )
+            ),
+            "index": postings_new,
+        }
+        counts = {}
+        for sub, df in outputs.items():
+            dest = os.path.join(store_dir, sub, ep)
+            df.write.mode("overwrite").parquet(dest)
+            counts[sub] = commit.staged_rows(dest)
+        # this epoch's checkpoints: nothing reads them past its writes
+        release(postings_new)
+        release(cand)
+        return counts
 
-    writer = docs.writeStream.foreachBatch(apply_epoch).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        spark, input_dir, DOCS_DDL, write, checkpoint_dir, store_dir, STAGE,
+        max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_span_matches(spark: SparkSession, store_dir: str) -> DataFrame:

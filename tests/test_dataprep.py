@@ -92,6 +92,24 @@ class TestCurateDocuments:
         assert n_train == c["n_kept_train"] > 0
 
 
+    def test_run_dataprep_releases_its_verdict_checkpoint(self, spark, tmp_path, monkeypatch):
+        """After one call the verdict checkpoint's blocks are no longer in
+        the session's storage info."""
+        frame = type(spark.range(1))
+        made, real = [], frame.localCheckpoint
+
+        def recording(self, eager=True):
+            made.append(real(self, eager))
+            return made[-1]
+
+        monkeypatch.setattr(frame, "localCheckpoint", recording)
+        run_dataprep(spark, _docs(spark).limit(120), str(tmp_path / "out"), n_buckets=2)
+        (verdict,) = [df for df in made if "span_dropped" in df.columns]
+        rdd_id = verdict._jdf.queryExecution().logical().rdd().id()
+        cached = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+        assert rdd_id not in cached
+
+
 class TestSpanGate:
     def test_span_gate_drops_shared_passage_doc(self, spark):
         """With the span gate on, a doc that is mostly a passage shared

@@ -155,3 +155,48 @@ class TestFingerprint:
         f1 = set(fingerprint("the quick brown fox jumps over", k=4, w=3))
         f2 = set(fingerprint("PREFIX the quick brown fox jumps over", k=4, w=3))
         assert len(f1 & f2) >= len(f1) // 2
+
+
+def test_stage_partition_writes_one_row_group_per_bucket_file(tmp_path, monkeypatch):
+    """Bucket slices are buffered into one row group per bucket file, not
+    one per Arrow batch; past ROW_GROUP_ROWS a file splits into groups of
+    at most that many rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mehari_spark.kernels import stage
+
+    names = ["conv_id", "turn_idx", "subj_id", "pred_id", "obj_id", "_tb", "_eb"]
+    types = [pa.string(), pa.int32(), pa.int64(), pa.int64(), pa.int64(), pa.int32(), pa.int32()]
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [
+                pa.array([f"c{i}"] * 100, types[0]),
+                pa.array(range(100), types[1]),
+                pa.array(range(100), types[2]),
+                pa.array([7] * 100, types[3]),
+                pa.array(range(1, 101), types[4]),
+                pa.array([r % 2 for r in range(100)], types[5]),
+                pa.array([None] * 100, types[6]),
+            ],
+            names=names,
+        )
+        for i in range(5)
+    ]
+    staging = stage.Staging(
+        triples=str(tmp_path / "t"), entities=None, freq=None,
+        columns=tuple(names[:5]), spark_schemas={"triples": "{}"},
+    )
+
+    def groups(task):
+        files = stage.stage_partition(iter(batches), staging, task).to_pylist()
+        out = {}
+        for m in files:
+            md = pq.read_metadata(m["path"])
+            assert md.num_rows == m["rows"] == 250
+            out[m["bucket"]] = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+        return out
+
+    assert groups("00000-1") == {0: [250], 1: [250]}
+    monkeypatch.setattr(stage, "ROW_GROUP_ROWS", 120)
+    assert groups("00000-2") == {0: [100, 100, 50], 1: [100, 100, 50]}
