@@ -8,7 +8,7 @@ import os
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, _REPO)
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
@@ -68,18 +68,15 @@ def main():
 
     if "minhash" in which:
         print("== doc_minhash_pairs decomposition ==")
-        from mehari_spark.operators.dedup import (
-            _minhash_rows,
-            _doc_tokens,
-            minhash_lsh_pairs,
-        )
+        from mehari_spark.operators.blocking import minhash_band_rows, whitespace_tokens
+        from mehari_spark.operators.dedup import _doc_tokens, minhash_lsh_pairs
 
         src = docs.select("doc_id", "text")
         par = spark.sparkContext.defaultParallelism
         print("  src partitions:", src.rdd.getNumPartitions(), "par:", par)
         srcr = src.repartition(par)
         bands_df = srcr.mapInPandas(
-            lambda it: _minhash_rows(it, 128, 8, 42),
+            lambda it: minhash_band_rows(it, "doc_id", "text", whitespace_tokens, 128, 8, 42),
             schema="doc_id long, band_idx int, band_key long",
         )
         t(spark, "signature kernel (repart + mapInPandas)", bands_df)
@@ -128,7 +125,7 @@ def main():
     if "neardup" in which:
         print("== emb_near_dup_lsh decomposition ==")
         from mehari_spark.plans.queries import QUERIES, _near_dup_corpus
-        from mehari_spark.operators.similarity import banded_lsh_signatures
+        from mehari_spark.operators.blocking import banded_lsh_signatures
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         print("  embeddings rows:", emb.count(), "dim:", len(emb.first()["embedding"]))

@@ -40,12 +40,10 @@ def main() -> int:
     ap.add_argument("--run-id", default="compact")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from mehari_spark.plans.compact import compact_buckets
+    from mehari_spark.session import job_session
 
-    spark = SparkSession.builder.appName("mehari-spark-compact").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("mehari-spark-compact")
     res = compact_buckets(
         spark,
         args.table,

@@ -30,12 +30,10 @@ def main() -> int:
     if not args.input and not args.sf_dir:
         ap.error("one of --input / --sf-dir is required")
 
-    from pyspark.sql import SparkSession
-
     from mehari_spark.plans.dataprep import run_dataprep
+    from mehari_spark.session import job_session
 
-    spark = SparkSession.builder.appName("mehari-spark-dataprep").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("mehari-spark-dataprep")
 
     path = args.input or f"{args.sf_dir}/documents.parquet"
     docs = spark.read.parquet(path)

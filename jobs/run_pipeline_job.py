@@ -29,15 +29,11 @@ def main() -> int:
     if not args.input and not args.sf_dir:
         ap.error("one of --input / --sf-dir is required")
 
-    from pyspark.sql import SparkSession
-
     from mehari_spark.dictionary import demo_patterns
     from mehari_spark.plans.pipeline import run_pipeline
+    from mehari_spark.session import job_session
 
-    # under spark-submit the session (master, executors) comes from the
-    # submit command; builder config here only fills gaps for bare python
-    spark = SparkSession.builder.appName("mehari-spark-pipeline").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("mehari-spark-pipeline")
 
     if args.input:
         transcripts_df = spark.read.parquet(args.input)

@@ -246,12 +246,9 @@ def run(spark, args: argparse.Namespace) -> dict:
 
 def main() -> int:
     args = parse_args()
-    from pyspark.sql import SparkSession
+    from mehari_spark.session import job_session
 
-    # under spark-submit the session (master, executors) comes from the
-    # submit command; builder config here only fills gaps for bare python
-    spark = SparkSession.builder.appName(f"mehari-spark-{args.stream}-stream").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session(f"mehari-spark-{args.stream}-stream")
     print(json.dumps(run(spark, args)))
     spark.stop()
     return 0

@@ -1,7 +1,10 @@
 """MinHash signatures + LSH banding (numpy-vectorized, deterministic).
 
 Used for (a) near-duplicate detection over documents and (b) blocking in
-entity linking. The banding trick: two sets with Jaccard ~s collide in at
+entity linking, both through the one band-row kernel of
+operators/blocking.py (``signatures_batch`` + ``band_keys_matrix``); the
+scalar ``minhash_signature`` + ``band_keys`` pair is their reference. The
+banding trick: two sets with Jaccard ~s collide in at
 least one band with probability 1-(1-s^r)^b. All hashing is explicit
 (xxhash-free, splitmix64-style) so signatures are reproducible across
 executors and sessions — the same determinism discipline as mehari's
@@ -136,10 +139,18 @@ def band_keys_matrix(signatures: np.ndarray, bands: int) -> np.ndarray:
 
 
 def band_keys(signature: np.ndarray, bands: int) -> list[int]:
-    """One stable 63-bit bucket key per band (band index salted in)."""
-    return band_keys_matrix(
-        np.asarray(signature, dtype=np.uint64)[None, :], bands
-    )[0].tolist()
+    """One stable 63-bit bucket key per band (band index salted in),
+    folded one signature value at a time: the scalar reference that
+    ``band_keys_matrix`` is tested against."""
+    sig = np.asarray(signature, dtype=np.uint64)
+    rows = sig.size // bands
+    keys = []
+    for band in range(bands):
+        acc = np.array([band + 1], dtype=np.uint64)
+        for v in sig[band * rows : (band + 1) * rows]:
+            acc = _splitmix64(acc ^ v)
+        keys.append(int(acc[0] & np.uint64(0x7FFFFFFFFFFFFFFF)))
+    return keys
 
 
 def shingles(text: str, n: int = 3) -> list[str]:

@@ -7,26 +7,23 @@ For a 100 TB training-data pipeline we provide the standard ladder:
 - exact:     md5 of normalized text, groupBy — one shuffle on the hash.
 - n-gram Jaccard: exact token-set similarity via inverted-index explode-join
   (shuffle on (lang, token); linear in postings, never a cross join).
-- MinHash/LSH: signatures in a pandas UDF, band-bucket join for candidates,
-  exact re-rank — the sub-quadratic scale path.
-- SimHash: 64-bit fingerprints, 16-bit chunk blocking for Hamming<=3.
+- MinHash/LSH: band rows from the blocking stage's MinHash kernel
+  (operators/blocking.py), candidates from its band self-join, exact
+  re-rank — the sub-quadratic scale path.
+- SimHash: 64-bit fingerprints, 16-bit chunk blocking for Hamming<=3 on
+  the same band self-join.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.minhash import (
-    band_keys_matrix,
-    hash_tokens,
-    perm_params,
-)
 from ..kernels.simhash import simhash64
+from .blocking import band_pairs, minhash_band_rows, whitespace_tokens
 
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
@@ -97,44 +94,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _minhash_rows(
-    it: Iterable[pd.DataFrame], num_perm: int, bands: int, seed: int
-) -> Iterator[pd.DataFrame]:
-    from ..kernels.minhash import signatures_batch
-
-    a, b = perm_params(num_perm, seed=seed)
-    # token hashes are memoized across the task's batches: corpus
-    # vocabularies repeat heavily across documents, and the FNV char loop
-    # is the slow part
-    memo: dict[str, int] = {}
-    for pdf in it:
-        n = len(pdf)
-        if n == 0:
-            continue
-        tok_sets = [set((txt or "").split(" ")) for txt in pdf["text"].tolist()]
-        new = list({t for toks in tok_sets for t in toks if t not in memo})
-        if new:
-            memo.update(zip(new, hash_tokens(new).tolist()))
-        # ONE vectorized permutation pass over the batch's concatenated
-        # token hashes + segmented min (bit-identical to the per-doc
-        # minhash_signature loop: same universal-hash values, min over the
-        # same token set, order-independent)
-        sigs = signatures_batch(tok_sets, memo, a, b)
-        # one vectorized fold for every (doc, band) key — bit-identical to
-        # the scalar band_keys chain
-        keys = band_keys_matrix(sigs, bands)
-        ids_arr = pdf["doc_id"].to_numpy(dtype=np.int64)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(np.repeat(ids_arr, bands), dtype="int64"),
-                "band_idx": pd.Series(
-                    np.tile(np.arange(bands, dtype=np.int32), n), dtype="int32"
-                ),
-                "band_key": pd.Series(keys.ravel(), dtype="int64"),
-            }
-        )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.95,
@@ -161,19 +120,18 @@ def minhash_lsh_pairs(
     src_df = docs.select("doc_id", "text")
     if src_df.rdd.getNumPartitions() < par:
         src_df = src_df.repartition(par)  # parallelize the signature scan
-    # materialize the signature scan once: the band table feeds BOTH sides
-    # of the self-join, and without materialization the Arrow signature
-    # kernel runs twice — the session-local form of writing the signature
-    # table once at 100 TB. Routed through the bounded stage cache so the
-    # blocks are EVICTED as newer stages arrive (per-invocation
-    # localCheckpoint blocks leaked for the session's lifetime).
+    # the band table feeds both self-join sides: materialized once (the
+    # session-local form of writing the signature table once at 100 TB)
+    # through the bounded stage cache, which evicts it as newer stages arrive
     from ..plans.stagecache import materialize_once
 
     bands_df = materialize_once(
         spark,
         ("minhash_bands", src_df, num_perm, bands, seed),
         lambda: src_df.mapInPandas(
-            lambda it: _minhash_rows(it, num_perm, bands, seed),
+            lambda it: minhash_band_rows(
+                it, "doc_id", "text", whitespace_tokens, num_perm, bands, seed
+            ),
             schema="doc_id long, band_idx int, band_key long",
         ),
     )
@@ -183,15 +141,7 @@ def minhash_lsh_pairs(
     # (2.6-5.6 s -> 4.8-6.4 s): the distinct on 4.3M 16-byte rows is
     # cheaper than the two extra broadcast joins, and the re-rank already
     # applies the same filter before the intersect. Kept as-was.
-    cand = (
-        bands_df.alias("x")
-        .join(bands_df.alias("y"), ["band_idx", "band_key"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = band_pairs(bands_df, "doc_id", ["band_idx", "band_key"], ("doc_a", "doc_b"))
     # exact re-rank: join the candidate pairs back to the token ARRAYS (two
     # equi-joins on doc_id) and intersect in-row — O(|cand| * doc_len), no
     # postings explosion. The postings join is only worth it for the
@@ -273,22 +223,13 @@ def simhash_candidate_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
                 "'chunk_idx', i, 'chunk_val', (simhash >> (i * 16)) & 65535))"
             )
         ).alias("c"),
-    ).select("doc_id", "simhash", F.col("c.chunk_idx").alias("chunk_idx"), F.col("c.chunk_val").alias("chunk_val"))
-    cand = (
-        chunks.alias("x")
-        .join(chunks.alias("y"), ["chunk_idx", "chunk_val"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sh_a"),
-            F.col("y.simhash").alias("sh_b"),
-        )
-        .distinct()
+    ).select("doc_id", "simhash", "c.*")
+    cand = band_pairs(
+        chunks, "doc_id", ["chunk_idx", "chunk_val"], ("doc_a", "doc_b"), carry=["simhash"]
     )
     return (
         cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")

@@ -11,10 +11,11 @@ Two paths, both returning (surface, entity_id, score):
   the oracle-checkable reference path. The shuffle is on (shingle), i.e.
   the classic token-inverted-index join; scales linearly in total shingle
   occurrences, not quadratically in rows.
-- ``link_lsh``: MinHash signatures over shingles inside a pandas UDF,
-  banded into bucket keys, candidates from the band equi-join, exact
-  Jaccard re-rank on the (much smaller) candidate set. This is the 100 TB
-  path: candidate count is governed by (bands, rows) not |surfaces|x|dict|.
+- ``link_lsh``: band rows over shingles from the blocking stage's MinHash
+  kernel (operators/blocking.py), candidates from a two-sided band
+  equi-join between surfaces and aliases, exact Jaccard re-rank on the
+  (much smaller) candidate set. This is the 100 TB path: candidate count
+  is governed by (bands, rows) not |surfaces|x|dict|.
 
 Best-link per surface = row_number over (score desc, entity_id) — F6/F7.
 """
@@ -23,18 +24,12 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..kernels.minhash import (
-    band_keys_matrix,
-    hash_tokens,
-    perm_params,
-    shingles,
-    signatures_batch,
-)
+from ..kernels.minhash import shingles
+from .blocking import minhash_band_rows
 
 NGRAM = 2
 
@@ -108,31 +103,13 @@ def _band_rows(
     n: int,
     seed: int,
 ) -> Iterator[pd.DataFrame]:
-    """(value, band_idx, band_key) for every value of every batch: one
-    vectorized MinHash pass per batch (``signatures_batch`` +
-    ``band_keys_matrix``, bit-identical to the per-value
-    ``minhash_signature`` + ``band_keys`` pair). Shingle hashes are
-    memoized across the task's batches."""
-    a, b = perm_params(num_perm, seed=seed)
-    memo: dict[str, int] = {}
-    for pdf in pdf_iter:
-        vals = pdf[col].tolist()
-        tok_sets = [set(shingles(f"^{v}$", n)) for v in vals]
-        new = list({t for toks in tok_sets for t in toks if t not in memo})
-        if new:
-            memo.update(zip(new, hash_tokens(new).tolist()))
-        keys = band_keys_matrix(signatures_batch(tok_sets, memo, a, b), bands)
-        yield pd.DataFrame(
-            {
-                "value": pd.Series(
-                    np.repeat(np.array(vals, dtype=object), bands), dtype="object"
-                ),
-                "band_idx": pd.Series(
-                    np.tile(np.arange(bands, dtype=np.int32), len(vals)), dtype="int32"
-                ),
-                "band_key": pd.Series(keys.ravel(), dtype="int64"),
-            }
-        )
+    """(value, band_idx, band_key) for every value of every batch: the
+    blocking stage's MinHash kernel over the value's ``^value$`` n-gram
+    shingles."""
+    for pdf in minhash_band_rows(
+        pdf_iter, col, col, lambda v: set(shingles(f"^{v}$", n)), num_perm, bands, seed
+    ):
+        yield pdf.rename(columns={col: "value"})
 
 
 def minhash_bands(

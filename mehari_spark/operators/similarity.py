@@ -12,8 +12,10 @@
   corpus written partitioned by cell once, each query batch probing its
   nprobe cells through partition pruning and re-ranking them with one
   routed matmul per cell.
-- ``hyperplane_lsh_buckets``: random-hyperplane signatures for cosine LSH
-  blocking (embedding near-dup detection).
+- ``lsh_near_dup_pairs`` / ``hyperplane_lsh_buckets``: cosine LSH over the
+  blocking stage's hyperplane kernel and band self-join
+  (operators/blocking.py) — embedding near-dup pairs with an exact
+  re-rank, and plain single-band buckets.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from .blocking import band_pairs, banded_lsh_signatures, unit_rows
 
 
 def _dot(a, b):
@@ -142,19 +146,13 @@ def cosine_topk_arrow(
     form — the fair full-scan baseline for the IVF index query."""
     q_rows = queries_df.select(id_col, vec_col).collect()
     qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    qnorm = qmat / norms
+    qnorm = unit_rows(np.asarray([r[1] for r in q_rows], dtype=np.float64))
 
     def score(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            vnorm = np.linalg.norm(mat, axis=1, keepdims=True)
-            vnorm[vnorm == 0] = 1.0
-            sims = (mat / vnorm) @ qnorm.T
+            sims = unit_rows(np.asarray(pdf[vec_col].tolist(), dtype=np.float64)) @ qnorm.T
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             sims = np.where(ids[:, None] != qids[None, :], sims, -np.inf)
             yield _local_topk_rows(sims, ids, qids, k)
@@ -201,10 +199,7 @@ def train_centroids(
         .limit(sample_size)
         .toPandas()
     )
-    mat = np.asarray(sample[vec_col].tolist(), dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    mat = mat / norms
+    mat = unit_rows(np.asarray(sample[vec_col].tolist(), dtype=np.float64))
     rng = np.random.RandomState(seed)
     cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
     for _ in range(iters):
@@ -243,9 +238,7 @@ def assign_centroids(
             mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             if cents is None:
                 cents = _centroids(mat.shape[1], n_centroids, seed)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents.T
+            sims = unit_rows(mat) @ cents.T
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].astype("int64"),
@@ -291,9 +284,7 @@ def ivf_topk(
             mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             if cents is None:
                 cents = _centroids(mat.shape[1], n_centroids, seed)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents.T
+            sims = unit_rows(mat) @ cents.T
             order = np.argsort(-sims, axis=1)[:, :nprobe]
             ids = np.repeat(pdf[id_col].to_numpy(dtype=np.int64), nprobe)
             yield pd.DataFrame(
@@ -405,15 +396,12 @@ def ivf_query_topk(
 
     cents = np.load(os.path.join(index_path, "centroids.npy"))
     q_rows = queries.select(id_col, vec_col).collect()
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    sims = (qmat / norms) @ cents.T
+    qnorm = unit_rows(np.asarray([r[1] for r in q_rows], dtype=np.float64))
+    sims = qnorm @ cents.T
     probe_lists = np.argsort(-sims, axis=1)[:, :nprobe]
     probed_cells = sorted({int(c) for row in probe_lists for c in row})
 
     qids = np.asarray([int(r[0]) for r in q_rows], dtype=np.int64)
-    qnorm = qmat / norms
     # probe mask: may_score[cell, query] — a cell row scores ONLY against
     # the queries that probed its cell (true IVF candidate semantics)
     n_cells = cents.shape[0]
@@ -453,10 +441,7 @@ def ivf_query_topk(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            vnorm = np.linalg.norm(mat, axis=1, keepdims=True)
-            vnorm[vnorm == 0] = 1.0
-            mat = mat / vnorm
+            mat = unit_rows(np.asarray(pdf[vec_col].tolist(), dtype=np.float64))
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             cell_ids = pdf["centroid"].to_numpy(dtype=np.int64)
             for c in np.unique(cell_ids):
@@ -523,54 +508,6 @@ def synth_clustered(
     )
 
 
-def banded_lsh_signatures(
-    embeddings: DataFrame,
-    n_bands: int = 32,
-    rows_per_band: int = 12,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Long-format banded hyperplane signatures: (vec_id, band, sig).
-
-    n_bands x rows_per_band random hyperplanes; each band's sign pattern
-    packs into one int64 — two vectors are CANDIDATES iff they share (band,
-    sig) for some band. Geometry default (32x12) tuned for thresholds
-    >= 0.9: a cos-0.987 pair collides with prob ~1-1e-10 while random pairs
-    collide ~1% of the time (measured ~80x candidate reduction on the demo
-    corpus). Narrow mapInPandas, one matmul per Arrow batch."""
-
-    def sig(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes: np.ndarray | None = None
-        packer = 1 << np.arange(rows_per_band, dtype=np.int64)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat = mat / norms
-            if planes is None:
-                rng = np.random.RandomState(seed)
-                planes = rng.randn(n_bands * rows_per_band, mat.shape[1])
-            bits = (mat @ planes.T) > 0
-            sigs = (bits.reshape(len(mat), n_bands, rows_per_band) @ packer).astype(
-                np.int64
-            )
-            n = len(mat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf[id_col].to_numpy(dtype=np.int64), n_bands),
-                    "band": np.tile(np.arange(n_bands, dtype=np.int32), n),
-                    "sig": sigs.ravel(),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        sig, schema="vec_id long, band int, sig long"
-    )
-
-
 def lsh_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.9,
@@ -589,10 +526,8 @@ def lsh_near_dup_pairs(
     demo corpus, so the output is IDENTICAL to the exact all-pairs query
     (asserted in pytest; the J8 candidate-from-index discipline,
     strucvars/mod.rs:3189-3290). Output: (vec_a, vec_b, cos_ppm)."""
-    # materialize the signature scan once: it feeds both sides of the band
-    # self-join; without it the hyperplane kernel (and any derived-corpus
-    # pipeline under it) runs per side. Bounded stage cache, not a bare
-    # localCheckpoint — evicted blocks don't leak across query builds.
+    # the signatures feed both self-join sides: materialized once (with any
+    # derived-corpus pipeline under them) through the bounded stage cache
     from ..plans.stagecache import materialize_once
 
     sigs = materialize_once(
@@ -602,19 +537,7 @@ def lsh_near_dup_pairs(
             corpus, n_bands, rows_per_band, seed, id_col, vec_col
         ),
     )
-    cand = (
-        sigs.alias("a")
-        .join(
-            sigs.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .distinct()
-    )
+    cand = band_pairs(sigs, "vec_id", ["band", "sig"], ("vec_a", "vec_b"))
     # norms are per-VECTOR, not per-pair: compute them once on each join
     # side (|corpus| evaluations) instead of inside the candidate row
     # (2x|candidates| interpreted HOF folds) — bit-identical cos, the
@@ -655,26 +578,8 @@ def hyperplane_lsh_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, bucket) — sign pattern across random hyperplanes (cosine LSH)."""
-
-    def sig(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes: np.ndarray | None = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            if planes is None:
-                rng = np.random.RandomState(seed)
-                planes = rng.randn(n_planes, mat.shape[1])
-            bits = (mat @ planes.T) > 0
-            bucket = bits @ (1 << np.arange(n_planes, dtype=np.int64))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].astype("int64"),
-                    "bucket": pd.Series(bucket, dtype="int64"),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        sig, schema="vec_id long, bucket long"
+    """(vec_id, bucket) — sign pattern across random hyperplanes (cosine
+    LSH): the one band of the hyperplane kernel with ``n_planes`` rows."""
+    return banded_lsh_signatures(embeddings, 1, n_planes, seed, id_col, vec_col).select(
+        "vec_id", F.col("sig").alias("bucket")
     )

@@ -171,12 +171,14 @@ def run_dataprep(
     content-independent, so surviving representatives sample
     independently)."""
     from .lineage import write_bucketed, write_metrics
-    from .stagecache import release
+    from .stagecache import release, release_taken
 
-    verdict = curate_documents(
+    pending = curate_documents(
         docs, near_dup_threshold,
         span_dup_max_permille=span_dup_max_permille,
-    ).localCheckpoint(eager=True)
+    )
+    verdict = pending.localCheckpoint(eager=True)
+    release_taken(pending, docs)  # e.g. the near-dup labels checkpoint
     agg = verdict.agg(
         F.count("*").alias("n_input"),
         F.sum((F.col("filter_reasons") != 0).cast("long")).alias("n_quality_drop"),

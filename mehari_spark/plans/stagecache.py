@@ -15,7 +15,9 @@ same run would measure the cache, not the code — bench.py calls
 
 ``checkpoint``/``release`` are the one lineage cut of the round loops
 (graph, coref) and the per-epoch stream stages: an eager
-``localCheckpoint`` whose blocks are dropped once nothing reads them.
+``localCheckpoint`` whose blocks are dropped once nothing reads them;
+``release_taken`` drops every checkpoint a materialized result was
+computed from.
 
 Keys include the SparkContext applicationId: a cached DataFrame from a
 stopped session is unusable, so entries from other app ids are evicted on
@@ -152,3 +154,19 @@ def release(ckpt: DataFrame) -> None:
     ``unpersist`` releases nothing."""
     with contextlib.suppress(Py4JError):
         ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def release_taken(result: DataFrame, inputs: DataFrame) -> None:
+    """Release the localCheckpoints at the leaves of ``result``'s plan that
+    are not at the leaves of ``inputs``': the ones taken on the way to a
+    result that has since been materialized on its own."""
+
+    def checkpoints(df: DataFrame) -> dict:
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        nodes = [leaves.apply(i) for i in range(leaves.size())]
+        return {n.rdd().id(): n.rdd() for n in nodes if n.nodeName() == "LogicalRDD"}
+
+    given = checkpoints(inputs)
+    for rdd_id, rdd in checkpoints(result).items():
+        if rdd_id not in given:
+            rdd.unpersist(False)

@@ -72,6 +72,19 @@ def get_spark(
     return spark
 
 
+def job_session(app_name: str) -> SparkSession:
+    """The session of a ``jobs/*.py`` entry point: the submit command's
+    config (bare python: the builder's defaults), with the console progress
+    bar off so the job's JSON result line stays the last output line."""
+    spark = (
+        SparkSession.builder.appName(app_name)
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
 def local_frame(
     spark: SparkSession, rows: list[tuple], ddl: str | StructType
 ) -> DataFrame:

@@ -3,9 +3,10 @@ ingest — the streaming twin of the batch ``minhash_lsh_pairs`` path,
 extending the exact keep-first discipline (dedup_stream.py; mehari's
 seen-keys analog db/mod.rs:208-309) from equality to similarity:
 
-- A stateless Arrow stage computes, per arriving document, the SAME MinHash
-  band keys as the batch path (kernels/minhash.py: num_perm, bands, seed)
-  plus a per-document payload (see state modes).
+- A stateless Arrow stage runs the batch path's MinHash band kernel
+  (operators/blocking.py, same num_perm, bands, seed), so each arriving
+  document gets the same band keys as in ``minhash_lsh_pairs``, plus a
+  per-document payload from the same batch arrays (see state modes).
 - ``applyInPandasWithState`` keyed by (band_idx, band_key): state is the
   set of documents ever seen in that band bucket. Each arriving document
   is re-ranked against the bucket's seen set and then ADDED to it —
@@ -53,7 +54,6 @@ operator processes rows in doc_id order.
 from __future__ import annotations
 
 import os
-from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,7 +62,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..kernels.minhash import band_keys, hash_tokens, minhash_signature, perm_params
+from ..kernels.minhash import minhash_signature, perm_params
+from ..operators.blocking import minhash_band_rows, whitespace_tokens
 from .epochs import run_stream, write_epoch_dir
 # the runner's per-epoch state metric; it measures this stream's state modes
 from .epochs import state_store_bytes  # noqa: F401
@@ -86,63 +87,27 @@ STAGE = "neardup_stream"
 _TAG_EXACT, _TAG_SIG = 0, 1
 
 
-def _band_rows(
-    it: Iterable[pd.DataFrame],
-    num_perm: int,
-    bands: int,
-    seed: int,
-    signature_state: bool,
-) -> Iterator[pd.DataFrame]:
-    """Per document: ``bands`` rows carrying the band bucket key and the
-    tagged state payload (see layout above)."""
-    a, b = perm_params(num_perm, seed=seed)
-    for pdf in it:
-        ids: list[int] = []
-        bidx: list[int] = []
-        bkey: list[int] = []
-        payloads: list[np.ndarray] = []
-        for doc_id, txt in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            tok_list = sorted(set((txt or "").split(" ")))
-            th = np.sort(hash_tokens(tok_list))
-            sig = minhash_signature(th, a, b)
+def _payloads(num_perm: int, signature_state: bool):
+    """The band kernel's ``payload``: each document's tagged state payload
+    (layout above) from the batch's token-hash memo and signature rows."""
+
+    def payload(tok_sets: list[set], memo: dict[str, int], sigs: np.ndarray) -> list:
+        out = []
+        for toks, sig in zip(tok_sets, sigs):
+            th = np.sort(np.fromiter((memo[t] for t in toks), dtype=np.uint64, count=len(toks)))
             if signature_state and th.size > num_perm:
-                payload = np.concatenate(
-                    ([_TAG_SIG, th.size], sig.astype(np.int64))
-                )
+                out.append(np.concatenate(([_TAG_SIG, th.size], sig.astype(np.int64))))
             else:
-                payload = np.concatenate(
-                    ([_TAG_EXACT, th.size], th.view(np.int64))
-                )
-            for bi, bk in enumerate(band_keys(sig, bands)):
-                ids.append(doc_id)
-                bidx.append(bi)
-                bkey.append(bk)
-                payloads.append(payload)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "band_idx": pd.Series(bidx, dtype="int32"),
-                "band_key": pd.Series(bkey, dtype="int64"),
-                "payload": pd.Series(payloads, dtype="object"),
-            }
-        )
+                out.append(np.concatenate(([_TAG_EXACT, th.size], th.view(np.int64))))
+        return out
+
+    return payload
 
 
 def _jaccard(a: np.ndarray, b: np.ndarray) -> float:
     ni = np.intersect1d(a, b, assume_unique=True).size
     denom = a.size + b.size - ni
     return (ni / denom) if denom else 1.0
-
-
-def _empty_verdicts(band_idx: int = 0, band_key: int = 0) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series([], dtype="int64"),
-            "band_idx": pd.Series([], dtype="int32"),
-            "band_key": pd.Series([], dtype="int64"),
-            "dup_of": pd.Series([], dtype="object"),
-        }
-    )
 
 
 def _make_bucket_update(
@@ -153,14 +118,13 @@ def _make_bucket_update(
     seed: int,
 ):
     rpb = num_perm // bands
+    a, b = perm_params(num_perm, seed=seed)
 
     def update(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
             # bucket idle past the dedup horizon: forget it entirely
             state.remove()
-            yield _empty_verdicts()
             return
-        a, b = perm_params(num_perm, seed=seed)
         ids: list[int] = []
         payloads: list[np.ndarray] = []
         if state.exists:
@@ -296,7 +260,10 @@ def stream_neardup_dedup(
 
     def plan(docs: DataFrame) -> DataFrame:
         bands_df = docs.select("doc_id", "text").mapInPandas(
-            lambda it: _band_rows(it, num_perm, bands, seed, signature_state),
+            lambda it: minhash_band_rows(
+                it, "doc_id", "text", whitespace_tokens, num_perm, bands, seed,
+                _payloads(num_perm, signature_state),
+            ),
             schema=BAND_DDL,
         )
         return bands_df.groupBy("band_idx", "band_key").applyInPandasWithState(

@@ -109,6 +109,23 @@ class TestCurateDocuments:
         cached = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
         assert rdd_id not in cached
 
+    def test_run_dataprep_leaves_no_cached_rdd(self, spark, tmp_path):
+        """Every checkpoint one call takes is released by its end: the
+        verdict and the near-dup labels of connected_components_global.
+        With the stage cache cleared, no persistent RDD is left that was
+        not there before the call (the context cleaner may drop older ones
+        meanwhile, so this is a subset check)."""
+        from mehari_spark.plans.stagecache import clear_shared_stages
+
+        def persistent() -> set[int]:
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        clear_shared_stages()
+        before = persistent()
+        run_dataprep(spark, _docs(spark).limit(120), str(tmp_path / "out"), n_buckets=2)
+        clear_shared_stages()
+        assert persistent() - before == set()
+
 
 class TestSpanGate:
     def test_span_gate_drops_shared_passage_doc(self, spark):

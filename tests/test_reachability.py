@@ -38,6 +38,7 @@ ENTRY_POINTS = (
 REFERENCES = {
     "datagen.py:*": "golden triples, fixture patterns and synthetic inputs for tests",
     "kernels/unionfind.py:*": "per-edge union-find, the reference for kernels/components.py",
+    "kernels/minhash.py:band_keys": "scalar band-key fold, the reference for band_keys_matrix",
     "operators/compound.py:compound_triples_sql": "SQL twin of compound_triples",
     "operators/dedup.py:ngram_jaccard_pairs": "exact n-gram Jaccard, the reference for the LSH pairs",
     "kernels/fingerprint.py:rolling_hashes_u64": "pure-Python k-gram hashes, the reference for gram_hashes_np",
