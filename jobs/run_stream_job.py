@@ -197,7 +197,10 @@ def _run_ingest(spark, args, input_dir: str) -> dict:
 def _run_sessions(spark, args, input_dir: str) -> dict:
     from mehari_spark.streaming.sessions import finalize_stream, stream_sessions
 
-    q = stream_sessions(spark, input_dir, args.table, args.checkpoint)
+    q = stream_sessions(
+        spark, input_dir, args.table, args.checkpoint,
+        max_files_per_trigger=args.max_files_per_trigger,
+    )
     if args.follow:
         q.awaitTermination()
     else:

@@ -670,38 +670,9 @@ SELECT query_id, neighbor_id, rank::INTEGER AS rank FROM (
 def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-k (cos rounded to 9dp pre-rank in both
     engines so float ulps can't flip the order)."""
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import cosine_topk
 
-    emb = _read(spark, sf_dir, "embeddings")
-    # norms precomputed once per side (10 + |corpus| HOF folds instead of
-    # 2x|corpus x queries| per-pair) — bit-identical cos values
-    q = emb.filter(F.col("vec_id").isin(_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    scored = (
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            _norm(F.col("embedding")).alias("cn"),
-        )
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                9,
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return cosine_topk(_read(spark, sf_dir, "embeddings"), _QUERY_IDS, k=3)
 
 
 @register(
@@ -728,7 +699,7 @@ def emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE GUARD: all-pairs is quadratic — refuses corpora above 100k
     vectors; use emb_near_dup_lsh (banded hyperplane LSH + exact re-rank)
     for near-dup detection at scale."""
-    from ..operators.similarity import _dot, _norm
+    from ..operators.similarity import _cos, _ppm_pairs, _side
 
     emb = _read(spark, sf_dir, "embeddings")
     n_vecs = emb.count()
@@ -736,30 +707,12 @@ def emb_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"emb_cosine_pairs is the exact all-pairs baseline and is capped "
             f"at 100000 vectors (got {n_vecs}); use emb_near_dup_lsh "
-            f"(operators/similarity.embedding_near_dup_lsh) at scale"
+            f"(operators/similarity.lsh_near_dup_pairs) at scale"
         )
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        _norm(F.col("embedding")).alias("na"),
+    pairs = _side(emb, "vec_a", "ea", "na").join(
+        F.broadcast(_side(emb, "vec_b", "eb", "nb")), F.col("vec_a") < F.col("vec_b")
     )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        _norm(F.col("embedding")).alias("nb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b")).withColumn(
-        "cos",
-        F.round(
-            _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-            9,
-        ),
-    )
-    return pairs.filter(F.col("cos") >= 0.4).select(
-        "vec_a",
-        "vec_b",
-        F.floor(F.col("cos") * 1000000).cast("long").alias("cos_ppm"),
-    )
+    return _ppm_pairs(pairs.withColumn("cos", _cos("ea", "eb", "na", "nb")), 0.4)
 
 
 @register("emb_ivf_topk", None)  # approximate ANN: rows-only; recall tested in pytest
@@ -2242,7 +2195,7 @@ def emb_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk, synth_clustered
 
     corpus = synth_clustered(_read(spark, sf_dir, "embeddings"))
-    return ivf_topk(corpus, _QUERY_IDS, k=3, n_centroids=16, nprobe=2, seed=42)
+    return ivf_topk(corpus, _QUERY_IDS, k=3, n_centroids=16, nprobe=2)
 
 
 # --------------------------------------------------------------------------

@@ -67,21 +67,32 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return _quiet(builder.getOrCreate())
 
 
 def job_session(app_name: str) -> SparkSession:
     """The session of a ``jobs/*.py`` entry point: the submit command's
     config (bare python: the builder's defaults), with the console progress
     bar off so the job's JSON result line stays the last output line."""
-    spark = (
+    return _quiet(
         SparkSession.builder.appName(app_name)
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+# ``stagecache.release`` unpersists localCheckpoints on purpose; each one
+# makes this logger warn that the truncated lineage cannot be recomputed
+_CHECKPOINT_RELEASE_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
+
+
+def _quiet(spark: SparkSession) -> SparkSession:
+    """Log at WARN, except the expected checkpoint-release warning."""
     spark.sparkContext.setLogLevel("WARN")
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _CHECKPOINT_RELEASE_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark
 
 

@@ -59,6 +59,7 @@ def stream_sessions(
     checkpoint_dir: str,
     gap: str = "30 minutes",
     watermark: str = "2 hours",
+    max_files_per_trigger: int = 16,
 ) -> StreamingQuery:
     """events parquet dir (streamed) -> per-session rows.
 
@@ -90,7 +91,7 @@ def stream_sessions(
 
     return run_stream(
         spark, input_dir, EVENTS_DDL, write, checkpoint_dir, output_dir, STAGE,
-        16, plan=plan,
+        max_files_per_trigger, plan=plan,
     )
 
 

@@ -1,11 +1,14 @@
 """Persistent IVF index (build/query split): agreement with the exact
 brute-force path, partition pruning at the probe scan, and the Arrow
-brute kernel's equivalence to the Catalyst HOF baseline."""
+brute kernel's equivalence to the Catalyst HOF baseline. The rows of the
+IVF registry entries, which no oracle checks, are pinned by the sha256 of
+their sorted rows at sf0.001."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mehari_spark.operators.similarity import (
@@ -13,10 +16,24 @@ from mehari_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_arrow,
     ivf_query_topk,
+    ivf_topk,
     synth_clustered,
 )
 
 from .conftest import SF_UNIT
+from .test_blocking import rows_sha256
+
+PINNED_SHA256 = {
+    "emb_ivf_topk": "e571e24aa5b9dfd1300d82941efcf539fc08811922dcd9b18ebc983362b2bd74",
+    "emb_ivf_clustered": "c96b15fdf4f0049906864a1c2d0f3333e8574abf07fb7ae934d5589a513dee29",
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_SHA256))
+def test_ivf_entry_rows_pinned(spark, name):
+    from mehari_spark.plans.queries import QUERIES
+
+    assert rows_sha256(QUERIES[name][0](spark, SF_UNIT)) == PINNED_SHA256[name]
 
 
 def _clustered(spark):
@@ -80,3 +97,9 @@ class TestIvfIndex:
         want = sorted(map(tuple, cosine_topk(corpus, q_ids, k=7).collect()))
         assert got == want
 
+
+    def test_no_query_vector_gives_no_rows(self, spark):
+        emb = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet")
+        assert ivf_topk(emb, [-1, -2], k=3).count() == 0
+        none = emb.filter(F.col("vec_id") < 0)
+        assert cosine_topk_arrow(emb, none, k=3).count() == 0

@@ -116,7 +116,7 @@ class TestClusteredIVF:
         approx = {
             (r.query_id, r.neighbor_id)
             for r in ivf_topk(
-                corpus, qids, k=3, n_centroids=16, nprobe=2, seed=42
+                corpus, qids, k=3, n_centroids=16, nprobe=2
             ).collect()
         }
         recall = len(exact & approx) / len(exact)

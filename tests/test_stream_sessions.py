@@ -107,3 +107,21 @@ class TestStreamingSessions:
         out = spark.read.parquet(out_dir)
         # the late event must not have opened a session row
         assert out.filter(F.col("first_event") == 999).count() == 0
+
+    def test_max_files_per_trigger_bounds_each_batch(self, spark, tmp_path):
+        # three one-file arrival chunks at one file per trigger: three
+        # micro-batches that each read rows, not one batch of all three
+        ev = _events(spark)
+        in_dir = str(tmp_path / "in")
+        for user in (1, 2, 3):
+            ev.filter(F.col("user_id") == user).coalesce(1).write.mode(
+                "append"
+            ).parquet(in_dir)
+        q = stream_sessions(
+            spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ck"),
+            max_files_per_trigger=1,
+        )
+        q.processAllAvailable()
+        progress = q.recentProgress
+        q.stop()
+        assert sum(p["numInputRows"] > 0 for p in progress) == 3
