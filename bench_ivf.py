@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -25,6 +26,16 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def main() -> None:
+    # the written corpus and its index live in shared memory: ~200 MB at
+    # the default IVF_REPLICATE, so they go whether or not the run finishes
+    tmp = tempfile.mkdtemp(prefix="ivf-corpus-", dir="/dev/shm")
+    try:
+        _bench(tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _bench(tmp: str) -> None:
     from pyspark.sql import functions as F
 
     from mehari_spark.operators.similarity import (
@@ -50,7 +61,6 @@ def main() -> None:
     )
     n_cells = int(os.environ.get("IVF_CELLS", "256"))
     clustered = synth_clustered(corpus_raw, n_clusters=n_cells)
-    tmp = tempfile.mkdtemp(prefix="ivf-corpus-", dir="/dev/shm")
     corpus_path = os.path.join(tmp, "corpus.parquet")
     clustered.repartition(cores).write.mode("overwrite").parquet(corpus_path)
     corpus = spark.read.parquet(corpus_path)

@@ -11,10 +11,11 @@ files with the SAME crash-atomic staged swap as every other writer
 ``commit.repair`` and the checkpoint log only records buckets whose swap
 completed.
 
-Content safety is checked, not assumed: the staged rewrite must match the
-live bucket on row count AND two independent order-insensitive content
-fingerprints before the swap happens: bit_xor of xxhash64 over all columns
-plus the SUM of the same hashes as decimal(38,0). XOR alone is blind to
+Content safety is checked, not assumed (``content_gate``, which the span
+store's compaction shares): the staged rewrite must match the live data on
+row count AND two independent order-insensitive content fingerprints
+before the swap happens: bit_xor of xxhash64 over all columns plus the
+SUM of the same hashes as decimal(38,0). XOR alone is blind to
 even-multiplicity changes (dropping two copies of row X while gaining two
 copies of row Y cancels); the sum catches exactly that class, and a
 collision would have to fool both aggregates simultaneously.
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import commit
-from .lineage import write_metrics
+from .lineage import part_dirs, write_metrics
 
 
 def _bucket_files(bucket_dir: str) -> list[str]:
@@ -60,6 +61,22 @@ def _fingerprint(df: DataFrame) -> tuple[int, int, int]:
         int(row["fp"] if row["fp"] is not None else 0),
         int(row["fps"] if row["fps"] is not None else 0),
     )
+
+
+def content_gate(live: DataFrame, staged: str, what: str) -> int:
+    """The swap gate of every compaction: the rewrite staged at ``staged``
+    must hold the rows of ``live`` (row count and both fingerprints).
+    On a mismatch the staged dir is dropped and ``what`` raises, so the
+    live data is never swapped out. Returns the row count."""
+    want = _fingerprint(live)
+    got = _fingerprint(live.sparkSession.read.parquet(staged).select(*live.columns))
+    if got != want:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise RuntimeError(
+            f"{what} would change content (rows {want[0]}->{got[0]}, "
+            "fingerprint mismatch) — aborted"
+        )
+    return got[0]
 
 
 def needs_compaction(
@@ -108,31 +125,20 @@ def compact_buckets(
     commit.repair(out_dir)
     compacted: dict[int, dict] = {}
     skipped: list[int] = []
-    staging_root = commit.open_staging(out_dir, "compact")
-    for bdir in sorted(glob.glob(os.path.join(out_dir, "bucket=*"))):
-        b = int(os.path.basename(bdir)[len("bucket=") :])
+    for b, bdir in part_dirs(out_dir).items():
         files = _bucket_files(bdir)
         if not needs_compaction(files, min_files, small_file_bytes):
             skipped.append(b)
             continue
         t0 = time.time()
         live = spark.read.parquet(bdir)
-        n_live, fp_live, fps_live = _fingerprint(live)
-        staged_dir = os.path.join(staging_root, f"bucket={b}")
+        staged = commit.open_staging(out_dir, "compact")
         out = live.coalesce(target_files)
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode("overwrite").parquet(staged_dir)
-        n_staged, fp_staged, fps_staged = _fingerprint(
-            spark.read.parquet(staged_dir)
-        )
-        if (n_staged, fp_staged, fps_staged) != (n_live, fp_live, fps_live):
-            shutil.rmtree(staged_dir, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction of bucket {b} would change content "
-                f"(rows {n_live}->{n_staged}, fingerprint mismatch) — aborted"
-            )
-        commit.swap(staged_dir, bdir)
+        out.write.mode("overwrite").parquet(staged)
+        n_staged = content_gate(live, staged, f"compaction of bucket {b}")
+        commit.swap(staged, bdir)
         files_after = len(_bucket_files(bdir))
         commit.append(
             out_dir,
@@ -155,7 +161,6 @@ def compact_buckets(
             "files_after": files_after,
             "rows": n_staged,
         }
-    shutil.rmtree(staging_root, ignore_errors=True)
     write_metrics(
         out_dir,
         run_id,

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import commit
+from .lineage import part_dirs
 
 
 _AGG_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -175,27 +176,6 @@ def _view_dir(table_dir: str, spec: PartialAggSpec) -> str:
     return os.path.join(table_dir, "_analytics", spec.name)
 
 
-def _existing_data_buckets(table_dir: str) -> list[int]:
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("bucket=") and d.split("=", 1)[1].isdigit()
-    )
-
-
-def _partial_buckets(table_dir: str, spec: PartialAggSpec) -> list[int]:
-    adir = _view_dir(table_dir, spec)
-    if not os.path.isdir(adir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(adir)
-        if d.startswith("part=") and d.split("=", 1)[1].isdigit()
-    )
-
-
 def refresh_partials(
     spark: SparkSession,
     table_dir: str,
@@ -212,15 +192,15 @@ def refresh_partials(
     (rename-aside; a concurrent reader of a mid-swap bucket fails closed,
     see module docstring). Returns the buckets actually refreshed.
     Idempotent: partials are a pure function of bucket content."""
-    have = set(_partial_buckets(table_dir, spec))
-    data = _existing_data_buckets(table_dir)
+    adir = _view_dir(table_dir, spec)
+    have = part_dirs(adir, "part")
+    data = part_dirs(table_dir)
     todo = sorted(set(touched_buckets) | {b for b in data if b not in have})
-    todo = [b for b in todo if b in set(data)]
+    todo = [b for b in todo if b in data]
     if not todo:
         return []
 
-    paths = [os.path.join(table_dir, f"bucket={b}") for b in todo]
-    rows = spark.read.option("basePath", table_dir).parquet(*paths)
+    rows = spark.read.option("basePath", table_dir).parquet(*[data[b] for b in todo])
     tagged = spec.row_fn(rows.withColumnRenamed("bucket", "_part"))
     if "_part" not in tagged.columns:
         raise ValueError(
@@ -230,7 +210,6 @@ def refresh_partials(
     inc = tagged.select("_part", *spec.group_cols, *spec.sum_cols)
     partials = inc.groupBy("_part", *spec.group_cols).agg(*spec.agg_exprs())
 
-    adir = _view_dir(table_dir, spec)
     commit.repair(adir)
     staging = commit.open_staging(adir, "view")
     try:
@@ -258,8 +237,8 @@ def read_view(
     Raises if maintenance never ran (no partials) while the table has
     data, or if any data bucket's partial is missing (stale or mid-swap)
     — fail closed, never a silently partial view."""
-    data = _existing_data_buckets(table_dir)
-    have = _partial_buckets(table_dir, spec)
+    data = part_dirs(table_dir)
+    have = part_dirs(_view_dir(table_dir, spec), "part")
     if data and not have:
         raise FileNotFoundError(
             f"no {spec.name!r} partials under {table_dir!r} — run the "
@@ -271,9 +250,7 @@ def read_view(
             f"{spec.name!r} partials missing for data buckets {missing} of "
             f"{table_dir!r} — refresh before reading"
         )
-    partials = spark.read.parquet(
-        *[os.path.join(_view_dir(table_dir, spec), f"part={b}") for b in have]
-    )
+    partials = spark.read.parquet(*have.values())
     return partials.groupBy(*spec.group_cols).agg(*spec.agg_exprs())
 
 

@@ -31,9 +31,6 @@ from . import commit
 from .commit import log_path as _ckpt_path  # noqa: F401
 
 
-_BUCKET_DIR = re.compile(r"bucket=\d+")
-
-
 @dataclass
 class BucketResult:
     bucket: int
@@ -153,15 +150,31 @@ def commit_buckets(
     return results
 
 
+def part_dirs(root: str, prefix: str = "bucket") -> dict[int, str]:
+    """The ``<prefix>=<n>`` dirs of ``root`` as {n: path}, in ``<prefix>=*``
+    glob (lexical) order: a table's ``bucket`` dirs, a view's ``part``
+    dirs. Anything else (``bucket=3.old``, staging) is not one."""
+    names = sorted(os.listdir(root)) if os.path.isdir(root) else []
+    dir_re = re.compile(rf"{prefix}=(\d+)")
+    return {
+        int(m[1]): os.path.join(root, n) for n in names if (m := dir_re.fullmatch(n))
+    }
+
+
 def read_bucketed(
-    spark: SparkSession, out_dir: str, schema: StructType | None = None
+    spark: SparkSession,
+    out_dir: str,
+    schema: StructType | None = None,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
-    """The ``bucket=<b>`` dirs of ``out_dir``, read by their explicit paths
-    in ``bucket=*`` glob order. With the known ``schema`` the read runs no
-    inference job, and no bucket dir at all gives an empty frame."""
-    names = os.listdir(out_dir) if os.path.isdir(out_dir) else []
+    """The ``bucket=<b>`` dirs of ``out_dir`` (only those of ``buckets``,
+    when given), read by their explicit paths in ``bucket=*`` glob order.
+    With the known ``schema`` the read runs no inference job, and no bucket
+    dir at all gives an empty frame."""
     paths = [
-        os.path.join(out_dir, n) for n in sorted(names) if _BUCKET_DIR.fullmatch(n)
+        path
+        for b, path in part_dirs(out_dir).items()
+        if buckets is None or b in buckets
     ]
     if schema is None:
         return spark.read.parquet(*paths)

@@ -223,16 +223,16 @@ def compact_span_store(
     into ONE consolidated bucketed epoch dir each.
 
     plans/compact.py discipline: stage the rewrite under an
-    underscore-prefixed dir (invisible to partition discovery), verify
-    row count + two order-insensitive content fingerprints, atomically
-    publish it as ``epoch=c<lo>-<hi>`` covering the source dirs
-    (``commit.swap``: its staged/compact_done log pair makes an
-    interrupted publish repairable by ``commit.repair``; a destination
-    that is one of its own sources is refused). Only epochs recorded
+    underscore-prefixed dir (invisible to partition discovery), pass it
+    through ``compact.content_gate`` (row count + two order-insensitive
+    content fingerprints), atomically publish it as ``epoch=c<lo>-<hi>``
+    covering the source dirs (``commit.swap``: its staged/compact_done
+    log pair makes an interrupted publish repairable by ``commit.repair``;
+    a destination that is one of its own sources is refused). Only epochs recorded
     ``epoch_done`` for ``scope`` are merged — an in-flight epoch may
     still be rewritten by replay and keeps its own dir. Returns
     {"index": n_dirs_merged, "texts": n_dirs_merged}."""
-    from ..plans.compact import _fingerprint
+    from ..plans.compact import content_gate
 
     commit.repair(store_dir)
     done = applied_epochs(store_dir, scope)
@@ -263,22 +263,13 @@ def compact_span_store(
             if sub == "index"
             else _TEXT_SCHEMA + ", doc_bucket int"
         )
-        cols = [c.strip().split(" ")[0] for c in schema.split(",")]
         # mixed-layout read (flat deltas + previously-compacted dirs)
         live = _read_dirs(spark, store_dir, sub, eligible, schema, None)
-        n_live, fp_live, fps_live = _fingerprint(live)
         staged = commit.open_staging(base, "span")
         live.repartition(part_col).write.mode("overwrite").partitionBy(
             part_col
         ).parquet(staged)
-        if _fingerprint(spark.read.parquet(staged).select(*cols)) != (
-            n_live,
-            fp_live,
-            fps_live,
-        ):
-            raise RuntimeError(
-                f"span-store compaction of {sub} would change content — aborted"
-            )
+        content_gate(live, staged, f"span-store compaction of {sub}")
         commit.swap(
             staged, dest, covers=eligible, log_root=store_dir, stage="span_compact"
         )

@@ -1,5 +1,6 @@
 """Bucket compaction: content-identical rewrite, small-file reduction,
-crash-atomic swap + repair, idempotent re-run."""
+crash-atomic swap + repair, idempotent re-run, and the content gate that
+refuses a rewrite whose rows differ."""
 
 from __future__ import annotations
 
@@ -10,9 +11,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from mehari_spark.plans import commit
+from mehari_spark.plans import commit, compact
 from mehari_spark.plans.compact import compact_buckets
 from mehari_spark.plans.lineage import read_bucketed, write_bucketed
+
+from .test_merge import _files_state
 
 
 def _table(spark, tmp_path, n=4000, n_buckets=4):
@@ -125,3 +128,27 @@ class TestCompaction:
         res = compact_buckets(spark, out)
         assert 2 in res["compacted"]
         assert sorted(map(tuple, read_bucketed(spark, out).collect())) == before
+
+    def test_content_gate_aborts_and_keeps_live_bucket(
+        self, spark, tmp_path, monkeypatch
+    ):
+        out = _table(spark, tmp_path)
+        before = _files_state(out)
+        real = compact._fingerprint
+        calls = []
+
+        def staged_differs(df):
+            # live first, then the staged read-back: corrupt the second
+            n, xor, total = real(df)
+            calls.append(n)
+            return (n, xor, total + 1) if len(calls) == 2 else (n, xor, total)
+
+        monkeypatch.setattr(compact, "_fingerprint", staged_differs)
+        with pytest.raises(RuntimeError, match="would change content"):
+            compact_buckets(spark, out)
+        assert len(calls) == 2  # the first bucket's gate raised
+        assert _files_state(out) == before  # live files untouched
+        assert glob.glob(os.path.join(out, "_staging_compact_*")) == []
+        with open(os.path.join(out, "_checkpoints.jsonl")) as f:
+            recs = [json.loads(l) for l in f]
+        assert not any(r.get("status") == "compacted" for r in recs)

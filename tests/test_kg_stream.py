@@ -531,3 +531,17 @@ class TestKgStream:
         merge_into_bucketed(spark, table, older, run_id="e1", **kw)
         rows = read_kg_current(spark, table).collect()
         assert len(rows) == 1 and rows[0].obj_id == 100
+        # one batch with an older and a newer row for the stored key and a
+        # pair for a new key: the one window over target + batch decides
+        pairs = spark.createDataFrame(
+            [
+                (1, 7, 101, 3000, "c3", 1),
+                (1, 7, 98, 1500, "c3", 0),
+                (2, 7, 200, 1000, "c4", 0),
+                (2, 7, 201, 1000, "c4", 1),
+            ],
+            ddl,
+        )
+        merge_into_bucketed(spark, table, pairs, run_id="e2", **kw)
+        rows = read_kg_current(spark, table).collect()
+        assert sorted((r.subj_id, r.obj_id) for r in rows) == [(1, 101), (2, 201)]

@@ -1,11 +1,12 @@
 """Checkpointed-write edge cases: empty staged input, bucketing mismatch,
-and the read-back of committed buckets."""
+internally sorted bucket files, and the read-back of committed buckets."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from mehari_spark.plans.lineage import load_committed, read_bucketed, write_bucketed
 
@@ -86,6 +87,62 @@ class TestReadBucketed:
         write_bucketed(_df(spark, []), out, "r1", key_col="conv_id", n_buckets=2)
         got = read_bucketed(spark, out, schema)
         assert got.columns == ["conv_id", "v"] and got.count() == 0
+
+    def test_bucket_subset_reads_only_those_dirs(self, spark, tmp_path):
+        out = str(tmp_path / "subset")
+        df = _df(spark, [(f"c{i}", i) for i in range(40)])
+        write_bucketed(df, out, "r1", key_col="conv_id", n_buckets=4)
+        by_bucket = {
+            b: sorted(read_bucketed(spark, out, df.schema, buckets=[b]).collect())
+            for b in range(4)
+        }
+        assert all(by_bucket.values())  # test premise: every bucket has rows
+        with spark_jobs(spark) as jobs:
+            got = read_bucketed(spark, out, df.schema, buckets=[3, 1, 7])
+        assert jobs == []
+        dirs = {os.path.basename(os.path.dirname(f)) for f in got.inputFiles()}
+        assert dirs == {"bucket=1", "bucket=3"}
+        assert sorted(got.collect()) == sorted(by_bucket[1] + by_bucket[3])
+        # no dir among the requested buckets: the empty frame, no read
+        none = read_bucketed(spark, out, df.schema, buckets=[5, 6])
+        assert none.columns == ["conv_id", "v"] and none.count() == 0
+        assert none.inputFiles() == []
+
+
+class TestSortedBucketFiles:
+    def test_every_data_file_is_internally_sorted(self, spark, tmp_path):
+        # sort_cols makes each emitted parquet file key-ordered (SST /
+        # Iceberg sorted-file discipline) with a LOCAL sort only — the plan
+        # must not gain a shuffle
+        import glob
+
+        import pandas as pd
+
+        df = (
+            spark.range(5000)
+            .select(
+                F.concat(F.lit("c"), (F.col("id") % 61).cast("string")).alias(
+                    "conv_id"
+                ),
+                (F.col("id") % 17).cast("int").alias("turn_idx"),
+                F.xxhash64("id").alias("v"),
+            )
+            .repartition(8)  # unsorted, spread input
+        )
+        out = str(tmp_path / "t")
+        write_bucketed(
+            df, out, run_id="s", key_col="conv_id", n_buckets=4,
+            sort_cols=["conv_id", "turn_idx"],
+        )
+        files = glob.glob(f"{out}/bucket=*/*.parquet")
+        assert files
+        for f in files:
+            pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
+            assert list(map(tuple, pdf.values.tolist())) == sorted(
+                map(tuple, pdf.values.tolist())
+            ), f"unsorted file {f}"
+        # content identical to the unsorted write path
+        assert read_bucketed(spark, out).count() == 5000
 
 
 class TestPipelineReadBack:

@@ -1,7 +1,7 @@
 """Round-3 operator tests: blocked embedding near-dup pairs, clustered IVF
 (sublinear probing), the multi-token dictionary path, the content-keyed AC
-automaton cache, the canonicalizer rule corpus (disagreement cases),
-crash-atomic MERGE, and graceful end-of-stream session flush."""
+automaton cache, the canonicalizer rule corpus (disagreement cases) and
+graceful end-of-stream session flush."""
 
 from __future__ import annotations
 
@@ -385,162 +385,6 @@ class TestCanonRuleCorpus:
         # 103->101(kb rank 1), 105->151(override 42), 109->108(kb 8),
         # 106 keeps id with rank 66, 110 suppressed
         assert out == {(101, 1), (151, 42), (108, 8), (106, 66)}
-
-
-# --------------------------------------------------------------------------
-# crash-atomic MERGE
-# --------------------------------------------------------------------------
-
-
-class TestMergeCrashSafety:
-    def _seed_table(self, spark, out_dir):
-        from mehari_spark.plans.lineage import write_bucketed
-
-        df = spark.createDataFrame(
-            [(f"c{i}", i % 3, i * 10) for i in range(30)],
-            "conv_id string, turn_idx int, v long",
-        )
-        write_bucketed(df, out_dir, run_id="seed", key_col="conv_id", n_buckets=4)
-        return df
-
-    def test_guard_bucket_col_in_match_cols(self, spark, tmp_path):
-        from mehari_spark.plans.merge import merge_into_bucketed
-
-        out = str(tmp_path / "t")
-        self._seed_table(spark, out)
-        upd = spark.createDataFrame(
-            [("c1", 1, 999)], "conv_id string, turn_idx int, v long"
-        )
-        with pytest.raises(ValueError, match="must be one of match_cols"):
-            merge_into_bucketed(
-                spark, out, upd, match_cols=["turn_idx"],
-                bucket_col="conv_id", n_buckets=4,
-            )
-
-    def test_guard_duplicate_update_keys(self, spark, tmp_path):
-        from mehari_spark.plans.merge import merge_into_bucketed
-
-        out = str(tmp_path / "t")
-        self._seed_table(spark, out)
-        upd = spark.createDataFrame(
-            [("c1", 1, 999), ("c1", 1, 888)],
-            "conv_id string, turn_idx int, v long",
-        )
-        with pytest.raises(ValueError, match="duplicate match keys"):
-            merge_into_bucketed(
-                spark, out, upd, match_cols=["conv_id", "turn_idx"],
-                bucket_col="conv_id", n_buckets=4,
-            )
-
-    def test_crash_mid_swap_recovers_without_data_loss(
-        self, spark, tmp_path, monkeypatch
-    ):
-        from mehari_spark.plans import commit
-        from mehari_spark.plans.lineage import read_bucketed
-        from mehari_spark.plans.merge import merge_into_bucketed
-
-        out = str(tmp_path / "t")
-        self._seed_table(spark, out)
-        before = {
-            (r.conv_id, r.turn_idx): r.v for r in read_bucketed(spark, out).collect()
-        }
-        upd = spark.createDataFrame(
-            [("c1", 1, 999), ("c2", 2, 888)],
-            "conv_id string, turn_idx int, v long",
-        )
-        bcol = (
-            upd.select(
-                F.pmod(F.xxhash64(F.col("conv_id")), F.lit(4)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        crash_bucket = sorted(r.b for r in bcol)[0]
-
-        def crash_between_renames(point, target):
-            if point == "aside" and target.endswith(f"bucket={crash_bucket}"):
-                raise RuntimeError(f"injected crash mid-swap of bucket {crash_bucket}")
-
-        with monkeypatch.context() as m, pytest.raises(
-            RuntimeError, match="injected crash mid-swap"
-        ):
-            m.setattr(commit, "step", crash_between_renames)
-            merge_into_bucketed(
-                spark, out, upd, match_cols=["conv_id", "turn_idx"],
-                bucket_col="conv_id", n_buckets=4,
-            )
-        # mid-swap state: bucket=<b> is renamed aside — the table is
-        # readable only after repair; rerunning the merge repairs + applies
-        merge_into_bucketed(
-            spark, out, upd, match_cols=["conv_id", "turn_idx"],
-            bucket_col="conv_id", n_buckets=4, run_id="merge2",
-        )
-        after = {
-            (r.conv_id, r.turn_idx): r.v for r in read_bucketed(spark, out).collect()
-        }
-        want = dict(before)
-        want[("c1", 1)] = 999
-        want[("c2", 2)] = 888
-        assert after == want
-        # no stray .old dirs or merge staging left behind
-        leftovers = [
-            d for d in os.listdir(out)
-            if d.endswith(".old") or d.startswith("_staging_merge_")
-        ]
-        assert leftovers == []
-
-    def test_rollback_when_new_data_never_landed(self, spark, tmp_path):
-        import shutil
-
-        from mehari_spark.plans.commit import repair
-        from mehari_spark.plans.lineage import read_bucketed
-
-        out = str(tmp_path / "t")
-        self._seed_table(spark, out)
-        before = sorted(map(tuple, read_bucketed(spark, out).collect()))
-        # simulate a crash BETWEEN the two renames: bucket aside, no new data
-        src = os.path.join(out, "bucket=0")
-        shutil.move(src, src + ".old")
-        assert repair(out) == [src]
-        assert sorted(map(tuple, read_bucketed(spark, out).collect())) == before
-
-
-class TestSortedBucketFiles:
-    def test_every_data_file_is_internally_sorted(self, spark, tmp_path):
-        # sort_cols makes each emitted parquet file key-ordered (SST /
-        # Iceberg sorted-file discipline) with a LOCAL sort only — the plan
-        # must not gain a shuffle
-        import glob
-
-        import pandas as pd
-
-        from mehari_spark.plans.lineage import read_bucketed, write_bucketed
-
-        df = (
-            spark.range(5000)
-            .select(
-                F.concat(F.lit("c"), (F.col("id") % 61).cast("string")).alias(
-                    "conv_id"
-                ),
-                (F.col("id") % 17).cast("int").alias("turn_idx"),
-                F.xxhash64("id").alias("v"),
-            )
-            .repartition(8)  # unsorted, spread input
-        )
-        out = str(tmp_path / "t")
-        write_bucketed(
-            df, out, run_id="s", key_col="conv_id", n_buckets=4,
-            sort_cols=["conv_id", "turn_idx"],
-        )
-        files = glob.glob(f"{out}/bucket=*/*.parquet")
-        assert files
-        for f in files:
-            pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
-            assert list(map(tuple, pdf.values.tolist())) == sorted(
-                map(tuple, pdf.values.tolist())
-            ), f"unsorted file {f}"
-        # content identical to the unsorted write path
-        assert read_bucketed(spark, out).count() == 5000
 
 
 # --------------------------------------------------------------------------

@@ -1,110 +1,6 @@
-"""Round-7 fixes and operators: commit-log compaction policy, curation
-edge-case guards (ADVICE r6), and the new operator tier."""
+"""Round-7 fixes: curation edge-case guards (ADVICE r6)."""
 
 from __future__ import annotations
-
-import json
-import os
-
-from pyspark.sql import functions as F
-
-from mehari_spark.plans.commit import append as append_checkpoint
-from mehari_spark.plans.commit import compact_log as compact_checkpoint_log
-from mehari_spark.plans.lineage import _ckpt_path, load_committed
-from mehari_spark.streaming.kg_stream import applied_epochs
-
-
-class TestCompactCheckpointLog:
-    def _seed_log(self, d: str, n_epochs: int = 1000) -> None:
-        # merge-style traffic: staged + committed per bucket per epoch,
-        # then the epoch_done audit row — the always-on growth pattern
-        for e in range(n_epochs):
-            b = e % 8
-            append_checkpoint(
-                d,
-                {
-                    "run_id": f"epoch-{e}",
-                    "bucket": b,
-                    "status": "staged",
-                    "stage": "merge",
-                    "n_buckets": 8,
-                    "key_col": "subj_id",
-                },
-            )
-            append_checkpoint(
-                d,
-                {
-                    "run_id": f"epoch-{e}",
-                    "bucket": b,
-                    "status": "committed",
-                    "rows_out": 10 + e,
-                    "stage": "merge",
-                    "n_buckets": 8,
-                    "key_col": "subj_id",
-                },
-            )
-            append_checkpoint(
-                d,
-                {
-                    "status": "epoch_done",
-                    "stage": "kg_stream",
-                    "scope": "/ck",
-                    "epoch": e,
-                },
-            )
-
-    def test_thousand_epochs_compact_to_bounded_log(self, tmp_path):
-        d = str(tmp_path / "t")
-        self._seed_log(d, 1000)
-        before_epochs = applied_epochs(d, "/ck")
-        before_committed = load_committed(d, n_buckets=8, key_col="subj_id")
-        res = compact_checkpoint_log(d)
-        assert res["rows_before"] == 3000
-        # 8 latest-committed rows + 1 watermark: O(buckets+scopes), not O(age)
-        assert res["rows_after"] == 9
-        assert applied_epochs(d, "/ck") == before_epochs == set(range(1000))
-        assert load_committed(d, n_buckets=8, key_col="subj_id") == before_committed
-        # idempotent
-        res2 = compact_checkpoint_log(d)
-        assert res2["rows_after"] == res2["rows_before"] == 9
-
-    def test_gap_unknown_and_inflight_rows_survive(self, tmp_path):
-        d = str(tmp_path / "t")
-        # epoch gap: 0,1,3 -> watermark 1 + verbatim row for 3
-        for e in (0, 1, 3):
-            append_checkpoint(
-                d,
-                {"status": "epoch_done", "stage": "kg_stream", "scope": "/a", "epoch": e},
-            )
-        # second scope, independent watermark
-        append_checkpoint(
-            d,
-            {"status": "epoch_done", "stage": "kg_stream", "scope": "/b", "epoch": 0},
-        )
-        # trailing staged row with NO later committed cover: possibly in-flight
-        append_checkpoint(
-            d,
-            {"run_id": "r9", "bucket": 5, "status": "staged", "stage": "merge"},
-        )
-        # unknown status: kept verbatim
-        append_checkpoint(d, {"status": "compacted", "bucket": 2, "stage": "compact"})
-        compact_checkpoint_log(d)
-        with open(_ckpt_path(d)) as f:
-            recs = [json.loads(line) for line in f]
-        statuses = sorted(r["status"] for r in recs)
-        assert statuses == [
-            "compacted",
-            "epoch_done",
-            "epoch_watermark",
-            "epoch_watermark",
-            "staged",
-        ]
-        assert applied_epochs(d, "/a") == {0, 1, 3}
-        assert applied_epochs(d, "/b") == {0}
-
-    def test_compact_missing_log_is_noop(self, tmp_path):
-        res = compact_checkpoint_log(str(tmp_path / "nope"))
-        assert res == {"rows_before": 0, "rows_after": 0}
 
 
 class TestCurationAdviceFixes:
